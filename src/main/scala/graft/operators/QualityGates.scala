@@ -31,12 +31,12 @@ object QualityGates {
   final case class Gate(metric: String, threshold: Double, value: Column)
 
   /** Collapse a set of gates over a ONE-ROW aggregate frame into ordered
-    * (metric, threshold, pass) rows. */
+    * (metric, threshold, pass) rows. A null metric fails its gate. */
   def rows(oneRow: DataFrame, gates: Seq[Gate]): DataFrame =
     oneRow.select(explode(array(gates.map { g =>
       struct(lit(g.metric).as("metric"),
         lit(g.threshold).as("threshold"),
-        (g.value >= g.threshold).as("pass"))
+        coalesce(g.value >= g.threshold, lit(false)).as("pass"))
     }: _*)).as("g"))
       .select(col("g.metric").as("metric"),
         col("g.threshold").as("threshold"), col("g.pass").as("pass"))
@@ -55,10 +55,18 @@ object QualityGates {
     * sides are bounded at k rows by construction, so a single driver-local
     * materialization is O(k) data (not a scale-killer collect: these stay
     * ≤k rows at any corpus size), removes the duplicate scan, and — unlike
-    * persist() — shares nothing across bench reps. */
-  private def topk(df: DataFrame): Array[(Long, Double)] =
-    df.select(col("vec_id").cast("long"), col("cos_sim").cast("double"))
-      .collect().map(r => (r.getLong(0), r.getDouble(1)))
+    * persist() — shares nothing across bench reps. A side with a null
+    * vec_id or cos_sim is None: the gates it feeds fail instead of throwing. */
+  private def topk(df: DataFrame): Option[Array[(Long, Double)]] = {
+    val rows = df.select(col("vec_id").cast("long"), col("cos_sim").cast("double")).collect()
+    if (rows.exists(r => r.isNullAt(0) || r.isNullAt(1))) None
+    else Some(rows.map(r => (r.getLong(0), r.getDouble(1))))
+  }
+
+  /** Join hits of two collected sides; null when either side is None. */
+  private def hitsLit(ann: Option[Array[(Long, Double)]],
+      exact: Option[Array[(Long, Double)]]): Column =
+    (for (a <- ann; e <- exact) yield lit(joinHits(a, e))).getOrElse(lit(null).cast("long"))
 
   /** Multiset inner-join cardinality on vec_id — exactly the old
     * `ann.join(exact, "vec_id").count()`. */
@@ -88,9 +96,9 @@ object QualityGates {
     val annR = topk(ann)
     val exR = topk(exact)
     val one = spark.range(1).select(
-      lit(joinHits(annR, exR)).as("hits"),
-      dlit(meanSim(annR)).as("ann_mean"),
-      dlit(meanSim(exR)).as("ex_mean"))
+      hitsLit(annR, exR).as("hits"),
+      dlit(annR.flatMap(meanSim)).as("ann_mean"),
+      dlit(exR.flatMap(meanSim)).as("ex_mean"))
     rows(one, Seq(
       Gate(s"recall@$k vs exact brute top-$k", recallThr,
         col("hits").cast("double") / k),
@@ -119,9 +127,9 @@ object QualityGates {
     val sf = scanFrac.select(col("scan_frac").cast("double")).collect()
       .headOption.collect { case r if !r.isNullAt(0) => r.getDouble(0) }
     val one = spark.range(1).select(
-      lit(joinHits(annR, exR)).as("hits"),
-      dlit(meanSim(annR)).as("ann_mean"),
-      dlit(meanSim(exR)).as("ex_mean"),
+      hitsLit(annR, exR).as("hits"),
+      dlit(annR.flatMap(meanSim)).as("ann_mean"),
+      dlit(exR.flatMap(meanSim)).as("ex_mean"),
       dlit(sf).as("scan_frac"))
     rows(one, Seq(
       Gate(s"recall@$k vs exact brute top-$k", recallThr,

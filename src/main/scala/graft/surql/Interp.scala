@@ -11,6 +11,26 @@ final case class QOk(v: V) extends QueryResult
 final case class QErr(msg: String) extends QueryResult
 
 object Interp {
+  // ---- undo journal entries (see Interp#journal) ----------------------
+
+  private type Table = mutable.LinkedHashMap[V, VObj]
+
+  /** One journaled change to the record data, undone in reverse order. */
+  private sealed trait Undo
+  /** A record write at stored key `key` of `t`; `prior` is the document the
+    * key held before it (None: the key was absent). */
+  private final case class RecordUndo(t: Table, key: V, prior: Option[VObj]) extends Undo
+  /** The key order of `t` before its first removal under the innermost mark. */
+  private final case class OrderUndo(t: Table, keys: Array[V]) extends Undo
+  /** The table list before a table was created or dropped. */
+  private final case class TablesUndo(prior: Vector[(String, Table)]) extends Undo
+  /** An edge mark that was added (`added`) or removed. */
+  private final case class MarkUndo(tb: String, key: V, added: Boolean) extends Undo
+  /** A USE that switched the live database from `from` to `to`;
+    * `restoreDefs` restores the definitions `to` had when it was entered. */
+  private final case class UseUndo(from: (String, String), to: (String, String),
+      restoreDefs: () => Unit) extends Undo
+
   /** Edge records keep their identity fields across CONTENT/REPLACE updates
     * (doc/relate.rs — in/out are readonly on edges). */
   def keepEdgeIdentity(updated: VObj, before: VObj, rid: VRid): VObj = {
@@ -538,7 +558,7 @@ final class Interp {
     * exec/operators/version_scope.rs). */
   val history = mutable.ArrayBuffer[(java.time.Instant, String, V, Option[VObj])]()
   /** Monotonic write generation: bumped on every history append AND on every
-    * snapshot restore, so caches keyed on it (FTS corpus) can never alias a
+    * rollback, so caches keyed on it (FTS corpus) can never alias a
     * rolled-back state with a later one that has the same history length. */
   var writeGen: Long = 0L
   /** Active VERSION scope: reads snapshot at this timestamp. */
@@ -547,13 +567,15 @@ final class Interp {
     * Iterate/Collector array under compute-only (dbs/ legacy executor). */
   var legacyPlanner = false
 
-  /** Deep-enough copy of the mutable catalog for transaction rollback —
-    * documents (VObj) and definitions are immutable values, so cloning each
-    * map suffices (the reference rolls back via the kv-store transaction;
-    * here the "store" is these maps). Session params are NOT snapshotted:
-    * LET survives CANCEL (language-tests parameters/set_within_transaction). */
-  private final class TxSnapshot {
-    val tabs = tables.map { case (k, m) => (k, m.clone()) }
+  /** Copy of the definition catalog (functions, tables', fields', indexes'
+    * and events' definitions, sequences, accesses, params, buckets, …) plus
+    * the lengths of the append-only `history` and `ddlSnaps` logs. Records
+    * and edge marks are not in it: they roll back through the undo journal
+    * ([[TxMark]]). Definitions are immutable values, so cloning each map
+    * suffices; they number O(definitions), so a copy per statement is cheap.
+    * Session params are NOT snapshotted: LET survives CANCEL (language-tests
+    * parameters/set_within_transaction). */
+  private final class DefsSnapshot {
     val fns = customFns.clone(); val fp = fieldPipeline.clone()
     val uniq = uniqueIndexes.clone(); val tds = tableDefs.clone()
     val fds = fieldDefs2.clone(); val af = autoFields.clone()
@@ -568,7 +590,6 @@ final class Interp {
     val bks = buckets.map { case (k, b) => (k, b.copyRt()) }
     def restore(): Unit = {
       buckets.clear(); bks.foreach { case (k, b) => buckets(k) = b }
-      tables.clear(); tabs.foreach { case (k, m) => tables(k) = m }
       def put[K, W](dst: mutable.LinkedHashMap[K, W], src: mutable.LinkedHashMap[K, W]): Unit = {
         dst.clear(); dst ++= src
       }
@@ -588,6 +609,104 @@ final class Interp {
       // never-committed catalog state.
       if (ddlSnaps.length > snapsLen) ddlSnaps.remove(snapsLen, ddlSnaps.length - snapsLen)
       writeGen += 1
+    }
+  }
+
+  // ---- undo journal ------------------------------------------------------
+
+  import Interp.{Table, Undo, RecordUndo, OrderUndo, TablesUndo, MarkUndo, UseUndo}
+
+  /** Rollback of record data (the reference rolls back through its kv
+    * transaction, dbs/executor.rs; here the "store" is `tables`). Every
+    * record write goes through [[putRecord]]/[[removeRecord]], every table
+    * creation and drop through [[table]]/[[dropTable]], every edge mark
+    * through [[markEdge]]/[[unmarkEdge]], every USE that switches database
+    * through the USE arm, and each appends the undo entry of its change
+    * while a [[TxMark]] is open. So a statement that succeeds costs
+    * O(records it wrote), and a rollback undoes exactly those writes. The
+    * definitions are not journaled: each mark copies them
+    * ([[DefsSnapshot]], O(definitions)), and so does each USE under a mark
+    * for the database it enters.
+    *
+    * Iteration order is restored exactly: updating a present key keeps its
+    * place in the LinkedHashMap and undoing an insert is a plain remove, so
+    * only removals move records. The first removal from a table under the
+    * innermost open mark therefore journals the table's key order
+    * ([[OrderUndo]]), and undoing that entry rebuilds only that table in the
+    * saved order, once every later entry has restored its contents. */
+  private val journal = mutable.ArrayBuffer[Undo]()
+  /** Journal positions of the open marks, innermost last. */
+  private val marks = mutable.ArrayBuffer[Int]()
+  /** Per table (by identity): journal position of its latest [[OrderUndo]]. */
+  private val orderSaved = new java.util.IdentityHashMap[Table, Integer]()
+  private var journalCount = 0L
+  /** Undo entries journaled since this interpreter was created. */
+  def journalEntries: Long = journalCount
+
+  private def journalAdd(u: Undo): Unit =
+    if (marks.nonEmpty) { journal += u; journalCount += 1 }
+
+  /** Stores `doc` at the stored key `key` of `t`. */
+  private def putRecord(t: Table, key: V, doc: VObj): Unit =
+    journalAdd(RecordUndo(t, key, t.put(key, doc)))
+
+  /** Removes the stored key `key` from `t`, returning its document. */
+  private def removeRecord(t: Table, key: V): Option[VObj] =
+    if (!t.contains(key)) scala.None
+    else {
+      if (marks.nonEmpty) {
+        val at = orderSaved.get(t)
+        if (at == null || at < marks.last) {
+          orderSaved.put(t, journal.length)
+          journalAdd(OrderUndo(t, t.keysIterator.toArray))
+        }
+      }
+      val prior = t.remove(key)
+      journalAdd(RecordUndo(t, key, prior))
+      prior
+    }
+
+  private def dropTable(name: String): Unit =
+    if (tables.contains(name)) {
+      journalAdd(TablesUndo(tables.toVector))
+      tables.remove(name)
+    }
+
+  private def undoTo(at: Int): Unit =
+    while (journal.length > at) journal.remove(journal.length - 1) match {
+      case RecordUndo(t, k, Some(d))    => t(k) = d
+      case RecordUndo(t, k, scala.None) => t.remove(k)
+      case OrderUndo(t, keys) =>
+        val docs = keys.map(t)
+        t.clear()
+        var i = 0
+        while (i < keys.length) { t(keys(i)) = docs(i); i += 1 }
+        orderSaved.remove(t)
+      case TablesUndo(prior) => tables.clear(); tables ++= prior
+      case MarkUndo(tb, k, added) =>
+        if (added) unmarkEdge0(tb, k) else markEdge0(tb, k)
+      case UseUndo(from, to, restoreDefs) => restoreDefs(); swapDbState(to, from)
+    }
+
+  /** A rollback point: an implicit per-statement transaction or an explicit
+    * BEGIN. [[rollback]] undoes the journal back to the mark, restores the
+    * definitions copied at the mark and switches back to the session's
+    * database if a USE was undone; [[close]] (COMMIT, or the end of the
+    * statement) pops the mark and, once no mark is open, drops the journal.
+    * Marks nest and close innermost first. */
+  private final class TxMark {
+    private val at = journal.length
+    private val defs = new DefsSnapshot
+    private val db = (curNs, curDb)
+    marks += at
+    def rollback(): Unit = {
+      undoTo(at)
+      defs.restore()
+      if (db != ((curNs, curDb))) swapDbState(db, (curNs, curDb))
+    }
+    def close(): Unit = {
+      marks.remove(marks.length - 1)
+      if (marks.isEmpty) { journal.clear(); orderSaved.clear() }
     }
   }
 
@@ -620,7 +739,7 @@ final class Interp {
     var dbus = mutable.LinkedHashMap.empty[String, Defs.UserDef]
     var bks = mutable.LinkedHashMap.empty[String, BucketRt]
     var rawFds = mutable.LinkedHashMap.empty[(String, String), String]
-    var marks = mutable.HashSet.empty[(String, V)]
+    var marks = mutable.HashMap.empty[String, mutable.HashSet[V]]
     var ixInfo = mutable.LinkedHashMap.empty[(String, String), Long]
     var ixErr = mutable.LinkedHashMap.empty[(String, String), String]
   }
@@ -645,7 +764,7 @@ final class Interp {
     parked.dbp = park(dbParams); parked.fnds = park(functionDefs)
     parked.dbus = park(dbUsers); parked.bks = park(buckets)
     parked.rawFds = park(fieldDefs)
-    parked.marks = { val s = mutable.HashSet.empty[(String, V)] ++= edgeMarks; edgeMarks.clear(); s }
+    parked.marks = { val m = edgeMarks.clone(); edgeMarks.clear(); m }
     parked.ixInfo = park(indexBuildInfo); parked.ixErr = park(indexBuildError)
     dbStates(from) = parked
     dbStates.get(to).foreach { st =>
@@ -701,7 +820,7 @@ final class Interp {
     // BEGIN and COMMIT/CANCEL execute eagerly; on the first error the
     // transaction aborts — prior successful results flip to the
     // failed-transaction error, later statements are skipped as cancelled,
-    // and the catalog rolls back to the BEGIN snapshot.
+    // and the catalog rolls back to the BEGIN mark.
     var inTx = false
     var txAborted = false
     // Abort cause matters (executor.rs keeps two distinct consume loops):
@@ -713,11 +832,15 @@ final class Interp {
     // statements (no result rows) until COMMIT/CANCEL (executor.rs:842)
     var txReturned = false
     var txStart = 0
-    var snapshot: Option[TxSnapshot] = scala.None
+    var txMark: Option[TxMark] = scala.None
+    def endTx(rollback: Boolean): Unit = {
+      txMark.foreach { m => if (rollback) m.rollback(); m.close() }
+      txMark = scala.None
+    }
     val FailedTx = "The query was not executed due to a failed transaction"
     val CancelledTx = "The query was not executed due to a cancelled transaction"
 
-    ast.stmts.foreach { stmt =>
+    try ast.stmts.foreach { stmt =>
       stmt match {
         case BeginStmt if inTx && txAborted && txNested =>
           // Another BEGIN inside the already-aborted consume loop is just a
@@ -725,7 +848,7 @@ final class Interp {
           results += QErr(s"$FailedTx: BEGIN")
         case BeginStmt =>
           if (!inTx) {
-            snapshot = Some(new TxSnapshot); inTx = true; txAborted = false; txNested = false; txReturned = false
+            txMark = Some(new TxMark); inTx = true; txAborted = false; txNested = false; txReturned = false
             results += QOk(VNone)
             txStart = results.length
           } else {
@@ -743,14 +866,15 @@ final class Interp {
           if (!inTx)
             results += QErr("Invalid statement: Cannot COMMIT without starting a transaction")
           else if (txAborted) {
-            snapshot.foreach(_.restore())
+            endTx(rollback = true)
             results += QErr(
               if (txNested) "Cannot COMMIT: the transaction was aborted due to a nested BEGIN"
               else "Cannot COMMIT: the transaction was aborted due to a prior error")
-            inTx = false; txReturned = false; txAborted = false; txNested = false; snapshot = scala.None
+            inTx = false; txReturned = false; txAborted = false; txNested = false
           } else {
+            endTx(rollback = false)
             results += QOk(VNone)
-            inTx = false; txReturned = false; snapshot = scala.None
+            inTx = false; txReturned = false
           }
         case CancelStmt =>
           if (!inTx)
@@ -760,17 +884,17 @@ final class Interp {
             // loop returns without pushing any row; after a nested-BEGIN abort
             // it pushes the failed-transaction row first (executor.rs:903-910).
             if (txNested) results += QErr(s"$FailedTx: CANCEL")
-            snapshot.foreach(_.restore())
-            inTx = false; txReturned = false; txAborted = false; txNested = false; snapshot = scala.None
+            endTx(rollback = true)
+            inTx = false; txReturned = false; txAborted = false; txNested = false
           } else {
-            snapshot.foreach(_.restore())
+            endTx(rollback = true)
             for (i <- txStart until results.length)
               results(i) match {
                 case QOk(_) => results(i) = QErr(CancelledTx)
                 case _      => ()
               }
             results += QOk(VNone)
-            inTx = false; txReturned = false; txAborted = false; snapshot = scala.None
+            inTx = false; txReturned = false; txAborted = false
           }
         case _ if inTx && txReturned =>
           () // skipped entirely: no result row (executor.rs skip_remaining)
@@ -780,7 +904,7 @@ final class Interp {
           // each statement outside an explicit transaction runs in its own
           // implicit one: an error rolls its writes back (dbs/executor.rs —
           // for/break_in_function: the FOR's creates vanish on error)
-          val stmtSnap = if (inTx) scala.None else Some(new TxSnapshot)
+          val stmtMark = if (inTx) scala.None else Some(new TxMark)
           try {
             // session/namespace requirements + read-only role gate, checked
             // before execution (dbs/executor.rs context checks; iam/check)
@@ -827,7 +951,7 @@ final class Interp {
                   "Invalid control flow statement, break or continue statement found outside of loop."
                 case _ => throw e
               }
-              stmtSnap.foreach(_.restore())
+              stmtMark.foreach(_.rollback())
               if (inTx) {
                 for (i <- txStart until results.length)
                   results(i) match {
@@ -837,27 +961,29 @@ final class Interp {
                 txAborted = true
               }
               results += QErr(msg)
-          }
+          } finally stmtMark.foreach(_.close())
       }
+    } catch { // an exception escaping the loop closes the open mark, rolling nothing back
+      case e: Throwable => endTx(rollback = false); throw e
     }
     // EOF with an open transaction: implicit rollback (never reached by the
     // golden corpus, but leaves the catalog consistent for REPL-style use).
-    if (inTx) snapshot.foreach(_.restore())
+    if (inTx) endTx(rollback = true)
     results.toSeq
   }
 
   /** DDL catalog timeline for INFO … VERSION: a snapshot after every DDL
     * statement; versioned INFO restores the latest snapshot ≤ ts, reads,
     * then restores the present (kvs versionstamped catalog reads). */
-  private val ddlSnaps = mutable.ArrayBuffer[(java.time.Instant, TxSnapshot)]()
-  private val emptySnap = new TxSnapshot // construction-time (empty) catalog
+  private val ddlSnaps = mutable.ArrayBuffer[(java.time.Instant, DefsSnapshot)]()
+  private val emptySnap = new DefsSnapshot // construction-time (empty) catalog
 
   private def execInfoVersioned(s: InfoStmt, env: Env): V = {
     val ts = Eval.eval(s.version.get, env) match {
       case VDt(i) => i
       case other  => throw SqlError(s"Expected a datetime but found ${other.render}")
     }
-    val cur = new TxSnapshot
+    val cur = new DefsSnapshot
     val savedHist = history.toVector
     val savedSnaps = ddlSnaps.toVector
     try {
@@ -884,7 +1010,7 @@ final class Interp {
            _: AlterParamStmt | _: AlterAnalyzerStmt | _: AlterAccessStmt |
            _: AlterBucketStmt | _: AlterApiStmt | _: AlterConfigStmt |
            _: AlterUserStmt =>
-        ddlSnaps += ((java.time.Instant.now(), new TxSnapshot))
+        ddlSnaps += ((java.time.Instant.now(), new DefsSnapshot))
       case _ => ()
     }
     v
@@ -1081,7 +1207,11 @@ final class Interp {
       val before = (curNs, curDb)
       u.ns.foreach { n => curNs = n; sessionHasNs = true }
       u.db.foreach { d => curDb = d; sessionHasDb = true }
-      swapDbState(before, (curNs, curDb))
+      if (before != ((curNs, curDb))) {
+        swapDbState(before, (curNs, curDb))
+        val defs = new DefsSnapshot
+        journalAdd(UseUndo(before, (curNs, curDb), () => defs.restore()))
+      }
       // USE reports the resulting session target (statements/use) — an
       // explicitly selected EMPTY name reports '' (parsing/idents)
       VObj(TreeMap(
@@ -1600,7 +1730,7 @@ final class Interp {
     val name = s.d.name
     if (ddlGate(tableDefs.contains(name), s.mode, s"The table '$name' already exists")) {
       tableDefs(name) = s.d
-      tables.getOrElseUpdate(name, mutable.LinkedHashMap.empty)
+      table(name)
       // RELATION IN/OUT clauses register in/out field definitions
       // (catalog/table.rs Relation → record<…> fields)
       if (s.d.ttype == "RELATION") {
@@ -1995,7 +2125,7 @@ final class Interp {
           if (dependents.nonEmpty)
             throw SqlError(s"Invalid query: Cannot delete table `${s.name}` on which a view is defined, " +
               s"table(s) `${dependents.mkString("`, `")}` are defined as a view on this table.")
-          tables.remove(s.name); tableDefs.remove(s.name)
+          dropTable(s.name); tableDefs.remove(s.name)
           fieldPipeline.remove(s.name); uniqueIndexes.remove(s.name)
           fieldDefs2.keys.filter(_._1 == s.name).toSeq.foreach(fieldDefs2.remove)
           indexDefs.keys.filter(_._1 == s.name).toSeq.foreach(indexDefs.remove)
@@ -2623,11 +2753,15 @@ final class Interp {
 
   // ---- catalog ---------------------------------------------------------
 
-  def table(name: String): mutable.LinkedHashMap[V, VObj] = {
-    if (!tables.contains(name) && !tableDefs.contains(name))
-      tableDefs(name) = Defs.TableDef(name) // implicit tables register a definition
-    tables.getOrElseUpdate(name, mutable.LinkedHashMap.empty)
-  }
+  def table(name: String): mutable.LinkedHashMap[V, VObj] =
+    tables.getOrElse(name, {
+      if (!tableDefs.contains(name))
+        tableDefs(name) = Defs.TableDef(name) // implicit tables register a definition
+      journalAdd(TablesUndo(tables.toVector))
+      val t: Table = mutable.LinkedHashMap.empty
+      tables(name) = t
+      t
+    })
 
   /** Loose record-key lookup with a typed fast path. Record keys compare
     * with [[V.looseEq]] (numbers match across int/float/decimal
@@ -2646,18 +2780,38 @@ final class Interp {
       t: scala.collection.Map[V, VObj], key: V): Option[V] =
     if (Interp.looseIsolated(key)) {
       if (t.contains(key)) Some(key) else scala.None
-    } else t.keysIterator.find(V.looseEq(_, key))
+    } else {
+      looseScanCount += 1
+      t.keysIterator.find(V.looseEq(_, key))
+    }
+  private var looseScanCount = 0L
+  /** Record-key probes [[findKeyLoose]] answered by scanning a table. */
+  def looseScans: Long = looseScanCount
 
   /** Records created by RELATE carry edge metadata (catalog RecordType::Edge,
     * doc/alter.rs:93); only THOSE records pin in/out across updates. A normal
-    * table storing record links in fields named in/out keeps user edits. */
-  private val edgeMarks = mutable.HashSet[(String, V)]()
-  def markEdge(tb: String, key: V): Unit = edgeMarks += ((tb, key))
+    * table storing record links in fields named in/out keeps user edits.
+    * Marks are kept per table under the exact stored key, so callers pass
+    * the key the record is stored under (see [[findKeyLoose]]). */
+  private val edgeMarks = mutable.HashMap[String, mutable.HashSet[V]]()
+  def markEdge(tb: String, key: V): Unit =
+    if (markEdge0(tb, key)) journalAdd(MarkUndo(tb, key, added = true))
   def unmarkEdge(tb: String, key: V): Unit =
-    edgeMarks.filterInPlace { case (t, k) => t != tb || !V.looseEq(k, key) }
+    if (unmarkEdge0(tb, key)) journalAdd(MarkUndo(tb, key, added = false))
+  private def markEdge0(tb: String, key: V): Boolean =
+    edgeMarks.getOrElseUpdate(tb, mutable.HashSet.empty).add(key)
+  private def unmarkEdge0(tb: String, key: V): Boolean =
+    edgeMarks.get(tb).exists { ks =>
+      val had = ks.remove(key)
+      if (ks.isEmpty) edgeMarks.remove(tb)
+      had
+    }
   def isEdgeRecord(tb: String, key: V): Boolean =
     tableDefs.get(tb).exists(_.ttype == "RELATION") ||
-      edgeMarks.exists { case (t, k) => t == tb && V.looseEq(k, key) }
+      edgeMarks.get(tb).exists(_.contains(key))
+  /** Every edge mark, as (table, stored key). */
+  def edgeMarkSet: Set[(String, V)] =
+    edgeMarks.iterator.flatMap { case (tb, ks) => ks.iterator.map(tb -> _) }.toSet
 
   def fetchRecord(rid: VRid): Option[VObj] = {
     val raw = versionAsOf match {
@@ -4202,8 +4356,8 @@ final class Interp {
         // (doc/table.rs applies deltas transactionally with the write)
         ridKey.foreach { k =>
           before match {
-            case Some(b)    => table(tb)(k) = b
-            case scala.None => table(tb).remove(k)
+            case Some(b)    => putRecord(table(tb), k, b)
+            case scala.None => removeRecord(table(tb), k)
           }
           history += ((java.time.Instant.now(), tb, k, before)); writeGen += 1
         }
@@ -4364,7 +4518,7 @@ final class Interp {
       if (!permAllows(tb, "create", doc)) scala.None
       else {
         checkUniqueIndexes(tb, rid, doc)
-        t(key) = doc
+        putRecord(t, key, doc)
         fireEvents(tb, scala.None, Some(doc), env, Some(doc0))
         shapeOutput(scala.None, Some(doc), s.output, env, tb)
       }
@@ -4396,8 +4550,8 @@ final class Interp {
       keyOpt match {
         case Some(key) =>
           if (upsert) Interp.checkIdKey(tb, key)
-          val existing = findKeyLoose(t, key).map(t(_))
-          existing match {
+          val stored = findKeyLoose(t, key)
+          stored.map(t(_)) match {
             case Some(doc) =>
               val de = env.copy(doc = Some(doc))
               // record users need the UPDATE clause truthy for the before-
@@ -4410,11 +4564,11 @@ final class Interp {
                 }
                 val applied = applyData(doc, data, mutScope(env, Some(redactDoc(tb, doc))), redactTb = tb)
                 Interp.checkIdUnchanged(applied, rid)
-                val updated0 = if (isEdgeRecord(tb, key))
+                val updated0 = if (isEdgeRecord(tb, stored.get))
                   Interp.keepEdgeIdentity(applied, doc, rid) else applied
                 val updated = applyFieldPipeline(tb, rid, updated0, Some(doc), isCreate = false, env)
                 checkUniqueIndexes(tb, rid, updated)
-                t(findKeyLoose(t, key).getOrElse(key)) = updated
+                putRecord(t, findKeyLoose(t, key).getOrElse(key), updated)
                 fireEvents(tb, Some(doc), Some(updated), env, Some(updated0))
                 shapeOutput(Some(doc), Some(updated), output, env, tb).foreach(results += _)
               }
@@ -4424,7 +4578,7 @@ final class Interp {
               val doc0 = applyData(base, data, mutScope(env, scala.None))
               val doc = applyFieldPipeline(tb, rid, doc0, scala.None, isCreate = true, env)
               checkUniqueIndexes(tb, rid, doc)
-              t(key) = doc
+              putRecord(t, key, doc)
               fireEvents(tb, scala.None, Some(doc), env, Some(doc0))
               shapeOutput(scala.None, Some(doc), output, env, tb).foreach(results += _)
             case scala.None => ()
@@ -4448,7 +4602,7 @@ final class Interp {
                 Interp.keepEdgeIdentity(applied, doc, rid) else applied
               val updated = applyFieldPipeline(tb, rid, updated0, Some(doc), isCreate = false, env)
               checkUniqueIndexes(tb, rid, updated)
-              t(key) = updated
+              putRecord(t, key, updated)
               fireEvents(tb, Some(doc), Some(updated), env, Some(updated0))
               shapeOutput(Some(doc), Some(updated), output, env, tb).foreach(results += _)
             }
@@ -4461,7 +4615,7 @@ final class Interp {
             val doc0 = applyData(base, data, mutScope(env, scala.None))
             val doc = applyFieldPipeline(tb, rid, doc0, scala.None, isCreate = true, env)
             checkUniqueIndexes(tb, rid, doc)
-            t(key) = doc
+            putRecord(t, key, doc)
             fireEvents(tb, scala.None, Some(doc), env, Some(doc0))
             shapeOutput(scala.None, Some(doc), output, env, tb).foreach(results += _)
           }
@@ -4490,7 +4644,7 @@ final class Interp {
             case _ => VRid(tb, key)
           }
           applyReferentialActions(rid, env)
-          t.remove(key)
+          removeRecord(t, key)
           unmarkEdge(tb, key)
           fireEvents(tb, Some(doc), scala.None, env)
           cascadeEdgeDeletes(rid, env)
@@ -4510,19 +4664,25 @@ final class Interp {
     * (doc/purge.rs), running each edge's own delete lifecycle so DEFINE
     * EVENT on the edge table fires (event/with_relations golden). */
   private def cascadeEdgeDeletes(rid: VRid, env: Env): Unit = {
+    def endpoint(doc: VObj): Boolean = Seq("in", "out").exists(side =>
+      doc.fields.get(side).exists {
+        case r: VRid => r.table == rid.table && V.looseEq(r.key, rid.key)
+        case _ => false
+      })
     tables.toSeq.foreach { case (etb, t) =>
-      val victims = t.toSeq.filter { case (k, doc) =>
-        isEdgeRecord(etb, k) && Seq("in", "out").exists(side =>
-          doc.fields.get(side).exists {
-            case r: VRid => r.table == rid.table && V.looseEq(r.key, rid.key)
-            case _ => false
-          })
-      }
-      victims.foreach { case (k, doc) =>
-        if (t.contains(k)) { // a nested cascade may have removed it already
-          t.remove(k)
-          unmarkEdge(etb, k)
-          fireEvents(etb, Some(doc), scala.None, env)
+      // only RELATION tables and tables holding edge marks store edges
+      val relation = tableDefs.get(etb).exists(_.ttype == "RELATION")
+      val marked = edgeMarks.get(etb)
+      if (relation || marked.nonEmpty) {
+        val victims = t.toSeq.filter { case (k, doc) =>
+          (relation || marked.exists(_.contains(k))) && endpoint(doc)
+        }
+        victims.foreach { case (k, doc) =>
+          if (t.contains(k)) { // a nested cascade may have removed it already
+            removeRecord(t, k)
+            unmarkEdge(etb, k)
+            fireEvents(etb, Some(doc), scala.None, env)
+          }
         }
       }
     }
@@ -4562,7 +4722,7 @@ final class Interp {
                   s"`${Render.sql(refRid)}` with an ON DELETE REJECT clause")
               case "CASCADE" =>
                 applyReferentialActions(refRid, env)
-                tables(tbl).remove(k)
+                removeRecord(tables(tbl), k)
                 fireEvents(tbl, Some(r), scala.None, env)
               case "UNSET" =>
                 val updated = docFieldPath(r, path) match {
@@ -4570,7 +4730,7 @@ final class Interp {
                     VObj(r.fields.updated(path, VArr(items.filterNot(V.looseEq(_, target)))))
                   case _ => VObj(r.fields - path)
                 }
-                tables(tbl)(k) = updated
+                putRecord(tables(tbl), k, updated)
                 fireEvents(tbl, Some(r), Some(updated), env)
               case "THEN" =>
                 // custom referential action: run the THEN expression with
@@ -4643,9 +4803,10 @@ final class Interp {
               s"Cannot execute INSERT statement where property '$side' is: ${other.map(_.render).getOrElse("NONE")}")
           }
         }
-        markEdge(tb, key)
       }
       val t = table(tb)
+      // the mark goes on the stored key that loosely matches the row's id
+      if (s.relation) markEdge(tb, findKeyLoose(t, key).getOrElse(key))
       // duplicate = same record id OR a unique-index collision
       val rid = VRid(tb, key)
       val idxConflict = uniqueIndexes.getOrElse(tb, Vector.empty).view.flatMap {
@@ -4687,7 +4848,7 @@ final class Interp {
                 case _ => VRid(tb, k0)
               }
               val updated = applyFieldPipeline(tb, erid, updated0, Some(doc), isCreate = false, env)
-              t(findKeyLoose(t, k0).get) = updated
+              putRecord(t, findKeyLoose(t, k0).get, updated)
               fireEvents(tb, Some(doc), Some(updated), env)
               // the update arm has a real initial document, so RETURN
               // DIFF/BEFORE see it (doc/pluck.rs diffs initial→current)
@@ -4699,7 +4860,7 @@ final class Interp {
           val doc0 = VObj(row.fields.updated("id", rid))
           val doc = applyFieldPipeline(tb, rid, doc0, scala.None, isCreate = true, env)
           checkUniqueIndexes(tb, rid, doc)
-          t(key) = doc
+          putRecord(t, key, doc)
           fireEvents(tb, scala.None, Some(doc), env, Some(doc0))
           Some((scala.None, doc))
       }
@@ -4792,8 +4953,12 @@ final class Interp {
         VObj(d.fields.updated("id", rid: V).updated("in", from: V).updated("out", to: V))
       }
       val doc = applyFieldPipeline(edgeTable, rid, doc0, scala.None, isCreate = true, env)
-      table(edgeTable)(key) = doc
-      markEdge(edgeTable, key) // RecordType::Edge metadata (doc/alter.rs:93)
+      // a key loosely equal to a stored one writes over that record, as
+      // UPDATE does, so stored keys stay loosely distinct
+      val t = table(edgeTable)
+      val stored = findKeyLoose(t, key).getOrElse(key)
+      putRecord(t, stored, doc)
+      markEdge(edgeTable, stored) // RecordType::Edge metadata (doc/alter.rs:93)
       fireEvents(edgeTable, scala.None, Some(doc), env)
       shapeOutput(scala.None, Some(doc), s.output, env).foreach(results += _)
     }

@@ -57,4 +57,22 @@ class GateMathSpec extends AnyFunSuite {
     val out = QualityGates.annGates(ann, ann, 1, 0.5, 0.5).collect()
     assert(out.map(_.getString(0)).toSeq == out.map(_.getString(0)).sorted.toSeq)
   }
+
+  test("a null vec_id or cos_sim fails the gates instead of throwing") {
+    import spark.implicits._
+    val good = df(Seq(1L -> 0.9))
+    val nullSim = Seq((1L, Option.empty[Double])).toDF("vec_id", "cos_sim")
+    val nullId = Seq((Option.empty[Long], 0.9)).toDF("vec_id", "cos_sim")
+    Seq(QualityGates.annGates(nullSim, good, 1, 0.5, 0.5),
+        QualityGates.annGates(good, nullId, 1, 0.5, 0.5)).foreach { gates =>
+      val out = gates.collect()
+      assert(out.length == 2 && out.forall(r => !r.isNullAt(2) && !r.getBoolean(2)),
+        out.mkString(", "))
+    }
+    val scan = spark.range(1).select(lit(0.4).as("scan_frac"))
+    val out = QualityGates.annGatesWithScan(nullSim, good, scan, 1, 0.5, 0.5, 0.1).collect()
+    val passed = out.map(r => r.getString(0).takeWhile(_ != ' ') -> r.getBoolean(2)).toMap
+    assert(passed == Map("recall@1" -> false, "sim_ratio@1" -> false, "scan_headroom" -> true),
+      out.mkString(", "))
+  }
 }
