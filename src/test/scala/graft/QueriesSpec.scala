@@ -13,8 +13,10 @@ class QueriesSpec extends AnyFunSuite {
 
   test("every registered query runs and yields a schema") {
     SparkEntry.queries.foreach { case (name, fn) =>
-      val df = fn(spark, sf)
-      assert(df.schema.fields.nonEmpty, s"$name has empty schema")
+      withClue(s"$name: ") {
+        val df = fn(spark, sf)
+        assert(df.schema.fields.nonEmpty, s"$name has empty schema")
+      }
     }
   }
 

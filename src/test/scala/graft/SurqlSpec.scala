@@ -81,6 +81,7 @@ class SurqlSpec extends AnyFunSuite {
 
   test("golden corpus per-category floors hold") {
     val root = java.nio.file.Paths.get("/root/reference/language-tests/tests")
+    assume(java.nio.file.Files.isDirectory(root), "reference corpus not present")
     val in = getClass.getResourceAsStream("/golden_floors.txt")
     val floors = scala.io.Source.fromInputStream(in, "UTF-8").getLines().filter(_.nonEmpty)
       .map { l => val Array(c, f) = l.split('\t'); (c, f.toLong) }.toVector
