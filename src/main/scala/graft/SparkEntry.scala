@@ -1,9 +1,8 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 
-import graft.functions.{Exact, MiscQueries, ScalarQueries, VectorQueries}
+import graft.functions.MiscQueries
 import graft.operators._
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
@@ -15,35 +14,30 @@ import graft.operators._
   * kept order-independent. */
 object SparkEntry {
 
-  private val handBuilt: Seq[Q] =
-    Relational.all ++ GraphOps.all ++ ScalarQueries.all ++
-      VectorQueries.all ++ MiscQueries.all ++
+  /** One list, one row per name. Most rows are SurrealQL text run through
+    * the parser and SparkPlanner ([[SurqlQueries]]), so the oracle gate
+    * checks parse → plan → execute end to end. The DataFrame closures in the
+    * other objects cover operators that have no SurrealQL twin: streams and
+    * live queries, ANN and dedup gates, multimodal, sources and sinks, and
+    * the golden corpus. A name may appear only once: [[queries]] builds a
+    * map, where a later duplicate would silently replace an earlier one. */
+  private val registry: Seq[Q] =
+    Relational.all ++ GraphOps.all ++ MiscQueries.all ++
       Mutations.all ++ graft.streaming.Live.all ++
       TextOps.all ++ Dedup.all ++ Similarity.all ++ Hnsw.all ++
-      FullText.all ++ Multimodal.all ++ Buckets.all ++ graft.sources.Sources.all
+      FullText.all ++ Multimodal.all ++ Buckets.all ++ graft.sources.Sources.all ++
+      SurqlQueries.all ++ GoldenQueries.all
 
-  /** Every SurqlQueries entry (SurqlQueries.all.length of them) runs as REAL
-    * SurrealQL text through the parser + SparkPlanner (graft.surql) — each
-    * overrides the hand-built closure of the same name, so the driver's
-    * oracle gate verifies parse → plan → execute end-to-end.
-    *
-    * The ~48 shadowed hand-built closures stay in their files ON PURPOSE:
-    * several are load-bearing outside this registry ([[entry]] calls
-    * Relational.aggGroup, the ANN quality gates call Similarity.knnBrute,
-    * FullText gates reuse fulltextBm25's plan), and the rest document the
-    * DataFrame-native shape of each operator next to its SQL oracle —
-    * the form a library user composes directly, where SurqlQueries shows
-    * the same operator reached through the query language. */
-  private val registry: Seq[Q] = {
-    val planned = SurqlQueries.all.map(_.name).toSet
-    handBuilt.filterNot(q => planned.contains(q.name)) ++ SurqlQueries.all ++
-      GoldenQueries.all
+  locally {
+    val dups = registry.groupBy(_.name).collect { case (n, qs) if qs.size > 1 => n }
+    require(dups.isEmpty,
+      s"registry names must be distinct; duplicated: ${dups.toSeq.sorted.mkString(", ")}")
   }
 
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0.
     * TPC-H Q1 shape: scan → filter → groupBy agg → sort. */
   def entry(spark: SparkSession): DataFrame =
-    Relational.aggGroup.fn(spark, "/root/testdata/sf0.001")
+    SurqlQueries.aggGroup.fn(spark, "/root/testdata/sf0.001")
 
   /** One per implemented operator from SURVEY.md §2. */
   def queries: Map[String, (SparkSession, String) => DataFrame] =

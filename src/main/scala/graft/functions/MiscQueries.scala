@@ -4,11 +4,12 @@ import org.apache.spark.sql.functions._
 
 import graft.{Q, Tables}
 
-/** Remaining scalar namespaces of SURVEY §2.4: geo::*, crypto::*, parse::*,
-  * duration::*, plus the idiom-path and closure/HOF surface of §2.3.
-  * Everything stays in codegen'd column expressions; the oracle side uses
-  * structurally identical DuckDB expressions so float results are
-  * bit-comparable (rounded where libm functions are involved). */
+/** geo::* (SURVEY §2.4) as a DataFrame closure. Everything stays in
+  * codegen'd column expressions; the oracle side uses structurally
+  * identical DuckDB expressions so float results are bit-comparable
+  * (rounded where libm functions are involved). The other scalar
+  * namespaces reach Spark as SurrealQL text in
+  * [[graft.operators.SurqlQueries]]. */
 object MiscQueries {
 
   /** geo::distance (haversine, fnc/geo.rs) + geo::bearing over synthetic
@@ -52,138 +53,5 @@ object MiscQueries {
         .orderBy("c_custkey")
   }
 
-  /** crypto::md5 / crypto::sha256 / crypto::joaat-style bucket hash
-    * (fnc/mod.rs:214-219). */
-  val fnCrypto = Q("fn_crypto",
-    """SELECT doc_id, md5(text) AS h_md5, sha256(text) AS h_sha256,
-              substring(md5(source), 1, 4) AS src_bucket
-       FROM documents ORDER BY doc_id""") {
-    (s, d) =>
-      Tables.documents(s, d).select(
-        col("doc_id"),
-        md5(col("text")).as("h_md5"),
-        sha2(col("text"), 256).as("h_sha256"),
-        substring(md5(col("source")), 1, 4).as("src_bucket"))
-        .orderBy("doc_id")
-  }
-
-  /** parse::url::* + parse::email::* (fnc/mod.rs:314-322) over URLs/emails
-    * synthesized from part rows; extraction via identical regexps on both
-    * engines (no parse_url dependency in the oracle). */
-  val fnParse = Q("fn_parse",
-    """WITH u AS (
-         SELECT p_partkey,
-                'https://shop.example.com/parts/' || CAST(p_partkey AS VARCHAR)
-                  || '?brand=' || replace(p_brand, '#', '') AS url,
-                'user' || CAST(p_partkey AS VARCHAR) || '@mail.example.org' AS email
-         FROM part)
-       SELECT p_partkey,
-              regexp_extract(url, '^https?://([^/]+)', 1) AS host,
-              regexp_extract(url, '^https?://[^/]+(/[^?]*)', 1) AS path,
-              regexp_extract(url, '\?(.*)$', 1) AS query,
-              regexp_extract(url, '^(https?)', 1) AS scheme,
-              regexp_extract(email, '^([^@]+)@', 1) AS email_user,
-              regexp_extract(email, '@(.+)$', 1) AS email_host
-       FROM u ORDER BY p_partkey""") {
-    (s, d) =>
-      val url = concat(lit("https://shop.example.com/parts/"),
-        col("p_partkey").cast("string"), lit("?brand="),
-        regexp_replace(col("p_brand"), "#", ""))
-      val email = concat(lit("user"), col("p_partkey").cast("string"),
-        lit("@mail.example.org"))
-      Tables.part(s, d).select(
-        col("p_partkey"),
-        regexp_extract(url, "^https?://([^/]+)", 1).as("host"),
-        regexp_extract(url, "^https?://[^/]+(/[^?]*)", 1).as("path"),
-        regexp_extract(url, "\\?(.*)$", 1).as("query"),
-        regexp_extract(url, "^(https?)", 1).as("scheme"),
-        regexp_extract(email, "^([^@]+)@", 1).as("email_user"),
-        regexp_extract(email, "@(.+)$", 1).as("email_host"))
-        .orderBy("p_partkey")
-  }
-
-  /** duration::* + datetime arithmetic (fnc/mod.rs:221-237; SurrealQL
-    * duration literals like 3d/2h): timestamp + interval, duration decompose
-    * from a seconds value — pure integer math on both sides. */
-  val fnDuration = Q("fn_duration",
-    """SELECT o_orderkey,
-              CAST(o_orderdate + INTERVAL 3 DAY AS DATE) AS plus_3d,
-              CAST(o_orderdate - INTERVAL 12 HOUR AS TIMESTAMP) AS minus_12h,
-              CAST(CAST(epoch(o_orderdate) AS BIGINT) % 86400 AS BIGINT) AS secs_in_day,
-              CAST(o_orderkey * 3600 // 86400 AS BIGINT) AS dur_days,
-              CAST((o_orderkey * 3600 % 86400) // 3600 AS BIGINT) AS dur_hours
-       FROM orders ORDER BY o_orderkey""") {
-    (s, d) =>
-      Tables.orders(s, d).select(
-        col("o_orderkey"),
-        (col("o_orderdate") + expr("INTERVAL 3 DAY")).cast("date").as("plus_3d"),
-        (col("o_orderdate") - expr("INTERVAL 12 HOUR")).cast("timestamp").as("minus_12h"),
-        (unix_timestamp(col("o_orderdate")) % 86400).cast("bigint").as("secs_in_day"),
-        (col("o_orderkey") * 3600 / 86400).cast("bigint").as("dur_days"),
-        ((col("o_orderkey") * 3600 % 86400) / 3600).cast("bigint").as("dur_hours"))
-        .orderBy("o_orderkey")
-  }
-
-  /** Idiom paths (§2.3): nested object construction + path access + array
-    * index + destructure — `person.address.city`, `tags[0]`, `.{a, b}`.
-    * Outputs are scalars extracted through the paths (struct compare across
-    * engines is avoided; the pathing is what's exercised). */
-  val idiomPaths = Q("idiom_paths",
-    """WITH docs AS (
-         SELECT c_custkey,
-                {'name': c_name,
-                 'address': {'segment': c_mktsegment, 'nation': c_nationkey},
-                 'tags': string_split(c_mktsegment, 'I')} AS doc
-         FROM customer)
-       SELECT c_custkey,
-              doc.name AS name,
-              doc.address.segment AS seg,
-              CAST(doc.address.nation AS BIGINT) AS nat,
-              doc.tags[1] AS tag0,
-              CAST(len(doc.tags) AS BIGINT) AS n_tags
-       FROM docs ORDER BY c_custkey""") {
-    (s, d) =>
-      val doc = struct(
-        col("c_name").as("name"),
-        struct(col("c_mktsegment").as("segment"), col("c_nationkey").as("nation"))
-          .as("address"),
-        split(col("c_mktsegment"), "I").as("tags"))
-      Tables.customer(s, d).select(col("c_custkey"), doc.as("doc"))
-        .select(
-          col("c_custkey"),
-          col("doc.name").as("name"),
-          col("doc.address.segment").as("seg"),
-          col("doc.address.nation").cast("bigint").as("nat"),
-          element_at(col("doc.tags"), 1).as("tag0"),
-          size(col("doc.tags")).cast("bigint").as("n_tags"))
-        .orderBy("c_custkey")
-  }
-
-  /** Closures as HOF arguments (§2.3, expr/closure.rs → Catalyst
-    * LambdaFunction): array::map / filter / fold / any / all with `|$x| …`
-    * lambdas. `[WHERE cond]` array filtering is the same `filter` HOF. */
-  val fnClosures = Q("fn_closures",
-    """WITH t AS (SELECT p_partkey, string_split(p_type, ' ') AS ws FROM part)
-       SELECT p_partkey,
-              array_to_string(list_transform(ws, w -> lower(w)), '|') AS mapped,
-              coalesce(array_to_string(list_filter(ws, w -> length(w) > 5), '|'), '') AS filtered,
-              CAST(len(list_filter(ws, w -> length(w) > 5)) > 0 AS BOOLEAN) AS any_long,
-              CAST(len(list_filter(ws, w -> length(w) >= 3)) = len(ws) AS BOOLEAN) AS all_3,
-              CAST(list_sum(list_transform(ws, w -> length(w))) AS BIGINT) AS total_len
-       FROM t ORDER BY p_partkey""") {
-    (s, d) =>
-      // Lambda HOFs stay codegen'd; outputs are '|'-joined for the oracle
-      // compare (driver comparator cannot hash list columns).
-      val ws = split(col("p_type"), " ")
-      Tables.part(s, d).select(
-        col("p_partkey"),
-        concat_ws("|", transform(ws, w => lower(w))).as("mapped"),
-        concat_ws("|", filter(ws, w => length(w) > 5)).as("filtered"),
-        exists(ws, w => length(w) > 5).as("any_long"),
-        forall(ws, w => length(w) >= 3).as("all_3"),
-        aggregate(ws, lit(0L), (acc, w) => acc + length(w)).cast("bigint").as("total_len"))
-        .orderBy("p_partkey")
-  }
-
-  val all: Seq[Q] = Seq(geoDistance, fnCrypto, fnParse, fnDuration, idiomPaths, fnClosures)
+  val all: Seq[Q] = Seq(geoDistance)
 }

@@ -65,9 +65,9 @@ object FullText {
 
   /** Per-document BM25 scores for a bag of query terms against the persisted
     * index — every matched doc (≥1 term), no top-k. The `@@` WHERE lowering
-    * joins this; [[bm25]] adds the TakeOrdered. All constants and
-    * intermediates in double; the only order-dependent float sum is over
-    * ≤|terms| addends per doc, hidden by round(4). */
+    * joins this. All constants and intermediates in double; the only
+    * order-dependent float sum is over ≤|terms| addends per doc, hidden by
+    * round(4). */
   def scores(spark: SparkSession, dir: String, terms: Seq[String]): DataFrame = {
     val (allPost, dl) = index(spark, dir)
     val post = allPost.filter(col("term").isin(terms: _*))
@@ -103,16 +103,9 @@ object FullText {
       .groupBy(key).agg(countDistinct(col("term")).as("__fts_nt"))
       .filter(col("__fts_nt") === terms.distinct.size).select(key)
 
-  /** BM25 top-k (FullTextScan + SortTopK → TakeOrderedAndProject), AND
-    * matching semantics (the bare-`@@` default). */
-  def bm25(spark: SparkSession, dir: String, terms: Seq[String], k: Int): DataFrame =
-    scores(spark, dir, terms)
-      .join(allTermsHits(index(spark, dir)._1, "doc_id", terms),
-        Seq("doc_id"), "left_semi")
-      .orderBy(col("score").desc, col("doc_id"))
-      .limit(k)
-
-  /** SQL twin of [[bm25]] for the DuckDB oracle. */
+  /** DuckDB oracle for BM25 top-k under AND matching (the bare-`@@`
+    * default): [[scores]] restricted to [[allTermsHits]], ordered by score
+    * and key, first `k`. */
   def sqlBm25(terms: Seq[String], k: Int): String = {
     val inList = terms.map(t => s"'$t'").mkString("(", ", ", ")")
     s"""WITH toks AS (
@@ -353,12 +346,6 @@ object FullText {
     (s, d) => bm25Stemmed(s, d, stemmedQueryWords, 20)
   }
 
-  /** `FullTextScan` (`@@` MATCHES with BM25 ranking): top-20 documents for a
-    * 3-term query. */
-  val fulltextBm25 = Q("fulltext_bm25", sqlBm25(queryTerms, 20)) {
-    (s, d) => bm25(s, d, queryTerms, 20)
-  }
-
   /** Boolean AND match (`@@` with all-terms semantics): documents containing
     * every query term — postings semi-join against the persisted index,
     * distinct-term count == |terms|. */
@@ -457,6 +444,6 @@ object FullText {
         .orderBy("doc_id")
   }
 
-  val all: Seq[Q] = Seq(fulltextBm25, fulltextAll, fulltextHighlight,
-    fulltextHighlightArr, fulltextStemmed)
+  val all: Seq[Q] = Seq(fulltextAll, fulltextHighlight, fulltextHighlightArr,
+    fulltextStemmed)
 }

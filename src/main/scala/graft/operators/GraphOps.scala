@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -17,8 +17,9 @@ import graft.{Q, Tables}
   * plans a semi join when only target ids are needed
   * (`GraphScanOutput::TargetId`, scan/graph.rs:30-36).
   *
-  * On the TPC-H-ish testdata the natural edge tables are
-  * `orders (customer -> order)` and `lineitem (order -> part/supplier)`.
+  * This object holds what [[graft.surql.SparkPlanner]] lowers a hop onto:
+  * the relation catalog, the persisted edge tables and the recursion loop.
+  * The hop queries themselves are SurrealQL text in [[SurqlQueries]].
   *
   * Bounded recursion `@{1..n}` (exec/operators/recursion.rs:81) is a
   * driver-side loop over frontier DataFrames — each hop is one distributed
@@ -105,12 +106,6 @@ object GraphOps {
       case other => throw new IllegalArgumentException(s"unknown edge table $other")
     }
 
-  /** One `->edge->` hop: from a set of source ids through an edge table.
-    * `outCols` picks what survives (TargetId vs FullEdge output modes). */
-  def hop(src: DataFrame, edges: DataFrame, srcKey: Column, edgeIn: Column,
-          outCols: Seq[Column]): DataFrame =
-    src.join(edges, srcKey === edgeIn).select(outCols: _*)
-
   /** Bounded recursive traversal: frontier-join loop with depth counter.
     * Returns (start, node, depth) for depth in 1..maxDepth. Each iteration is
     * one shuffle join on `src`. The edge set and every frontier are persisted
@@ -148,54 +143,6 @@ object GraphOps {
       depth += 1
     }
     acc
-  }
-
-  /** 1-hop: BUILDING-segment customers `->placed->order`, ids only
-    * (semi-join shape — Catalyst prunes the customer payload columns). */
-  val graphOneHop = Q("graph_one_hop",
-    """SELECT o.o_orderkey FROM orders o
-       JOIN customer c ON o.o_custkey = c.c_custkey
-       WHERE c.c_mktsegment = 'BUILDING'
-       ORDER BY o.o_orderkey""") {
-    (s, d) =>
-      val c = Tables.customer(s, d).filter(col("c_mktsegment") === "BUILDING")
-      val o = Tables.orders(s, d)
-      hop(c, o, c("c_custkey"), o("o_custkey"), Seq(o("o_orderkey")))
-        .orderBy("o_orderkey")
-  }
-
-  /** 2-hop: AUTOMOBILE customers `->order->lineitem->part` — distinct part
-    * ids reached. Two shuffle joins; the filter is pushed below both. */
-  val graphTwoHop = Q("graph_two_hop",
-    """SELECT DISTINCT l.l_partkey FROM customer c
-       JOIN orders o ON o.o_custkey = c.c_custkey
-       JOIN lineitem l ON l.l_orderkey = o.o_orderkey
-       WHERE c.c_mktsegment = 'AUTOMOBILE'
-       ORDER BY l_partkey""") {
-    (s, d) =>
-      val c = Tables.customer(s, d).filter(col("c_mktsegment") === "AUTOMOBILE")
-      val o = Tables.orders(s, d)
-      val l = Tables.lineitem(s, d)
-      val firstHop = hop(c, o, c("c_custkey"), o("o_custkey"), Seq(o("o_orderkey")))
-      firstHop.join(l, firstHop("o_orderkey") === l("l_orderkey"))
-        .select(l("l_partkey")).distinct()
-        .orderBy("l_partkey")
-  }
-
-  /** `ReferenceScan` (exec/operators/scan/reference.rs:48): reverse lookup
-    * `<~lineitem` — which rows reference these parts. Join direction swapped;
-    * same equi-join machinery. */
-  val referenceScan = Q("reference_scan",
-    """SELECT l.l_orderkey, l.l_linenumber, p.p_partkey FROM part p
-       JOIN lineitem l ON l.l_partkey = p.p_partkey
-       WHERE p.p_size = 50
-       ORDER BY p_partkey, l_orderkey, l_linenumber""") {
-    (s, d) =>
-      val p = Tables.part(s, d).filter(col("p_size") === 50)
-      val l = Tables.lineitem(s, d)
-      p.join(l, l("l_partkey") === p("p_partkey"))
-        .select(l("l_orderkey"), l("l_linenumber"), p("p_partkey"))
-        .orderBy("p_partkey", "l_orderkey", "l_linenumber")
   }
 
   /** `Recursion` (exec/operators/recursion.rs:81): bounded traversal
@@ -237,5 +184,5 @@ object GraphOps {
         .orderBy("start", "depth", "node")
   }
 
-  val all: Seq[Q] = Seq(graphOneHop, graphTwoHop, referenceScan, recursionChain)
+  val all: Seq[Q] = Seq(recursionChain)
 }

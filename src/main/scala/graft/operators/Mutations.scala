@@ -50,19 +50,6 @@ object Mutations {
   def delete(table: DataFrame, cond: Column): (DataFrame, DataFrame) =
     (table.filter(!cond), table.filter(cond))
 
-  /** CREATE: append rows whose ids must not exist (reference errors on
-    * duplicate record id — enforced here by an anti-join guard; the
-    * conflicting rows are simply not appendable). */
-  def create(table: DataFrame, rows: DataFrame, idCol: String): DataFrame = {
-    val fresh = rows.join(table.select(idCol), Seq(idCol), "left_anti")
-    table.unionByName(fresh)
-  }
-
-  /** INSERT IGNORE = create (conflicts skipped); plain INSERT asserts no
-    * conflicts at the call site via [[conflicts]]. */
-  def conflicts(table: DataFrame, rows: DataFrame, idCol: String): DataFrame =
-    rows.join(table.select(idCol), Seq(idCol), "left_semi")
-
   /** UPSERT / INSERT … ON DUPLICATE KEY UPDATE: delta wins on key collision,
     * table rows survive otherwise — one full-outer join on the key. */
   def upsert(table: DataFrame, delta: DataFrame, idCol: String): DataFrame = {
@@ -195,79 +182,6 @@ object Mutations {
 
   // ---- oracle-checked mutation queries (pure transforms) ---------------
 
-  /** UPDATE orders SET o_totalprice *= 1.1, o_orderpriority = '2-HIGH'
-    * WHERE o_orderstatus = 'O' RETURN AFTER. */
-  val mutUpdateSet = Q("mut_update_set",
-    """SELECT o_orderkey, o_totalprice * CAST(1.1 AS DOUBLE) AS o_totalprice,
-              '2-HIGH' AS o_orderpriority
-       FROM orders WHERE o_orderstatus = 'O' ORDER BY o_orderkey""") {
-    (s, d) =>
-      val o = Tables.orders(s, d)
-      val cond = col("o_orderstatus") === "O"
-      update(o, cond, Map(
-        "o_totalprice" -> col("o_totalprice") * lit(1.1),
-        "o_orderpriority" -> lit("2-HIGH")))
-        .filter(cond) // RETURN AFTER = the touched rows
-        .select("o_orderkey", "o_totalprice", "o_orderpriority")
-        .orderBy("o_orderkey")
-  }
-
-  /** CREATE region:⟨k+100⟩ — append synthesized rows; duplicate-id guard via
-    * anti-join. Returns the whole post-mutation table. */
-  val mutCreate = Q("mut_create",
-    """SELECT r_regionkey, r_name FROM (
-         SELECT r_regionkey, r_name FROM region
-         UNION ALL
-         SELECT r_regionkey + 100, 'REGION_' || CAST(r_regionkey AS VARCHAR) FROM region)
-       ORDER BY r_regionkey""") {
-    (s, d) =>
-      val r = Tables.region(s, d)
-      val rows = r.select((col("r_regionkey") + 100).as("r_regionkey"),
-        concat(lit("REGION_"), col("r_regionkey").cast("string")).as("r_name"))
-      create(r, rows, "r_regionkey")
-        .select("r_regionkey", "r_name")
-        .orderBy("r_regionkey")
-  }
-
-  /** UPSERT: price bump for o_orderkey < 50 (update arm) + 5 synthesized
-    * orders (insert arm); output restricted to the affected key ranges. */
-  val mutUpsert = Q("mut_upsert",
-    """WITH delta_up AS (
-         SELECT o_orderkey, o_custkey, o_orderstatus,
-                o_totalprice + CAST(1000.0 AS DOUBLE) AS o_totalprice,
-                o_orderdate, o_orderpriority
-         FROM orders WHERE o_orderkey < 50),
-       delta_new AS (
-         SELECT o_orderkey + 1000000, o_custkey, 'N', o_totalprice, o_orderdate,
-                o_orderpriority
-         FROM orders WHERE o_orderkey < 5)
-       SELECT o_orderkey, o_totalprice, o_orderstatus FROM (
-         SELECT * FROM delta_up UNION ALL SELECT * FROM delta_new)
-       ORDER BY o_orderkey""") {
-    (s, d) =>
-      val o = Tables.orders(s, d)
-      val deltaUp = o.filter(col("o_orderkey") < 50)
-        .withColumn("o_totalprice", col("o_totalprice") + lit(1000.0))
-      val deltaNew = o.filter(col("o_orderkey") < 5)
-        .withColumn("o_orderkey", col("o_orderkey") + 1000000L)
-        .withColumn("o_orderstatus", lit("N"))
-      upsert(o, deltaUp.unionByName(deltaNew), "o_orderkey")
-        .filter(col("o_orderkey") < 50 || col("o_orderkey") >= 1000000L)
-        .select("o_orderkey", "o_totalprice", "o_orderstatus")
-        .orderBy("o_orderkey")
-  }
-
-  /** DELETE … RETURN BEFORE: the rows removed. */
-  val mutDeleteBefore = Q("mut_delete_before",
-    """SELECT o_orderkey, o_totalprice FROM orders
-       WHERE o_orderstatus = 'F' AND o_totalprice < 50000.0
-       ORDER BY o_orderkey""") {
-    (s, d) =>
-      val (_, deleted) = delete(Tables.orders(s, d),
-        col("o_orderstatus") === "F" && col("o_totalprice") < 50000.0)
-      deleted.select("o_orderkey", "o_totalprice").orderBy("o_orderkey")
-  }
-
   /** RELATE supplier->supplies->part, aggregating lineitem into edge props
     * (edge id = "supplies:⟨in⟩:⟨out⟩" — record-id canonical form). */
   val mutRelate = Q("mut_relate",
@@ -311,6 +225,5 @@ object Mutations {
         .orderBy("id")
   }
 
-  val all: Seq[Q] = Seq(mutUpdateSet, mutCreate, mutUpsert, mutDeleteBefore,
-    mutRelate, mutChangefeed)
+  val all: Seq[Q] = Seq(mutRelate, mutChangefeed)
 }

@@ -1,290 +1,25 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.{Q, Tables}
 import graft.functions.Exact
 
-/** The SELECT pipeline of the reference's new streaming engine
-  * (surrealdb: exec/planner/select.rs:195 `plan_pipeline` — source → Filter →
-  * Split → Aggregate → Sort → Limit → Project → Fetch), re-expressed as
-  * declarative Spark plans so Catalyst/Tungsten own pushdown, pruning,
-  * whole-stage codegen and AQE.
+/** Event-stream operators built as DataFrame closures: a conditional-count
+  * aggregate over the events table and the batch twins of the streaming
+  * transforms in [[graft.streaming.Streams]] (sessions, tumbling and hopping
+  * windows, interval join, dedup, enrichment). The SELECT pipeline of the
+  * reference's streaming engine (surrealdb: exec/planner/select.rs:195
+  * `plan_pipeline` — source → Filter → Split → Aggregate → Sort → Limit →
+  * Project → Fetch) reaches Spark as SurrealQL text in [[SurqlQueries]].
   *
-  * Each `Q` below names one operator of SURVEY.md §2.1/§2.5-2.7 and carries a
-  * DuckDB oracle. Scale notes are inline: the driver verifies at sf0.01, but
-  * every plan here is shaped for a 1000-executor cluster (no collect()s, no
-  * cartesian products, broadcast only for fixed-size dims).
+  * Each `Q` below carries a DuckDB oracle. Scale notes are inline: the
+  * oracle gate runs at sf0.01, but every plan here is shaped for a
+  * 1000-executor cluster (no collect()s, no cartesian products, broadcast
+  * only for fixed-size dims).
   */
 object Relational {
-
-  // ---- sources --------------------------------------------------------
-
-  /** `TableScan` (exec/operators/scan/table.rs:39) with column pruning:
-    * only the projected columns reach the parquet reader (ReadSchema). */
-  val tableScan = Q("table_scan",
-    "SELECT c_custkey, c_name, c_acctbal FROM customer ORDER BY c_custkey") {
-    (s, d) =>
-      Tables.customer(s, d)
-        .select("c_custkey", "c_name", "c_acctbal")
-        .orderBy("c_custkey")
-  }
-
-  /** `RecordIdScan` point lookup (exec/operators/scan/record_id.rs:45):
-    * `SELECT * FROM orders:1`. Filter pushdown turns this into a
-    * min/max-pruned parquet scan; at 100 TB with the table sorted/partitioned
-    * by key this touches one file footer. */
-  val pointLookup = Q("point_lookup",
-    "SELECT o_orderkey, o_custkey, o_totalprice FROM orders WHERE o_orderkey = 1") {
-    (s, d) =>
-      Tables.orders(s, d)
-        .filter(col("o_orderkey") === 1L)
-        .select("o_orderkey", "o_custkey", "o_totalprice")
-  }
-
-  /** `RecordIdScan` over an id range (`orders:100..200`,
-    * record_id/range.rs) — a range predicate that prunes row groups. */
-  val rangeScan = Q("range_scan",
-    """SELECT o_orderkey, o_totalprice FROM orders
-       WHERE o_orderkey >= 100 AND o_orderkey < 200 ORDER BY o_orderkey""") {
-    (s, d) =>
-      Tables.orders(s, d)
-        .filter(col("o_orderkey") >= 100L && col("o_orderkey") < 200L)
-        .select("o_orderkey", "o_totalprice")
-        .orderBy("o_orderkey")
-  }
-
-  /** `CountScan` (exec/operators/scan/count.rs:47): `SELECT count() FROM t
-    * GROUP ALL` without materializing rows. Spark answers this from parquet
-    * footer metadata (no data pages read). */
-  val countAll = Q("count_all",
-    "SELECT COUNT(*) AS cnt FROM lineitem") {
-    (s, d) => Tables.lineitem(s, d).agg(count(lit(1)).as("cnt"))
-  }
-
-  /** `SourceExpr`/`ExprPlan` (exec/operators/source_expr.rs:33, expr.rs:24):
-    * a scalar-expression evaluated as a one-row plan (`RETURN 1 + 2`). */
-  val exprScalar = Q("expr_scalar",
-    """SELECT CAST(3 AS BIGINT) AS a, 'sur' || 'real' AS s,
-              CAST(2.0 AS DOUBLE) * CAST(3.5 AS DOUBLE) AS d, TRUE AS b""") {
-    (s, d) =>
-      s.range(1).select(
-        lit(3L).as("a"),
-        concat(lit("sur"), lit("real")).as("s"),
-        (lit(2.0) * lit(3.5)).as("d"),
-        lit(true).as("b"))
-  }
-
-  /** `Union` (exec/operators/union.rs:31): `FROM customer, supplier` is a bag
-    * concat of sources — `unionByName`, no shuffle. */
-  val unionFrom = Q("union_from",
-    """SELECT c_name AS name, 'customer' AS src FROM customer
-       UNION ALL
-       SELECT s_name AS name, 'supplier' AS src FROM supplier
-       ORDER BY src, name""") {
-    (s, d) =>
-      val c = Tables.customer(s, d).select(col("c_name").as("name"), lit("customer").as("src"))
-      val p = Tables.supplier(s, d).select(col("s_name").as("name"), lit("supplier").as("src"))
-      c.unionByName(p).orderBy("src", "name")
-  }
-
-  // ---- filter / project ----------------------------------------------
-
-  /** `Filter` (exec/operators/filter.rs:24). The compound predicate is fully
-    * pushed to the parquet scan (PushedFilters in explain). */
-  val filterWhere = Q("filter_where",
-    """SELECT l_orderkey, l_linenumber, l_quantity, l_extendedprice FROM lineitem
-       WHERE l_quantity > 45 AND l_discount >= 0.05 AND l_discount <= 0.07
-         AND l_returnflag = 'R'
-       ORDER BY l_orderkey, l_linenumber""") {
-    (s, d) =>
-      Tables.lineitem(s, d)
-        .filter(col("l_quantity") > 45 && col("l_discount") >= 0.05 &&
-          col("l_discount") <= 0.07 && col("l_returnflag") === "R")
-        .select("l_orderkey", "l_linenumber", "l_quantity", "l_extendedprice")
-        .orderBy("l_orderkey", "l_linenumber")
-  }
-
-  /** `Project` with computed expressions (exec/operators/project.rs:118). */
-  val projectExpr = Q("project_expr",
-    """SELECT o_orderkey,
-              o_totalprice * CAST(0.9 AS DOUBLE) AS discounted,
-              UPPER(o_orderpriority) AS prio,
-              o_orderstatus || '-' || o_orderpriority AS tag
-       FROM orders ORDER BY o_orderkey""") {
-    (s, d) =>
-      Tables.orders(s, d).select(
-        col("o_orderkey"),
-        (col("o_totalprice") * lit(0.9)).as("discounted"),
-        upper(col("o_orderpriority")).as("prio"),
-        concat(col("o_orderstatus"), lit("-"), col("o_orderpriority")).as("tag"))
-        .orderBy("o_orderkey")
-  }
-
-  /** `ProjectValue` (exec/operators/project_value.rs:30): `SELECT VALUE expr`
-    * — a single unnamed output column. */
-  val projectValue = Q("project_value",
-    "SELECT c_name AS value FROM customer ORDER BY value") {
-    (s, d) =>
-      Tables.customer(s, d).select(col("c_name").as("value")).orderBy("value")
-  }
-
-  /** `UnionIndexScan` (exec/operators/scan/union_index.rs:49): a top-level OR
-    * the reference serves from two indexes + dedup; Catalyst evaluates the OR
-    * in one pushed-down scan pass. */
-  val unionOrFilter = Q("union_or_filter",
-    """SELECT p_partkey, p_brand, p_size FROM part
-       WHERE p_size = 1 OR p_brand = 'Brand#33' ORDER BY p_partkey""") {
-    (s, d) =>
-      Tables.part(s, d)
-        .filter(col("p_size") === 1 || col("p_brand") === "Brand#33")
-        .select("p_partkey", "p_brand", "p_size")
-        .orderBy("p_partkey")
-  }
-
-  /** `Split` (exec/operators/split.rs:20): SPLIT ON an array field = one output
-    * row per element — `explode`, fully parallel, no shuffle. */
-  val splitExplode = Q("split_explode",
-    """SELECT p_partkey, UNNEST(string_split(p_type, ' ')) AS word
-       FROM part ORDER BY p_partkey, word""") {
-    (s, d) =>
-      Tables.part(s, d)
-        .select(col("p_partkey"),
-          explode(split(col("p_type"), " ")).as("word"))
-        .orderBy("p_partkey", "word")
-  }
-
-  // ---- sort / limit ---------------------------------------------------
-
-  /** `Sort` multi-key with mixed direction (exec/operators/sort/full_sort.rs:42).
-    * Spark's range-partitioned sort spills and scales; the reference's is
-    * in-memory single-node. */
-  val sortMulti = Q("sort_multi",
-    """SELECT o_orderkey, o_orderpriority, o_totalprice FROM orders
-       ORDER BY o_orderpriority ASC, o_totalprice DESC, o_orderkey ASC LIMIT 100""") {
-    (s, d) =>
-      Tables.orders(s, d)
-        .select("o_orderkey", "o_orderpriority", "o_totalprice")
-        .orderBy(col("o_orderpriority").asc, col("o_totalprice").desc, col("o_orderkey").asc)
-        .limit(100)
-  }
-
-  /** `SortTopK` (exec/operators/sort/topk.rs:73): ORDER BY + LIMIT plans as
-    * TakeOrderedAndProject — per-partition heaps, only k rows shuffle. */
-  val topK = Q("topk",
-    """SELECT l_orderkey, l_linenumber, l_extendedprice FROM lineitem
-       ORDER BY l_extendedprice DESC, l_orderkey, l_linenumber LIMIT 10""") {
-    (s, d) =>
-      Tables.lineitem(s, d)
-        .select("l_orderkey", "l_linenumber", "l_extendedprice")
-        .orderBy(col("l_extendedprice").desc, col("l_orderkey").asc, col("l_linenumber").asc)
-        .limit(10)
-  }
-
-  /** `Limit` with START (exec/operators/limit.rs:21): LIMIT n START m. */
-  val limitStart = Q("limit_start",
-    """SELECT o_orderkey, o_totalprice FROM orders
-       ORDER BY o_orderkey LIMIT 20 OFFSET 10""") {
-    (s, d) =>
-      Tables.orders(s, d)
-        .select("o_orderkey", "o_totalprice")
-        .orderBy("o_orderkey")
-        .offset(10).limit(20)
-  }
-
-  /** `UnwrapExactlyOne` (exec/operators/unwrap_exactly_one.rs:30):
-    * `SELECT … FROM ONLY x` errors unless exactly one row. The guard is a
-    * driver-side action on an already-pruned point lookup (O(1) rows). */
-  val onlyOne = Q("only_one",
-    "SELECT c_custkey, c_name FROM customer WHERE c_custkey = 7") {
-    (s, d) =>
-      val df = Tables.customer(s, d)
-        .filter(col("c_custkey") === 7L)
-        .select("c_custkey", "c_name")
-      val n = df.limit(2).count()
-      require(n == 1, s"FROM ONLY expects exactly 1 row, got $n")
-      df
-  }
-
-  // ---- aggregation ----------------------------------------------------
-
-  /** `Aggregate` GROUP BY (exec/operators/aggregate.rs:31) — TPC-H Q1 shape.
-    * Spark does partial (map-side) aggregation before the shuffle; sums run
-    * through decimal for order-independent results (see [[Exact]]). */
-  val aggGroup = Q("agg_group",
-    s"""SELECT l_returnflag, l_linestatus,
-               ${Exact.sqlSum("l_quantity")} AS sum_qty,
-               ${Exact.sqlSum("l_extendedprice")} AS sum_base,
-               ${Exact.sqlSum("l_extendedprice * (1.0 - l_discount)")} AS sum_disc,
-               ${Exact.sqlAvg("l_quantity")} AS avg_qty,
-               COUNT(*) AS cnt
-        FROM lineitem GROUP BY l_returnflag, l_linestatus
-        ORDER BY l_returnflag, l_linestatus""") {
-    (s, d) =>
-      Tables.lineitem(s, d)
-        .groupBy("l_returnflag", "l_linestatus")
-        .agg(
-          Exact.dsum(col("l_quantity")).as("sum_qty"),
-          Exact.dsum(col("l_extendedprice")).as("sum_base"),
-          Exact.dsum(col("l_extendedprice") * (lit(1.0) - col("l_discount"))).as("sum_disc"),
-          Exact.davg(col("l_quantity")).as("avg_qty"),
-          count(lit(1)).as("cnt"))
-        .orderBy("l_returnflag", "l_linestatus")
-  }
-
-  /** GROUP ALL — global aggregate (expr/group.rs; `Aggregate` with no keys). */
-  val aggGlobal = Q("agg_global",
-    s"""SELECT COUNT(*) AS cnt,
-               ${Exact.sqlSum("l_quantity")} AS sum_qty,
-               ${Exact.sqlAvg("l_extendedprice")} AS avg_price,
-               CAST(MIN(l_shipdate) AS DATE) AS min_ship,
-               CAST(MAX(l_shipdate) AS DATE) AS max_ship
-        FROM lineitem""") {
-    (s, d) =>
-      Tables.lineitem(s, d).agg(
-        count(lit(1)).as("cnt"),
-        Exact.dsum(col("l_quantity")).as("sum_qty"),
-        Exact.davg(col("l_extendedprice")).as("avg_price"),
-        min(col("l_shipdate")).cast("date").as("min_ship"),
-        max(col("l_shipdate")).cast("date").as("max_ship"))
-  }
-
-  /** DISTINCT over expressions = `Aggregate` on the keys with no outputs
-    * (SurrealQL: `array::distinct` / GROUP BY keys-only). */
-  val distinctScan = Q("distinct_scan",
-    """SELECT DISTINCT l_returnflag, l_linestatus FROM lineitem
-       ORDER BY l_returnflag, l_linestatus""") {
-    (s, d) =>
-      Tables.lineitem(s, d)
-        .select("l_returnflag", "l_linestatus")
-        .distinct()
-        .orderBy("l_returnflag", "l_linestatus")
-  }
-
-  /** `ArrayGroup`/`ArrayJoin`/`ArrayDistinct` aggregates
-    * (exec/function/builtin/aggregates/array.rs:20,79,161): collect a group
-    * into an array. Sorted on the way out — Spark's collect_list order is
-    * partition-dependent, the reference's is scan-ordered; sorting makes both
-    * deterministic. Array outputs are serialized to delimited strings in the
-    * oracle-compared projection (the driver's comparator cannot hash list
-    * columns); the grouped-array semantics are identical either way. */
-  val aggArrayCollect = Q("agg_array_collect",
-    """SELECT n_regionkey,
-              array_to_string(list_sort(list(n_name)), '|') AS names,
-              array_to_string(list_sort(list(n_name)), ',') AS joined,
-              COUNT(*) AS cnt
-       FROM nation GROUP BY n_regionkey ORDER BY n_regionkey""") {
-    (s, d) =>
-      Tables.nation(s, d)
-        .groupBy("n_regionkey")
-        .agg(
-          concat_ws("|", sort_array(collect_list(col("n_name")))).as("names"),
-          concat_ws(",", sort_array(collect_list(col("n_name")))).as("joined"),
-          count(lit(1)).as("cnt"))
-        .orderBy("n_regionkey")
-  }
 
   /** `CountField` — conditional count (aggregates/count.rs:83) plus CASE WHEN
     * tiers, over the events stream table. JSON props are parsed with a regexp
@@ -438,57 +173,6 @@ object Relational {
         .orderBy("event_id")
   }
 
-  // ---- join-shaped (FETCH / graph / subquery) -------------------------
-
-  /** `Fetch` (exec/operators/fetch.rs:27): dereference a record link into the
-    * full record — a left outer join + field embed. At scale this is a
-    * shuffle join on the link key; AQE picks broadcast when the fetched side
-    * is small. */
-  val fetchJoin = Q("fetch_join",
-    """SELECT o.o_orderkey, o.o_totalprice, c.c_name, c.c_mktsegment
-       FROM orders o LEFT JOIN customer c ON o.o_custkey = c.c_custkey
-       ORDER BY o.o_orderkey""") {
-    (s, d) =>
-      val o = Tables.orders(s, d)
-      val c = Tables.customer(s, d)
-      o.join(c, o("o_custkey") === c("c_custkey"), "left")
-        .select(o("o_orderkey"), o("o_totalprice"), c("c_name"), c("c_mktsegment"))
-        .orderBy("o_orderkey")
-  }
-
-  /** Correlated `IN` subquery → left-semi join (SURVEY §2.6 #5; the reference
-    * re-executes the subquery per row — we decorrelate into one shuffle). */
-  val subqueryIn = Q("subquery_in",
-    """SELECT c_custkey, c_name FROM customer
-       WHERE c_custkey IN (SELECT o_custkey FROM orders WHERE o_totalprice > 300000.0)
-       ORDER BY c_custkey""") {
-    (s, d) =>
-      val c = Tables.customer(s, d)
-      val o = Tables.orders(s, d).filter(col("o_totalprice") > 300000.0)
-      c.join(o, c("c_custkey") === o("o_custkey"), "left_semi")
-        .select("c_custkey", "c_name")
-        .orderBy("c_custkey")
-  }
-
-  /** `NOTINSIDE` on an id set → left-anti join (customers with no
-    * high-value orders). */
-  val subqueryNotIn = Q("subquery_not_in",
-    """SELECT c_custkey, c_name FROM customer
-       WHERE c_custkey NOT IN (SELECT o_custkey FROM orders WHERE o_totalprice > 250000.0)
-       ORDER BY c_custkey""") {
-    (s, d) =>
-      val c = Tables.customer(s, d)
-      val o = Tables.orders(s, d).filter(col("o_totalprice") > 250000.0)
-      c.join(o, c("c_custkey") === o("o_custkey"), "left_anti")
-        .select("c_custkey", "c_name")
-        .orderBy("c_custkey")
-  }
-
-  val all: Seq[Q] = Seq(
-    tableScan, pointLookup, rangeScan, countAll, exprScalar, unionFrom,
-    filterWhere, projectExpr, projectValue, unionOrFilter, splitExplode,
-    sortMulti, topK, limitStart, onlyOne,
-    aggGroup, aggGlobal, distinctScan, aggArrayCollect, fnConditional,
-    fetchJoin, subqueryIn, subqueryNotIn, eventsSessionize, eventsWindow,
+  val all: Seq[Q] = Seq(fnConditional, eventsSessionize, eventsWindow,
     eventsWindowSliding, eventsStreamJoin, eventsStreamDedup, eventsEnrich)
 }

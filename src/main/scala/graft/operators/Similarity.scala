@@ -54,17 +54,22 @@ object Similarity {
     call_function("graft_l1", a, b)
   }
 
-  /** SQL twin of [[cosine]]: same in-order double fold, for the DuckDB
+  /** SQL twin of [[dot]]: same in-order double fold, for the DuckDB
     * oracle (1-based list indexing; range(1,65) = dims 1..64). */
-  def sqlCosine(a: String, b: String): String = {
-    def dotS(x: String, y: String) =
-      s"list_sum(list_transform(range(1, 65), i -> CAST($x[i] AS DOUBLE) * CAST($y[i] AS DOUBLE)))"
-    s"(${dotS(a, b)} / (sqrt(${dotS(a, a)}) * sqrt(${dotS(b, b)})))"
-  }
+  def sqlDot(x: String, y: String): String =
+    s"list_sum(list_transform(range(1, 65), i -> CAST($x[i] AS DOUBLE) * CAST($y[i] AS DOUBLE)))"
+
+  /** SQL twin of [[cosine]], built on [[sqlDot]]. */
+  def sqlCosine(a: String, b: String): String =
+    s"(${sqlDot(a, b)} / (sqrt(${sqlDot(a, a)}) * sqrt(${sqlDot(b, b)})))"
 
   /** `KnnTopK` brute-force: exact top-10 cosine neighbors of vec_id=0.
     * The 1-row query side is broadcast; scoring is an embarrassingly
-    * parallel scan + TakeOrderedAndProject — the right plan at any scale. */
+    * parallel scan + TakeOrderedAndProject — the right plan at any scale.
+    * This is the exact reference the ANN recall gates compare against
+    * (the LSH and IVF gates below, [[Hnsw]], [[SurqlQueries]]). It is not a
+    * registry row: the registry's `knn_brute` is the SurrealQL text in
+    * [[SurqlQueries]], which uses this oracle. */
   val knnBrute = Q("knn_brute",
     s"""WITH q AS (SELECT embedding AS qe FROM embeddings WHERE vec_id = 0)
         SELECT e.vec_id, round(${sqlCosine("e.embedding", "q.qe")}, 6) AS cos_sim
@@ -500,5 +505,5 @@ object Similarity {
       QualityGates.annGates(annIvfTop10(s, d), knnBrute.fn(s, d), 10, 0.30, 0.85)
   }
 
-  val all: Seq[Q] = Seq(knnBrute, embedTopPairs, embedTopPairsExact, knnAnnLsh, knnAnnIvf)
+  val all: Seq[Q] = Seq(embedTopPairs, embedTopPairsExact, knnAnnLsh, knnAnnIvf)
 }

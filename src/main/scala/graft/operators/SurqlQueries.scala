@@ -8,14 +8,13 @@ import graft.functions.Exact
 import graft.surql.SparkPlanner
 
 /** The engine path: these queries are REAL SurrealQL text, parsed by
-  * graft.surql.Parser and lowered to DataFrame plans by [[SparkPlanner]] —
-  * no hand-built closures. They carry the same names and DuckDB oracles as
-  * the round-1 catalog entries they replace, so the correctness gate now
-  * verifies parse → plan → execute end-to-end (SURVEY §7 steps 2-3).
+  * graft.surql.Parser and lowered to DataFrame plans by [[SparkPlanner]],
+  * each paired with its DuckDB oracle, so the correctness gate verifies
+  * parse → plan → execute end-to-end (SURVEY §7 steps 2-3).
   *
-  * Scale shape is unchanged: the lowering lands on exactly the plans the
-  * hand-built versions produced (pushed-down scans, TakeOrderedAndProject,
-  * semi/anti joins), which Catalyst then owns. */
+  * The lowering lands on the plans a DataFrame author would write
+  * (pushed-down scans, TakeOrderedAndProject, semi/anti joins), which
+  * Catalyst then owns. */
 object SurqlQueries {
 
   private def sq(name: String, oracle: String)(surql: String): Q =
@@ -807,17 +806,18 @@ object SurqlQueries {
     """RELATE (supplier:1..4)->adjacent->(part:1..4) SET w = 1.5
        RETURN in, out, w""")("in", "out")
 
-  /** Names the planner path overrides — the hand-built closures with these
-    * names are replaced in SparkEntry's registry. */
   // ---- implicit array-collapse + closures from text -----------------------
 
   /** `ArrayGroup`-family aggregates from text: non-grouped fields collapse
     * into arrays under GROUP BY, and array::join serializes them (the
-    * comparator cannot hash lists). Same name/oracle as the hand-built
-    * entry it replaces — aggExpr lowers array::join to a sorted
-    * concat_ws(collect_list). */
+    * comparator cannot hash lists). aggExpr lowers array::join to a sorted
+    * concat_ws(collect_list); the oracle sorts with list_sort to match. */
   val aggArrayCollect = Q("agg_array_collect",
-    Relational.aggArrayCollect.oracle.get) { (s, d) =>
+    """SELECT n_regionkey,
+              array_to_string(list_sort(list(n_name)), '|') AS names,
+              array_to_string(list_sort(list(n_name)), ',') AS joined,
+              COUNT(*) AS cnt
+       FROM nation GROUP BY n_regionkey ORDER BY n_regionkey""") { (s, d) =>
     SparkPlanner.query(s, d,
       """SELECT n_regionkey,
                 array::join(n_name, '|') AS names,
@@ -876,7 +876,14 @@ object SurqlQueries {
     * any / all / fold lower to Catalyst lambda expressions (transform,
     * filter, exists, forall, aggregate) — fully codegen'd, no UDFs. */
   val fnClosures = Q("fn_closures",
-    graft.functions.MiscQueries.fnClosures.oracle.get) { (s, d) =>
+    """WITH t AS (SELECT p_partkey, string_split(p_type, ' ') AS ws FROM part)
+       SELECT p_partkey,
+              array_to_string(list_transform(ws, w -> lower(w)), '|') AS mapped,
+              coalesce(array_to_string(list_filter(ws, w -> length(w) > 5), '|'), '') AS filtered,
+              CAST(len(list_filter(ws, w -> length(w) > 5)) > 0 AS BOOLEAN) AS any_long,
+              CAST(len(list_filter(ws, w -> length(w) >= 3)) = len(ws) AS BOOLEAN) AS all_3,
+              CAST(list_sum(list_transform(ws, w -> length(w))) AS BIGINT) AS total_len
+       FROM t ORDER BY p_partkey""") { (s, d) =>
     SparkPlanner.query(s, d,
       """SELECT p_partkey,
                 array::join(array::map(string::split(p_type, ' '), |$w| string::lowercase($w)), '|') AS mapped,
@@ -910,7 +917,19 @@ object SurqlQueries {
     * nested field paths, trailing array index, array::len — all navigated
     * through a subquery-projected document column. */
   val idiomPaths = sq("idiom_paths",
-    graft.functions.MiscQueries.idiomPaths.oracle.get)(
+    """WITH docs AS (
+         SELECT c_custkey,
+                {'name': c_name,
+                 'address': {'segment': c_mktsegment, 'nation': c_nationkey},
+                 'tags': string_split(c_mktsegment, 'I')} AS doc
+         FROM customer)
+       SELECT c_custkey,
+              doc.name AS name,
+              doc.address.segment AS seg,
+              CAST(doc.address.nation AS BIGINT) AS nat,
+              doc.tags[1] AS tag0,
+              CAST(len(doc.tags) AS BIGINT) AS n_tags
+       FROM docs ORDER BY c_custkey""")(
     """SELECT c_custkey,
               doc.name AS name,
               doc.address.segment AS seg,
@@ -927,7 +946,20 @@ object SurqlQueries {
   /** parse::url::* / parse::email::* from text (fnc/mod.rs:314-322) over
     * URLs/emails synthesized in a subquery projection. */
   val fnParse = sq("fn_parse",
-    graft.functions.MiscQueries.fnParse.oracle.get)(
+    """WITH u AS (
+         SELECT p_partkey,
+                'https://shop.example.com/parts/' || CAST(p_partkey AS VARCHAR)
+                  || '?brand=' || replace(p_brand, '#', '') AS url,
+                'user' || CAST(p_partkey AS VARCHAR) || '@mail.example.org' AS email
+         FROM part)
+       SELECT p_partkey,
+              regexp_extract(url, '^https?://([^/]+)', 1) AS host,
+              regexp_extract(url, '^https?://[^/]+(/[^?]*)', 1) AS path,
+              regexp_extract(url, '\?(.*)$', 1) AS query,
+              regexp_extract(url, '^(https?)', 1) AS scheme,
+              regexp_extract(email, '^([^@]+)@', 1) AS email_user,
+              regexp_extract(email, '@(.+)$', 1) AS email_host
+       FROM u ORDER BY p_partkey""")(
     """SELECT p_partkey,
               parse::url::host(url) AS host,
               parse::url::path(url) AS path,
@@ -1123,10 +1155,16 @@ object SurqlQueries {
        FROM orders:1..20 ORDER BY o_orderkey""")
 
   // ---- text-analysis pipeline from SurrealQL text -------------------------
-  // (same names/oracles as the hand-built TextOps entries they replace)
 
+  /** Token counting: whitespace tokens + a BPE-ish subword estimate
+    * (chars/4 is the classic byte-pair heuristic), plus char classes. */
   val textTokens = sq("text_tokens",
-    graft.operators.TextOps.textTokens.oracle.get)(
+    """SELECT doc_id,
+              CAST(len(string_split(trim(text), ' ')) AS BIGINT) AS n_tokens,
+              CAST(length(text) AS BIGINT) AS n_chars2,
+              CAST(ceil(length(text) / 4.0) AS BIGINT) AS bpe_est,
+              CAST(length(replace(text, ' ', '')) AS BIGINT) AS n_nonspace
+       FROM documents ORDER BY doc_id""")(
     """SELECT doc_id,
               array::len(string::split(string::trim(text), ' ')) AS n_tokens,
               string::len(text) AS n_chars2,
@@ -1134,8 +1172,17 @@ object SurqlQueries {
               string::len(string::replace(text, ' ', '')) AS n_nonspace
        FROM documents ORDER BY doc_id""")
 
+  /** Quality scoring: mean word length, stopword ratio, short-doc flag —
+    * the standard C4/Gopher-style filters, as pure column math. */
   val textQuality = sq("text_quality",
-    graft.operators.TextOps.textQuality.oracle.get)(
+    """SELECT doc_id,
+               CAST(length(replace(text, ' ', '')) AS DOUBLE)
+                 / len(string_split(trim(text), ' ')) AS mean_word_len,
+               CAST(len(list_filter(string_split(trim(text), ' '),
+                        t -> list_contains(['the', 'a', 'of', 'and', 'to', 'in', 'is', 'it'], t))) AS DOUBLE)
+                 / len(string_split(trim(text), ' ')) AS stop_ratio,
+               length(text) < 100 AS too_short
+        FROM documents ORDER BY doc_id""")(
     """SELECT doc_id,
               <float> string::len(string::replace(text, ' ', ''))
                 / array::len(string::split(string::trim(text), ' ')) AS mean_word_len,
@@ -1145,8 +1192,18 @@ object SurqlQueries {
               string::len(text) < 100 AS too_short
        FROM documents ORDER BY doc_id""")
 
-  val textLangId = sq("text_langid",
-    graft.operators.TextOps.textLangId.oracle.get)(
+  /** Language-ID: marker-word heuristic — count hits against per-language
+    * marker lists, argmax with a fixed tie order. (The testdata vocabulary
+    * is synthetic; the per-language scoring and deterministic argmax are
+    * what's exercised.) */
+  val textLangId = sq("text_langid", {
+    val (en, de, fr) = TextOps.sqlLangScores
+    s"""SELECT doc_id,
+               CASE WHEN $en >= $de AND $en >= $fr THEN 'en'
+                    WHEN $de >= $fr THEN 'de' ELSE 'fr' END AS pred_lang,
+               CAST($en AS BIGINT) AS score_en
+        FROM documents ORDER BY doc_id"""
+  })(
     """SELECT doc_id,
               IF array::len(array::filter(string::split(string::trim(text), ' '), |$t| $t INSIDE ['the', 'a', 'of', 'and', 'fast']))
                    >= array::len(array::filter(string::split(string::trim(text), ' '), |$t| $t INSIDE ['der', 'die', 'das', 'und', 'nicht']))
@@ -1164,12 +1221,18 @@ object SurqlQueries {
     * referencing the projection alias. One digest-keyed shuffle with
     * map-side combine — linear at 100 TB. */
   val dedupExact = sq("dedup_exact",
-    graft.operators.TextOps.dedupExact.oracle.get)(
+    """SELECT md5(text) AS h, MIN(doc_id) AS keeper, COUNT(*) AS copies
+       FROM documents GROUP BY md5(text) ORDER BY h""")(
     """SELECT crypto::md5(text) AS h, math::min(doc_id) AS keeper, count() AS copies
        FROM documents GROUP BY h ORDER BY h""")
 
+  /** Document fingerprinting: digest of the character-normalized content —
+    * the cheap first pass before MinHash (robust to whitespace/case drift). */
   val textFingerprint = sq("text_fingerprint",
-    graft.operators.TextOps.textFingerprint.oracle.get)(
+    """SELECT doc_id,
+              md5(lower(replace(text, ' ', ''))) AS fp,
+              substring(md5(lower(replace(text, ' ', ''))), 1, 8) AS fp_short
+       FROM documents ORDER BY doc_id""")(
     """SELECT doc_id,
               crypto::md5(string::lowercase(string::replace(text, ' ', ''))) AS fp,
               string::slice(crypto::md5(string::lowercase(string::replace(text, ' ', ''))), 0, 8) AS fp_short
@@ -1180,8 +1243,30 @@ object SurqlQueries {
     * element arithmetic. The query vector renders into the statement via a
     * 1-row driver probe (the knn_brute pattern — Double.toString
     * round-trips exactly). */
-  val vectorOps = Q("vector_ops",
-    graft.functions.VectorQueries.vectorOps.oracle.get) { (s, d) =>
+  val vectorOps = Q("vector_ops", {
+    import Similarity.sqlDot
+    s"""WITH q AS (SELECT embedding AS qe FROM embeddings WHERE vec_id = 1)
+        SELECT e.vec_id,
+               round(${sqlDot("e.embedding", "q.qe")}, 6) AS dot,
+               round(sqrt(${sqlDot("e.embedding", "e.embedding")}), 6) AS magnitude,
+               round(sqrt(list_sum(list_transform(range(1, 65),
+                 i -> (CAST(e.embedding[i] AS DOUBLE) - CAST(q.qe[i] AS DOUBLE))
+                      * (CAST(e.embedding[i] AS DOUBLE) - CAST(q.qe[i] AS DOUBLE))))), 6)
+                 AS euclidean,
+               round(list_sum(list_transform(range(1, 65),
+                 i -> abs(CAST(e.embedding[i] AS DOUBLE) - CAST(q.qe[i] AS DOUBLE)))), 6)
+                 AS manhattan,
+               round(list_max(list_transform(range(1, 65),
+                 i -> abs(CAST(e.embedding[i] AS DOUBLE) - CAST(q.qe[i] AS DOUBLE)))), 6)
+                 AS chebyshev,
+               round(CAST(e.embedding[1] AS DOUBLE) + CAST(q.qe[1] AS DOUBLE), 6) AS add0,
+               round(CAST(e.embedding[1] AS DOUBLE) * CAST(2.0 AS DOUBLE), 6) AS scale0,
+               round(CAST(e.embedding[1] AS DOUBLE)
+                     / sqrt(${sqlDot("e.embedding", "e.embedding")}), 6) AS norm0
+        FROM embeddings e, q
+        WHERE e.vec_id < 50
+        ORDER BY e.vec_id"""
+  }) { (s, d) =>
     val qv = Similarity.queryVec(s, d, 1L)
     val vec = qv.map(_.toString).mkString("[", ", ", "]")
     val q0 = qv.head.toString

@@ -4,127 +4,32 @@ import org.apache.spark.sql.functions._
 
 import graft.{Q, Tables}
 
-/** Text-analysis operators for large-scale training-data pipelines
-  * (builder-prompt extensions beyond the reference surface): token counting,
-  * quality scoring, language-ID heuristic, exact dedup, document
-  * fingerprinting. All are single-pass, codegen-friendly column expressions —
-  * no UDFs, no shuffles except the dedup groupBy. At 100 TB each is an
-  * embarrassingly parallel scan.
+/** The composed training-data curation recipe (an extension beyond the
+  * reference surface) as one DataFrame plan. Its stages — token
+  * counting, quality scoring, the language-ID heuristic, exact dedup and
+  * fingerprinting — are also registry rows of their own, written as
+  * SurrealQL text in [[SurqlQueries]]. All are single-pass, codegen-friendly
+  * column expressions — no UDFs, no shuffles except the dedup joins.
   *
   * SurrealQL cousins: string::words/len (fnc/string.rs),
   * crypto::md5 (fnc/crypto.rs), string::similarity (SURVEY §2.4). */
 object TextOps {
 
-  private val stopEn = Seq("the", "a", "of", "and", "to", "in", "is", "it")
-
-  /** Token counting: whitespace tokens + a BPE-ish subword estimate
-    * (chars/4 is the classic byte-pair heuristic), plus char classes. */
-  val textTokens = Q("text_tokens",
-    """SELECT doc_id,
-              CAST(len(string_split(trim(text), ' ')) AS BIGINT) AS n_tokens,
-              CAST(length(text) AS BIGINT) AS n_chars2,
-              CAST(ceil(length(text) / 4.0) AS BIGINT) AS bpe_est,
-              CAST(length(replace(text, ' ', '')) AS BIGINT) AS n_nonspace
-       FROM documents ORDER BY doc_id""") {
-    (s, d) =>
-      Tables.documents(s, d).select(
-        col("doc_id"),
-        size(split(trim(col("text")), " ")).cast("bigint").as("n_tokens"),
-        length(col("text")).cast("bigint").as("n_chars2"),
-        ceil(length(col("text")) / 4.0).cast("bigint").as("bpe_est"),
-        length(regexp_replace(col("text"), " ", "")).cast("bigint").as("n_nonspace"))
-        .orderBy("doc_id")
-  }
-
-  /** Quality scoring: mean word length, stopword ratio, short-doc flag —
-    * the standard C4/Gopher-style filters, as pure column math. */
-  val textQuality = Q("text_quality",
-    s"""SELECT doc_id,
-               CAST(length(replace(text, ' ', '')) AS DOUBLE)
-                 / len(string_split(trim(text), ' ')) AS mean_word_len,
-               CAST(len(list_filter(string_split(trim(text), ' '),
-                        t -> list_contains(${sqlList(stopEn)}, t))) AS DOUBLE)
-                 / len(string_split(trim(text), ' ')) AS stop_ratio,
-               length(text) < 100 AS too_short
-        FROM documents ORDER BY doc_id""") {
-    (s, d) =>
-      val toks = split(trim(col("text")), " ")
-      val stopArr = array(stopEn.map(lit): _*)
-      Tables.documents(s, d).select(
-        col("doc_id"),
-        (length(regexp_replace(col("text"), " ", "")).cast("double") / size(toks))
-          .as("mean_word_len"),
-        (size(filter(toks, t => array_contains(stopArr, t))).cast("double") / size(toks))
-          .as("stop_ratio"),
-        (length(col("text")) < 100).as("too_short"))
-        .orderBy("doc_id")
-  }
-
   private val markerEn = Seq("the", "a", "of", "and", "fast")
   private val markerDe = Seq("der", "die", "das", "und", "nicht")
   private val markerFr = Seq("le", "la", "les", "et", "est")
 
-  /** Language-ID: marker-word n-gram heuristic — count hits against per-
-    * language marker lists, argmax with a fixed tie order. (The testdata
-    * vocabulary is synthetic; the operator's plumbing — per-language scoring
-    * columns + deterministic argmax — is what's exercised.) */
-  val textLangId = Q("text_langid", {
+  private def sqlList(words: Seq[String]): String =
+    words.map(w => s"'$w'").mkString("[", ", ", "]")
+
+  /** DuckDB twins of the language-ID scores (en, de, fr): hits of each
+    * language's marker words among the whitespace tokens. */
+  private[operators] val sqlLangScores: (String, String, String) = {
     val toks = "string_split(trim(text), ' ')"
     def score(words: Seq[String]) =
       s"len(list_filter($toks, t -> list_contains(${sqlList(words)}, t)))"
-    val en = score(markerEn); val de = score(markerDe); val fr = score(markerFr)
-    s"""SELECT doc_id,
-               CASE WHEN $en >= $de AND $en >= $fr THEN 'en'
-                    WHEN $de >= $fr THEN 'de' ELSE 'fr' END AS pred_lang,
-               CAST($en AS BIGINT) AS score_en
-        FROM documents ORDER BY doc_id"""
-  }) {
-    (s, d) =>
-      val toks = split(trim(col("text")), " ")
-      def score(words: Seq[String]) = {
-        val arr = array(words.map(lit): _*)
-        size(filter(toks, t => array_contains(arr, t)))
-      }
-      val en = score(markerEn); val de = score(markerDe); val fr = score(markerFr)
-      Tables.documents(s, d).select(
-        col("doc_id"),
-        when(en >= de && en >= fr, "en").when(de >= fr, "de").otherwise("fr")
-          .as("pred_lang"),
-        en.cast("bigint").as("score_en"))
-        .orderBy("doc_id")
+    (score(markerEn), score(markerDe), score(markerFr))
   }
-
-  /** Exact deduplication: hash-groupBy on content digest — one shuffle on the
-    * digest, map-side combine keeps it linear at 100 TB. Keeper = min id
-    * (deterministic survivor policy). */
-  val dedupExact = Q("dedup_exact",
-    """SELECT md5(text) AS h, MIN(doc_id) AS keeper, COUNT(*) AS copies
-       FROM documents GROUP BY md5(text) ORDER BY h""") {
-    (s, d) =>
-      Tables.documents(s, d)
-        .groupBy(md5(col("text")).as("h"))
-        .agg(min(col("doc_id")).as("keeper"), count(lit(1)).as("copies"))
-        .orderBy("h")
-  }
-
-  /** Document fingerprinting: digest of the character-normalized content —
-    * the cheap first pass before MinHash (robust to whitespace/case drift). */
-  val textFingerprint = Q("text_fingerprint",
-    """SELECT doc_id,
-              md5(lower(replace(text, ' ', ''))) AS fp,
-              substring(md5(lower(replace(text, ' ', ''))), 1, 8) AS fp_short
-       FROM documents ORDER BY doc_id""") {
-    (s, d) =>
-      val norm = lower(regexp_replace(col("text"), " ", ""))
-      Tables.documents(s, d).select(
-        col("doc_id"),
-        md5(norm).as("fp"),
-        substring(md5(norm), 1, 8).as("fp_short"))
-        .orderBy("doc_id")
-  }
-
-  private def sqlList(words: Seq[String]): String =
-    words.map(w => s"'$w'").mkString("[", ", ", "]")
 
   /** End-to-end corpus curation — the composed training-data recipe in ONE
     * plan: language filter (en) → quality gate (not too-short) → exact-dedup
@@ -134,10 +39,7 @@ object TextOps {
     * the whole recipe is one linear pass plus the dedup joins at 100 TB. The
     * oracle replays all five stages, including the clustering closure. */
   val pipelineCuration = Q("pipeline_curation", {
-    val toks = "string_split(trim(text), ' ')"
-    def score(words: Seq[String]) =
-      s"len(list_filter($toks, t -> list_contains(${sqlList(words)}, t)))"
-    val en = score(markerEn); val de = score(markerDe); val fr = score(markerFr)
+    val (en, de, fr) = sqlLangScores
     s"""WITH RECURSIVE gtoks AS (
          SELECT doc_id, string_split(trim(text), ' ') AS w FROM documents),
        grams AS (
@@ -204,6 +106,5 @@ object TextOps {
           sum(ceil(length(col("text")) / 4.0)).cast("bigint").as("total_bpe"))
   }
 
-  val all: Seq[Q] = Seq(textTokens, textQuality, textLangId, dedupExact,
-    textFingerprint, pipelineCuration)
+  val all: Seq[Q] = Seq(pipelineCuration)
 }

@@ -4549,7 +4549,7 @@ final class Interp {
       }
       keyOpt match {
         case Some(key) =>
-          if (upsert) Interp.checkIdKey(tb, key)
+          Interp.checkIdKey(tb, key)
           val stored = findKeyLoose(t, key)
           stored.map(t(_)) match {
             case Some(doc) =>
@@ -4630,8 +4630,11 @@ final class Interp {
       val t = table(tb)
       val keys = keyOpt match {
         // ≤1 loose match can exist (keys are pairwise loose-distinct at
-        // insert), so find ≡ the old filter
-        case Some(key) => findKeyLoose(t, key).toSeq
+        // insert), so find ≡ the old filter; a regex key is no valid id and
+        // would otherwise loose-match stored strings
+        case Some(key) =>
+          Interp.checkIdKey(tb, key)
+          findKeyLoose(t, key).toSeq
         case scala.None => t.keys.toSeq
       }
       keys.foreach { key =>

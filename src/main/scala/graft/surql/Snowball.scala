@@ -2350,8 +2350,8 @@ object Snowball {
   // targeted minimal-pair probes drove the pass structure and per-row
   // minimum-residual conditions below; the reference's own analyzer
   // vectors (filter.rs test_tamil_stemmer) remain the primary gate.
-  // Agreement on the probe corpus is measured by the TamilDev harness
-  // (test sources) rather than claimed; tail rows of the full Damodharan
+  // Agreement on the probe corpus is measured by the StemDev harness
+  // (`StemDev tamil <tsv>`, test sources) rather than claimed; tail rows of the full Damodharan
   // tables (aux-verb chains like கொண்டிரு, rarer case stacks) are not
   // all carried.
 

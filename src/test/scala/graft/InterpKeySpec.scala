@@ -55,6 +55,22 @@ class InterpKeySpec extends AnyFunSuite {
       val msg = errOf(run(s).head)
       assert(msg.contains("for the Record ID but this is not a valid id"), s"$s -> $msg")
     }
+    // UPDATE and DELETE reach a regex key through an array id; the stored
+    // string id beside it would loose-match (string ~ regex) if the key
+    // were looked up instead of rejected
+    val writes = Seq(
+      "UPDATE a:['q', /x/] SET v = 2;",
+      "UPDATE a:['q', /x/] MERGE {v: 2};",
+      "DELETE a:['q', /x/];",
+      "DELETE a:['q', /x/] RETURN BEFORE;")
+    writes.foreach { s =>
+      val rs = run(s"CREATE a:['q', 'x'] SET v = 1; $s SELECT * FROM a;")
+      val msg = errOf(rs(1))
+      assert(msg.contains("for the Record ID but this is not a valid id"), s"$s -> $msg")
+      assert(rs(2) == QOk(VArr(Vector(V.obj(
+        "id" -> VRid("a", VArr(Vector(VStr("q"), VStr("x"))): V), "v" -> VInt(1))))),
+        s"$s touched the stored record: ${rs(2)}")
+    }
   }
 
   test("bulk FOR/CREATE with generated ids is not quadratic") {
