@@ -1,6 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
@@ -403,30 +404,27 @@ final case class SignRs(child: Expression)
 }
 
 object VectorKernels {
-  /** Register the kernels in `spark`'s function registry (idempotent) so
+  private val kernels: Seq[(String, Seq[Expression] => Expression)] = Seq(
+    "graft_dot" -> (es => DotF(es.head, es(1))),
+    "graft_l2" -> (es => L2F(es.head, es(1))),
+    "graft_l1" -> (es => L1F(es.head, es(1))),
+    "graft_l2sq" -> (es => L2SqF(es.head, es(1))),
+    "graft_eqcount" -> (es => EqCountF(es.head, es(1))),
+    "graft_round" -> (es => RoundRs(es.head)),
+    "graft_fixed" -> (es => FixedRs(es.head, es(1))),
+    "graft_ceil" -> (es => CeilFloorRs(es.head, up = true)),
+    "graft_floor" -> (es => CeilFloorRs(es.head, up = false)),
+    "graft_sign" -> (es => SignRs(es.head)))
+
+  /** Register the kernels in `spark`'s function registry so
     * `call_function("graft_dot", …)` resolves — the classic-mode bridge
-    * from Column expressions to custom Catalyst expressions. */
+    * from Column expressions to custom Catalyst expressions. Only kernels
+    * the registry lacks are registered, so repeated calls leave it as is. */
   def ensure(spark: SparkSession): Unit = {
     val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction("graft_dot",
-      es => DotF(es.head, es(1)), "built-in")
-    reg.createOrReplaceTempFunction("graft_l2",
-      es => L2F(es.head, es(1)), "built-in")
-    reg.createOrReplaceTempFunction("graft_l1",
-      es => L1F(es.head, es(1)), "built-in")
-    reg.createOrReplaceTempFunction("graft_l2sq",
-      es => L2SqF(es.head, es(1)), "built-in")
-    reg.createOrReplaceTempFunction("graft_eqcount",
-      es => EqCountF(es.head, es(1)), "built-in")
-    reg.createOrReplaceTempFunction("graft_round",
-      es => RoundRs(es.head), "built-in")
-    reg.createOrReplaceTempFunction("graft_fixed",
-      es => FixedRs(es.head, es(1)), "built-in")
-    reg.createOrReplaceTempFunction("graft_ceil",
-      es => CeilFloorRs(es.head, up = true), "built-in")
-    reg.createOrReplaceTempFunction("graft_floor",
-      es => CeilFloorRs(es.head, up = false), "built-in")
-    reg.createOrReplaceTempFunction("graft_sign",
-      es => SignRs(es.head), "built-in")
+    kernels.foreach { case (name, build) =>
+      if (!reg.functionExists(FunctionIdentifier(name)))
+        reg.createOrReplaceTempFunction(name, build, "built-in")
+    }
   }
 }

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -18,12 +18,13 @@ import graft.{Q, Tables}
   * (`GraphScanOutput::TargetId`, scan/graph.rs:30-36).
   *
   * This object holds what [[graft.surql.SparkPlanner]] lowers a hop onto:
-  * the relation catalog, the persisted edge tables and the recursion loop.
+  * the relation catalog, the persisted edge tables and the recursion kernel.
   * The hop queries themselves are SurrealQL text in [[SurqlQueries]].
   *
-  * Bounded recursion `@{1..n}` (exec/operators/recursion.rs:81) is a
-  * driver-side loop over frontier DataFrames — each hop is one distributed
-  * join; the loop only controls depth, never touches row data.
+  * Bounded recursion `@{n..m}` (exec/operators/recursion.rs:81) runs on one
+  * driver-side kernel, [[frontiers]], for every strategy: each depth is one
+  * distributed hop over the previous frontier plus one job that materialises
+  * it; the driver only reads a row count, never row data.
   */
 object GraphOps {
 
@@ -106,43 +107,44 @@ object GraphOps {
       case other => throw new IllegalArgumentException(s"unknown edge table $other")
     }
 
-  /** Bounded recursive traversal: frontier-join loop with depth counter.
-    * Returns (start, node, depth) for depth in 1..maxDepth. Each iteration is
-    * one shuffle join on `src`. The edge set and every frontier are persisted
-    * so the upstream lineage (often a window/join pipeline) is computed once,
-    * not once per hop and once more for the final union; for unbounded-depth
-    * recursion a periodic `localCheckpoint` would also truncate lineage. */
+  /** The frontier kernel of `@{n..m}` recursion, in the superstep shape of
+    * Pregelix: frame 1 is `hop(start, 1)`, frame d is `hop` applied to the
+    * rows of frame d-1 that satisfy `carries`. Each frame is marked
+    * `localCheckpoint(eager = false)` and materialised by one job that also
+    * counts its carrying rows, so a later hop and the caller's final plan
+    * read the stored blocks instead of replaying the lineage. The kernel
+    * stops after `maxD`, or at the first frame with no carrying row, and
+    * returns the frames it built, depth 1 first.
+    *
+    * Bound: the blocks live only in executor storage. If an executor dies
+    * before the query has read them, they are lost and the query fails;
+    * they are not recomputed. */
+  def frontiers(start: DataFrame, maxD: Int, carries: Column = lit(true))(
+      hop: (DataFrame, Int) => DataFrame): Seq[DataFrame] = {
+    @annotation.tailrec
+    def go(frontier: DataFrame, depth: Int, acc: Vector[DataFrame]): Vector[DataFrame] =
+      if (depth > maxD) acc
+      else {
+        val frame = hop(frontier, depth).localCheckpoint(eager = false)
+        val next = frame.filter(carries)
+        // one job: computes every block of `frame`, counts what carries on
+        if (next.queryExecution.toRdd.count() == 0L) acc :+ frame
+        else go(next, depth + 1, acc :+ frame)
+      }
+    go(start, 1, Vector.empty)
+  }
+
+  /** Plain reachability on [[frontiers]]: start (start, node), edges
+    * (src, dst); returns (start, node, depth) for every depth reached. */
   def recurse(start: DataFrame, edges: DataFrame, maxDepth: Int): DataFrame = {
-    // start: (start, node); edges: (src, dst). Each hop's frontier is
-    // localCheckpoint'ed (eager): hop N+1 and the final union read the
-    // materialized blocks instead of replaying the whole upstream lineage
-    // once per hop — the loop runs maxDepth small sequential jobs.
+    // persisted: every hop re-reads the edge set
     val e = edges.persist().alias("e")
-    var frontier = start
-    var acc: DataFrame = null
-    var depth = 1
-    var live = true
-    while (depth <= maxDepth && live) {
-      val f = frontier.alias("f")
-      // LAZY checkpoint + internal-RDD count: an EAGER localCheckpoint
-      // already runs an internal rdd.count() to materialize the blocks and
-      // throws the number away — marking lazily and counting the internal
-      // RDD ourselves runs the SAME single job but KEEPS the count, so the
-      // empty-frontier break is free at every depth (the old shape paid a
-      // gated second isEmpty job per probed depth). A plain RDD count, not
-      // Dataset.count(): no per-iteration aggregate planning or codegen.
-      frontier = f.join(e, col("f.node") === col("e.src"))
+    frontiers(start, maxDepth) { (f, _) =>
+      f.alias("f").join(e, col("f.node") === col("e.src"))
         .select(col("f.start").as("start"), col("e.dst").as("node"))
-        .localCheckpoint(eager = false)
-      val n = frontier.queryExecution.toRdd.count() // materializes, one job
-      val labeled = frontier.withColumn("depth", lit(depth.toLong))
-      acc = if (acc == null) labeled else acc.unionByName(labeled)
-      // empty frontier ⇒ every deeper frontier is empty too; stop instead of
-      // joining emptiness maxDepth times
-      if (n == 0L) live = false
-      depth += 1
-    }
-    acc
+    }.zipWithIndex
+      .map { case (f, i) => f.withColumn("depth", lit(i + 1L)) }
+      .reduce(_ unionByName _)
   }
 
   /** `Recursion` (exec/operators/recursion.rs:81): bounded traversal

@@ -2246,13 +2246,15 @@ object SparkPlanner {
     out.toSeq
   }
 
-  /** Lower one `@{n..m}` recursion to a frontier-join loop over a
-    * self-referencing relation table (recursion.rs strategies):
+  /** Lower one `@{n..m}` recursion over a self-referencing relation table
+    * onto the frontier kernel [[graft.operators.GraphOps.frontiers]]. Each
+    * strategy (recursion.rs) supplies only its hop and what it keeps from
+    * the per-depth frames:
     *   default  → the frontier at the FINAL depth reached (last non-empty
     *              depth D ≤ max, included iff D ≥ min — recursion/default.rs)
-    *   shortest → BFS path to the target id: expand to min depth of first
-    *              contact per start, emit the accumulated id path
-    *              (recursion/shortest.rs via iterative min-join)
+    *   collect  → every node first visited at a depth ≥ min
+    *   path     → every complete path: a dead end, or a survivor of max hops
+    *   shortest → BFS path to the target id at its first contact per start
     * Output: (kName, derived array column), one row per start record. */
   private def recursionLookup(spark: SparkSession, dir: String, table: String,
       rec: PRecurse, startRows: DataFrame, srcKey: String,
@@ -2283,6 +2285,10 @@ object SparkPlanner {
       .select(col("in").as("src"), col("out").as("dst"))
     val starts = startRows
       .select(col(srcKey).as("start"), col(srcKey).as("node"))
+    def belowMin() = unsupported(s"max depth $maxD below min $minD")
+    // +path and +shortest frontiers carry the id path walked so far
+    def withPath(inclusive: Boolean) = starts.withColumn("path",
+      if (inclusive) array(col("node")) else array().cast("array<long>"))
     rec.instr match {
       case RDefault =>
         // (start, node, depth) for all depths 1..max, then keep each start's
@@ -2306,44 +2312,20 @@ object SparkPlanner {
           .agg(sort_array(collect_list(col("node"))).as(derived))
       case RPath(inclusive) =>
         // +path (recursion/path.rs): every complete traversal path, one
-        // array per path. A path completes at a dead end once the loop depth
-        // reaches min, or by surviving to max depth; each loop step is one
-        // frontier-sized left join (dead ends are the unmatched side), so
-        // the plan stays a bounded chain of key-partitioned joins.
-        var active = starts.withColumn("path",
-          if (inclusive) array(col("node")) else array().cast("array<long>"))
-        var completed: DataFrame = null
-        def addCompleted(d: DataFrame): Unit =
-          completed = if (completed == null) d else completed.unionByName(d)
-        var depth = 0
-        var live = true
-        while (depth < maxD && live) {
-          val a = active.alias("a")
-          // lazy checkpoint + internal-RDD count: the eager form already ran
-          // an internal rdd.count() and discarded it — counting it ourselves
-          // is the same single job with the row count kept, so the break
-          // costs zero extra actions (the old shape paid a gated second
-          // isEmpty probe job). An empty `active` shows up as a zero-row
-          // `joined` one depth later — one cheap join over an empty
-          // checkpointed frontier, cheaper than any per-depth probe was.
-          val joined = a.join(e.alias("e"), col("a.node") === col("e.src"), "left")
-            .localCheckpoint(eager = false)
-          val nJoined = joined.queryExecution.toRdd.count()
-          if (depth >= minD)
-            addCompleted(joined
-              .filter(col("e.dst").isNull && size(col("a.path")) > 0)
-              .select(col("a.start").as("start"), col("a.path").as("path")))
-          active = joined.filter(col("e.dst").isNotNull)
+        // array per path. Each hop is a left join, so a row whose `node` is
+        // null hit a dead end: it completes the path of d - 1 hops it
+        // carries, kept iff d - 1 ≥ min, and does not carry on. A row that
+        // survives hop max completes a path of max hops.
+        if (maxD < minD) belowMin()
+        GraphOps.frontiers(withPath(inclusive), maxD, col("node").isNotNull) { (a, _) =>
+          a.alias("a").join(e.alias("e"), col("a.node") === col("e.src"), "left")
             .select(col("a.start").as("start"), col("e.dst").as("node"),
-              concat(col("a.path"), array(col("e.dst"))).as("path"))
-          // every path hit a dead end ⇒ later depths do nothing; stop the
-          // loop instead of running maxD joins over an empty frontier
-          if (nJoined == 0L) live = false
-          depth += 1
-        }
-        if (maxD >= minD)
-          addCompleted(active.filter(size(col("path")) > 0).select("start", "path"))
-        completed
+              when(col("e.dst").isNull, col("a.path"))
+                .otherwise(concat(col("a.path"), array(col("e.dst")))).as("path"))
+        }.zip(1 to maxD).map { case (f, d) =>
+          f.filter(size(col("path")) > 0 &&
+            when(col("node").isNull, lit(d > minD)).otherwise(lit(d == maxD)))
+        }.reduce(_ unionByName _)
           .groupBy(col("start").as(kName))
           .agg(sort_array(collect_list(col("path"))).as(derived))
       case RShortest(targetE, inclusive) =>
@@ -2351,56 +2333,21 @@ object SparkPlanner {
           case r: VRid => ridKeyLit(r.key)
           case other   => unsupported(s"shortest target ${other.render}")
         }
-        // iterative min-join BFS: expand every frontier, record first
-        // contact per start per depth, keep the minimum-depth path
-        var frontier = starts.withColumn("path",
-          if (inclusive) array(col("node")) else array().cast("array<long>"))
-        var found: DataFrame = null
-        var depth = 1
-        var done = false
-        while (depth <= maxD && !done) {
-          val f = frontier.alias("f")
-          // lazy checkpoint + internal-RDD count: the eager form already ran
-          // an internal rdd.count() and discarded it — counting it ourselves
-          // is the same single job with the row count kept, so a frontier
-          // the hop itself killed breaks the loop for free. A frontier
-          // emptied by the found-start PRUNE below is the one case the raw
-          // count cannot see; a gated isEmpty probe (cheap block read)
-          // still covers it when a break would save ≥2 joins.
-          frontier = f.join(e.alias("e"), col("f.node") === col("e.src"))
+        if (maxD < minD) belowMin()
+        // BFS (recursion/shortest.rs): one path per (start, node) and depth.
+        // A start that reaches the target at a depth ≥ min has its shortest
+        // path there: its rows are flagged `__hit`, its target row is kept,
+        // and none of them carries on to a deeper hop.
+        val byStart = org.apache.spark.sql.expressions.Window.partitionBy("start")
+        GraphOps.frontiers(withPath(inclusive), maxD, !col("__hit")) { (f, d) =>
+          f.alias("f").join(e.alias("e"), col("f.node") === col("e.src"))
             .select(col("f.start").as("start"), col("e.dst").as("node"),
               concat(col("f.path"), array(col("e.dst"))).as("path"))
             .dropDuplicates("start", "node")
-            .localCheckpoint(eager = false)
-          val n = frontier.queryExecution.toRdd.count()
-          if (depth >= minD) {
-            val hit = frontier.filter(col("node") === targetId)
-              .withColumn("__d", lit(depth))
-            found = if (found == null) hit else found.unionByName(hit)
-            // BFS early-stop (shortest semantics): a start that reached the
-            // target at this depth has its minimum — every deeper expansion
-            // of it would be discarded by the min-depth filter below, so
-            // prune those starts from the frontier instead of carrying them
-            // to maxD. The frontier is checkpointed, so the anti-join reads
-            // cheap materialized blocks, not lineage replays.
-            frontier = frontier
-              .join(hit.select("start"), Seq("start"), "left_anti")
-          }
-          // dead frontier ⇒ every later depth is empty; stop looping — but
-          // only once minD has been reached, so `found` is initialized and
-          // a chain that dies before minD still yields the empty result
-          // (not the below-min error) exactly as the full loop did. The raw
-          // count covers hop-killed frontiers with zero extra jobs; the
-          // probe only fires for the prune-emptied case, and only when a
-          // break saves ≥2 remaining joins.
-          if (depth >= minD && depth < maxD &&
-              (n == 0L || (maxD - depth >= 2 && frontier.isEmpty)))
-            done = true
-          depth += 1
-        }
-        if (found == null) unsupported(s"max depth $maxD below min $minD")
-        val best = found.groupBy("start").agg(min(col("__d")).as("__d"))
-        found.join(best, Seq("start", "__d"))
+            .withColumn("__hit",
+              if (d >= minD) max(col("node") === targetId).over(byStart) else lit(false))
+        }.map(_.filter(col("__hit") && col("node") === targetId))
+          .reduce(_ unionByName _)
           .select(col("start").as(kName), col("path").as(derived))
     }
   }

@@ -960,6 +960,41 @@ class FuzzDifferentialSpec extends AnyFunSuite {
     }
   }
 
+  // `@{n..m}` recursion over `likes`: even items have out-degree 2, item:30
+  // has a double edge to item:1, and the graph has cycles, so frontiers
+  // branch, merge and revisit nodes (the registry rows walk a linear chain)
+  private val recursionQueries = Seq(
+    "SELECT id, array::sort(@{1..3}(->likes->item)) AS r FROM item ORDER BY id",
+    "SELECT id, array::sort(@{2..4}(->likes->item)) AS r FROM item ORDER BY id",
+    "SELECT id, array::sort(@{3}(->likes->item)) AS r FROM item ORDER BY id",
+    "SELECT id, array::sort(@{1..3+collect}(->likes->item)) AS r FROM item ORDER BY id",
+    "SELECT id, array::sort(@{1..3+path}(->likes->item)) AS r FROM item ORDER BY id",
+    "SELECT id, @{1..6+shortest=item:9}(->likes->item) AS r FROM item " +
+      "WHERE id INSIDE [item:1, item:6, item:14, item:19, item:29] ORDER BY id")
+
+  recursionQueries.zipWithIndex.foreach { case (q, i) =>
+    test(s"recursion[$i]: ${q.drop(11).take(48)}") { checkSame(q) }
+  }
+
+  // Known divergences, kept visible as pending until the engines agree
+  test("recursion divergence: Spark orders elements by key, Interp by traversal") {
+    pendingUntilFixed {
+      checkSame("SELECT id, @{1..3}(->likes->item) AS r FROM item:1")
+    }
+  }
+
+  test("recursion divergence: +inclusive starts with the start document on Interp, its key on Spark") {
+    pendingUntilFixed {
+      checkSame("SELECT id, @{1..3+collect+inclusive}(->likes->item) AS r FROM item:1")
+    }
+  }
+
+  test("recursion divergence: +shortest with the target out of reach is [] on Spark, max-depth paths on Interp") {
+    pendingUntilFixed {
+      checkSame("SELECT id, @{1..6+shortest=item:9}(->likes->item) AS r FROM item:7")
+    }
+  }
+
   test("object::extend/remove + json::encode over struct columns agree") {
     checkSame("SELECT score, object::remove(meta, 'b') AS m1, " +
       "object::extend(meta, { c: score }) AS m2, " +

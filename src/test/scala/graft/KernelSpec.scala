@@ -134,6 +134,21 @@ class KernelSpec extends AnyFunSuite {
     assert(r.getString(1) == "Hi There")
   }
 
+  test("VectorKernels.ensure registers its kernels once per session") {
+    // a repeated ensure must leave the registry as it is: replacing the
+    // entries logs a WARN on every call
+    val s2 = spark.newSession()
+    val reg = s2.sessionState.functionRegistry
+    val dot = org.apache.spark.sql.catalyst.FunctionIdentifier("graft_dot")
+    graft.functions.VectorKernels.ensure(s2)
+    val builder = reg.lookupFunctionBuilder(dot)
+    val info = reg.lookupFunction(dot)
+    assert(builder.isDefined && info.isDefined)
+    graft.functions.VectorKernels.ensure(s2)
+    assert(reg.lookupFunctionBuilder(dot).get eq builder.get)
+    assert(reg.lookupFunction(dot).get eq info.get)
+  }
+
   test("sorensenDice matches hand-traced strsim::sorensen_dice vectors") {
     import org.apache.spark.unsafe.types.UTF8String.{fromString => u}
     def sd(a: String, b: String): Double =
