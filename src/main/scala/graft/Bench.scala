@@ -19,15 +19,54 @@ object Bench {
     "graph_chain", "graph_two_hop", "subquery_parent",
     "mat_view_incremental", "surql_golden")
 
+  /** The shared persisted index builds (FTS postings, shingle table, ANN
+    * signature buckets, …), by name. Each is built once per corpus; the
+    * bench and [[PlanDump]] run them before any query. */
+  def indexWarms(spark: SparkSession, sfDir: String): Seq[(String, () => Any)] = Seq(
+    ("fts", () => graft.operators.FullText.index(spark, sfDir)),
+    ("fts_stem", () => graft.operators.FullText.stemmedIndex(spark, sfDir)),
+    ("shingles", () => graft.operators.Dedup.shingleTable(spark, sfDir)),
+    ("ann", () => graft.operators.Similarity.warmIndex(spark, sfDir)),
+    ("ivf", () => graft.operators.Similarity.warmIvf(spark, sfDir)),
+    ("hnsw", () => graft.operators.Hnsw.warm(spark, sfDir)),
+    ("edges", () => graft.operators.GraphOps.warmEdges(spark, sfDir)),
+    ("counts", () => graft.operators.CountIndex.warm(spark, sfDir)),
+    ("buckets", () => graft.operators.Buckets.warm(spark, sfDir)),
+    ("sources", () => graft.sources.Sources.warm(spark, sfDir)))
+
+  /** One bench row: name, median seconds, the name again if any rep
+    * failed, and every rep's seconds. */
+  type Row = (String, Double, Option[String], Seq[Double])
+
+  private def medians(rows: Seq[Row]): String =
+    rows.map { case (k, v, _, _) => s"\"" + k + "\":" + f"$v%.3f" }.mkString("{", ",", "}")
+
+  private def failedNames(rows: Seq[Row]): String =
+    rows.flatMap(_._3).map("\"" + _ + "\"").mkString("[", ",", "]")
+
+  /** What the bench prints to stdout. First the compact record: every
+    * row's median to 3 decimals, and the failed rows by name (~4 KB, too
+    * long for a reader that keeps only the last 2,000 characters). Then,
+    * LAST, a short line that such a reader still parses whole: the total,
+    * the row count, the failure count and the five slowest rows. */
+  def stdoutLines(results: Seq[Row], sfDir: String): Seq[String] = {
+    val total = f"${results.map(_._2).sum}%.3f"
+    Seq(
+      s"""{"metric":"total","value":$total,"unit":"sec","queries":${medians(results)},"failed":${failedNames(results)},"sf":"$sfDir"}""",
+      s"""{"metric":"total","value":$total,"unit":"sec","n":${results.size},"failed":${results.count(_._3.isDefined)},"slowest":${medians(results.sortBy(-_._2).take(5))}}""")
+  }
+
+  /** The full record, with every rep of every row. */
+  def fullRecord(results: Seq[Row], sfDir: String): String = {
+    val reps = results.map { case (k, _, _, raw) =>
+      s"\"" + k + "\":" + raw.map(t => f"$t%.3f").mkString("[", ",", "]")
+    }.mkString("{", ",", "}")
+    s"""{"metric":"total","value":${results.map(_._2).sum},"unit":"sec","queries":${medians(results)},"reps":$reps,"failed":${failedNames(results)},"sf":"$sfDir"}"""
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local(Session.cpus())
     // JIT/codegen/classloader + FS-cache warmup: without it the first timed
     // query is billed several seconds of one-time JVM setup, making totals
     // depend on map iteration order instead of query cost.
@@ -39,17 +78,7 @@ object Bench {
     // dedicated "index_build" line so each query's number is steady-state
     // (the reference likewise separates index build from query latency).
     val tIdx = System.nanoTime()
-    val warms: Seq[(String, () => Any)] = Seq(
-      ("fts", () => graft.operators.FullText.index(spark, sfDir)),
-      ("fts_stem", () => graft.operators.FullText.stemmedIndex(spark, sfDir)),
-      ("shingles", () => graft.operators.Dedup.shingleTable(spark, sfDir)),
-      ("ann", () => graft.operators.Similarity.warmIndex(spark, sfDir)),
-      ("ivf", () => graft.operators.Similarity.warmIvf(spark, sfDir)),
-      ("hnsw", () => graft.operators.Hnsw.warm(spark, sfDir)),
-      ("edges", () => graft.operators.GraphOps.warmEdges(spark, sfDir)),
-      ("counts", () => graft.operators.CountIndex.warm(spark, sfDir)),
-      ("buckets", () => graft.operators.Buckets.warm(spark, sfDir)),
-      ("sources", () => graft.sources.Sources.warm(spark, sfDir)))
+    val warms = indexWarms(spark, sfDir)
     // The ten builds are INDEPENDENT index jobs (distinct CacheDir keys, no
     // shared state beyond the session) — run them from a small thread pool so
     // each job's straggler tail back-fills with the next build's tasks
@@ -81,8 +110,8 @@ object Bench {
       scala.concurrent.Future.sequence(warmFutures),
       scala.concurrent.duration.Duration.Inf)
     finally warmPool.shutdown()
-    val idxBuild = ("index_build", (System.nanoTime() - tIdx) / 1e9,
-      None: Option[String], Seq((System.nanoTime() - tIdx) / 1e9))
+    val idxS = (System.nanoTime() - tIdx) / 1e9
+    val idxBuild: Row = ("index_build", idxS, None, Seq(idxS))
     // local-iteration filter (mirrors Verify's SPARK_GRAFT_ONLY); the
     // literal value "heavy" expands to the documented data-dominated subset
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY").map {
@@ -96,7 +125,7 @@ object Bench {
     // invisible in rep-1 spikes. Skipped (and the line omitted) when an
     // ONLY filter selects no dedup row: the gate queries themselves are
     // unchanged and still verify against the same tables.
-    val gtLines: Seq[(String, Double, Option[String], Seq[Double])] =
+    val gtLines: Seq[Row] =
       if (only.forall(_.exists(_.startsWith("dedup")))) {
         val tGt = System.nanoTime()
         graft.operators.Dedup.warmGroundTruth(spark, sfDir)
@@ -138,39 +167,17 @@ object Bench {
       val median = if (times.isEmpty) 0.0 else times(times.size / 2)
       (name, median, failure, raw)
     }
-    val qs = results.map { case (k, v, _, _) => s"\"" + k + "\":" + f"$v%.3f" }
-      .mkString("{", ",", "}")
-    val repJson = results.map { case (k, _, _, raw) =>
-      s"\"" + k + "\":" + raw.map(t => f"$t%.3f").mkString("[", ",", "]")
-    }.mkString("{", ",", "}")
-    val failures = results.flatMap(_._3)
-    val failuresJson = failures.map("\"" + _ + "\"").mkString("[", ",", "]")
-    val total = results.map(_._2).sum
     // a query that died mid-run must not post a plausible wall-time and keep
     // the bench green — failures are first-class in the emitted record.
-    // Stdout contract (r20 verdict item #1): the machine-readable record is
-    // COMPACT — 3-decimal medians only, ~4 KB — and is the LAST stdout line,
-    // because the driver's line capture truncates long lines and keeps the
-    // TAIL of stdout. The full per-rep series (the old inline "reps" field,
-    // which made the line exceed the capture limit for 20 straight rounds of
-    // "parsed": null) lives in the committed BENCH_LOCAL_FULL.json artifact.
-    val record = s"""{"metric":"total","value":${f"$total%.3f"},"unit":"sec","queries":$qs,"failed":$failuresJson,"sf":"$sfDir"}"""
-    val fullRecord = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"reps":$repJson,"failed":$failuresJson,"sf":"$sfDir"}"""
+    // The full per-rep series lives in BENCH_LOCAL_FULL.json; stdout keeps
+    // the compact record and ends with the short line (see stdoutLines).
     try java.nio.file.Files.write(
       java.nio.file.Paths.get("BENCH_LOCAL_FULL.json"),
-      (fullRecord + "\n").getBytes("UTF-8"))
+      (fullRecord(results, sfDir) + "\n").getBytes("UTF-8"))
     catch { case e: Exception =>
       System.err.println(s"[bench] could not write BENCH_LOCAL_FULL.json: $e") }
-    // human-readable top-20 summary FIRST, parseable record LAST
-    val top = results.sortBy(-_._2).take(20)
-      .map { case (k, v, _, _) => s"\"" + k + "\":" + f"$v%.3f" }
-      .mkString("{", ",", "}")
-    println(s"""{"summary":true,"total":${f"$total%.3f"},"n_queries":${results.size},"n_failed":${failures.size},"slowest":$top}""")
-    println(record)
-    if (failures.nonEmpty) {
-      spark.stop()
-      sys.exit(1)
-    }
+    stdoutLines(results, sfDir).foreach(println)
     spark.stop()
+    if (results.exists(_._3.isDefined)) sys.exit(1)
   }
 }

@@ -2,7 +2,6 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.ExplainMode
 
 /** Dump `explain("formatted")` for declared queries to text files — the
@@ -17,25 +16,10 @@ object PlanDump {
     val outDir = args.headOption.getOrElse("plans/r20")
     val suffix = if (args.length > 1) args(1) else "before"
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session.local(Session.cpus(), logLevel = "ERROR")
     Tables.all.foreach(t => Tables(spark, sfDir, t).count())
-    graft.operators.FullText.index(spark, sfDir)
-    graft.operators.FullText.stemmedIndex(spark, sfDir)
-    graft.operators.Dedup.shingleTable(spark, sfDir)
-    graft.operators.Similarity.warmIndex(spark, sfDir)
-    graft.operators.Similarity.warmIvf(spark, sfDir)
-    graft.operators.Hnsw.warm(spark, sfDir)
-    graft.operators.GraphOps.warmEdges(spark, sfDir)
-    graft.operators.CountIndex.warm(spark, sfDir)
-    graft.operators.Buckets.warm(spark, sfDir)
-    graft.sources.Sources.warm(spark, sfDir)
+    Bench.indexWarms(spark, sfDir).foreach { case (_, warm) => warm() }
     Files.createDirectories(Paths.get(outDir))
     val mode = ExplainMode.fromString("formatted")
     SparkEntry.queries.toSeq.sortBy(_._1)

@@ -2,7 +2,6 @@ package graft.functions
 
 import scala.collection.mutable
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
@@ -428,14 +427,4 @@ final case class HtmlF(child: Expression, sanitize: Boolean)
   }
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
-}
-
-object HtmlKernels {
-  def ensure(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction("graft_html_encode",
-      es => HtmlF(es.head, sanitize = false), "built-in")
-    reg.createOrReplaceTempFunction("graft_html_sanitize",
-      es => HtmlF(es.head, sanitize = true), "built-in")
-  }
 }

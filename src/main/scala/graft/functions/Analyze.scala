@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -347,18 +346,4 @@ final case class HighlightFxF(first: Expression, second: Expression,
   override protected def withNewChildrenInternal(
       f: Expression, s: Expression, t: Expression): Expression =
     copy(first = f, second = s, third = t)
-}
-
-object AnalyzeKernels {
-  def ensure(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction(
-      "graft_analyze", es => AnalyzeF(es.head, es(1)), "built-in")
-    reg.createOrReplaceTempFunction(
-      "graft_highlight", es => HighlightF(es.head, es(1)), "built-in")
-    reg.createOrReplaceTempFunction(
-      "graft_highlight_fx", es => HighlightFxF(es.head, es(1), es(2)), "built-in")
-    reg.createOrReplaceTempFunction(
-      "graft_offsets", es => OffsetsF(es.head, es(1)), "built-in")
-  }
 }

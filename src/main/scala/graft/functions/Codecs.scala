@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
@@ -34,10 +33,4 @@ final case class B64DecodeF(child: Expression) extends UnaryExpression {
     defineCodeGen(ctx, ev, c => s"graft.functions.B64.decode($c)")
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
-}
-
-object CodecKernels {
-  def ensure(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_b64_decode", es => B64DecodeF(es.head), "built-in")
 }

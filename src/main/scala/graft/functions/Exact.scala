@@ -20,12 +20,9 @@ import org.apache.spark.sql.types.DecimalType
 object Exact {
   private val D = DecimalType(38, 4)
 
-  private def scaled(c: Column): Column = {
-    // graft_round (Rust f64::round — deterministic, matches DuckDB round)
-    graft.functions.VectorKernels.ensure(
-      org.apache.spark.sql.SparkSession.active)
-    call_function("graft_round", c * lit(10000.0)).cast("long")
-  }
+  // graft_round (Rust f64::round — deterministic, matches DuckDB round)
+  private def scaled(c: Column): Column =
+    Kernels.call("graft_round", c * lit(10000.0)).cast("long")
 
   /** Exact sum of a double column: identical result on any partitioning.
     *

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
@@ -71,15 +70,4 @@ final case class PwCompareF(scheme: String, left: Expression, right: Expression)
       s"""graft.functions.Pw.compare(UTF8String.fromString("$scheme"), $h, $p)""")
   override protected def withNewChildrenInternal(newLeft: Expression,
       newRight: Expression): Expression = copy(left = newLeft, right = newRight)
-}
-
-object PwKernels {
-  def ensure(spark: SparkSession): Unit = {
-    for (scheme <- Seq("argon2", "bcrypt", "scrypt", "pbkdf2")) {
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        s"graft_pw_${scheme}_generate", es => PwGenerateF(scheme, es.head), "built-in")
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        s"graft_pw_${scheme}_compare", es => PwCompareF(scheme, es(0), es(1)), "built-in")
-    }
-  }
 }

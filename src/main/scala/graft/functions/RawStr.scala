@@ -81,23 +81,6 @@ final case class DecimalRawStr(child: Expression, suffix: Boolean)
     copy(child = newChild)
 }
 
-object RawStrKernels {
-  /** Register in `spark`'s function registry (idempotent): `graft_rawstr`
-    * is `to_raw_string` semantics (decimal suffixed `dec`), `graft_caststr`
-    * is `<string>`-cast semantics (decimal plain). */
-  def ensure(spark: org.apache.spark.sql.SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction("graft_rawstr",
-      es => RawStr(es.head, castMode = false), "built-in")
-    reg.createOrReplaceTempFunction("graft_caststr",
-      es => RawStr(es.head, castMode = true), "built-in")
-    reg.createOrReplaceTempFunction("graft_cast_int",
-      es => StrictNumCast(es.head, toInt = true), "built-in")
-    reg.createOrReplaceTempFunction("graft_cast_float",
-      es => StrictNumCast(es.head, toInt = false), "built-in")
-  }
-}
-
 /** Strict `<int>` / `<float>` casts for ROW-DEPENDENT columns — constant
   * casts fold through the interpreter's Coerce table, but a column cast
   * must apply the same `Cast for i64/f64` rules (convert/cast.rs): a

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, TernaryExpression}
@@ -187,16 +186,4 @@ final case class SemverUpdF(first: Expression, second: Expression,
   override protected def withNewChildrenInternal(
       f: Expression, s: Expression, t: Expression): Expression =
     copy(first = f, second = s, third = t)
-}
-
-object SemverKernels {
-  def ensure(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction("graft_semver_cmp",
-      es => SemverCmpF(es.head, es(1)), "built-in")
-    reg.createOrReplaceTempFunction("graft_semver_get",
-      es => SemverGetF(es.head, es(1)), "built-in")
-    reg.createOrReplaceTempFunction("graft_semver_upd",
-      es => SemverUpdF(es.head, es(1), es(2)), "built-in")
-  }
 }

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
@@ -235,23 +234,4 @@ final case class Blake3F(child: Expression) extends UnaryExpression {
     defineCodeGen(ctx, ev, s => s"graft.functions.StrCheck.blake3Hex($s)")
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
-}
-
-object StrCheckKernels {
-  // re-register on every call (createOrReplaceTempFunction is idempotent):
-  // the registry is PER SparkSession — a JVM-global guard would leave a
-  // second/cloned session without the graft_* functions
-  def ensure(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction("graft_capitalize",
-      es => CapitalizeF(es.head), "built-in")
-    reg.createOrReplaceTempFunction("graft_joaat",
-      es => JoaatF(es.head), "built-in")
-    reg.createOrReplaceTempFunction("graft_blake3",
-      es => Blake3F(es.head), "built-in")
-    StrCheck.kinds.foreach { k =>
-      reg.createOrReplaceTempFunction(s"graft_is_$k",
-        es => StrCheckF(k, es.head), "built-in")
-    }
-  }
 }

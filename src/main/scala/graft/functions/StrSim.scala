@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
@@ -583,38 +582,4 @@ final case class StemF(left: Expression, right: Expression)
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): Expression =
     copy(left = newLeft, right = newRight)
-}
-
-object StrSimKernels {
-  def ensure(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction("graft_jaro",
-      es => JaroF(es.head, es(1)), "built-in")
-    reg.createOrReplaceTempFunction("graft_jaro_winkler",
-      es => JaroWinklerF(es.head, es(1)), "built-in")
-    reg.createOrReplaceTempFunction("graft_sorensen_dice",
-      es => SorensenDiceF(es.head, es(1)), "built-in")
-    reg.createOrReplaceTempFunction("graft_sort_arr",
-      es => SortArrF(es.head, es(1)), "built-in")
-    reg.createOrReplaceTempFunction("graft_fuzzy",
-      es => FuzzyF(es.head, es(1)), "built-in")
-    reg.createOrReplaceTempFunction("graft_damerau",
-      es => DamerauF(es.head, es(1)), "built-in")
-    reg.createOrReplaceTempFunction("graft_hamming",
-      es => HammingF(es.head, es(1)), "built-in")
-    reg.createOrReplaceTempFunction("graft_osa",
-      es => OsaF(es.head, es(1)), "built-in")
-    reg.createOrReplaceTempFunction("graft_levenshtein",
-      es => LevenshteinF(es.head, es(1)), "built-in")
-    reg.createOrReplaceTempFunction("graft_norm_levenshtein",
-      es => NormLevenshteinF(es.head, es(1)), "built-in")
-    reg.createOrReplaceTempFunction("graft_norm_damerau",
-      es => NormDamerauF(es.head, es(1)), "built-in")
-    reg.createOrReplaceTempFunction("graft_stem",
-      es => StemF(es.head, es(1)), "built-in")
-    reg.createOrReplaceTempFunction("graft_words",
-      es => WordsF(es.head), "built-in")
-    reg.createOrReplaceTempFunction("graft_slug",
-      es => SlugF(es.head), "built-in")
-  }
 }

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, TernaryExpression}
@@ -115,13 +114,4 @@ final case class TimeRoundF(first: Expression, second: Expression,
   override protected def withNewChildrenInternal(
       f: Expression, s: Expression, t: Expression): Expression =
     copy(first = f, second = s, third = t)
-}
-
-object TimeKernels {
-  def ensure(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_time_round", es => TimeRoundF(es.head, es(1), es(2)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_strftime", es => StrftimeF(es.head, es(1)), "built-in")
-  }
 }

@@ -2,7 +2,6 @@ package graft.functions
 
 import java.util.Locale
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
@@ -697,16 +696,4 @@ final case class EmailPartF(left: Expression, right: Expression)
       ${ev.isNull} = ${ev.value} == null;""")
   override protected def withNewChildrenInternal(
       l: Expression, r: Expression): Expression = copy(left = l, right = r)
-}
-
-object UrlKernels {
-  def ensure(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction("graft_url_part",
-      es => UrlPartF(es.head, es(1)), "built-in")
-    reg.createOrReplaceTempFunction("graft_url_port",
-      es => UrlPortF(es.head), "built-in")
-    reg.createOrReplaceTempFunction("graft_email_part",
-      es => EmailPartF(es.head, es(1)), "built-in")
-  }
 }

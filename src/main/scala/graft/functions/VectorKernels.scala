@@ -1,7 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
@@ -401,30 +399,4 @@ final case class SignRs(child: Expression)
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
-}
-
-object VectorKernels {
-  private val kernels: Seq[(String, Seq[Expression] => Expression)] = Seq(
-    "graft_dot" -> (es => DotF(es.head, es(1))),
-    "graft_l2" -> (es => L2F(es.head, es(1))),
-    "graft_l1" -> (es => L1F(es.head, es(1))),
-    "graft_l2sq" -> (es => L2SqF(es.head, es(1))),
-    "graft_eqcount" -> (es => EqCountF(es.head, es(1))),
-    "graft_round" -> (es => RoundRs(es.head)),
-    "graft_fixed" -> (es => FixedRs(es.head, es(1))),
-    "graft_ceil" -> (es => CeilFloorRs(es.head, up = true)),
-    "graft_floor" -> (es => CeilFloorRs(es.head, up = false)),
-    "graft_sign" -> (es => SignRs(es.head)))
-
-  /** Register the kernels in `spark`'s function registry so
-    * `call_function("graft_dot", …)` resolves — the classic-mode bridge
-    * from Column expressions to custom Catalyst expressions. Only kernels
-    * the registry lacks are registered, so repeated calls leave it as is. */
-  def ensure(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    kernels.foreach { case (name, build) =>
-      if (!reg.functionExists(FunctionIdentifier(name)))
-        reg.createOrReplaceTempFunction(name, build, "built-in")
-    }
-  }
 }

@@ -114,7 +114,7 @@ object Dedup {
     // signature agreement via the codegen'd long-exact kernel (EqCountF):
     // same count as the zip_with/when fold it replaced, without the
     // interpreted per-element lambda or the zipped int-array allocation
-    graft.functions.VectorKernels.ensure(s)
+    graft.functions.Kernels.register(s)
     cand.join(sa, "a").join(sb, "b")
       .select(col("a"), col("b"),
         (call_function("graft_eqcount", col("sig_a"), col("sig_b"))

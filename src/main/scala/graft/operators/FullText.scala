@@ -161,7 +161,7 @@ object FullText {
 
   private def chainPostingsPlan(s: SparkSession, src: DataFrame, keyCol: String,
       field: String, chain: String): (DataFrame, DataFrame) = {
-    graft.functions.AnalyzeKernels.ensure(s)
+    graft.functions.Kernels.register(s)
     // an ARRAY-valued field indexes every value (the reference analyzes
     // each string value of the field; idx/ft/analyzer walks the value
     // tree): explode values first, then tokenize — tf and dl aggregate
@@ -256,7 +256,7 @@ object FullText {
 
   def stemmedIndex(s: SparkSession, dir: String): (DataFrame, DataFrame) =
     stemmedCache.getOrElseUpdate(dir, {
-      graft.functions.StrSimKernels.ensure(s)
+      graft.functions.Kernels.register(s)
       val base = graft.CacheDir.ensure(graft.CacheDir.path("fts-stem-v1", dir)) { p =>
         tokenize(Tables.documentsWide(s, dir))
           .select(col("doc_id"),

@@ -66,7 +66,7 @@ object Hnsw {
   }
 
   /** Cosine distance in double precision, the in-order fold the rest of
-    * the engine uses (VectorKernels semantics) so HNSW distances agree
+    * the engine uses (the graft_* vector kernels) so HNSW distances agree
     * bit-for-bit with the brute/LSH/IVF paths. */
   private def cosDist(a: Array[Float], b: Array[Float]): Double = {
     var dot = 0.0; var na = 0.0; var nb = 0.0; var i = 0

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.{Q, Tables}
+import graft.functions.Kernels
 
 /** Vector similarity search over an embedding column (Array[Float], dim 64).
   *
@@ -30,29 +31,17 @@ object Similarity {
     * `aggregate(zip_with(…))` HOF fold it replaced, but it stays inside
     * whole-stage codegen with no per-element lambda or zipped-array
     * allocation. */
-  def dot(a: Column, b: Column): Column = {
-    graft.functions.VectorKernels.ensure(
-      org.apache.spark.sql.SparkSession.active)
-    call_function("graft_dot", a, b)
-  }
+  def dot(a: Column, b: Column): Column = Kernels.call("graft_dot", a, b)
 
   def norm(a: Column): Column = sqrt(dot(a, a))
 
   def cosine(a: Column, b: Column): Column = dot(a, b) / (norm(a) * norm(b))
 
   /** Euclidean distance, same in-order double fold as [[dot]]. */
-  def l2(a: Column, b: Column): Column = {
-    graft.functions.VectorKernels.ensure(
-      org.apache.spark.sql.SparkSession.active)
-    call_function("graft_l2", a, b)
-  }
+  def l2(a: Column, b: Column): Column = Kernels.call("graft_l2", a, b)
 
   /** Manhattan distance. */
-  def l1(a: Column, b: Column): Column = {
-    graft.functions.VectorKernels.ensure(
-      org.apache.spark.sql.SparkSession.active)
-    call_function("graft_l1", a, b)
-  }
+  def l1(a: Column, b: Column): Column = Kernels.call("graft_l1", a, b)
 
   /** SQL twin of [[dot]]: same in-order double fold, for the DuckDB
     * oracle (1-based list indexing; range(1,65) = dims 1..64). */
@@ -393,11 +382,7 @@ object Similarity {
     * replaced; the IVF cell assignment evaluates it once per (row ×
     * centroid), so the per-element interpreted lambda was the build's
     * hottest inner loop. */
-  private def l2sq(a: Column, b: Column): Column = {
-    graft.functions.VectorKernels.ensure(
-      org.apache.spark.sql.SparkSession.active)
-    call_function("graft_l2sq", a, b)
-  }
+  private def l2sq(a: Column, b: Column): Column = Kernels.call("graft_l2sq", a, b)
 
   private val IvfK = 32      // centroid count (cells)
   private val IvfProbe = 8   // cells scanned per query
@@ -411,8 +396,6 @@ object Similarity {
     * call sites construct cents with consecutive cids 0..K-1 (zipWithIndex
     * / sortBy), so position-1 IS the cid. */
   private def assignCid(emb: Column, cents: Seq[(Int, Seq[Double])]): Column = {
-    graft.functions.VectorKernels.ensure(
-      org.apache.spark.sql.SparkSession.active)
     // ascending cids make "first minimal position" equal the old
     // struct-ordering tie-break (min distance, then min cid); a cid GAP is
     // legal (a Lloyd cell can end up empty), so positions map to cids
@@ -421,7 +404,7 @@ object Similarity {
       "assignCid expects cids in ascending order")
     val mat = typedlit(cents.map(_._2))
     val cids = typedlit(cents.map(_._1))
-    val dists = transform(mat, c => call_function("graft_l2sq", emb, c))
+    val dists = transform(mat, c => l2sq(emb, c))
     element_at(cids, array_position(dists, array_min(dists)).cast("int"))
   }
 

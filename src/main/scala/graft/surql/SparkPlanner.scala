@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.Tables
-import graft.functions.Exact
+import graft.functions.{Exact, Kernels}
 import graft.surql.ast._
 
 /** SurrealQL → Spark planner: lowers a parsed SELECT (or RETURN) onto
@@ -3761,9 +3761,7 @@ object SparkPlanner {
       if (n <= 0)
         throw SqlError("Incorrect arguments for function math::fixed(). " +
           "The second argument must be an integer greater than 0.")
-      graft.functions.VectorKernels.ensure(
-        org.apache.spark.sql.SparkSession.active)
-      call_function("graft_fixed", aggExpr(inner, ctx, groupAll), lit(n))
+      Kernels.call("graft_fixed", aggExpr(inner, ctx, groupAll), lit(n))
     case FnCall("math::min", Seq(inner)) =>
       if (groupAll) coalesce(min(toCol(inner, ctx)), lit(Double.PositiveInfinity))
       else min(toCol(inner, ctx))
@@ -4304,13 +4302,9 @@ object SparkPlanner {
           // grammars — RuntimeReplaceable, integer inputs collapse to the
           // built-in cast
           case Kind.KInt =>
-            graft.functions.RawStrKernels.ensure(
-              org.apache.spark.sql.SparkSession.active)
-            call_function("graft_cast_int", c(inner))
+            Kernels.call("graft_cast_int", c(inner))
           case Kind.KFloat =>
-            graft.functions.RawStrKernels.ensure(
-              org.apache.spark.sql.SparkSession.active)
-            call_function("graft_cast_float", c(inner))
+            Kernels.call("graft_cast_float", c(inner))
           case Kind.KString  => castStrCol(c(inner))
           case Kind.KBool    => c(inner).cast("boolean")
           case Kind.KDecimal => c(inner).cast("decimal(38,10)")
@@ -4348,19 +4342,11 @@ object SparkPlanner {
     * array::join / string::concat / string::join / THROW, which the
     * reference renders raw. Non-float types collapse back to the built-in
     * cast (graft.functions.RawStr is RuntimeReplaceable). */
-  private def rawStrCol(c: Column): Column = {
-    graft.functions.RawStrKernels.ensure(
-      org.apache.spark.sql.SparkSession.active)
-    call_function("graft_rawstr", c)
-  }
+  private def rawStrCol(c: Column): Column = Kernels.call("graft_rawstr", c)
 
   /** `<string>`-cast rendering — like [[rawStrCol]] but decimals render
     * PLAIN (convert/cast.rs:360 special-cases Decimal; floats keep `f`). */
-  private def castStrCol(c: Column): Column = {
-    graft.functions.RawStrKernels.ensure(
-      org.apache.spark.sql.SparkSession.active)
-    call_function("graft_caststr", c)
-  }
+  private def castStrCol(c: Column): Column = Kernels.call("graft_caststr", c)
 
   /** Bounds-checked element_at (ANSI mode errors out-of-range; the
     * reference's array accessors yield NONE): `adj` is the 1-based (or
@@ -4571,46 +4557,30 @@ object SparkPlanner {
     // the STRING_SIMILARITY_LIMIT DoS guard (fnc/string.rs:28) that the
     // builtin lacks, and counts Unicode scalar values
     case "string::distance::levenshtein" =>
-      graft.functions.StrSimKernels.ensure(
-        org.apache.spark.sql.SparkSession.active)
-      call_function("graft_levenshtein", cs(0), cs(1))
+      Kernels.call("graft_levenshtein", cs(0), cs(1))
     case "string::distance::damerau_levenshtein" =>
-      graft.functions.StrSimKernels.ensure(
-        org.apache.spark.sql.SparkSession.active)
-      call_function("graft_damerau", cs(0), cs(1))
+      Kernels.call("graft_damerau", cs(0), cs(1))
     case "string::distance::osa" | "string::distance::osa_distance" =>
-      graft.functions.StrSimKernels.ensure(
-        org.apache.spark.sql.SparkSession.active)
-      call_function("graft_osa", cs(0), cs(1))
+      Kernels.call("graft_osa", cs(0), cs(1))
     // validator family over COLUMN arguments: the codegen'd StrCheck
     // kernel — the SAME static the interpreter calls, so the engines are
     // definitionally identical (fnc/string.rs is::*)
     case n if (n.startsWith("string::is_") || n.startsWith("string::is::")) &&
         graft.functions.StrCheck.kinds.contains(
           n.stripPrefix("string::").stripPrefix("is::").stripPrefix("is_")) =>
-      graft.functions.StrCheckKernels.ensure(
-        org.apache.spark.sql.SparkSession.active)
-      call_function("graft_is_" +
+      Kernels.call("graft_is_" +
         n.stripPrefix("string::").stripPrefix("is::").stripPrefix("is_"), cs(0))
     case "string::capitalize" =>
-      graft.functions.StrCheckKernels.ensure(
-        org.apache.spark.sql.SparkSession.active)
-      call_function("graft_capitalize", cs(0))
+      Kernels.call("graft_capitalize", cs(0))
     case "string::distance::hamming" =>
-      graft.functions.StrSimKernels.ensure(
-        org.apache.spark.sql.SparkSession.active)
-      call_function("graft_hamming", cs(0), cs(1))
+      Kernels.call("graft_hamming", cs(0), cs(1))
     // normalized distances: whole-kernel lowerings (1 - d/max(chars),
     // both-empty = 1.0, plus the reference's limit check under the
     // normalized function's OWN name — fnc/string.rs:314,361)
     case "string::distance::normalized_levenshtein" =>
-      graft.functions.StrSimKernels.ensure(
-        org.apache.spark.sql.SparkSession.active)
-      call_function("graft_norm_levenshtein", cs(0), cs(1))
+      Kernels.call("graft_norm_levenshtein", cs(0), cs(1))
     case "string::distance::normalized_damerau_levenshtein" =>
-      graft.functions.StrSimKernels.ensure(
-        org.apache.spark.sql.SparkSession.active)
-      call_function("graft_norm_damerau", cs(0), cs(1))
+      Kernels.call("graft_norm_damerau", cs(0), cs(1))
     case "math::abs"   => abs(cs(0))
     // ceil/floor/round preserve the operand's numeric KIND in the reference
     // (number.rs: Int passes through; Float stays Float — math::ceil(2.5)
@@ -4621,17 +4591,13 @@ object SparkPlanner {
     case "math::ceil" => typeOf(raw(0), ctx.schema) match {
       case Some(LongType | IntegerType | ShortType) => cs(0)
       case Some(DoubleType | FloatType) =>
-        graft.functions.VectorKernels.ensure(
-          org.apache.spark.sql.SparkSession.active)
-        call_function("graft_ceil", cs(0))
+        Kernels.call("graft_ceil", cs(0))
       case _ => ceil(cs(0)).cast("bigint")
     }
     case "math::floor" => typeOf(raw(0), ctx.schema) match {
       case Some(LongType | IntegerType | ShortType) => cs(0)
       case Some(DoubleType | FloatType) =>
-        graft.functions.VectorKernels.ensure(
-          org.apache.spark.sql.SparkSession.active)
-        call_function("graft_floor", cs(0))
+        Kernels.call("graft_floor", cs(0))
       case _ => floor(cs(0)).cast("bigint")
     }
     // Reference round is Rust f64::round (val/number.rs:578): half away from
@@ -4648,9 +4614,7 @@ object SparkPlanner {
         toCol(Lit(Eval.evalConst(FnCall("math::round", Seq(raw(0))))), ctx)
       case Some(_: org.apache.spark.sql.types.DecimalType) => bround(cs(0), 0)
       case _ =>
-        graft.functions.VectorKernels.ensure(
-          org.apache.spark.sql.SparkSession.active)
-        call_function("graft_round", cs(0))
+        Kernels.call("graft_round", cs(0))
     }
     // math::fixed: the reference's format-then-parse shape (val/number.rs
     // :583 — exact-binary-value rounding, ties-to-even, result is FLOAT
@@ -4674,17 +4638,13 @@ object SparkPlanner {
           toCol(Lit(Eval.evalConst(FnCall("math::fixed", Seq(raw(0), raw(1))))), ctx)
         case Some(_: org.apache.spark.sql.types.DecimalType) => bround(cs(0), p)
         case _ =>
-          graft.functions.VectorKernels.ensure(
-            org.apache.spark.sql.SparkSession.active)
-          call_function("graft_fixed", cs(0), lit(p))
+          Kernels.call("graft_fixed", cs(0), lit(p))
       }
     case "math::sqrt"  => sqrt(cs(0))
     // Rust f64::signum (val/number.rs:596): ±1.0 for ±0.0, NaN passthrough,
     // and Int input keeps Int type — Spark's signum() is Java semantics
     case "math::sign"  =>
-      graft.functions.VectorKernels.ensure(
-        org.apache.spark.sql.SparkSession.active)
-      call_function("graft_sign", cs(0))
+      Kernels.call("graft_sign", cs(0))
     case "math::pow"   => pow(cs(0), cs(1))
     // math::sum over an in-row array value (fnc/math.rs Sum) — a codegen'd
     // fold; result is double (SurrealQL numeric promotion on mixed arrays)
@@ -4824,9 +4784,7 @@ object SparkPlanner {
         // bad specifiers throw the reference's InvalidMethodArguments here
         graft.surql.Strftime.format(
           java.time.Instant.EPOCH.atZone(java.time.ZoneOffset.UTC), fmt)
-        graft.functions.TimeKernels.ensure(
-          org.apache.spark.sql.SparkSession.active)
-        call_function("graft_strftime", cs(0).cast("timestamp"), lit(fmt))
+        Kernels.call("graft_strftime", cs(0).cast("timestamp"), lit(fmt))
       case _ => throw SqlError("SparkPlanner: time::format needs a constant format")
     }
     case "time::timezone" => lit("UTC") // session TZ is pinned UTC
@@ -4908,14 +4866,12 @@ object SparkPlanner {
         case VInt(i) => Math.multiplyExact(i, 1000000000L) // bare secs
         case other => throw SqlError(s"SparkPlanner: $name needs a duration, got ${other.render}")
       }
-      graft.functions.TimeKernels.ensure(ctx.spark)
+      Kernels.register(ctx.spark)
       call_function("graft_time_round",
         toCol(raw(0), ctx).cast("timestamp"), lit(durNanos), lit(mode))
     case "string::words" =>
       // Unicode split_whitespace, no empty parts (r20 sweep)
-      graft.functions.StrSimKernels.ensure(
-        org.apache.spark.sql.SparkSession.active)
-      call_function("graft_words", cs(0))
+      Kernels.call("graft_words", cs(0))
     case "string::repeat" => raw(1) match {
       case Lit(VInt(n)) => repeat(cs(0), n.toInt)
       case _ => throw SqlError("SparkPlanner: string::repeat needs a constant count")
@@ -4925,28 +4881,18 @@ object SparkPlanner {
       // are Unicode by default (fnc/string.rs matches → Regex::is_match)
       regexp_like(cs(0), concat(lit("(?U)"), cs(1)))
     case "string::similarity::jaro" =>
-      graft.functions.StrSimKernels.ensure(
-        org.apache.spark.sql.SparkSession.active)
-      call_function("graft_jaro", cs(0), cs(1))
+      Kernels.call("graft_jaro", cs(0), cs(1))
     case "string::similarity::jaro_winkler" =>
-      graft.functions.StrSimKernels.ensure(
-        org.apache.spark.sql.SparkSession.active)
-      call_function("graft_jaro_winkler", cs(0), cs(1))
+      Kernels.call("graft_jaro_winkler", cs(0), cs(1))
     case "string::similarity::fuzzy" | "string::similarity::smithwaterman" =>
-      graft.functions.StrSimKernels.ensure(
-        org.apache.spark.sql.SparkSession.active)
-      call_function("graft_fuzzy", cs(0), cs(1))
+      Kernels.call("graft_fuzzy", cs(0), cs(1))
     case "string::similarity::sorensen_dice" =>
-      graft.functions.StrSimKernels.ensure(
-        org.apache.spark.sql.SparkSession.active)
-      call_function("graft_sorensen_dice", cs(0), cs(1))
+      Kernels.call("graft_sorensen_dice", cs(0), cs(1))
     // lexicmp-family array sorts over COLUMN string arrays — the kernel
     // shares the interpreter's comparators (fnc/array.rs sort_natural &c.)
     case "array::sort_natural" | "array::sort_lexical"
         | "array::sort_natural_lexical" =>
-      graft.functions.StrSimKernels.ensure(
-        org.apache.spark.sql.SparkSession.active)
-      val sorted = call_function("graft_sort_arr", cs(0),
+      val sorted = Kernels.call("graft_sort_arr", cs(0),
         lit(name.stripPrefix("array::sort_")))
       val desc = raw.lift(1).exists(a =>
         try Eval.evalConst(a) match {
@@ -4960,9 +4906,7 @@ object SparkPlanner {
     // incl. pre-release ordering — the r17 sweep caught the old 3-part
     // numeric compare ignoring pre-releases on BOTH engines
     case "string::semver::compare" =>
-      graft.functions.SemverKernels.ensure(
-        org.apache.spark.sql.SparkSession.active)
-      call_function("graft_semver_cmp", cs(0), cs(1))
+      Kernels.call("graft_semver_cmp", cs(0), cs(1))
     // join(sep, parts…) — parts render raw (fnc/string.rs Join)
     case "string::join" => raw(0) match {
       case Lit(VStr(sep)) => concat_ws(sep, cs.tail.map(rawStrCol): _*)
@@ -4977,24 +4921,18 @@ object SparkPlanner {
     // semver components — strict shared parse (reference error texts)
     case "string::semver::major" | "string::semver::minor"
         | "string::semver::patch" =>
-      graft.functions.SemverKernels.ensure(
-        org.apache.spark.sql.SparkSession.active)
-      call_function("graft_semver_get", cs(0), lit(name.split("::").last))
+      Kernels.call("graft_semver_get", cs(0), lit(name.split("::").last))
     // inc bumps a component and zeroes the lower ones; set replaces one —
     // BOTH keep the pre-release/build tail (the crate mutates the field
     // and renders the whole Version back)
     case n if n.startsWith("string::semver::inc::") ||
         n.startsWith("string::semver::set::") =>
-      graft.functions.SemverKernels.ensure(
-        org.apache.spark.sql.SparkSession.active)
       val op = (if (n.contains("::inc::")) "inc_" else "set_") + n.split("::").last
       val value = if (n.contains("::set::")) cs(1).cast("bigint") else lit(0L)
-      call_function("graft_semver_upd", cs(0), lit(op), value)
+      Kernels.call("graft_semver_upd", cs(0), lit(op), value)
     case "string::slug" =>
       // deunicode + underscore-keeping (r20 sweep) — shared kernel
-      graft.functions.StrSimKernels.ensure(
-        org.apache.spark.sql.SparkSession.active)
-      call_function("graft_slug", cs(0))
+      Kernels.call("graft_slug", cs(0))
     case "time::group"  =>
       val unit = raw(1) match { case Lit(VStr(s)) => s; case _ => "day" }
       date_trunc(unit, cs(0)).cast("date")
@@ -5306,9 +5244,7 @@ object SparkPlanner {
     // codegen'd pass instead of the old 12-regex replace chain; sanitize
     // is the real allowlist sanitizer, not a tag-strip) ------------------
     case "string::html::encode" | "string::html::sanitize" =>
-      graft.functions.HtmlKernels.ensure(
-        org.apache.spark.sql.SparkSession.active)
-      call_function(
+      Kernels.call(
         if (name.endsWith("encode")) "graft_html_encode" else "graft_html_sanitize",
         cs(0))
     // ---- encoding::base64 — reference default: UNPADDED encode (a truthy
@@ -5329,9 +5265,7 @@ object SparkPlanner {
       if (padded) base64(cs(0).cast("binary"))
       else regexp_replace(base64(cs(0).cast("binary")), "=+$", "")
     case "encoding::base64::decode" =>
-      graft.functions.CodecKernels.ensure(
-        org.apache.spark.sql.SparkSession.active)
-      call_function("graft_b64_decode", cs(0))
+      Kernels.call("graft_b64_decode", cs(0))
     // ---- record::* / meta::* over `table:key` record ids ----------------
     // this path's canonical record-id form is the `table:key` string (see
     // the mock/graph lowerings); table names cannot contain ':' so the
@@ -5374,29 +5308,21 @@ object SparkPlanner {
     // blake3 / joaat over columns: codegen'd kernels sharing the
     // interpreter's statics (fnc/crypto.rs)
     case "crypto::blake3" =>
-      graft.functions.StrCheckKernels.ensure(
-        org.apache.spark.sql.SparkSession.active)
-      call_function("graft_blake3", cs(0))
+      Kernels.call("graft_blake3", cs(0))
     case "crypto::joaat" =>
-      graft.functions.StrCheckKernels.ensure(
-        org.apache.spark.sql.SparkSession.active)
-      call_function("graft_joaat", cs(0))
+      Kernels.call("graft_joaat", cs(0))
     // password-hash families (fnc/crypto.rs, REAL algorithms since r19):
     // per-row kernels sharing the interpreter's Argon2/Bcrypt/Scrypt/
     // pbkdf2 implementations — generate is nondeterministic (fresh salt),
     // compare enforces each scheme's cost allowance inside the kernel
     case "crypto::argon2::generate" | "crypto::bcrypt::generate" |
          "crypto::scrypt::generate" | "crypto::pbkdf2::generate" =>
-      graft.functions.PwKernels.ensure(
-        org.apache.spark.sql.SparkSession.active)
       val scheme = name.stripPrefix("crypto::").stripSuffix("::generate")
-      call_function(s"graft_pw_${scheme}_generate", cs(0))
+      Kernels.call(s"graft_pw_${scheme}_generate", cs(0))
     case "crypto::argon2::compare" | "crypto::bcrypt::compare" |
          "crypto::scrypt::compare" | "crypto::pbkdf2::compare" =>
-      graft.functions.PwKernels.ensure(
-        org.apache.spark.sql.SparkSession.active)
       val scheme = name.stripPrefix("crypto::").stripSuffix("::compare")
-      call_function(s"graft_pw_${scheme}_compare", cs(0), cs(1))
+      Kernels.call(s"graft_pw_${scheme}_compare", cs(0), cs(1))
     // ---- parse::* --------------------------------------------------------
     // WHATWG parsing per the reference's url crate (r20 sweep): IDNA/
     // lowercase/IPv4-IPv6 normalization, default-port restore, whole-parse
@@ -5404,19 +5330,13 @@ object SparkPlanner {
     // lowering codegens the SAME UrlParse statics the interpreter calls
     case "parse::url::host" | "parse::url::domain" | "parse::url::path" |
          "parse::url::query" | "parse::url::scheme" | "parse::url::fragment" =>
-      graft.functions.UrlKernels.ensure(
-        org.apache.spark.sql.SparkSession.active)
-      call_function("graft_url_part", cs(0), lit(name.stripPrefix("parse::url::")))
+      Kernels.call("graft_url_part", cs(0), lit(name.stripPrefix("parse::url::")))
     case "parse::url::port" =>
-      graft.functions.UrlKernels.ensure(
-        org.apache.spark.sql.SparkSession.active)
-      call_function("graft_url_port", cs(0))
+      Kernels.call("graft_url_port", cs(0))
     // addr-crate parse: an invalid email is NONE, not a best-effort split;
     // IDN hosts stay as written, RFC 5321 address literals normalize
     case "parse::email::user" | "parse::email::host" =>
-      graft.functions.UrlKernels.ensure(
-        org.apache.spark.sql.SparkSession.active)
-      call_function("graft_email_part", cs(0),
+      Kernels.call("graft_email_part", cs(0),
         lit(name.stripPrefix("parse::email::")))
     // ---- geo::distance / geo::bearing over COLUMN points -----------------
     // (fnc/geo.rs → georust Haversine). Points arrive as the parser's
@@ -5483,7 +5403,7 @@ object SparkPlanner {
       }
       ctx.matchRefs.get(ref) match {
         case Some((field, chain, terms)) =>
-          graft.functions.AnalyzeKernels.ensure(ctx.spark)
+          Kernels.register(ctx.spark)
           val packed =
             lit(graft.functions.Analyze.packHighlight(chain, terms, pre, post, partial))
           fnAnalyzerCol(field, chain, "search::highlight", ctx) match {
@@ -5509,7 +5429,7 @@ object SparkPlanner {
       }
       ctx.matchRefs.get(ref) match {
         case Some((field, chain, terms)) =>
-          graft.functions.AnalyzeKernels.ensure(ctx.spark)
+          Kernels.register(ctx.spark)
           val packed =
             lit(graft.functions.Analyze.packHighlight(chain, terms, "", "", partial))
           // map keyed by VALUE INDEX — {"0": [{e,s}…], "1": …} — matching

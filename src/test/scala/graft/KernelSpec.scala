@@ -1,8 +1,11 @@
 package graft
 
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.functions.Kernels
 import graft.operators.Similarity
 
 /** The native codegen'd vector kernels (DotF/L2F/L1F) must be BIT-IDENTICAL
@@ -120,33 +123,98 @@ class KernelSpec extends AnyFunSuite {
   }
 
   test("StrCheck kernels register in a FRESH cloned session (per-session registry)") {
-    // functionRegistry is per-SparkSession: a JVM-global ensure guard would
-    // leave a second session without graft_is_* and fail analysis
+    // functionRegistry is per-SparkSession: a JVM-global guard would leave a
+    // second session without the graft_* names and fail analysis
     val s2 = spark.newSession()
-    graft.functions.StrCheckKernels.ensure(s2)
+    Kernels.register(s2)
     val r = s2.sql("SELECT 1 AS one").select(
-      org.apache.spark.sql.functions.call_function(
-        "graft_is_email", org.apache.spark.sql.functions.lit("a@b.co")).as("ok"),
-      org.apache.spark.sql.functions.call_function(
-        "graft_capitalize", org.apache.spark.sql.functions.lit("hi there")).as("cap")
-    ).head
+      call_function("graft_is_email", lit("a@b.co")).as("ok"),
+      call_function("graft_capitalize", lit("hi there")).as("cap")).head
     assert(r.getBoolean(0))
     assert(r.getString(1) == "Hi There")
   }
 
   test("VectorKernels.ensure registers its kernels once per session") {
-    // a repeated ensure must leave the registry as it is: replacing the
-    // entries logs a WARN on every call
+    // the vector kernels now register with the rest of the kernel table: a
+    // repeated registration must leave every entry as it is (replacing an
+    // entry logs a WARN each time)
     val s2 = spark.newSession()
     val reg = s2.sessionState.functionRegistry
-    val dot = org.apache.spark.sql.catalyst.FunctionIdentifier("graft_dot")
-    graft.functions.VectorKernels.ensure(s2)
-    val builder = reg.lookupFunctionBuilder(dot)
-    val info = reg.lookupFunction(dot)
-    assert(builder.isDefined && info.isDefined)
-    graft.functions.VectorKernels.ensure(s2)
-    assert(reg.lookupFunctionBuilder(dot).get eq builder.get)
-    assert(reg.lookupFunction(dot).get eq info.get)
+    val ids = Kernels.names.toSeq.sorted.map(FunctionIdentifier(_))
+    assert(ids.contains(FunctionIdentifier("graft_dot")))
+    Kernels.register(s2)
+    val first = ids.map(id => (reg.lookupFunctionBuilder(id), reg.lookupFunction(id)))
+    ids.zip(first).foreach { case (id, (builder, info)) =>
+      assert(builder.isDefined && info.isDefined, s"$id does not resolve")
+    }
+    Kernels.register(s2)
+    ids.zip(first).foreach { case (id, (builder, info)) =>
+      assert(reg.lookupFunctionBuilder(id).get eq builder.get, s"$id builder replaced")
+      assert(reg.lookupFunction(id).get eq info.get, s"$id info replaced")
+    }
+  }
+
+  test("every table kernel evaluates once through Kernels.call") {
+    val str = lit("Hello World")
+    val vec = typedlit(Seq(1.0f, 2.0f))
+    val chain = "DEFINE ANALYZER a TOKENIZERS blank FILTERS lowercase"
+    val packed = lit(graft.functions.Analyze.packHighlight(
+      chain, Seq("hello"), "<b>", "</b>", partial = false))
+    val ts = lit("2024-05-06 07:08:09").cast("timestamp")
+    val url = lit("https://example.com:8080/p?q=1#f")
+    val pw = Seq("argon2", "bcrypt", "scrypt", "pbkdf2").flatMap { scheme =>
+      val generate = s"graft_pw_${scheme}_generate"
+      Seq(generate -> Seq(lit("secret")),
+        s"graft_pw_${scheme}_compare" -> Seq(Kernels.call(generate, lit("secret")), lit("secret")))
+    }
+    val samples: Map[String, Seq[Column]] = Map(
+      "graft_dot" -> Seq(vec, vec), "graft_l2" -> Seq(vec, vec),
+      "graft_l1" -> Seq(vec, vec), "graft_l2sq" -> Seq(vec, vec),
+      "graft_eqcount" -> Seq(typedlit(Seq(1L, 2L)), typedlit(Seq(1L, 3L))),
+      "graft_round" -> Seq(lit(2.5)), "graft_fixed" -> Seq(lit(2.345), lit(2)),
+      "graft_ceil" -> Seq(lit(2.5)), "graft_floor" -> Seq(lit(2.5)),
+      "graft_sign" -> Seq(lit(-2.5)),
+      "graft_capitalize" -> Seq(lit("hi there")), "graft_joaat" -> Seq(str),
+      "graft_blake3" -> Seq(str),
+      "graft_jaro" -> Seq(str, lit("Hallo")), "graft_jaro_winkler" -> Seq(str, lit("Hallo")),
+      "graft_sorensen_dice" -> Seq(str, lit("Hallo")),
+      "graft_sort_arr" -> Seq(typedlit(Seq("b10", "b2")), lit("natural")),
+      "graft_fuzzy" -> Seq(str, lit("Hallo")), "graft_damerau" -> Seq(str, lit("Hallo")),
+      "graft_hamming" -> Seq(lit("abc"), lit("abd")), "graft_osa" -> Seq(str, lit("Hallo")),
+      "graft_levenshtein" -> Seq(str, lit("Hallo")),
+      "graft_norm_levenshtein" -> Seq(str, lit("Hallo")),
+      "graft_norm_damerau" -> Seq(str, lit("Hallo")),
+      "graft_stem" -> Seq(lit("running"), lit("english")),
+      "graft_words" -> Seq(str), "graft_slug" -> Seq(str),
+      "graft_rawstr" -> Seq(lit(1.5)), "graft_caststr" -> Seq(lit(1.5)),
+      "graft_cast_int" -> Seq(lit("12")), "graft_cast_float" -> Seq(lit("1.5")),
+      "graft_url_part" -> Seq(url, lit("host")), "graft_url_port" -> Seq(url),
+      "graft_email_part" -> Seq(lit("a@b.co"), lit("user")),
+      "graft_analyze" -> Seq(str, lit(chain)), "graft_highlight" -> Seq(str, packed),
+      "graft_highlight_fx" -> Seq(str, lower(str), packed),
+      "graft_offsets" -> Seq(str, packed),
+      "graft_time_round" -> Seq(ts, lit(3600000000000L), lit("floor")),
+      "graft_strftime" -> Seq(ts, lit("%Y-%m-%d")),
+      "graft_semver_cmp" -> Seq(lit("1.2.3"), lit("1.3.0")),
+      "graft_semver_get" -> Seq(lit("1.2.3"), lit("minor")),
+      "graft_semver_upd" -> Seq(lit("1.2.3"), lit("inc_major"), lit(0L)),
+      "graft_html_encode" -> Seq(lit("<a>")), "graft_html_sanitize" -> Seq(lit("<a>")),
+      "graft_b64_decode" -> Seq(lit("aGk"))) ++
+      graft.functions.StrCheck.kinds.map(k => s"graft_is_$k" -> Seq(lit("a@b.co"))) ++ pw
+    assert(samples.keySet == Kernels.names)
+    val names = samples.keys.toSeq.sorted
+    val row = spark.range(1)
+      .select(names.map(n => Kernels.call(n, samples(n): _*).as(n)): _*).head
+    def at[T](n: String): T = row.getAs[T](names.indexOf(n))
+    assert(at[String]("graft_capitalize") == "Hi There")
+    assert(at[Boolean]("graft_is_email"))
+    assert(at[scala.collection.Seq[String]]("graft_analyze") == Seq("hello", "world"))
+    assert(at[String]("graft_highlight") == "<b>Hello</b> World")
+    assert(at[Double]("graft_dot") == 5.0)
+    assert(at[String]("graft_url_part") == "example.com")
+    pw.collect { case (n, _) if n.endsWith("_compare") => n }
+      .foreach(n => assert(at[Boolean](n), s"$n rejects its own hash"))
+    intercept[IllegalArgumentException](Kernels.call("graft_no_such_kernel", str))
   }
 
   test("sorensenDice matches hand-traced strsim::sorensen_dice vectors") {

@@ -69,15 +69,6 @@ class QueriesSpec extends AnyFunSuite {
 }
 
 object TestSpark {
-  lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[8]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  // 8 cores whatever the box: RecursionJobsSpec's job budgets assume it
+  lazy val session: SparkSession = Session.local(8)
 }

@@ -1,6 +1,5 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Scratch: split-vs-single aggregation shape for median+declarative mixes.
@@ -8,11 +7,7 @@ import org.apache.spark.sql.functions._
 object AggShape {
   def main(args: Array[String]): Unit = {
     val d = args(0)
-    val s = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
+    val s = graft.Session.local(graft.Session.cpus(), logLevel = "ERROR")
     import graft.functions.Exact
 
     def split() = {

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** One-off measurement harness for the r16 quality gates: prints the actual
@@ -10,14 +10,7 @@ import org.apache.spark.sql.functions._
 object GateProbe {
   def main(args: Array[String]): Unit = {
     val d = args(0)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val s = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
+    val s = graft.Session.local(graft.Session.cpus(16), logLevel = "ERROR")
 
     // ---- KNN ANN recall@10 + sim-ratio vs exact brute ---------------------
     val exactDf = Similarity.knnBrute.fn(s, d).persist()

@@ -1,6 +1,5 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Scratch: split plan-construction vs execution time for one query.
@@ -8,11 +7,7 @@ import org.apache.spark.sql.functions._
 object TimePhases {
   def main(args: Array[String]): Unit = {
     val name = args(0); val d = args(1)
-    val s = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
+    val s = graft.Session.local(graft.Session.cpus(), logLevel = "ERROR")
     val fn = graft.SparkEntry.queries(name)
     (1 to 6).foreach { i =>
       val t0 = System.nanoTime()
