@@ -727,9 +727,9 @@ object SurqlQueries {
        FROM part ORDER BY k NUMERIC, p_partkey""")
 
   // ---- mutation statements through the planner ----------------------------
-  // CREATE/INSERT/UPDATE/UPSERT/DELETE/RELATE text lowers onto the
-  // Mutations.* transforms (SparkPlanner.planCreate &c.); outputs are the
-  // statements' RETURN shapes.
+  // CREATE/INSERT/UPDATE/UPSERT/DELETE/RELATE text runs on SparkPlanner's
+  // script executor, which lowers it onto the Mutations.* transforms;
+  // outputs are the statements' RETURN shapes.
 
   val mutUpdateSet = sqOrd("mut_update_set",
     """SELECT o_orderkey, o_totalprice * CAST(1.1 AS DOUBLE) AS o_totalprice,

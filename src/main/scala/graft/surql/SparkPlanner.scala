@@ -479,9 +479,8 @@ object SparkPlanner {
       case scala.None => qtext
     }
 
-  def query(spark: SparkSession, dir: String, surql: String): DataFrame = {
-    val ast = Parser.parse(surql)
-    ast.stmts match {
+  def query(spark: SparkSession, dir: String, surql: String): DataFrame =
+    Parser.parse(surql).stmts match {
       case Seq(s: SelectStmt) => planSelect(spark, dir, s)
       // `LET $t = …; SELECT … FROM $t` — DynamicScan (scan/dynamic.rs:53):
       // the source resolves at PLAN time (the param value is a plan-time
@@ -503,11 +502,6 @@ object SparkPlanner {
         // in FROM is not a source in the reference)
         val s = Subst.stmt(s0, bound).asInstanceOf[SelectStmt].copy(what = s0.what)
         planSelect(spark, dir, s, bound)
-      case Seq(ReturnStmt(ObjLit(fields))) =>
-        // RETURN { … }: one-row plan (SourceExpr/ExprPlan analog)
-        val dummy = spark.range(1)
-        val ctx = Ctx(spark, dir, "", new StructType(), Map.empty)
-        dummy.select(fields.map { case (name, e) => toCol(e, ctx).as(name) }: _*)
       // EXPLAIN <select> (exec/operators/explain.rs): on the Spark path the
       // authoritative plan IS Catalyst's — one row per optimized-plan line,
       // so a user sees the pushdowns/joins their SurrealQL lowered to
@@ -529,19 +523,13 @@ object SparkPlanner {
         val fields = Tables(spark, dir, t).schema.fields
           .map(f => (f.name, surqlKind(f.dataType))).toSeq
         spark.createDataFrame(fields).toDF("name", "kind")
-      case Seq(s: CreateStmt) => planCreate(spark, dir, s)
-      case Seq(s: InsertStmt) => planInsert(spark, dir, s)
-      case Seq(s: UpdateStmt) => planUpdate(spark, dir, s)
-      case Seq(s: UpsertStmt) => planUpsert(spark, dir, s)
-      case Seq(s: DeleteStmt) => planDelete(spark, dir, s)
-      case Seq(s: RelateStmt) => planRelate(spark, dir, s)
-      // anything else — multi-statement text without BEGIN, DDL-led
-      // sequences — runs through the script executor, which owns statement
-      // sequencing and the uncommitted-write overlay; query() is total over
-      // whatever script() accepts
-      case _ => script(spark, dir, surql)
+      // anything else — a lone mutation or RETURN, multi-statement text
+      // without BEGIN, DDL-led sequences — runs through the script executor,
+      // which owns statement sequencing, the uncommitted-write overlay and
+      // the schema (DEFINE FIELD/INDEX/EVENT) every mutation enforces;
+      // query() is total over whatever script() accepts
+      case stmts => runScript(spark, dir, stmts)
     }
-  }
 
   /** Unique-index build probes over pristine base tables, cached per
     * (corpus, table, fields) — the one-time index-build scan. */
@@ -559,60 +547,61 @@ object SparkPlanner {
     * nothing did. `CANCEL` discards writes made since `BEGIN`
     * (expr/statements/cancel.rs). Returns the last result-producing
     * statement's DataFrame. */
-  def script(spark: SparkSession, dir: String, surql: String): DataFrame = {
-    val ast = Parser.parse(surql)
+  def script(spark: SparkSession, dir: String, surql: String): DataFrame =
+    runScript(spark, dir, Parser.parse(surql).stmts)
+
+  /** The script executor's transactional state: everything a statement
+    * can register or bind, so that CANCEL restores ALL of it from one
+    * BEGIN snapshot (the reference discards the whole transaction context).
+    * Fields are vars so the executor updates them in place; `copy()` is
+    * the snapshot. */
+  private final case class ScriptState(
+      // table states: base parquet plans rewritten by each mutation
+      var overlay: Map[String, DataFrame],
+      // LET / DEFINE PARAM bindings
+      var params: Map[String, V] = Map.empty,
+      // DEFINE PARAM catalog membership — ALTER PARAM requires it (a LET
+      // binding is not alterable, matching Interp's paramDefs keying)
+      var paramDefd: Set[String] = Set.empty,
+      var eventDefs: Seq[graft.surql.Defs.EventDef] = Seq.empty,
+      // script-scope schema: DEFINE FIELD pipelines and UNIQUE indexes
+      // apply to every subsequent mutation (doc/field.rs, idx/index.rs)
+      var fldDefs: Map[String, Vector[DefineFieldStmt]] = Map.empty,
+      var uniqDefs: Map[String, Vector[(String, Seq[String])]] = Map.empty,
+      // COMPUTED fields are read-time projections (Interp withComputed); the
+      // overlay re-applies them after every write so reads always see
+      // values consistent with the latest row state
+      var computedDefs: Map[String, Vector[(String, Expr)]] = Map.empty,
+      // analyzer + search-index catalog (DEFINE/ALTER ANALYZER, DEFINE
+      // INDEX … SEARCH) — published to the `@@` lowering via ftsScope
+      var anaDefs: Map[String, graft.surql.Defs.AnalyzerDef] = Map.empty,
+      var ftsFields: Map[(String, String), (String, Double, Double)] = Map.empty,
+      var ftsByName: Map[(String, String), Seq[String]] = Map.empty, // (table, idx) -> fields
+      // DEFINE FUNCTION catalog (expression bodies inline at plan time —
+      // see fnScope/inlineUserFn)
+      var userFns: Map[String, DefineFunctionStmt] = Map.empty)
+
+  private def runScript(spark: SparkSession, dir: String,
+      stmts: Seq[Statement]): DataFrame = {
     // seed from the ambient overlay so externally-injected tables (and
     // nested script invocations) stay visible inside this script
-    var overlay = Tables.currentOverlay
-    var txnBase = overlay // overlay snapshot at BEGIN
-    var params = Map.empty[String, V]
-    var eventDefs = Seq.empty[graft.surql.Defs.EventDef]
-    // script-scope schema: DEFINE FIELD pipelines and UNIQUE indexes apply
-    // to every subsequent mutation in the script (doc/field.rs, idx/index.rs)
-    var fldDefs = Map.empty[String, Vector[DefineFieldStmt]]
-    var uniqDefs = Map.empty[String, Vector[(String, Seq[String])]]
-    // COMPUTED fields are read-time projections (Interp withComputed); the
-    // overlay re-applies them after every write so reads always see values
-    // consistent with the latest row state
-    var computedDefs = Map.empty[String, Vector[(String, Expr)]]
-    // CANCEL must roll back EVERYTHING the transaction did — not just table
-    // states but also DEFINE EVENT/FIELD/INDEX registrations and LET
-    // bindings made inside it (the reference discards the whole context)
-    var txnParams = params
-    var txnEvents = eventDefs
-    var txnFlds = fldDefs
-    var txnUniq = uniqDefs
-    var txnComputed = computedDefs
+    var st = ScriptState(Tables.currentOverlay)
+    var txn = st.copy() // snapshot at BEGIN
     // RELATE catalog registrations made since BEGIN — CANCEL must
     // unregister them (the reference discards the whole transaction
     // context; a leaked registration would let a later DELETE's edge purge
     // match a table the cancelled transaction never created)
     var txnAddedKeys = Set.empty[String]
     var txnAddedEdges = Set.empty[String]
-    // DEFINE PARAM catalog membership — ALTER PARAM requires it (a LET
-    // binding is not alterable, matching Interp's paramDefs keying)
-    var paramDefd = Set.empty[String]
-    // script-scope analyzer + search-index catalog (DEFINE/ALTER ANALYZER,
-    // DEFINE INDEX … SEARCH) — published to the `@@` lowering via ftsScope
-    var anaDefs = Map.empty[String, graft.surql.Defs.AnalyzerDef]
-    var ftsFields = Map.empty[(String, String), (String, Double, Double)]
-    var ftsByName = Map.empty[(String, String), Seq[String]] // (table, idx) -> fields
-    var txnAna = anaDefs
-    var txnFtsFields = ftsFields
-    var txnFtsByName = ftsByName
-    // script-scope DEFINE FUNCTION catalog (expression bodies inline at
-    // plan time — see fnScope/inlineUserFn)
-    var userFns = Map.empty[String, DefineFunctionStmt]
-    var txnUserFns = userFns
     var last: Option[DataFrame] = scala.None
     def planWith[T](f: => T): T =
-      ftsScope.withValue(FtsScope(anaDefs, ftsFields)) {
-        fnScope.withValue(userFns) {
-          Tables.withOverlay(overlay)(f)
+      ftsScope.withValue(FtsScope(st.anaDefs, st.ftsFields)) {
+        fnScope.withValue(st.userFns) {
+          Tables.withOverlay(st.overlay)(f)
         }
       }
     def applyComputed(t: String, df: DataFrame): DataFrame =
-      computedDefs.getOrElse(t, Vector.empty).foldLeft(df) { (d, fe) =>
+      st.computedDefs.getOrElse(t, Vector.empty).foldLeft(df) { (d, fe) =>
         val ctx = Ctx(spark, dir, t, d.schema, Map.empty)
         d.withColumn(fe._1, toCol(fe._2, ctx))
       }
@@ -623,9 +612,52 @@ object SparkPlanner {
     // freshly written dependency columns
     def applyMut(table: String, before: DataFrame, after: DataFrame,
         ret: DataFrame): Unit = {
-      overlay += (table -> applyComputed(table, after))
-      overlay = fireScriptEvents(spark, dir, table, before, after, overlay, eventDefs)
+      st.overlay += (table -> applyComputed(table, after))
+      st.overlay = fireScriptEvents(spark, dir, table, before, after, st.overlay, st.eventDefs)
       last = Some(ret)
+    }
+    // the rows a mutation touches: key ∧ WHERE ∧ the table's `action`
+    // permission (doc/allow.rs)
+    def mutCond(t: String, ctx: Ctx, keyPred: Option[Column],
+        where: Option[Expr], action: String): Column =
+      (keyPred.toSeq ++ where.map(toCol(_, ctx)).toSeq ++
+        actionPermCond(spark, dir, t, action, ctx.schema).toSeq)
+        .reduceOption(_ && _).getOrElse(lit(true))
+    // the update arm (UPDATE; UPSERT on an existing record): the SETs run
+    // through the field pipeline, and the unique indexes whose root column
+    // a SET writes are re-checked over the updated rows. Returns (table
+    // after-state, matched rows before, matched rows after) — the last two
+    // are the RETURN clause's frames.
+    def updateArm(t: String, base: DataFrame, ctx: Ctx, cond: Column,
+        sets: Map[String, Column]): (DataFrame, DataFrame, DataFrame) = {
+      val key = recordKey(t)
+      val setsU = enforceSets(sets, st.fldDefs.getOrElse(t, Vector.empty), ctx, t, key)
+      val after = graft.operators.Mutations.update(base, cond, setsU)
+      val before = base.filter(cond)
+      val touchedIdx = st.uniqDefs.getOrElse(t, Vector.empty)
+        .filter(_._2.exists(f => setsU.keySet.contains(fieldRoot(f))))
+      if (touchedIdx.nonEmpty)
+        checkUniqueIndexes(t, after,
+          after.join(before.select(key), Seq(key), "left_semi"), touchedIdx, key)
+      (after, before, graft.operators.Mutations.update(before, lit(true), setsU))
+    }
+    // the create arm (CREATE; UPSERT of an absent record): synthesized rows
+    // behind the duplicate-id anti-join, the create permission (a denied
+    // create is silently skipped, doc/allow.rs), the field pipeline, then
+    // the unique check over the created rows. Returns (`onto` ∪ created,
+    // created).
+    def createArm(t: String, base: DataFrame, onto: DataFrame, ctx: Ctx,
+        rows: Seq[(V, Map[String, Column])]): (DataFrame, DataFrame) = {
+      val key = recordKey(t)
+      val fresh = synthRows(spark, t, base.schema, rows)
+        .join(base.select(key), Seq(key), "left_anti")
+      val permitted = actionPermCond(spark, dir, t, "create", base.schema)
+        .map(fresh.filter).getOrElse(fresh)
+      val created = applyFieldDefs(permitted,
+        st.fldDefs.getOrElse(t, Vector.empty), ctx, t, key)
+      val after = onto.unionByName(created)
+      checkUniqueIndexes(t, after, created, st.uniqDefs.getOrElse(t, Vector.empty), key)
+      (after, created)
     }
     // deleting a record purges the graph edges pointing in or out of it
     // (doc/purge.rs; Interp cascadeEdgeDeletes) — one anti-join per
@@ -643,8 +675,8 @@ object SparkPlanner {
           // parquet); derived built-ins (supplies/next_order) and
           // registrations leaked from other fixtures have no storage
           // to purge
-          val ebaseOpt = overlay.get(et).orElse(
-            Tables.withOverlay(overlay)(storedTable(spark, dir, et)))
+          val ebaseOpt = st.overlay.get(et).orElse(
+            Tables.withOverlay(st.overlay)(storedTable(spark, dir, et)))
           ebaseOpt.foreach { ebase =>
             var kept = ebase
             if (fromT == table && ebase.columns.contains("in"))
@@ -653,9 +685,9 @@ object SparkPlanner {
             if (toT == table && ebase.columns.contains("out"))
               kept = kept.join(
                 gone.withColumnRenamed(goneKey, "out"), Seq("out"), "left_anti")
-            overlay += (et -> kept)
-            overlay = fireScriptEvents(spark, dir, et, ebase, kept,
-              overlay, eventDefs)
+            st.overlay += (et -> kept)
+            st.overlay = fireScriptEvents(spark, dir, et, ebase, kept,
+              st.overlay, st.eventDefs)
           }
         case _ => ()
       }
@@ -685,7 +717,7 @@ object SparkPlanner {
         case other => VStr(other.toString)
       }
       val goneKey = gone.columns.head
-      fldDefs.toSeq.foreach { case (tbl, defs) =>
+      st.fldDefs.toSeq.foreach { case (tbl, defs) =>
         defs.filter(_.meta.exists(_.referenceRaw.isDefined)).foreach { fd =>
           val raw = fd.meta.flatMap(_.referenceRaw).getOrElse("").toUpperCase
           val action =
@@ -712,8 +744,8 @@ object SparkPlanner {
             case ts => ts
           }
           if (action != "IGNORE" && (refTargets.isEmpty || refTargets.contains(t))) {
-            val rbaseOpt = overlay.get(tbl).orElse(
-              Tables.withOverlay(overlay)(storedTable(spark, dir, tbl)))
+            val rbaseOpt = st.overlay.get(tbl).orElse(
+              Tables.withOverlay(st.overlay)(storedTable(spark, dir, tbl)))
             rbaseOpt.filter(_.columns.contains(path)).foreach { rbase =>
               val rkey = recordKey.getOrElse(tbl, "id")
               def reject(refK: Any, tgtK: Any): Nothing = throw SqlError(
@@ -760,9 +792,9 @@ object SparkPlanner {
                           if (big) rbase.join(victims, Seq(rkey), "left_anti")
                           else rbase.crossJoin(goneSet)
                             .filter(!coalesce(hitC, lit(false))).drop("__gone")
-                        overlay += (tbl -> kept)
-                        overlay = fireScriptEvents(spark, dir, tbl, rbase,
-                          kept, overlay, eventDefs)
+                        st.overlay += (tbl -> kept)
+                        st.overlay = fireScriptEvents(spark, dir, tbl, rbase,
+                          kept, st.overlay, st.eventDefs)
                         purgeEdges(tbl, victims)
                         applyRefActions(tbl, victims, depth - 1)
                       }
@@ -800,9 +832,9 @@ object SparkPlanner {
                           .otherwise(filter(col(path),
                             x => !array_contains(col("__gone"), x))))
                         .drop("__gone")
-                      overlay += (tbl -> updated)
-                      overlay = fireScriptEvents(spark, dir, tbl, rbase,
-                        updated, overlay, eventDefs)
+                      st.overlay += (tbl -> updated)
+                      st.overlay = fireScriptEvents(spark, dir, tbl, rbase,
+                        updated, st.overlay, st.eventDefs)
                   }
                 case _ =>
                   val goneAs = gone.select(col(goneKey).as(path)).distinct()
@@ -816,9 +848,9 @@ object SparkPlanner {
                         .join(goneAs, Seq(path), "left_semi").select(col(rkey))
                       if (victims.limit(1).collect().nonEmpty) {
                         val kept = rbase.join(goneAs, Seq(path), "left_anti")
-                        overlay += (tbl -> kept)
-                        overlay = fireScriptEvents(spark, dir, tbl, rbase,
-                          kept, overlay, eventDefs)
+                        st.overlay += (tbl -> kept)
+                        st.overlay = fireScriptEvents(spark, dir, tbl, rbase,
+                          kept, st.overlay, st.eventDefs)
                         purgeEdges(tbl, victims)
                         applyRefActions(tbl, victims, depth - 1)
                       }
@@ -829,9 +861,9 @@ object SparkPlanner {
                           when(col("__hit") === true, lit(null).cast(
                             rbase.schema(path).dataType)).otherwise(col(path)))
                         .drop("__hit")
-                      overlay += (tbl -> updated)
-                      overlay = fireScriptEvents(spark, dir, tbl, rbase,
-                        updated, overlay, eventDefs)
+                      st.overlay += (tbl -> updated)
+                      st.overlay = fireScriptEvents(spark, dir, tbl, rbase,
+                        updated, st.overlay, st.eventDefs)
                   }
               }
             }
@@ -839,27 +871,21 @@ object SparkPlanner {
         }
       }
     }
-    def exec(st0: Statement): Unit = Subst.stmt(st0, params) match {
+    def exec(st0: Statement): Unit = Subst.stmt(st0, st.params) match {
       case BeginStmt  =>
-        txnBase = overlay; txnParams = params; txnEvents = eventDefs
-        txnFlds = fldDefs; txnUniq = uniqDefs; txnComputed = computedDefs
-        txnAna = anaDefs; txnFtsFields = ftsFields; txnFtsByName = ftsByName
-        txnUserFns = userFns
+        txn = st.copy()
         txnAddedKeys = Set.empty; txnAddedEdges = Set.empty
       case CommitStmt => // registrations become permanent catalog entries
         txnAddedKeys = Set.empty; txnAddedEdges = Set.empty
       case CancelStmt =>
-        overlay = txnBase; params = txnParams; eventDefs = txnEvents
-        fldDefs = txnFlds; uniqDefs = txnUniq; computedDefs = txnComputed
-        anaDefs = txnAna; ftsFields = txnFtsFields; ftsByName = txnFtsByName
-        userFns = txnUserFns
+        st = txn.copy()
         txnAddedKeys.foreach(extraRecordKeys.remove)
         txnAddedEdges.foreach(graft.operators.GraphOps.extraEdgeDefs.remove)
         txnAddedKeys = Set.empty; txnAddedEdges = Set.empty
         last = scala.None
       case UseStmt(_, _) => () // single-catalog engine: ns/db switch is a no-op
-      case LetStmt(name, _, what) => params += (name -> Eval.evalConst(what))
-      case s: DefineEventStmt => eventDefs :+= s.d
+      case LetStmt(name, _, what) => st.params += (name -> Eval.evalConst(what))
+      case s: DefineEventStmt => st.eventDefs :+= s.d
       case s: DefineFieldStmt if s.computed.isDefined =>
         // COMPUTED restriction set (catalog/schema/field.rs + define/field.rs)
         if (s.field == "id")
@@ -875,9 +901,9 @@ object SparkPlanner {
         if (s.field.contains(".") || s.field.contains("["))
           throw SqlError(
             s"Cannot define field `${s.field}` as `COMPUTED` fields must be top-level.")
-        computedDefs += s.table -> (computedDefs.getOrElse(s.table, Vector.empty)
+        st.computedDefs += s.table -> (st.computedDefs.getOrElse(s.table, Vector.empty)
           .filterNot(_._1 == s.field) :+ ((s.field, s.computed.get)))
-        overlay += s.table -> applyComputed(s.table,
+        st.overlay += s.table -> applyComputed(s.table,
           planWith(Tables(spark, dir, s.table)))
       case s0: DefineFieldStmt =>
         // dotted struct paths enforce through withField rebuilds; array
@@ -885,7 +911,7 @@ object SparkPlanner {
         // and fan through pipeAtPath's transform arms (r18)
         val s = s0.copy(field = s0.field.replace("[*]", ".*")
           .replaceAll("""\[(\d+)\]""", ".$1"))
-        fldDefs += s.table -> (fldDefs.getOrElse(s.table, Vector.empty)
+        st.fldDefs += s.table -> (st.fldDefs.getOrElse(s.table, Vector.empty)
           .filterNot(_.field == s.field) :+ s)
       case s: DefineIndexStmt =>
         if (s.unique) {
@@ -906,10 +932,10 @@ object SparkPlanner {
             checkUniqueIndexes(s.table, base, base,
               Seq((s.name, s.fields)), recordKey(s.table))
           }
-          if (overlay.contains(s.table)) probe()
+          if (st.overlay.contains(s.table)) probe()
           else uniqueBuildCache.getOrElseUpdate((dir, s.table, s.fields),
             { probe(); true })
-          uniqDefs += s.table -> (uniqDefs.getOrElse(s.table, Vector.empty)
+          st.uniqDefs += s.table -> (st.uniqDefs.getOrElse(s.table, Vector.empty)
             .filterNot(_._1 == s.name) :+ ((s.name, s.fields)))
         } else {
           // DEFINE INDEX … SEARCH/FULLTEXT ANALYZER <a> [BM25(k1,b)]:
@@ -928,8 +954,8 @@ object SparkPlanner {
               .findFirstMatchIn(tail)
               .map(m => (m.group(1).toDouble, m.group(2).toDouble))
               .getOrElse((1.2, 0.75))
-            s.fields.foreach(f => ftsFields += (s.table, f) -> (ana, k1, b))
-            ftsByName += (s.table, s.name) -> s.fields
+            s.fields.foreach(f => st.ftsFields += (s.table, f) -> (ana, k1, b))
+            st.ftsByName += (s.table, s.name) -> s.fields
           }
         }
       case _: DefineTableStmt => () // schema authority is the parquet catalog
@@ -937,13 +963,13 @@ object SparkPlanner {
       // SEARCH index, drop the persisted chain postings and build them NOW;
       // other index kinds rebuild lazily here
       case s: RebuildIndexStmt =>
-        ftsByName.get((s.table, s.name)) match {
+        st.ftsByName.get((s.table, s.name)) match {
           case Some(fields) =>
             fields.foreach { f =>
-              ftsFields.get((s.table, f)).foreach { case (ana, _, _) =>
-                val chain = anaDefs.get(ana).map(_.render).getOrElse(
+              st.ftsFields.get((s.table, f)).foreach { case (ana, _, _) =>
+                val chain = st.anaDefs.get(ana).map(_.render).getOrElse(
                   throw SqlError(s"The analyzer '$ana' does not exist"))
-                if (overlay.contains(s.table)) () // on-the-fly plan, nothing persisted
+                if (st.overlay.contains(s.table)) () // on-the-fly plan, nothing persisted
                 else planWith {
                   val parsed = graft.functions.Analyze.chain(chain)
                   graft.operators.FullText.rebuildChainIndex(
@@ -957,7 +983,7 @@ object SparkPlanner {
             // errors unless IF EXISTS (unique indexes have nothing derived
             // to rebuild — accepted as a no-op)
             if (!s.ifExists &&
-                !uniqDefs.getOrElse(s.table, Vector.empty).exists(_._1 == s.name))
+                !st.uniqDefs.getOrElse(s.table, Vector.empty).exists(_._1 == s.name))
               throw SqlError(s"The index '${s.name}' does not exist")
         }
       // ALTER FIELD (expr/statements/alter.rs; Interp execAlterField):
@@ -965,7 +991,7 @@ object SparkPlanner {
       // LATER mutation in the script enforces the altered pipeline —
       // None = clause untouched, Some(None) = DROP, Some(Some(v)) = SET
       case s: AlterFieldStmt =>
-        val defs = fldDefs.getOrElse(s.table, Vector.empty)
+        val defs = st.fldDefs.getOrElse(s.table, Vector.empty)
         val ix = defs.indexWhere(_.field == s.field)
         if (ix < 0) {
           if (!s.ifExists)
@@ -989,7 +1015,7 @@ object SparkPlanner {
           s.reference.foreach(r => d = d.copy(meta = d.meta.map(_.copy(
             referenceRaw = r.map(raw =>
               if (raw.isEmpty) "ON DELETE IGNORE" else raw)))))
-          fldDefs += s.table -> defs.updated(ix, d)
+          st.fldDefs += s.table -> defs.updated(ix, d)
         }
       // ALTER TABLE: DROP/SCHEMAFULL/PERMISSIONS/CHANGEFEED govern catalog
       // metadata the Spark path derives from parquet — accepted, no plan
@@ -998,11 +1024,11 @@ object SparkPlanner {
       // ALTER PARAM rebinds a DEFINE PARAM binding (not a LET — the
       // interpreter keys existence off the param catalog the same way)
       case s: AlterParamStmt =>
-        if (!paramDefd.contains(s.name) && !s.ifExists)
+        if (!st.paramDefd.contains(s.name) && !s.ifExists)
           throw SqlError(s"The param '$$${s.name}' does not exist")
         s.value.foreach { case (e, _) =>
-          if (paramDefd.contains(s.name))
-            params += (s.name -> Eval.evalConst(Subst.expr(e, params)))
+          if (st.paramDefd.contains(s.name))
+            st.params += (s.name -> Eval.evalConst(Subst.expr(e, st.params)))
         }
       // ALTER INDEX carries only COMMENT / PREPARE REMOVE — no plan
       // consequence on this path (non-unique indexes are advisory)
@@ -1011,7 +1037,7 @@ object SparkPlanner {
       // expression bodies inline at plan time (fnScope)
       case s: DefineFunctionStmt =>
         val full = if (s.name.startsWith("fn::")) s.name else "fn::" + s.name
-        val exists = userFns.contains(full)
+        val exists = st.userFns.contains(full)
         val proceed = s.mode match {
           case "ifnotexists" => !exists
           case "overwrite"   => true
@@ -1020,30 +1046,30 @@ object SparkPlanner {
               throw SqlError(s"The function '$full' already exists")
             true
         }
-        if (proceed) userFns += full -> s
+        if (proceed) st.userFns += full -> s
       // ALTER FUNCTION (alter/function.rs): rebind the body in place
       case s: AlterFunctionStmt =>
         val full = if (s.name.startsWith("fn::")) s.name else "fn::" + s.name
-        userFns.get(full) match {
+        st.userFns.get(full) match {
           case scala.None =>
             if (!s.ifExists)
               throw SqlError(s"The function '$full' does not exist")
           case Some(_) =>
-            s.redefine.foreach(r => userFns += full -> r)
+            s.redefine.foreach(r => st.userFns += full -> r)
         }
       case s: RemoveStmt if s.what == "FUNCTION" =>
         val full = if (s.name.startsWith("fn::")) s.name else "fn::" + s.name
-        if (!userFns.contains(full) && !s.ifExists)
+        if (!st.userFns.contains(full) && !s.ifExists)
           throw SqlError(s"The function '$full' does not exist")
-        userFns -= full
+        st.userFns -= full
       case s: RemoveStmt if s.what == "ANALYZER" =>
-        if (!anaDefs.contains(s.name) && !s.ifExists)
+        if (!st.anaDefs.contains(s.name) && !s.ifExists)
           throw SqlError(s"The analyzer '${s.name}' does not exist")
-        anaDefs -= s.name
+        st.anaDefs -= s.name
       // DEFINE ANALYZER (define/analyzer.rs): script-scope chain catalog;
       // FUNCTION analyzers compose via plan-time fn:: inlining (r17)
       case s: DefineAnalyzerStmt =>
-        val exists = anaDefs.contains(s.d.name)
+        val exists = st.anaDefs.contains(s.d.name)
         val proceed = s.mode match {
           case "ifnotexists" => !exists
           case "overwrite"   => true
@@ -1052,13 +1078,13 @@ object SparkPlanner {
               throw SqlError(s"The analyzer '${s.d.name}' already exists")
             true
         }
-        if (proceed) anaDefs += s.d.name -> s.d
+        if (proceed) st.anaDefs += s.d.name -> s.d
       // ALTER ANALYZER (alter/analyzer.rs): rewrite the chain in place. The
       // chain index cache keys on the RENDER, so the next `@@` (or REBUILD
       // INDEX) builds fresh postings under the new chain — the same
       // config-keyed invalidation the Interp search cache applies.
       case s: AlterAnalyzerStmt =>
-        anaDefs.get(s.name) match {
+        st.anaDefs.get(s.name) match {
           case scala.None =>
             if (!s.ifExists)
               throw SqlError(s"The analyzer '${s.name}' does not exist")
@@ -1067,44 +1093,44 @@ object SparkPlanner {
             s.tokenizers.foreach(t => d = d.copy(tokenizers = t))
             s.filters.foreach(f => d = d.copy(filters = f))
             s.comment.foreach(c => d = d.copy(comment = c))
-            anaDefs += s.name -> d
+            st.anaDefs += s.name -> d
         }
       // ALTER EVENT rewrites the script-scope trigger in place
       case s: AlterEventStmt =>
-        val ix = eventDefs.indexWhere(e => e.name == s.name && e.table == s.table)
+        val ix = st.eventDefs.indexWhere(e => e.name == s.name && e.table == s.table)
         if (ix < 0) {
           if (!s.ifExists)
             throw SqlError(s"The event '${s.name}' does not exist")
         } else {
-          var d = eventDefs(ix)
+          var d = st.eventDefs(ix)
           s.when.foreach { case (e, raw) => d = d.copy(whenE = Some(e), whenRaw = raw) }
           s.thenE.foreach { case (es, raw) => d = d.copy(thenE = es, thenRaw = raw) }
-          eventDefs = eventDefs.updated(ix, d)
+          st.eventDefs = st.eventDefs.updated(ix, d)
         }
       // DEFINE PARAM binds like LET for the rest of the script
       // (expr/statements/define/param.rs: a catalog-stored binding)
       case s: DefineParamStmt =>
-        paramDefd += s.d.name
-        s.value.foreach(e => params += (s.d.name -> Eval.evalConst(Subst.expr(e, params))))
+        st.paramDefd += s.d.name
+        s.value.foreach(e => st.params += (s.d.name -> Eval.evalConst(Subst.expr(e, st.params))))
       case s: RemoveStmt if s.what == "PARAM" =>
-        if (!params.contains(s.name) && !s.ifExists)
+        if (!st.params.contains(s.name) && !s.ifExists)
           throw SqlError(s"The param '$$${s.name}' does not exist")
-        params -= s.name
-        paramDefd -= s.name
+        st.params -= s.name
+        st.paramDefd -= s.name
       // REMOVE drops the script-scope registration (remove/field.rs etc.);
       // unknown names error unless IF EXISTS
       case s: RemoveStmt if s.what == "FIELD" =>
         val t = s.onTable.getOrElse("")
-        val had = fldDefs.getOrElse(t, Vector.empty).exists(_.field == s.name)
+        val had = st.fldDefs.getOrElse(t, Vector.empty).exists(_.field == s.name)
         if (!had && !s.ifExists)
           throw SqlError(s"The field '${s.name}' does not exist")
-        fldDefs += t -> fldDefs.getOrElse(t, Vector.empty).filterNot(_.field == s.name)
+        st.fldDefs += t -> st.fldDefs.getOrElse(t, Vector.empty).filterNot(_.field == s.name)
       case s: RemoveStmt if s.what == "INDEX" =>
         val t = s.onTable.getOrElse("")
-        val had = uniqDefs.getOrElse(t, Vector.empty).exists(_._1 == s.name)
+        val had = st.uniqDefs.getOrElse(t, Vector.empty).exists(_._1 == s.name)
         if (!had && !s.ifExists)
           throw SqlError(s"The index '${s.name}' does not exist")
-        uniqDefs += t -> uniqDefs.getOrElse(t, Vector.empty).filterNot(_._1 == s.name)
+        st.uniqDefs += t -> st.uniqDefs.getOrElse(t, Vector.empty).filterNot(_._1 == s.name)
       // SHOW CHANGES FOR TABLE t — the script-scope change feed: the diff
       // between the table's state at BEGIN and now (cf/reader.rs reads the
       // versionstamped log; here the lazy overlay IS the uncommitted log,
@@ -1114,7 +1140,7 @@ object SparkPlanner {
       case s: ShowChangesStmt =>
         val t = s.table.getOrElse(
           throw SqlError("SparkPlanner: SHOW CHANGES needs FOR TABLE"))
-        val atBegin = Tables.withOverlay(txnBase)(Tables(spark, dir, t))
+        val atBegin = Tables.withOverlay(txn.overlay)(Tables(spark, dir, t))
         val cur = planWith(Tables(spark, dir, t))
         val log = graft.operators.Mutations
           .changeLog(atBegin, cur, recordKey(t)).orderBy("id")
@@ -1124,10 +1150,10 @@ object SparkPlanner {
             s"Expected an integer but found ${other.render}")
         }).getOrElse(log))
       case s: RemoveStmt if s.what == "EVENT" =>
-        val had = eventDefs.exists(_.name == s.name)
+        val had = st.eventDefs.exists(_.name == s.name)
         if (!had && !s.ifExists)
           throw SqlError(s"The event '${s.name}' does not exist")
-        eventDefs = eventDefs.filterNot(_.name == s.name)
+        st.eventDefs = st.eventDefs.filterNot(_.name == s.name)
       // RETURN — a one-row plan (SourceExpr/ExprPlan analog)
       case ReturnStmt(ObjLit(fields)) =>
         val ctx = Ctx(spark, dir, "", new StructType(), Map.empty)
@@ -1161,71 +1187,50 @@ object SparkPlanner {
           case other => throw SqlError(
             s"SparkPlanner: FOR iterable must be an array/range, got ${other.render}")
         }
-        val saved = params
+        val saved = st.params
         items.foreach { v =>
-          params = saved + (param -> v)
+          st.params = saved + (param -> v)
           block.stmts.foreach(exec)
         }
-        params = saved
+        st.params = saved
       case s: SelectStmt =>
-        last = Some(planWith(planSelect(spark, dir, s, params)))
+        last = Some(planWith(planSelect(spark, dir, s, st.params)))
       case s: UpdateStmt =>
         val (table, base, after, ret) = planWith {
           val Seq(what) = s.what
           val (t, base, keyPred) = mutTarget(spark, dir, what)
           val ctx = Ctx(spark, dir, t, base.schema, Map.empty)
-          val cond = (keyPred.toSeq ++ s.where.map(toCol(_, ctx)).toSeq ++
-            actionPermCond(spark, dir, t, "update", base.schema).toSeq)
-            .reduceOption(_ && _).getOrElse(lit(true))
-          val key = recordKey(t)
-          val sets = enforceSets(
-            setMap(s.data, ctx, requireExisting = true, allowNew = true),
-            fldDefs.getOrElse(t, Vector.empty), ctx, t, key)
-          val after = graft.operators.Mutations.update(base, cond, sets)
-          val touchedIdx = uniqDefs.getOrElse(t, Vector.empty)
-            .filter(_._2.exists(f => sets.keySet.contains(fieldRoot(f))))
-          if (touchedIdx.nonEmpty)
-            checkUniqueIndexes(t, after,
-              after.join(base.filter(cond).select(key), Seq(key), "left_semi"),
-              touchedIdx, key)
-          val before = base.filter(cond)
-          val ret = shapeOutput(before,
-            graft.operators.Mutations.update(before, lit(true), sets),
-            s.output, ctx)
-          (t, base, after, ret)
+          val (after, before, changed) = updateArm(t, base, ctx,
+            mutCond(t, ctx, keyPred, s.where, "update"),
+            setMap(s.data, ctx, requireExisting = true, allowNew = true))
+          (t, base, after, shapeOutput(before, changed, s.output, ctx))
         }
         applyMut(table, base, after, ret)
       case s: DeleteStmt =>
-        var deletedKeys: Option[DataFrame] = scala.None
-        var delCond: Option[Column] = scala.None
-        val t1 = planWith {
+        val (t, base0, cond) = planWith {
           val Seq(what) = s.what
           val (t, base, keyPred) = mutTarget(spark, dir, what)
-          val ctx = Ctx(spark, dir, t, base.schema, Map.empty)
-          val cond = (keyPred.toSeq ++ s.where.map(toCol(_, ctx)).toSeq ++
-            actionPermCond(spark, dir, t, "delete", base.schema).toSeq)
-            .reduceOption(_ && _).getOrElse(lit(true))
-          delCond = Some(cond)
-          recordKey.get(t).foreach(k =>
-            deletedKeys = Some(base.filter(cond).select(col(k))))
-          t
+          (t, base, mutCond(t, Ctx(spark, dir, t, base.schema, Map.empty),
+            keyPred, s.where, "delete"))
         }
+        val gone = recordKey.get(t).map(k => base0.filter(cond).select(col(k)))
         // referential ON DELETE actions run BEFORE the delete commits
         // (Interp applyReferentialActions precedes the remove): a REJECT
         // hit aborts the statement with the table state untouched, and a
         // same-table CASCADE/UNSET must not be clobbered by the delete's
-        // own overlay write — the delete filter re-applies to the
-        // ref-action-updated state
-        deletedKeys.foreach(gone => applyRefActions(t1, gone, 32))
-        val (table, base, after, ret) = planWith {
-          val base = Tables(spark, dir, t1)
-          (t1, base, base.filter(!delCond.get), planDelete(spark, dir, s))
+        // own overlay write — the delete filter (and the RETURN over the
+        // deleted rows) re-applies to the ref-action-updated state
+        gone.foreach(applyRefActions(t, _, 32))
+        val (base, ret) = planWith {
+          val base = Tables(spark, dir, t)
+          (base, deleteOutput(base.filter(cond), s.output,
+            Ctx(spark, dir, t, base.schema, Map.empty)))
         }
-        applyMut(table, base, after, ret)
-        deletedKeys.foreach(gone => purgeEdges(table, gone))
+        applyMut(t, base, base.filter(!cond), ret)
+        gone.foreach(purgeEdges(t, _))
       case s: RelateStmt =>
         val (table, base, after, ret) = planWith {
-          val rb = relateEdges(spark, dir, s, params)
+          val rb = relateEdges(spark, dir, s, st.params)
           // register the relation so traversal and DELETE purges see it —
           // tracked per transaction so CANCEL unregisters
           if (recordKey.get(rb.table).isEmpty) {
@@ -1261,56 +1266,47 @@ object SparkPlanner {
             case other => throw SqlError(
               s"SparkPlanner: CREATE target must be a record id, got $other")
           }
-          val tRaw = rawTargets.head._1
-          val keyDtRaw = Tables(spark, dir, tRaw)
-            .schema(recordKey(tRaw)).dataType
+          val t = rawTargets.head._1
+          // one table per statement (Interp creates into each table; here
+          // every target would need its own overlay arm)
+          if (!rawTargets.forall(_._1 == t))
+            throw SqlError("SparkPlanner: CREATE across tables is unsupported")
+          val base = Tables(spark, dir, t)
+          val key = recordKey(t)
           // a constant data-clause id overrides the generated key
           // (execCreate: withData.fields.get("id") before keyOpt/nextId)
-          val dataId = createDataId(s.data, params)
-          val targets = rawTargets.map { case (tb, kOpt) =>
-            (tb, kOpt.orElse(dataId).getOrElse(genKeyV(keyDtRaw)))
+          val dataId = createDataId(s.data, st.params)
+          val targets = rawTargets.map { case (_, kOpt) =>
+            kOpt.orElse(dataId).getOrElse(genKeyV(base.schema(key).dataType))
           }
-          val t = targets.head._1
           // CREATE t:1, t:1 — the reference processes targets sequentially,
           // so a repeated id is already a duplicate when its second target
           // lands (same error as creating an existing id)
-          targets.map(_._2).zipWithIndex.foreach { case (k, i) =>
-            if (targets.take(i).exists(p => V.looseEq(p._2, k)))
+          targets.zipWithIndex.foreach { case (k, i) =>
+            if (targets.take(i).exists(V.looseEq(_, k)))
               throw SqlError(
                 s"Database record `${Render.sql(VRid(t, k))}` already exists")
           }
-          val base = Tables(spark, dir, t)
           val ctx = Ctx(spark, dir, t, base.schema, Map.empty)
           val sets = setMap(s.data, ctx, requireExisting = true)
-          val key = recordKey(t)
           // reference errors on CREATE of an existing id (err/mod.rs:498
           // "Database record `…` already exists") — the anti-join guard
           // alone would silently no-op, so probe the constant target keys
-          val keyLits = targets.map(x => ridKeyLit(x._2))
           val clash = base.select(col(key))
-            .filter(col(key).isin(keyLits: _*)).limit(1).collect()
+            .filter(col(key).isin(targets.map(ridKeyLit): _*)).limit(1).collect()
           if (clash.nonEmpty) {
-            val hit = targets.find(x =>
+            val hit = targets.find(k =>
               // mirror ridKeyLit's literal forms (Row.get.toString of a
               // double is Java's "2.0", NOT the `2f` raw rendering)
-              clash.head.get(0).toString == (x._2 match {
+              clash.head.get(0).toString == (k match {
                 case VStr(sv)   => sv
                 case VFloat(dv) => java.lang.Double.toString(dv)
                 case other      => other.renderRaw
               })).getOrElse(targets.head)
             throw SqlError(
-              s"Database record `${Render.sql(VRid(t, hit._2))}` already exists")
+              s"Database record `${Render.sql(VRid(t, hit))}` already exists")
           }
-          val created0 = synthRows(spark, t, base.schema, targets.map(x => (x._2, sets)))
-            .join(base.select(key), Seq(key), "left_anti")
-          // a denied create is silently skipped (doc/allow.rs)
-          val created1 = actionPermCond(spark, dir, t, "create", base.schema)
-            .map(created0.filter).getOrElse(created0)
-          val created = applyFieldDefs(created1,
-            fldDefs.getOrElse(t, Vector.empty), ctx, t, key)
-          val after = base.unionByName(created)
-          checkUniqueIndexes(t, after, created,
-            uniqDefs.getOrElse(t, Vector.empty), key)
+          val (after, created) = createArm(t, base, base, ctx, targets.map((_, sets)))
           (t, base, after, shapeOutput(noneRows(created), created, s.output, ctx))
         }
         applyMut(table, base, after, ret)
@@ -1324,17 +1320,17 @@ object SparkPlanner {
           val base = Tables(spark, dir, t)
           val ctx = Ctx(spark, dir, t, base.schema, Map.empty)
           val key = recordKey(t)
-          val (rows, maxMult) = insertRows(spark, dir, s.values, t, base, params, s.relation)
+          val (rows, maxMult) = insertRows(spark, dir, s.values, t, base, st.params, s.relation)
           val pipeline = (firsts: DataFrame) => {
             // a denied create is silently skipped (doc/allow.rs)
             val f1 = actionPermCond(spark, dir, t, "create", base.schema)
               .map(firsts.filter).getOrElse(firsts)
-            val f2 = applyFieldDefs(f1, fldDefs.getOrElse(t, Vector.empty), ctx, t, key)
+            val f2 = applyFieldDefs(f1, st.fldDefs.getOrElse(t, Vector.empty), ctx, t, key)
             // INSERT IGNORE also skips rows whose unique-index tuple
             // already exists (insert_ignore_no_duplicate_key golden);
             // NULL-component tuples are exempt like the write check
             if (!s.ignore) f2
-            else uniqDefs.getOrElse(t, Vector.empty).foldLeft(f2) {
+            else st.uniqDefs.getOrElse(t, Vector.empty).foldLeft(f2) {
               case (df, (_, fields)) if fields.forall(df.columns.contains) =>
                 val nonNull = fields.map(col(_).isNotNull).reduce(_ && _)
                 val taken = base.filter(nonNull)
@@ -1346,11 +1342,11 @@ object SparkPlanner {
           }
           val dupSetsOf = (dctx: Ctx) => s.onDuplicate.map(sets => enforceSets(
             setMap(Some(SetData(sets)), dctx, requireExisting = true),
-            fldDefs.getOrElse(t, Vector.empty), dctx, t, key)).getOrElse(Map.empty)
+            st.fldDefs.getOrElse(t, Vector.empty), dctx, t, key)).getOrElse(Map.empty)
           val (bef, after, changed, diffOpt) =
             insertArms(spark, s, base, ctx, t, key, rows, maxMult, pipeline, dupSetsOf)
           checkUniqueIndexes(t, after, changed,
-            uniqDefs.getOrElse(t, Vector.empty), key)
+            st.uniqDefs.getOrElse(t, Vector.empty), key)
           (t, base, after,
             diffOpt.getOrElse(shapeOutput(bef, changed, s.output, ctx)))
         }
@@ -1358,81 +1354,50 @@ object SparkPlanner {
       case s: UpsertStmt =>
         val (table, base, after, ret) = planWith {
           val Seq(what) = s.what
-          val bare = what match {
-            case TableRef(_) | Idiom(Seq(PField(_))) => true
-            case _ => false
-          }
           val (t, base, keyPred) = mutTarget(spark, dir, what)
           val ctx = Ctx(spark, dir, t, base.schema, Map.empty)
-          val key = recordKey(t)
-          val defs = fldDefs.getOrElse(t, Vector.empty)
           val sets = setMap(s.data, ctx, requireExisting = true)
-          val setsU = enforceSets(sets, defs, ctx, t, key)
-          if (bare) {
-            // UPSERT over a whole table: update the WHERE-matching rows;
-            // when NONE match, create one generated-id record (Interp
-            // execUpsert's touched==0 arm; dbs/iterator.rs
-            // GenerateRecordId). The match probe is one limit(1) job —
-            // UPSERT's arm choice is inherently data-dependent. A WHERE
-            // match counts as touched even when the update permission
-            // denies the write (doc/allow.rs: a denied row must not flip
-            // the statement into its create arm).
-            val whereOnly = s.where.map(toCol(_, ctx)).getOrElse(lit(true))
-            val touched = base.filter(whereOnly).limit(1).collect().nonEmpty
-            if (touched) {
-              val cond = (Seq(whereOnly) ++
-                actionPermCond(spark, dir, t, "update", base.schema).toSeq)
-                .reduce(_ && _)
-              val after = graft.operators.Mutations.update(base, cond, setsU)
-              val touchedIdx = uniqDefs.getOrElse(t, Vector.empty)
-                .filter(_._2.exists(setsU.keySet.contains))
-              if (touchedIdx.nonEmpty)
-                checkUniqueIndexes(t, after,
-                  after.join(base.filter(cond).select(key), Seq(key), "left_semi"),
-                  touchedIdx, key)
-              val before = base.filter(cond)
-              val ret = shapeOutput(before,
-                graft.operators.Mutations.update(before, lit(true), setsU),
-                s.output, ctx)
-              (t, base, after, ret)
-            } else {
-              val keyV = createDataId(s.data, params)
-                .getOrElse(genKeyV(base.schema(key).dataType))
-              val inserted0 = synthRows(spark, t, base.schema, Seq((keyV, sets)))
-              val inserted1 = actionPermCond(spark, dir, t, "create", base.schema)
-                .map(inserted0.filter).getOrElse(inserted0)
-              val inserted = applyFieldDefs(inserted1, defs, ctx, t, key)
-              val after = base.unionByName(inserted)
-              checkUniqueIndexes(t, after, inserted,
-                uniqDefs.getOrElse(t, Vector.empty), key)
-              (t, base, after,
-                shapeOutput(noneRows(inserted), inserted, s.output, ctx))
-            }
-          } else {
-            val keyV = what match {
-              case RidLit(_, keyE) => Eval.evalConst(keyE)
-              case _ => throw SqlError("SparkPlanner: UPSERT needs a record-id target")
-            }
-            val cond = (keyPred.toSeq ++ s.where.map(toCol(_, ctx)).toSeq ++
-              actionPermCond(spark, dir, t, "update", base.schema).toSeq)
-              .reduceOption(_ && _).getOrElse(lit(true))
-            val updated = graft.operators.Mutations.update(base, cond, setsU)
-            val inserted0 = synthRows(spark, t, base.schema, Seq((keyV, sets)))
-              .join(base.select(key), Seq(key), "left_anti")
-            val inserted1 = actionPermCond(spark, dir, t, "create", base.schema)
-              .map(inserted0.filter).getOrElse(inserted0)
-            val inserted = applyFieldDefs(inserted1, defs, ctx, t, key)
-            val after = updated.unionByName(inserted)
-            checkUniqueIndexes(t, after,
-              after.filter(col(key) === ridKeyLit(keyV)),
-              uniqDefs.getOrElse(t, Vector.empty), key)
-            (t, base, after, planUpsert(spark, dir, s))
+          val cond = mutCond(t, ctx, keyPred, s.where, "update")
+          what match {
+            case TableRef(_) | Idiom(Seq(PField(_))) =>
+              // UPSERT over a whole table: update the WHERE-matching rows;
+              // when NONE match, create one generated-id record (Interp
+              // execUpsert's touched==0 arm; dbs/iterator.rs
+              // GenerateRecordId). The match probe is one limit(1) job —
+              // UPSERT's arm choice is inherently data-dependent. A WHERE
+              // match counts as touched even when the update permission
+              // denies the write (doc/allow.rs: a denied row must not flip
+              // the statement into its create arm).
+              val whereOnly = s.where.map(toCol(_, ctx)).getOrElse(lit(true))
+              if (base.filter(whereOnly).limit(1).collect().nonEmpty) {
+                val (after, before, changed) = updateArm(t, base, ctx, cond, sets)
+                (t, base, after, shapeOutput(before, changed, s.output, ctx))
+              } else {
+                val keyV = createDataId(s.data, st.params)
+                  .getOrElse(genKeyV(base.schema(recordKey(t)).dataType))
+                val (after, created) = createArm(t, base, base, ctx, Seq((keyV, sets)))
+                (t, base, after, shapeOutput(noneRows(created), created, s.output, ctx))
+              }
+            case RidLit(_, keyE) =>
+              // UPSERT t:id: the update arm if the id exists, the create
+              // arm otherwise — both lazy, at most one non-empty
+              val keyV = Eval.evalConst(keyE) match {
+                case _: VRng => throw SqlError("SparkPlanner: UPSERT needs a point record id")
+                case v => v
+              }
+              val (updated, before, changed) = updateArm(t, base, ctx, cond, sets)
+              val (after, created) = createArm(t, base, updated, ctx, Seq((keyV, sets)))
+              // RETURN BEFORE: the existing doc on the update arm, NONE on
+              // the create arm
+              (t, base, after, shapeOutput(before.unionByName(noneRows(created)),
+                changed.unionByName(created), s.output, ctx))
+            case _ => throw SqlError("SparkPlanner: UPSERT needs a record-id target")
           }
         }
         applyMut(table, base, after, ret)
       case other => throw SqlError(s"SparkPlanner: unsupported script statement $other")
     }
-    ast.stmts.foreach(exec)
+    stmts.foreach(exec)
     last.getOrElse(throw SqlError("SparkPlanner: script produced no result"))
   }
 
@@ -2614,8 +2579,9 @@ object SparkPlanner {
   }
 
   // ---- mutations -----------------------------------------------------------
-  // SurrealQL mutation text lowers onto the pure table transforms in
-  // graft.operators.Mutations (Delta-MERGE-shaped joins — the reference's
+  // SurrealQL mutation statements lower in runScript's arms (the one
+  // lowering, for a lone statement and a script alike) onto the pure table
+  // transforms in graft.operators.Mutations (Delta-MERGE-shaped joins — the reference's
   // per-document lifecycle dbs/iterator.rs:34-64 + doc/process.rs:16 becomes
   // column exprs + anti/semi/outer joins; nothing collects to the driver).
   // The returned DataFrame is the RETURN-clause shape: the statement's
@@ -3375,157 +3341,24 @@ object SparkPlanner {
     }
   }
 
-  /** CREATE table:id … — synthesized rows behind the duplicate-id anti-join
-    * guard (reference errors on existing ids; the guard excludes them the
-    * way a MERGE insert-arm would). */
-  private def planCreate(spark: SparkSession, dir: String, s: CreateStmt): DataFrame = {
-    val rawTargets: Seq[(String, Option[V])] = s.what.map {
-      case RidLit(table, keyE) => (table, Some(Eval.evalConst(keyE)))
-      // bare-table target: generate a record id (dbs/iterator.rs
-      // GenerateRecordId; Interp nextId()), unless the data clause
-      // supplies a constant one
-      case TableRef(t) => (t, scala.None)
-      case Idiom(Seq(PField(t))) => (t, scala.None)
-      case fc @ FnCall("type::record" | "type::thing", _) => Eval.evalConst(fc) match {
-        case VRid(t, k) => (t, Some(k))
-        case other => throw SqlError(
-          s"SparkPlanner: type::record resolved to ${other.render}, not a record id")
-      }
-      case other => throw SqlError(s"SparkPlanner: CREATE target must be a record id, got $other")
-    }
-    val tRaw = rawTargets.head._1
-    val keyDtRaw = Tables(spark, dir, tRaw).schema(recordKey(tRaw)).dataType
-    val dataId = createDataId(s.data, Map.empty)
-    val targets = rawTargets.map { case (tb, kOpt) =>
-      (tb, kOpt.orElse(dataId).getOrElse(genKeyV(keyDtRaw)))
-    }
-    val table = targets.head._1
-    if (!targets.forall(_._1 == table))
-      throw SqlError("SparkPlanner: CREATE across tables is unsupported")
-    // repeated target ids duplicate sequentially (see the script-path guard)
-    targets.map(_._2).zipWithIndex.foreach { case (k, i) =>
-      if (targets.take(i).exists(p => V.looseEq(p._2, k)))
-        throw SqlError(
-          s"Database record `${Render.sql(VRid(table, k))}` already exists")
-    }
-    val base = Tables(spark, dir, table)
-    val ctx = Ctx(spark, dir, table, base.schema, Map.empty)
-    val sets = setMap(s.data, ctx, requireExisting = true)
-    val key = recordKey(table)
-    val rows = synthRows(spark, table, base.schema, targets.map(t => (t._2, sets)))
-    val created0 = rows.join(base.select(key), Seq(key), "left_anti")
-    val created = actionPermCond(spark, dir, table, "create", base.schema)
-      .map(created0.filter).getOrElse(created0)
-    shapeOutput(noneRows(created), created, s.output, ctx)
-  }
-
-  /** INSERT INTO t (SELECT …) [ON DUPLICATE KEY UPDATE …]: bulk insert from
-    * a sub-select. Fresh rows pass the anti-join; on-duplicate SETs apply to
-    * the EXISTING row (the semi-joined arm) — the two arms of a MERGE. */
-  private def planInsert(spark: SparkSession, dir: String, s: InsertStmt): DataFrame = {
-    val table = s.into match {
-      case Some(TableRef(name)) => name
-      case Some(Idiom(Seq(PField(name)))) => name
-      case other => throw SqlError(s"SparkPlanner: unsupported INSERT target $other")
-    }
-    val base = Tables(spark, dir, table)
-    val ctx = Ctx(spark, dir, table, base.schema, Map.empty)
-    val key = recordKey.getOrElse(table,
-      throw SqlError(s"SparkPlanner: no record key for table $table"))
-    val (rows, maxMult) = insertRows(spark, dir, s.values, table, base, Map.empty, s.relation)
-    val dupSetsOf = (dctx: Ctx) => s.onDuplicate
-      .map(sets => setMap(Some(SetData(sets)), dctx, requireExisting = true))
-      .getOrElse(Map.empty[String, Column])
-    val (bef, _, result, diffOpt) =
-      insertArms(spark, s, base, ctx, table, key, rows, maxMult, identity, dupSetsOf)
-    diffOpt.getOrElse(shapeOutput(bef, result, s.output, ctx))
-  }
-
-  private def planUpdate(spark: SparkSession, dir: String, s: UpdateStmt): DataFrame = {
-    val Seq(what) = s.what
-    val (table, base, keyPred) = mutTarget(spark, dir, what)
-    val ctx = Ctx(spark, dir, table, base.schema, Map.empty)
-    val cond = (keyPred.toSeq ++ s.where.map(toCol(_, ctx)).toSeq ++
-      actionPermCond(spark, dir, table, "update", base.schema).toSeq)
-      .reduceOption(_ && _).getOrElse(lit(true))
-    val sets = setMap(s.data, ctx, requireExisting = true, allowNew = true)
-    val before = base.filter(cond)
-    val after = graft.operators.Mutations.update(before, lit(true), sets)
-    shapeOutput(before, after, s.output, ctx)
-  }
-
-  /** UPSERT table:id SET … — update arm if the id exists, synthesized create
-    * arm otherwise; both arms computed distributively, exactly one non-empty. */
-  private def planUpsert(spark: SparkSession, dir: String, s: UpsertStmt): DataFrame = {
-    val Seq(what) = s.what
-    val (table, base, keyPred) = mutTarget(spark, dir, what)
-    val ctx = Ctx(spark, dir, table, base.schema, Map.empty)
-    val sets = setMap(s.data, ctx, requireExisting = true)
-    val key = recordKey(table)
-    val keyV = what match {
-      case RidLit(_, keyE) => Eval.evalConst(keyE) match {
-        case r: VRng => throw SqlError("SparkPlanner: UPSERT needs a point record id")
-        case v => v
-      }
-      // bare-table UPSERT: update the WHERE matches; create one
-      // generated-id record when none match (Interp execUpsert touched==0;
-      // dbs/iterator.rs GenerateRecordId)
-      case TableRef(_) | Idiom(Seq(PField(_))) =>
-        val whereOnly = s.where.map(toCol(_, ctx)).getOrElse(lit(true))
-        val touched = base.filter(whereOnly).limit(1).collect().nonEmpty
-        if (touched) {
-          val cond = (Seq(whereOnly) ++
-            actionPermCond(spark, dir, table, "update", base.schema).toSeq)
-            .reduce(_ && _)
-          val before = base.filter(cond)
-          return shapeOutput(before,
-            graft.operators.Mutations.update(before, lit(true), sets),
-            s.output, ctx)
-        }
-        createDataId(s.data, Map.empty)
-          .getOrElse(genKeyV(base.schema(key).dataType))
-      case _ => throw SqlError("SparkPlanner: UPSERT needs a record-id target")
-    }
-    val cond = (keyPred.toSeq ++ s.where.map(toCol(_, ctx)).toSeq ++
-      actionPermCond(spark, dir, table, "update", base.schema).toSeq)
-      .reduceOption(_ && _).getOrElse(lit(true))
-    val updated = graft.operators.Mutations.update(base.filter(cond), lit(true), sets)
-    val inserted0 = synthRows(spark, table, base.schema, Seq((keyV, sets)))
-      .join(base.select(key), Seq(key), "left_anti")
-    val inserted = actionPermCond(spark, dir, table, "create", base.schema)
-      .map(inserted0.filter).getOrElse(inserted0)
-    val after = updated.unionByName(inserted)
-    // before = the existing doc on the update arm, NONE on the create arm
-    shapeOutput(base.filter(cond).unionByName(noneRows(inserted)),
-      after, s.output, ctx)
-  }
-
-  private def planDelete(spark: SparkSession, dir: String, s: DeleteStmt): DataFrame = {
-    val Seq(what) = s.what
-    val (table, base, keyPred) = mutTarget(spark, dir, what)
-    val ctx = Ctx(spark, dir, table, base.schema, Map.empty)
-    val cond = (keyPred.toSeq ++ s.where.map(toCol(_, ctx)).toSeq ++
-      actionPermCond(spark, dir, table, "delete", base.schema).toSeq)
-      .reduceOption(_ && _).getOrElse(lit(true))
-    val (_, deleted) = graft.operators.Mutations.delete(base, cond)
-    // DELETE defaults to RETURN NONE; BEFORE/fields evaluate on deleted rows
-    if (s.output.contains(Output.ODiff)) {
+  /** DELETE's RETURN over the rows it deleted: no clause means BEFORE
+    * (the deleted documents), and a deletion's `$after` is NONE. */
+  private def deleteOutput(deleted: DataFrame, output: Option[Output],
+      ctx: Ctx): DataFrame = output match {
+    case Some(Output.ODiff) =>
       // deletion diff = object→none, a constant root replace-with-null
       // (Interp.valueDiff on (doc, NONE)); no render pass needed.
-      val key = recordKey(table)
+      val key = recordKey(ctx.table)
       deleted.select(col(key).cast("string").as(key),
         lit("""[{"op":"replace","path":"","value":null}]""").as("diff"))
-    } else s.output match {
-      case Some(Output.OValue(e)) =>
-        // a deletion's $after is NONE (the doc no longer exists); the
-        // expression otherwise evaluates against the deleted row
-        val ctx2 = ctx.copy(lambdaParams = ctx.lambdaParams ++ Map(
-          "before" -> struct(deleted.columns.map(col).toIndexedSeq: _*),
-          "after" -> lit(null)))
-        deleted.select(toCol(e, ctx2).as("value"))
-      case other =>
-        shapeOutput(deleted, deleted, other.orElse(Some(Output.OBefore)), ctx)
-    }
+    case Some(Output.OValue(e)) =>
+      // the expression evaluates against the deleted row
+      val ctx2 = ctx.copy(lambdaParams = ctx.lambdaParams ++ Map(
+        "before" -> struct(deleted.columns.map(col).toIndexedSeq: _*),
+        "after" -> lit(null)))
+      deleted.select(toCol(e, ctx2).as("value"))
+    case other =>
+      shapeOutput(deleted, deleted, other.orElse(Some(Output.OBefore)), ctx)
   }
 
   /** The table's current stored state — overlay entry or parquet — or None
@@ -3543,10 +3376,9 @@ object SparkPlanner {
       else scala.None
     }
 
-  /** One RELATE statement's edge build, shared by the standalone statement
-    * and the script path so the two can never diverge on schema (the r14
-    * divergence: standalone emitted (in, out, props) with no id while the
-    * script path generated one). */
+  /** One RELATE statement's edge build: the edge table, its stored state
+    * (if any), its record key, the new edge rows, and the endpoint tables
+    * the relation registers for traversal and DELETE purges. */
   private final case class RelateBuild(table: String, base: Option[DataFrame],
       key: String, edges: DataFrame, fromT: String, toT: String)
 
@@ -3630,19 +3462,6 @@ object SparkPlanner {
     // interpreter's map assignment — last wins; single-pair in use)
     if (constId.isDefined) edges = edges.dropDuplicates(key)
     RelateBuild(t, baseOpt, key, edges, fromT, toT)
-  }
-
-  /** Standalone RELATE statement — same edge build (and same schema,
-    * id column included) as the script path, and the relation registers
-    * for traversal / DELETE purge the same way. */
-  private def planRelate(spark: SparkSession, dir: String, s: RelateStmt): DataFrame = {
-    val rb = relateEdges(spark, dir, s, Map.empty)
-    // register the relation so traversal and DELETE purges see it
-    if (recordKey.get(rb.table).isEmpty) extraRecordKeys.put(rb.table, rb.key)
-    if (!graft.operators.GraphOps.edgeDefs.contains(rb.table))
-      graft.operators.GraphOps.extraEdgeDefs.put(rb.table, (rb.fromT, rb.toT))
-    val ctx = Ctx(spark, dir, rb.table, rb.edges.schema, Map.empty)
-    shapeOutput(noneRows(rb.edges), rb.edges, s.output, ctx)
   }
 
   /** math::top/bottom second argument (fnc/math.rs top/bottom: any

@@ -124,13 +124,21 @@ class SchemaEnforceSpec extends AnyFunSuite {
       .collectFirst { case QErr(m) => m }
       .getOrElse(fail(s"interp succeeded where error expected\n$script"))
     assert(imsg.contains(needle), s"interp message `$imsg` lacks `$needle`")
+    checkSparkError(script, needle)
+  }
+
+  /** Run `text` on the Spark side through `script()` (or `query()`); it
+    * must ERROR with a message containing `needle`. */
+  private def checkSparkError(text: String, needle: String,
+      viaQuery: Boolean = false): Unit = {
     val smsg = intercept[Throwable] {
       Tables.withOverlay(Map("doc" -> df, "linksto" -> linksDf, "prof" -> profDf)) {
-        SparkPlanner.script(spark, "/nonexistent", script).collect()
+        (if (viaQuery) SparkPlanner.query(spark, "/nonexistent", text)
+         else SparkPlanner.script(spark, "/nonexistent", text)).collect()
       }
     }.getMessage
     assert(smsg != null && smsg.contains(needle),
-      s"spark message `$smsg` lacks `$needle`\n$script")
+      s"spark message `$smsg` lacks `$needle`${if (viaQuery) " (query)" else ""}\n$text")
   }
 
   test("DEFAULT fills an absent field on CREATE") {
@@ -398,6 +406,20 @@ class SchemaEnforceSpec extends AnyFunSuite {
       SELECT id, qty FROM doc ORDER BY id;""")
   }
 
+  test("CANCEL rolls back DEFINE PARAM: a later ALTER PARAM finds no param") {
+    val text = """
+      BEGIN;
+      DEFINE PARAM $m VALUE 3;
+      CANCEL;
+      ALTER PARAM $m VALUE 10;
+      RETURN { v: $m };"""
+    val needle = "The param '$m' does not exist"
+    // the interp reports the cancelled statements first, then the ALTER
+    val imsgs = new Interp().run(Parser.parse(text)).collect { case QErr(m) => m }
+    assert(imsgs.exists(_.contains(needle)), s"interp messages $imsgs lack `$needle`")
+    checkSparkError(text, needle)
+  }
+
   // ---- array-wildcard DEFINE FIELD paths (addresses.*.city shape) --------
 
   test("array-wildcard DEFINE FIELD VALUE rewrites every element slot on UPDATE") {
@@ -570,5 +592,40 @@ class SchemaEnforceSpec extends AnyFunSuite {
       s"update-arm diff differs: ${srows("1")} vs ${iv(0).render}")
     assert(srows("7") == graft.surql.Json.encode(iv(1)),
       s"create-arm diff differs: ${srows("7")} vs ${iv(1).render}")
+  }
+
+  // ---- a lone mutation runs on the script executor ------------------------
+
+  test("keyed UPSERT RETURN runs the DEFINE FIELD VALUE pipeline") {
+    checkSame("""
+      DEFINE FIELD label ON doc VALUE string::uppercase($value);
+      UPSERT doc:1 SET label = 'mixed';""")
+  }
+
+  test("keyed UPSERT RETURN raises a DEFINE FIELD ASSERT violation") {
+    checkBothError("""
+      DEFINE FIELD qty ON doc ASSERT $value >= 0;
+      UPSERT doc:1 SET qty = 0 - 5;""",
+      "must conform to")
+  }
+
+  test("bare-table UPSERT re-checks a unique index on a nested field") {
+    checkBothError("""
+      DEFINE INDEX ma ON prof FIELDS meta.a UNIQUE;
+      UPSERT prof SET meta.a = 1 WHERE score = 20;
+      SELECT id FROM prof;""",
+      "already contains")
+  }
+
+  test("a lone CREATE of an existing id errors through query() too") {
+    val text = "CREATE doc:1 SET grp = 'x', qty = 5;"
+    checkBothError(text, "Database record `doc:1` already exists")
+    checkSparkError(text, "Database record `doc:1` already exists", viaQuery = true)
+  }
+
+  test("CREATE across tables is unsupported through query() and script()") {
+    val text = "CREATE doc:9, prof:9 SET score = 3;"
+    checkSparkError(text, "CREATE across tables is unsupported")
+    checkSparkError(text, "CREATE across tables is unsupported", viaQuery = true)
   }
 }
