@@ -11,9 +11,90 @@ final case class QOk(v: V) extends QueryResult
 final case class QErr(msg: String) extends QueryResult
 
 object Interp {
-  // ---- undo journal entries (see Interp#journal) ----------------------
+  /** A table's records by stored key, in iteration order, with the
+    * indexes that answer record-key probes and graph hops without a scan
+    * (the reference keys both in its KV store: the record key, and the
+    * per-node graph keys RELATE writes, doc/edges.rs). One map holds both:
+    *  - loose-key buckets: [[looseCoarse]] of a stored key → the keys;
+    *  - the endpoint index: (`"in"` or `"out"`, [[looseCoarse]] of a record
+    *    id) → the keys of the records whose side holds that id.
+    * A bucket is a superset; callers filter it with their own predicate and
+    * order it by [[position]], the rank of a key in iteration order. Only
+    * [[Interp!.putRecord]], [[Interp!.removeRecord]] and [[Interp!.undoTo]]
+    * write a table, through [[store]], [[drop]] and [[restoreOrder]], so the
+    * indexes roll back with the records; USE parking, `REMOVE TABLE` and
+    * [[TablesUndo]] carry them with the table object. */
+  final class Table extends mutable.LinkedHashMap[V, VObj] {
+    private val index = mutable.HashMap[Any, mutable.ArrayBuffer[V]]()
+    private val pos = mutable.HashMap[V, Long]()
+    private var nextPos = 0L
 
-  private type Table = mutable.LinkedHashMap[V, VObj]
+    private def entries(key: V, doc: VObj): Seq[Any] = looseCoarse(key) +:
+      Seq("in", "out").flatMap(s => doc.fields.get(s).collect { case r: VRid => (s, looseCoarse(r)) })
+    private def bucket(entry: Any): Vector[V] = index.get(entry).fold(Vector.empty[V])(_.toVector)
+    private def add(entry: Any, key: V): Unit =
+      index.getOrElseUpdate(entry, new mutable.ArrayBuffer[V](1)) += key
+    private def del(entry: Any, key: V): Unit = index.get(entry).foreach { b =>
+      b -= key
+      if (b.isEmpty) index.remove(entry)
+    }
+
+    /** Stored keys that may loosely equal `probe`. */
+    private[surql] def keysLike(probe: V): Vector[V] = bucket(looseCoarse(probe))
+    /** Keys of the records whose `side` (`in` or `out`) may hold `rid`. */
+    private[surql] def keysAt(side: String, rid: VRid): Vector[V] = bucket((side, looseCoarse(rid)))
+    private[surql] def position(key: V): Long = pos(key)
+
+    private[Interp] def store(key: V, doc: VObj): Option[VObj] = {
+      val prior = put(key, doc)
+      prior match {
+        case scala.None =>
+          pos(key) = nextPos; nextPos += 1
+          entries(key, doc).foreach(add(_, key))
+        case Some(old) =>
+          val (was, is) = (entries(key, old), entries(key, doc))
+          if (was != is) { was.foreach(del(_, key)); is.foreach(add(_, key)) }
+      }
+      prior
+    }
+
+    private[Interp] def drop(key: V): Option[VObj] = {
+      val prior = remove(key)
+      prior.foreach { old => pos.remove(key); entries(key, old).foreach(del(_, key)) }
+      prior
+    }
+
+    /** Puts the records back in the order `keys` (the same key set). */
+    private[Interp] def restoreOrder(keys: Array[V]): Unit = {
+      val docs = keys.map(apply)
+      clear(); pos.clear()
+      keys.indices.foreach { i => put(keys(i), docs(i)); pos(keys(i)) = i.toLong }
+      nextPos = keys.length.toLong
+    }
+
+    /** The index, each bucket in iteration order (for consistency checks). */
+    private[graft] def indexView: Map[Any, Vector[V]] =
+      index.iterator.map { case (e, ks) => e -> ks.toVector.sortBy(pos) }.toMap
+  }
+
+  /** A coarse form of a record key, equal for any two values [[V.looseEq]]
+    * holds equal (regexes aside, which no stored key holds): numbers become
+    * their `toDouble` (-0.0 as 0.0, one NaN; mixed-representation `numEq`
+    * compares exactly, so equal numbers have equal doubles), arrays, sets,
+    * objects and record ids map elementwise, and every other value is
+    * itself (`looseEq` is structural there). */
+  def looseCoarse(v: V): V = v match {
+    case n: VNum =>
+      val d = n.toDouble
+      VInt(if (d == 0.0) 0L else java.lang.Double.doubleToLongBits(d))
+    case VArr(items) => VArr(items.map(looseCoarse))
+    case VSet(items) => VSet(items.map(looseCoarse))
+    case VObj(fs)    => VObj(fs.map { case (k, x) => k -> looseCoarse(x) })
+    case VRid(tb, k) => VRid(tb, looseCoarse(k))
+    case other       => other
+  }
+
+  // ---- undo journal entries (see Interp#journal) ----------------------
 
   /** One journaled change to the record data, undone in reverse order. */
   private sealed trait Undo
@@ -56,19 +137,6 @@ object Interp {
     walk(o).asInstanceOf[VObj]
   }
 
-  /** True when `v`'s loose-equivalence class equals its structural class:
-    * no numbers (which [[V.looseEq]] matches across int/float/decimal
-    * representations) and no regexes (which loose-match strings), anywhere.
-    * Such a value loose-equals a regex-free stored key iff it equals it
-    * structurally — the condition for [[Interp!.findKeyLoose]]'s O(1) path. */
-  def looseIsolated(v: V): Boolean = v match {
-    case _: VNum | _: VRegex | _: VRng => false
-    case VArr(items) => items.forall(looseIsolated)
-    case VSet(items) => items.forall(looseIsolated)
-    case VObj(fs)    => fs.valuesIterator.forall(looseIsolated)
-    case _ => true
-  }
-
   private def keyHasRegex(v: V): Boolean = v match {
     case _: VRegex   => true
     case VArr(items) => items.exists(keyHasRegex)
@@ -80,10 +148,10 @@ object Interp {
   /** Reject regexes as (or inside) record keys, as the reference does —
     * RecordIdKey has no regex variant and id conversion raises
     * "Found {value} for the Record ID but this is not a valid id"
-    * (err/mod.rs:571). Beyond fidelity, this guarantees stored keys are
-    * regex-free, which [[Interp!.findKeyLoose]]'s hash fast path relies on
-    * (a stored regex key is the one value that could loose-match a string
-    * probe without structural equality). */
+    * (err/mod.rs:571). Beyond fidelity, this keeps stored keys regex-free,
+    * which the loose-key buckets of [[Table]] rely on: a stored regex key is
+    * the one value that could loose-match a string probe that its
+    * [[looseCoarse]] bucket does not hold. */
   def checkIdKey(tb: String, key: V): Unit =
     if (keyHasRegex(key))
       throw SqlError(
@@ -320,7 +388,7 @@ object Interp {
 final class Interp {
 
   /** table name → insertion-ordered (record key → document). */
-  val tables: mutable.LinkedHashMap[String, mutable.LinkedHashMap[V, VObj]] =
+  val tables: mutable.LinkedHashMap[String, Interp.Table] =
     mutable.LinkedHashMap.empty
 
   var globals: Map[String, V] = Map.empty
@@ -648,7 +716,7 @@ final class Interp {
 
   /** Stores `doc` at the stored key `key` of `t`. */
   private def putRecord(t: Table, key: V, doc: VObj): Unit =
-    journalAdd(RecordUndo(t, key, t.put(key, doc)))
+    journalAdd(RecordUndo(t, key, t.store(key, doc)))
 
   /** Removes the stored key `key` from `t`, returning its document. */
   private def removeRecord(t: Table, key: V): Option[VObj] =
@@ -661,7 +729,7 @@ final class Interp {
           journalAdd(OrderUndo(t, t.keysIterator.toArray))
         }
       }
-      val prior = t.remove(key)
+      val prior = t.drop(key)
       journalAdd(RecordUndo(t, key, prior))
       prior
     }
@@ -674,13 +742,10 @@ final class Interp {
 
   private def undoTo(at: Int): Unit =
     while (journal.length > at) journal.remove(journal.length - 1) match {
-      case RecordUndo(t, k, Some(d))    => t(k) = d
-      case RecordUndo(t, k, scala.None) => t.remove(k)
+      case RecordUndo(t, k, Some(d))    => t.store(k, d)
+      case RecordUndo(t, k, scala.None) => t.drop(k)
       case OrderUndo(t, keys) =>
-        val docs = keys.map(t)
-        t.clear()
-        var i = 0
-        while (i < keys.length) { t(keys(i)) = docs(i); i += 1 }
+        t.restoreOrder(keys)
         orderSaved.remove(t)
       case TablesUndo(prior) => tables.clear(); tables ++= prior
       case MarkUndo(tb, k, added) =>
@@ -716,7 +781,7 @@ final class Interp {
     * the target's. `history`/`ddlSnaps` (VERSION) and live queries stay
     * session-global. */
   private final class DbState {
-    var tabs = mutable.LinkedHashMap.empty[String, mutable.LinkedHashMap[V, VObj]]
+    var tabs = mutable.LinkedHashMap.empty[String, Table]
     var fns = mutable.LinkedHashMap.empty[String, VClosure]
     var fnAuth = mutable.LinkedHashMap.empty[String, String]
     var fp = mutable.LinkedHashMap.empty[String, Vector[DefineFieldStmt]]
@@ -2753,40 +2818,40 @@ final class Interp {
 
   // ---- catalog ---------------------------------------------------------
 
-  def table(name: String): mutable.LinkedHashMap[V, VObj] =
+  def table(name: String): Table =
     tables.getOrElse(name, {
       if (!tableDefs.contains(name))
         tableDefs(name) = Defs.TableDef(name) // implicit tables register a definition
       journalAdd(TablesUndo(tables.toVector))
-      val t: Table = mutable.LinkedHashMap.empty
+      val t = new Table
       tables(name) = t
       t
     })
 
-  /** Loose record-key lookup with a typed fast path. Record keys compare
-    * with [[V.looseEq]] (numbers match across int/float/decimal
-    * representations), which used to cost an O(n) scan of the table per
-    * CREATE/UPDATE/INSERT/fetch — bulk loads (`FOR … { CREATE … }`) were
-    * O(n²). For a probe whose loose-equivalence class IS its structural
-    * class — anything free of numbers (cross-representation equality) and
-    * regexes (string~regex matching), recursively — a stored key matches
-    * loosely iff it equals structurally, so the LinkedHashMap hash lookup
-    * answers in O(1). Regex keys cannot exist ([[Interp.checkIdKey]]
-    * rejects them at every insert boundary, as the reference does — its
-    * RecordIdKey has no regex variant), so a string probe can never
-    * loose-match a stored key it does not structurally equal. Numeric and
-    * number-bearing compound probes keep the exact loose scan. */
-  private[surql] def findKeyLoose(
-      t: scala.collection.Map[V, VObj], key: V): Option[V] =
-    if (Interp.looseIsolated(key)) {
-      if (t.contains(key)) Some(key) else scala.None
-    } else {
-      looseScanCount += 1
-      t.keysIterator.find(V.looseEq(_, key))
+  /** Loose record-key lookup: the first stored key of `t`, in iteration
+    * order, that [[V.looseEq]] holds equal to `key` (numbers match across
+    * int/float/decimal representations). It compares `key` only with its
+    * loose-key bucket ([[Interp.Table]]), so it costs O(bucket), not
+    * O(table). A probe holding a regex is a pattern, not a key (stored keys
+    * hold none, [[Interp.checkIdKey]]): it matches stored strings by scan. */
+  private[surql] def findKeyLoose(t: Table, key: V): Option[V] =
+    if (Interp.keyHasRegex(key)) firstLoose(t.keysIterator, key)
+    else t.keysLike(key).filter(looseCompare(_, key)) match {
+      case Seq()  => scala.None
+      case Seq(k) => Some(k)
+      case ks     => Some(ks.minBy(t.position))
     }
-  private var looseScanCount = 0L
-  /** Record-key probes [[findKeyLoose]] answered by scanning a table. */
-  def looseScans: Long = looseScanCount
+  /** The scan for regex probes and `VERSION` snapshots (no live table). */
+  private def firstLoose(keys: Iterator[V], key: V): Option[V] =
+    keys.find(looseCompare(_, key))
+  private def looseCompare(stored: V, key: V): Boolean = {
+    keysComparedCount += 1
+    V.looseEq(stored, key)
+  }
+  private var keysComparedCount = 0L
+  /** Stored keys that record-key lookups, graph hops and edge cascades
+    * have compared with a probe since this interpreter was created. */
+  def keysCompared: Long = keysComparedCount
 
   /** Records created by RELATE carry edge metadata (catalog RecordType::Edge,
     * doc/alter.rs:93); only THOSE records pin in/out across updates. A normal
@@ -2817,7 +2882,7 @@ final class Interp {
     val raw = versionAsOf match {
       case Some(ts) =>
         val vt = versionedTable(rid.table, ts)
-        findKeyLoose(vt, rid.key).map(vt(_))
+        firstLoose(vt.keysIterator, rid.key).map(vt(_))
       case scala.None =>
         tables.get(rid.table).flatMap(t => findKeyLoose(t, rid.key).map(t(_)))
     }
@@ -4637,7 +4702,8 @@ final class Interp {
           findKeyLoose(t, key).toSeq
         case scala.None => t.keys.toSeq
       }
-      keys.foreach { key =>
+      // an event fired for one victim may have deleted a later one
+      keys.iterator.filter(t.contains).foreach { key =>
         val doc = t(key)
         val de = env.copy(doc = Some(doc))
         if (s.where.forall(c => Eval.eval(c, de).truthy) &&
@@ -4665,7 +4731,10 @@ final class Interp {
 
   /** Deleting a record purges the graph edges pointing in or out of it
     * (doc/purge.rs), running each edge's own delete lifecycle so DEFINE
-    * EVENT on the edge table fires (event/with_relations golden). */
+    * EVENT on the edge table fires (event/with_relations golden). Each edge
+    * table yields its candidates from the endpoint index ([[Interp.Table]]):
+    * the union of the `in` and `out` buckets of `rid`, filtered by a loose
+    * key match and removed in iteration order. */
   private def cascadeEdgeDeletes(rid: VRid, env: Env): Unit = {
     def endpoint(doc: VObj): Boolean = Seq("in", "out").exists(side =>
       doc.fields.get(side).exists {
@@ -4677,9 +4746,10 @@ final class Interp {
       val relation = tableDefs.get(etb).exists(_.ttype == "RELATION")
       val marked = edgeMarks.get(etb)
       if (relation || marked.nonEmpty) {
-        val victims = t.toSeq.filter { case (k, doc) =>
-          (relation || marked.exists(_.contains(k))) && endpoint(doc)
-        }
+        val victims = (t.keysAt("in", rid) ++ t.keysAt("out", rid)).distinct.filter { k =>
+          keysComparedCount += 1
+          (relation || marked.exists(_.contains(k))) && endpoint(t(k))
+        }.sortBy(t.position).map(k => k -> t(k))
         victims.foreach { case (k, doc) =>
           if (t.contains(k)) { // a nested cascade may have removed it already
             removeRecord(t, k)
@@ -4972,7 +5042,8 @@ final class Interp {
 
   /** One lookup hop (exec/operators/scan/graph.rs, key layout
     * key/graph/mod.rs + doc/edges.rs:60-69). The KV stores per-record
-    * adjacency entries (record, dir, foreign-table, foreign-key):
+    * adjacency entries (record, dir, foreign-table, foreign-key), which
+    * here are the endpoint index of each table ([[Interp.Table]]):
     *  - a node has (node, OUT, edgeTb, edgeId) per outgoing edge and
     *    (node, IN, edgeTb, edgeId) per incoming edge — so `->knows` from a
     *    node yields knows-EDGE ids;
@@ -5060,21 +5131,25 @@ final class Interp {
             }
           }
           // node adjacency: edges in sub.table anchored at src, in KV key
-          // order (sorted by edge id key, scan/graph.rs range scan)
+          // order (sorted by edge id key, scan/graph.rs range scan), read
+          // from the endpoint index of the anchor side
+          val (anchorSide, farSide) = if (d == "out") ("in", "out") else ("out", "in")
           val matched = mutable.ArrayBuffer[VRid]()
-          tables.get(sub.table).foreach(_.values.foreach { edge =>
-            val hasInOut = edge.fields.get("in").exists(_.isInstanceOf[VRid]) &&
-              edge.fields.get("out").exists(_.isInstanceOf[VRid])
-            if (hasInOut) {
-              val anchor = edge.fields.getOrElse(if (d == "out") "in" else "out", VNone)
-              if (V.looseEq(anchor, src)) {
+          tables.get(sub.table).foreach { t =>
+            t.keysAt(anchorSide, src).foreach { k =>
+              keysComparedCount += 1
+              val edge = t(k)
+              // an edge has record ids on both sides; the anchor is src
+              // itself (looseEq on two record ids is structural)
+              if (edge.fields.get(farSide).exists(_.isInstanceOf[VRid]) &&
+                  edge.fields.get(anchorSide).contains(src)) {
                 edge.fields.get("id") match {
                   case Some(e: VRid) if keyMatch(e.key, sub.key) => matched += e
                   case _ => ()
                 }
               }
             }
-          })
+          }
           candidates ++= matched.sortBy(_.key)(V.ordering)
         }
       }

@@ -3357,8 +3357,9 @@ object SparkPlanner {
         "before" -> struct(deleted.columns.map(col).toIndexedSeq: _*),
         "after" -> lit(null)))
       deleted.select(toCol(e, ctx2).as("value"))
+    // no RETURN clause returns nothing (Interp execDelete, as the reference)
     case other =>
-      shapeOutput(deleted, deleted, other.orElse(Some(Output.OBefore)), ctx)
+      shapeOutput(deleted, deleted, other.orElse(Some(Output.ONone)), ctx)
   }
 
   /** The table's current stored state — overlay entry or parquet — or None

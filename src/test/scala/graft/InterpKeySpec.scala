@@ -3,13 +3,14 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import graft.surql._
 
-/** Record-key lookup semantics after the r21 findKeyLoose rewrite (the
-  * loose O(n) table scan per CREATE/UPDATE/INSERT/fetch became a hash
-  * lookup for number-free, regex-free probes). Pins: cross-representation
-  * numeric ids still collide loosely, string/array ids behave structurally,
-  * regex ids are rejected at every insert boundary with the reference's
-  * error (RecordIdKey has no regex variant), a bulk FOR/CREATE loop makes
-  * no loose table scan, and RELATE keeps stored keys loosely distinct. */
+/** Record-key lookup semantics of `findKeyLoose`, which compares a probe
+  * only with the stored keys of its loose-key bucket. Pins:
+  * cross-representation numeric ids still collide loosely, string/array ids
+  * behave structurally, regex ids are rejected at every insert boundary
+  * with the reference's error (RecordIdKey has no regex variant) while a
+  * regex read probe still matches by pattern, a bulk FOR/CREATE loop
+  * compares no key, every write path keeps stored keys loosely distinct,
+  * and a probe that two stored keys share a bucket with finds its match. */
 class InterpKeySpec extends AnyFunSuite {
 
   private def run(sql: String): Seq[QueryResult] = {
@@ -79,9 +80,54 @@ class InterpKeySpec extends AnyFunSuite {
       """FOR $i IN 0..10000 { CREATE bulk CONTENT { something: $i }; };
          SELECT count() FROM bulk GROUP ALL;"""))
     assert(rs(1) match { case QOk(v) => v.render.contains("10000"); case _ => false })
-    // generated ids are strings, so every existence probe takes the hash
-    // path; one loose table scan per CREATE was the O(n²) relapse
-    assert(i.looseScans == 0, s"${i.looseScans} loose table scans")
+    // a generated id's bucket is empty, so an existence probe compares no
+    // key; one comparison per stored key per CREATE was the O(n²) relapse
+    assert(i.keysCompared == 0, s"${i.keysCompared} keys compared")
+  }
+
+  /** Runs `write` after storing `t:1`, with `$f` = 1.0f and `$d` = 1dec. */
+  private def records(write: String): QueryResult =
+    run(s"LET $$f = 1.0f; LET $$d = 1dec; CREATE t:1 SET v = 1; $write " +
+      "SELECT count() AS n FROM t GROUP ALL;").last
+
+  test("every write path keeps stored keys loosely distinct") {
+    val writes = Seq(
+      // CREATE
+      "CREATE t:$f;", "CREATE t:$d;", "CREATE t CONTENT {id: 1.0f};", "CREATE t CONTENT {id: 1dec};",
+      // INSERT, ON DUPLICATE KEY UPDATE, INSERT RELATION
+      "INSERT INTO t {id: 1.0f};", "INSERT INTO t {id: 1dec};",
+      "INSERT INTO t {id: 1dec, v: 3} ON DUPLICATE KEY UPDATE v = 4;",
+      "INSERT IGNORE INTO t {id: 1dec};",
+      "INSERT RELATION INTO t {id: 1dec, in: a:1, out: b:1};",
+      "INSERT RELATION INTO t {id: 1.0f, in: a:1, out: b:1} ON DUPLICATE KEY UPDATE v = 5;",
+      // UPSERT
+      "UPSERT t:$f SET v = 2;", "UPSERT t:$d CONTENT {v: 2};", "UPSERT t CONTENT {id: 1dec, v: 2};",
+      // UPDATE
+      "UPDATE t:$f SET v = 2;", "UPDATE t:$d MERGE {v: 2};", "UPDATE t:1 CONTENT {id: 1.0f, v: 2};",
+      // RELATE
+      "RELATE a:1->t:$f->b:1;", "RELATE a:1->t:$d->b:1;", "RELATE a:1->t->b:1 CONTENT {id: 1dec};")
+    writes.foreach { w =>
+      assert(records(w) == QOk(VArr(Vector(V.obj("n" -> VInt(1))))), s"$w -> ${records(w)}")
+    }
+  }
+
+  test("a float probe finds its own match when two stored ints share its bucket") {
+    // 2^53 and 2^53 + 1 are distinct ints with the same double; the float
+    // 2^53 equals only the first, whichever order they were stored in
+    Seq("CREATE t:9007199254740993; CREATE t:9007199254740992;",
+        "CREATE t:9007199254740992; CREATE t:9007199254740993;").foreach { setup =>
+      val rs = run(s"$setup LET $$k = 9007199254740992f; LET $$m = <decimal> '9007199254740993'; " +
+        "SELECT VALUE id FROM t:$k; SELECT VALUE id FROM t:$m;")
+      assert(rs(4) == QOk(VArr(Vector(VRid("t", VInt(9007199254740992L))))), s"$setup ${rs(4)}")
+      assert(rs(5) == QOk(VArr(Vector(VRid("t", VInt(9007199254740993L))))), s"$setup ${rs(5)}")
+    }
+  }
+
+  test("a regex read probe matches stored strings by pattern") {
+    val rs = run("CREATE a:['q', 'x'] SET v = 1; SELECT * FROM a:['q', /x/]; SELECT * FROM a:['q', /y/];")
+    assert(rs(1) == QOk(VArr(Vector(V.obj(
+      "id" -> VRid("a", VArr(Vector(VStr("q"), VStr("x"))): V), "v" -> VInt(1))))), rs(1))
+    assert(rs(2) == QOk(VArr(Vector.empty)), rs(2))
   }
 
   test("RELATE writes over a loosely equal stored key instead of adding a second record") {

@@ -28,9 +28,12 @@ class InterpTxSpec extends AnyFunSuite {
   }
 
   /** Everything a rollback must restore: each table's records in iteration
-    * order, the edge marks and the length of the write log. */
-  private def state(in: Interp) =
+    * order, the edge marks and the length of the write log. Each table's
+    * indexes must equal a rebuild from its records. */
+  private def state(in: Interp) = {
+    InterpIndexSpec.assertIndexed(in, "state")
     (in.tables.toVector.map { case (n, t) => n -> t.toVector }, in.edgeMarkSet, in.history.length)
+  }
 
   private def run(in: Interp, sql: String): Seq[QueryResult] = in.run(Parser.parse(sql))
 

@@ -549,6 +549,11 @@ class SchemaEnforceSpec extends AnyFunSuite {
       befs.head.getLong(2) == 10L)              // doc:1 pre-update qty
   }
 
+  test("DELETE with no RETURN clause returns nothing on both engines") {
+    checkSame("DELETE doc WHERE qty = 20;")
+    checkSame("DELETE doc WHERE qty = 20; SELECT id, qty FROM doc WHERE qty <= 30 ORDER BY id;")
+  }
+
   test("DELETE RETURN VALUE sees the deleted doc as $before") {
     checkSame("""
       DELETE doc WHERE qty = 20 RETURN VALUE $before.qty;""")
