@@ -16,14 +16,18 @@ object SparkEntry {
 
   /** One list, one row per name. Most rows are SurrealQL text run through
     * the parser and SparkPlanner ([[SurqlQueries]]), so the oracle gate
-    * checks parse → plan → execute end to end. The DataFrame closures in the
-    * other objects cover operators that have no SurrealQL twin: streams and
-    * live queries, ANN and dedup gates, multimodal, sources and sinks, and
-    * the golden corpus. A name may appear only once: [[queries]] builds a
-    * map, where a later duplicate would silently replace an earlier one. */
+    * checks parse → plan → execute end to end; that includes the mutation,
+    * RELATE and SHOW CHANGES rows. The DataFrame closures in the other
+    * objects cover operators that have no SurrealQL twin: streams and live
+    * queries, ANN and dedup gates, multimodal, sources and sinks, and the
+    * golden corpus. Two closures have a SurrealQL surface that cannot
+    * return their exact rows, and each names what is missing:
+    * `geo_distance` ([[MiscQueries]]) and `recursion_chain` ([[GraphOps]]).
+    * A name may appear only once: [[queries]] builds a map, where a later
+    * duplicate would silently replace an earlier one. */
   private val registry: Seq[Q] =
     Relational.all ++ GraphOps.all ++ MiscQueries.all ++
-      Mutations.all ++ graft.streaming.Live.all ++
+      graft.streaming.Live.all ++
       TextOps.all ++ Dedup.all ++ Similarity.all ++ Hnsw.all ++
       FullText.all ++ Multimodal.all ++ Buckets.all ++ graft.sources.Sources.all ++
       SurqlQueries.all ++ GoldenQueries.all

@@ -16,6 +16,7 @@ object MiscQueries {
     * lat/lon derived from customer keys (testdata has no geometry columns;
     * the derivation is part of both sides). trig is libm → round(4) ≈ 0.1 m
     * tolerance absorbs any last-ulp disagreement. */
+  // a closure: SurrealQL has no atan2 or half-up round(x, n); geo::distance has another radius
   val geoDistance = Q("geo_distance",
     """WITH pts AS (
          SELECT c_custkey,

@@ -29,10 +29,10 @@ import graft.{Q, Tables}
 object GraphOps {
 
   /** Relation-table topology: edge table name → (inTable, outTable). The
-    * `supplies` edges are the `mut_relate` output (one edge per distinct
-    * supplier→part shipment pair with aggregate props) — the Spark analog of
-    * a RELATE-populated relation table (catalog/table.rs:151-156). The
-    * SurrealQL planner lowers `->supplies->part` onto these. */
+    * `supplies` edges are one edge per distinct supplier→part shipment pair
+    * with aggregate props (the `mut_relate` row reads them) — the Spark
+    * analog of a RELATE-populated relation table (catalog/table.rs:151-156).
+    * The SurrealQL planner lowers `->supplies->part` onto these. */
   val edgeDefsBase: Map[String, (String, String)] = Map(
     "supplies" -> ("supplier", "part"),
     // each customer's orders by date form a linked list — the time-series
@@ -151,6 +151,7 @@ object GraphOps {
     * `@{1..3}` over a next-order chain (each customer's orders by date form a
     * linked list — the time-series idiom of SURVEY §1.1). Oracle is a
     * recursive CTE. */
+  // a closure: `@{1..3}` returns an array per start, not flat (start, node, depth) rows
   val recursionChain = Q("recursion_chain",
     """WITH RECURSIVE seq AS (
          SELECT o_custkey, o_orderkey,

@@ -5,8 +5,6 @@ import org.apache.spark.sql.functions._
 
 import scala.collection.immutable.TreeMap
 
-import graft.{Q, Tables}
-import graft.functions.Exact
 import graft.surql.{V, VArr, VObj, VRid, VStr}
 
 /** The mutation surface (SURVEY §2.2 — reference legacy pipeline dbs/ + doc/:
@@ -22,8 +20,8 @@ import graft.surql.{V, VArr, VObj, VRid, VStr}
   *
   * The reference's per-document lifecycle (doc/mod.rs:12-36: alter → check →
   * field → store → changefeed) becomes: column exprs for SET/field pipeline,
-  * the anti/outer join for conflict handling, and [[changeLog]] for the
-  * changefeed step. */
+  * the anti/outer join for conflict handling, and
+  * [[graft.streaming.Live.changes]] for the changefeed step. */
 object Mutations {
 
   /** UPDATE … SET col = expr WHERE cond. Returns the full new table; SET on
@@ -44,45 +42,6 @@ object Mutations {
       sets.keys.filterNot(existing).toSeq.sorted.map(c =>
         when(cond, sets(c)).as(c))
     table.select(cols.toIndexedSeq: _*)
-  }
-
-  /** DELETE WHERE cond → (new table, deleted rows i.e. RETURN BEFORE). */
-  def delete(table: DataFrame, cond: Column): (DataFrame, DataFrame) =
-    (table.filter(!cond), table.filter(cond))
-
-  /** UPSERT / INSERT … ON DUPLICATE KEY UPDATE: delta wins on key collision,
-    * table rows survive otherwise — one full-outer join on the key. */
-  def upsert(table: DataFrame, delta: DataFrame, idCol: String): DataFrame = {
-    val t = table.alias("t")
-    val d = delta.alias("d")
-    val cols = table.columns.map { c =>
-      coalesce(col(s"d.$c"), col(s"t.$c")).as(c)
-    }
-    t.join(d, col(s"t.$idCol") === col(s"d.$idCol"), "full_outer")
-      .select(cols.toIndexedSeq: _*)
-  }
-
-  /** RELATE src->edge->dst: build an edge table (in, out, props) — edges are
-    * ordinary rows in a relation table (catalog/table.rs:151-156). */
-  def relate(pairs: DataFrame, inCol: Column, outCol: Column, props: Seq[Column]): DataFrame =
-    pairs.select((inCol.as("in") +: outCol.as("out") +: props): _*)
-
-  /** Change-feed rows from a before/after pair (cf/writer.rs analog):
-    * full-outer join on the id → action ∈ {create, update, delete}.
-    * Unchanged rows are dropped by a whole-row hash compare. RETURN DIFF /
-    * SHOW CHANGES read from this. */
-  def changeLog(before: DataFrame, after: DataFrame, idCol: String): DataFrame = {
-    val bh = before.select(col(idCol).as("id"),
-      xxhash64(struct(before.columns.map(col).toIndexedSeq: _*)).as("h_before"))
-    val ah = after.select(col(idCol).as("id"),
-      xxhash64(struct(after.columns.map(col).toIndexedSeq: _*)).as("h_after"))
-    bh.join(ah, Seq("id"), "full_outer")
-      .select(col("id"),
-        when(col("h_before").isNull, "create")
-          .when(col("h_after").isNull, "delete")
-          .when(col("h_before") =!= col("h_after"), "update")
-          .as("action"))
-      .filter(col("action").isNotNull)
   }
 
   // ---- RETURN DIFF -----------------------------------------------------
@@ -179,51 +138,4 @@ object Mutations {
       }
     }(diffEnc).toDF(key, "diff")
   }
-
-  // ---- oracle-checked mutation queries (pure transforms) ---------------
-
-  /** RELATE supplier->supplies->part, aggregating lineitem into edge props
-    * (edge id = "supplies:⟨in⟩:⟨out⟩" — record-id canonical form). */
-  val mutRelate = Q("mut_relate",
-    s"""SELECT 'supplies:' || CAST(l_suppkey AS VARCHAR) || ':'
-                 || CAST(l_partkey AS VARCHAR) AS edge_id,
-               l_suppkey AS "in", l_partkey AS "out",
-               COUNT(*) AS n_shipments, ${Exact.sqlSum("l_quantity")} AS total_qty
-        FROM lineitem GROUP BY l_suppkey, l_partkey
-        ORDER BY "in", "out"""") {
-    (s, d) =>
-      val pairs = Tables.lineitem(s, d)
-        .groupBy("l_suppkey", "l_partkey")
-        .agg(count(lit(1)).as("n_shipments"), Exact.dsum(col("l_quantity")).as("total_qty"))
-      relate(pairs, col("l_suppkey"), col("l_partkey"),
-        Seq(col("n_shipments"), col("total_qty")))
-        .select(
-          concat(lit("supplies:"), col("in").cast("string"), lit(":"),
-            col("out").cast("string")).as("edge_id"),
-          col("in"), col("out"), col("n_shipments"), col("total_qty"))
-        .orderBy("in", "out")
-  }
-
-  /** SHOW CHANGES analog: change rows derived from the upsert above —
-    * updates for keys < 50 whose payload changed, creates for the 5 new ids
-    * (cf/writer.rs → SHOW CHANGES FOR TABLE orders). */
-  val mutChangefeed = Q("mut_changefeed",
-    """SELECT o_orderkey AS id, 'update' AS action FROM orders WHERE o_orderkey < 50
-       UNION ALL
-       SELECT o_orderkey + 1000000 AS id, 'create' AS action FROM orders WHERE o_orderkey < 5
-       ORDER BY id""") {
-    (s, d) =>
-      val o = Tables.orders(s, d)
-      val deltaUp = o.filter(col("o_orderkey") < 50)
-        .withColumn("o_totalprice", col("o_totalprice") + lit(1000.0))
-      val deltaNew = o.filter(col("o_orderkey") < 5)
-        .withColumn("o_orderkey", col("o_orderkey") + 1000000L)
-        .withColumn("o_orderstatus", lit("N"))
-      val after = upsert(o, deltaUp.unionByName(deltaNew), "o_orderkey")
-      changeLog(o, after, "o_orderkey")
-        .select(col("id"), col("action"))
-        .orderBy("id")
-  }
-
-  val all: Seq[Q] = Seq(mutRelate, mutChangefeed)
 }

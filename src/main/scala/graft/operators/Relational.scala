@@ -6,13 +6,13 @@ import org.apache.spark.sql.functions._
 import graft.{Q, Tables}
 import graft.functions.Exact
 
-/** Event-stream operators built as DataFrame closures: a conditional-count
-  * aggregate over the events table and the batch twins of the streaming
-  * transforms in [[graft.streaming.Streams]] (sessions, tumbling and hopping
-  * windows, interval join, dedup, enrichment). The SELECT pipeline of the
-  * reference's streaming engine (surrealdb: exec/planner/select.rs:195
-  * `plan_pipeline` — source → Filter → Split → Aggregate → Sort → Limit →
-  * Project → Fetch) reaches Spark as SurrealQL text in [[SurqlQueries]].
+/** Event-stream operators built as DataFrame closures: the batch twins of
+  * the streaming transforms in [[graft.streaming.Streams]] (sessions,
+  * tumbling and hopping windows, interval join, dedup, enrichment). The
+  * SELECT pipeline of the reference's streaming engine (surrealdb:
+  * exec/planner/select.rs:195 `plan_pipeline` — source → Filter → Split →
+  * Aggregate → Sort → Limit → Project → Fetch) reaches Spark as SurrealQL
+  * text in [[SurqlQueries]].
   *
   * Each `Q` below carries a DuckDB oracle. Scale notes are inline: the
   * oracle gate runs at sf0.01, but every plan here is shaped for a
@@ -20,28 +20,6 @@ import graft.functions.Exact
   * only for fixed-size dims).
   */
 object Relational {
-
-  /** `CountField` — conditional count (aggregates/count.rs:83) plus CASE WHEN
-    * tiers, over the events stream table. JSON props are parsed with a regexp
-    * (identical semantics on both engines, no JSON-extension dependency). */
-  val fnConditional = Q("fn_conditional",
-    s"""SELECT event_type,
-               COUNT(*) AS cnt,
-               CAST(SUM(CASE WHEN value > 50.0 THEN 1 ELSE 0 END) AS BIGINT) AS cnt_big,
-               ${Exact.sqlSum("value")} AS sum_value,
-               CAST(SUM(CAST(regexp_extract(props, '"k": (\\d+)', 1) AS BIGINT)) AS BIGINT) AS sum_k
-        FROM events GROUP BY event_type ORDER BY event_type""") {
-    (s, d) =>
-      Tables.events(s, d)
-        .groupBy("event_type")
-        .agg(
-          count(lit(1)).as("cnt"),
-          sum(when(col("value") > 50.0, 1).otherwise(0)).cast("bigint").as("cnt_big"),
-          Exact.dsum(col("value")).as("sum_value"),
-          sum(regexp_extract(col("props"), "\"k\": (\\d+)", 1).cast("bigint"))
-            .cast("bigint").as("sum_k"))
-        .orderBy("event_type")
-  }
 
   /** Gap-based sessionization over the events time-series (SURVEY §1.1: the
     * record-id-range/time-series idiom; the classic event-stream batch op):
@@ -173,6 +151,6 @@ object Relational {
         .orderBy("event_id")
   }
 
-  val all: Seq[Q] = Seq(fnConditional, eventsSessionize, eventsWindow,
+  val all: Seq[Q] = Seq(eventsSessionize, eventsWindow,
     eventsWindowSliding, eventsStreamJoin, eventsStreamDedup, eventsEnrich)
 }

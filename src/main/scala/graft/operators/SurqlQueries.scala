@@ -333,6 +333,20 @@ object SurqlQueries {
     "SELECT c_custkey, c_name FROM customer WHERE c_custkey = 7")(
     "SELECT c_custkey, c_name FROM ONLY customer WHERE c_custkey = 7")
 
+  /** `CountField` — conditional count (aggregates/count.rs:83) over the
+    * events stream table. Every `props` is `{"k": N}`, so its digits are k. */
+  val fnConditional = sq("fn_conditional",
+    s"""SELECT event_type,
+               COUNT(*) AS cnt,
+               CAST(SUM(CASE WHEN value > 50.0 THEN 1 ELSE 0 END) AS BIGINT) AS cnt_big,
+               ${Exact.sqlSum("value")} AS sum_value,
+               CAST(SUM(CAST(regexp_extract(props, '"k": (\\d+)', 1) AS BIGINT)) AS BIGINT) AS sum_k
+        FROM events GROUP BY event_type ORDER BY event_type""")(
+    """SELECT event_type, count() AS cnt, count(value > 50.0) AS cnt_big,
+              math::sum(value) AS sum_value,
+              math::sum(<int>string::replace(props, /[^0-9]/, '')) AS sum_k
+       FROM events GROUP BY event_type ORDER BY event_type""")
+
   val aggGroup = sq("agg_group",
     s"""SELECT l_returnflag, l_linestatus,
                ${Exact.sqlSum("l_quantity")} AS sum_qty,
@@ -577,8 +591,8 @@ object SurqlQueries {
        FROM documents ORDER BY doc_id""")
 
   // ---- graph-arrow traversal (GraphEdgeScan from real `->` syntax) --------
-  // The `supplies` relation table is the mut_relate edge set (one edge per
-  // distinct supplier→part shipment pair); hops lower to aggregated
+  // The `supplies` relation table is the edge set `mut_relate` reads (one
+  // edge per distinct supplier→part shipment pair); hops lower to aggregated
   // equi-joins anchored on the record key — see SparkPlanner.graphLookup.
 
   // The hop results are id/field ARRAYS; the driver's comparator cannot hash
@@ -764,9 +778,23 @@ object SurqlQueries {
     "SELECT CAST(100 AS BIGINT) AS r_regionkey, 'MOON' AS r_name")(
     "CREATE region:100 SET r_name = 'MOON' RETURN r_regionkey, r_name")
 
-  /** INSERT … ON DUPLICATE KEY UPDATE: colliding keys (o_orderkey < 50) take
-    * the update arm (+1000 on the EXISTING row), fresh keys (+1000000) take
-    * the insert arm — the same two-arm MERGE as Mutations.upsert. */
+  /** The orders upsert scenario, written once: colliding keys
+    * (o_orderkey < 50) take the update arm (+1000 on the EXISTING row),
+    * fresh keys (+1000000) take the insert arm. `mut_upsert` returns its
+    * rows, `mut_changefeed` reads its change feed, and the LIVE rows
+    * ([[graft.streaming.Live]]) diff its after-state. */
+  val ordersUpsert: String =
+    """INSERT INTO orders
+         (SELECT o_orderkey, o_custkey, o_orderstatus, o_totalprice,
+                 o_orderdate, o_orderpriority
+          FROM (SELECT * FROM orders WHERE o_orderkey < 50),
+               (SELECT o_orderkey + 1000000 AS o_orderkey, o_custkey,
+                       'N' AS o_orderstatus, o_totalprice, o_orderdate,
+                       o_orderpriority
+                FROM orders WHERE o_orderkey < 5))
+       ON DUPLICATE KEY UPDATE o_totalprice += 1000.0"""
+
+  /** INSERT … ON DUPLICATE KEY UPDATE: [[ordersUpsert]] with its RETURN. */
   val mutUpsert = sqOrd("mut_upsert",
     """WITH delta_up AS (
          SELECT o_orderkey, o_custkey, o_orderstatus,
@@ -780,16 +808,17 @@ object SurqlQueries {
        SELECT o_orderkey, o_totalprice, o_orderstatus FROM (
          SELECT * FROM delta_up UNION ALL SELECT * FROM delta_new)
        ORDER BY o_orderkey""")(
-    """INSERT INTO orders
-         (SELECT o_orderkey, o_custkey, o_orderstatus, o_totalprice,
-                 o_orderdate, o_orderpriority
-          FROM (SELECT * FROM orders WHERE o_orderkey < 50),
-               (SELECT o_orderkey + 1000000 AS o_orderkey, o_custkey,
-                       'N' AS o_orderstatus, o_totalprice, o_orderdate,
-                       o_orderpriority
-                FROM orders WHERE o_orderkey < 5))
-       ON DUPLICATE KEY UPDATE o_totalprice += 1000.0
-       RETURN o_orderkey, o_totalprice, o_orderstatus""")("o_orderkey")
+    s"$ordersUpsert RETURN o_orderkey, o_totalprice, o_orderstatus")("o_orderkey")
+
+  /** SHOW CHANGES over [[ordersUpsert]] (cf/writer.rs → SHOW CHANGES FOR
+    * TABLE orders): updates for the keys < 50 whose payload changed,
+    * creates for the 5 new ids. */
+  val mutChangefeed = sq("mut_changefeed",
+    """SELECT o_orderkey AS id, 'update' AS action FROM orders WHERE o_orderkey < 50
+       UNION ALL
+       SELECT o_orderkey + 1000000 AS id, 'create' AS action FROM orders WHERE o_orderkey < 5
+       ORDER BY id""")(
+    s"$ordersUpsert RETURN NONE; SHOW CHANGES FOR TABLE orders SINCE 0;")
 
   /** UPSERT on an absent record id — the synthesized create arm. */
   val mutUpsertPoint = sq("mut_upsert_point",
@@ -805,6 +834,18 @@ object SurqlQueries {
        ORDER BY "in", "out"""")(
     """RELATE (supplier:1..4)->adjacent->(part:1..4) SET w = 1.5
        RETURN in, out, w""")("in", "out")
+
+  /** RELATE supplier->supplies->part, aggregating lineitem into edge props:
+    * the built-in `supplies` relation table holds exactly these edges (edge
+    * id = "supplies:⟨in⟩:⟨out⟩" — record-id canonical form). */
+  val mutRelate = sq("mut_relate",
+    s"""SELECT 'supplies:' || CAST(l_suppkey AS VARCHAR) || ':'
+                 || CAST(l_partkey AS VARCHAR) AS edge_id,
+               l_suppkey AS "in", l_partkey AS "out",
+               COUNT(*) AS n_shipments, ${Exact.sqlSum("l_quantity")} AS total_qty
+        FROM lineitem GROUP BY l_suppkey, l_partkey
+        ORDER BY "in", "out"""")(
+    "SELECT id AS edge_id, in, out, n_shipments, total_qty FROM supplies ORDER BY in, out")
 
   // ---- implicit array-collapse + closures from text -----------------------
 
@@ -2246,7 +2287,7 @@ object SurqlQueries {
     graphChain, graphChainField,
     fulltextBm25, knnBruteText, knnAnnText, knnAnnFiltered, knnNoindex, sortCollate, sortNumeric,
     mutUpdateSet, mutDeleteBefore, mutCreate, mutCreateOne, mutUpsert,
-    mutUpsertPoint, mutRelateStmt,
+    mutUpsertPoint, mutRelateStmt, mutChangefeed, mutRelate, fnConditional,
     dynamicScan, mockSource, orderRand, fnRand, versionScope, timeoutScope,
     subqueryParent, fnRecordMeta, scriptTxn, scriptCancel, scriptInsert, upsertBare, refOnDelete, refCascade,
     scriptSchema, scriptUnique, scriptComputed, scriptAlterAnalyzer,

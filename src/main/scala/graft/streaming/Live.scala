@@ -16,8 +16,10 @@ import graft.operators.Mutations
   * types/src/notification.rs). There are no watermark/window constructs —
   * the feed is versionstamp-ordered, so the Spark mapping is:
   *
-  *  - change feed  = an append-only DataFrame (vs, id, action, record)
-  *    derived from each mutation batch — Delta CDF shape;
+  *  - change feed  = an append-only DataFrame (vs, id, action, rec_before,
+  *    rec_after) derived from each mutation batch by [[changes]] — Delta
+  *    CDF shape; a LIVE notification's record is its after-image, or the
+  *    before-image of a DELETE;
   *  - LIVE SELECT  = ONE transform (filter + project) applied identically
   *    to the batch feed and to a `readStream` over it — the streaming
   *    plan is the batch plan, so correctness is oracle-checkable in batch
@@ -29,19 +31,20 @@ import graft.operators.Mutations
   * map over the stream — no shuffle, no state store, unbounded throughput. */
 object Live {
 
-  /** Versionstamped change rows from a before/after table pair — the
-    * cf/writer analog. One row per changed record: (vs, id, action,
-    * payload columns of the after side; before values for deletes). */
-  def changeFeed(before: DataFrame, after: DataFrame, idCol: String,
+  /** The change rows of a before/after table pair — the cf/writer.rs
+    * analog, and the one diff that SHOW CHANGES, DEFINE EVENT and the LIVE
+    * rows all read: a full-outer join on the id, one row per changed
+    * record (vs, id, action, rec_before, rec_after). The action is CREATE,
+    * UPDATE or DELETE; a whole-row hash compare drops unchanged records.
+    * Both record sides travel (cf/writer.rs `store_diff`) so a consumer
+    * can retract the before-image (view maintenance below). */
+  def changes(before: DataFrame, after: DataFrame, idCol: String,
       versionstamp: Long): DataFrame = {
-    val bCols = before.columns
-    val b = before.select(col(idCol).as("id"),
-      xxhash64(struct(bCols.map(col).toIndexedSeq: _*)).as("h_before"),
-      struct(bCols.map(col).toIndexedSeq: _*).as("rec_before"))
-    val a = after.select(col(idCol).as("id"),
-      xxhash64(struct(after.columns.map(col).toIndexedSeq: _*)).as("h_after"),
-      struct(after.columns.map(col).toIndexedSeq: _*).as("rec_after"))
-    b.join(a, Seq("id"), "full_outer")
+    def side(df: DataFrame, name: String): DataFrame = {
+      val rec = struct(df.columns.map(col).toIndexedSeq: _*)
+      df.select(col(idCol).as("id"), xxhash64(rec).as(s"h_$name"), rec.as(s"rec_$name"))
+    }
+    side(before, "before").join(side(after, "after"), Seq("id"), "full_outer")
       .select(
         lit(versionstamp).as("vs"),
         col("id"),
@@ -49,7 +52,7 @@ object Live {
           .when(col("h_after").isNull, "DELETE")
           .when(col("h_before") =!= col("h_after"), "UPDATE")
           .as("action"),
-        coalesce(col("rec_after"), col("rec_before")).as("record"))
+        col("rec_before"), col("rec_after"))
       .filter(col("action").isNotNull)
   }
 
@@ -61,13 +64,17 @@ object Live {
     changes.filter(col("action") === "DELETE" || cond)
       .select(col("vs"), col("id"), col("action"), col("record"))
 
-  /** Drive [[notifications]] from LIVE SELECT statement text: the parsed
-    * WHERE lowers through SparkPlanner.toCol against the feed's record
-    * payload — the registration path (expr/statements/live.rs) and the
-    * fan-out transform share one condition definition. */
-  def liveFromText(feed: DataFrame, surql: String): DataFrame =
+  /** Drive [[notifications]] from LIVE SELECT statement text over
+    * [[changes]] rows: the notified record is the after-image, or the
+    * before-image of a DELETE. The parsed WHERE lowers through
+    * SparkPlanner.toCol against that record — the registration path
+    * (expr/statements/live.rs) and the fan-out transform share one
+    * condition definition. */
+  def liveFromText(changeRows: DataFrame, surql: String): DataFrame =
     graft.surql.Parser.parse(surql).stmts match {
       case scala.collection.Seq(s: graft.surql.ast.LiveStmt) =>
+        val feed = changeRows.withColumn("record",
+          coalesce(col("rec_after"), col("rec_before")))
         val recSchema = feed.schema("record").dataType
           .asInstanceOf[org.apache.spark.sql.types.StructType]
         // flatten the record payload so WHERE fields resolve as columns
@@ -82,29 +89,6 @@ object Live {
       case other =>
         throw new IllegalArgumentException(s"not a LIVE statement: $other")
     }
-
-  /** Change rows carrying BOTH record sides — the store-diff feed shape
-    * (cf/writer.rs `store_diff`), needed when a consumer must retract the
-    * before-image (view maintenance below). */
-  def changeFeedFull(before: DataFrame, after: DataFrame, idCol: String,
-      versionstamp: Long): DataFrame = {
-    val b = before.select(col(idCol).as("id"),
-      xxhash64(struct(before.columns.map(col).toIndexedSeq: _*)).as("h_before"),
-      struct(before.columns.map(col).toIndexedSeq: _*).as("rec_before"))
-    val a = after.select(col(idCol).as("id"),
-      xxhash64(struct(after.columns.map(col).toIndexedSeq: _*)).as("h_after"),
-      struct(after.columns.map(col).toIndexedSeq: _*).as("rec_after"))
-    b.join(a, Seq("id"), "full_outer")
-      .select(
-        lit(versionstamp).as("vs"),
-        col("id"),
-        when(col("h_before").isNull, "CREATE")
-          .when(col("h_after").isNull, "DELETE")
-          .when(col("h_before") =!= col("h_after"), "UPDATE")
-          .as("action"),
-        col("rec_before"), col("rec_after"))
-      .filter(col("action").isNotNull)
-  }
 
   /** DIFF-mode notifications (expr/statements/live.rs `diff`): instead of
     * the full record, each notification carries a JSON-patch describing
@@ -143,7 +127,7 @@ object Live {
       val o = Tables.orders(s, d)
       val after = Mutations.update(o, col("o_orderkey") < 30,
         Map("o_totalprice" -> (col("o_totalprice") + lit(1000.0))))
-      diffNotifications(changeFeedFull(o, after, "o_orderkey", versionstamp = 1L))
+      diffNotifications(changes(o, after, "o_orderkey", versionstamp = 1L))
         .orderBy("id")
   }
 
@@ -182,7 +166,15 @@ object Live {
       .agg(sum(col("dn")).as("cnt"), graft.functions.Exact.dsum(col("dv")).as("total"))
       .filter(col("cnt") > 0)
 
-  /** CORRECTNESS row: the liveSelect mutation scenario's view, maintained
+  /** The orders table after the `mut_upsert` INSERT … ON DUPLICATE KEY
+    * UPDATE ([[graft.operators.SurqlQueries.ordersUpsert]]), read back
+    * through the script executor: the after-state the rows below diff
+    * against the base table. */
+  private def upsertedOrders(s: SparkSession, d: String): DataFrame =
+    graft.surql.SparkPlanner.script(s, d,
+      s"${graft.operators.SurqlQueries.ordersUpsert} RETURN NONE; SELECT * FROM orders;")
+
+  /** CORRECTNESS row: the orders upsert scenario's view, maintained
     * incrementally (base rows as insertion deltas + the change feed's
     * retract/insert deltas) — the oracle RECOMPUTES the same view from
     * scratch on the after-state, so a green row proves maintained state ==
@@ -201,20 +193,14 @@ object Live {
         FROM after GROUP BY g ORDER BY g""") {
     (s, d) =>
       val o = Tables.orders(s, d)
-      val deltaUp = o.filter(col("o_orderkey") < 50)
-        .withColumn("o_totalprice", col("o_totalprice") + lit(1000.0))
-      val deltaNew = o.filter(col("o_orderkey") < 5)
-        .withColumn("o_orderkey", col("o_orderkey") + 1000000L)
-        .withColumn("o_orderstatus", lit("N"))
-      val after = Mutations.upsert(o, deltaUp.unionByName(deltaNew), "o_orderkey")
-      val feed = changeFeedFull(o, after, "o_orderkey", versionstamp = 1L)
+      val feed = changes(o, upsertedOrders(s, d), "o_orderkey", versionstamp = 1L)
       val base = o.select(col("o_orderstatus").as("g"),
         lit(1L).as("dn"), col("o_totalprice").as("dv"))
       maintainView(base.unionByName(viewDeltas(feed, "o_orderstatus", "o_totalprice")))
         .orderBy("g")
   }
 
-  /** CORRECTNESS row: the mutChangefeed scenario's feed run through a LIVE
+  /** CORRECTNESS row: the orders upsert scenario's feed run through a LIVE
     * SELECT with a condition — hash-checked against the oracle replaying
     * the same mutation. The same `notifications` transform is what the
     * streaming path runs per microbatch (LiveSpec). */
@@ -228,14 +214,8 @@ object Live {
        FROM orders WHERE o_orderkey < 5 AND o_totalprice > 100000.0
        ORDER BY id""") {
     (s, d) =>
-      val o = Tables.orders(s, d)
-      val deltaUp = o.filter(col("o_orderkey") < 50)
-        .withColumn("o_totalprice", col("o_totalprice") + lit(1000.0))
-      val deltaNew = o.filter(col("o_orderkey") < 5)
-        .withColumn("o_orderkey", col("o_orderkey") + 1000000L)
-        .withColumn("o_orderstatus", lit("N"))
-      val after = Mutations.upsert(o, deltaUp.unionByName(deltaNew), "o_orderkey")
-      val feed = changeFeed(o, after, "o_orderkey", versionstamp = 1L)
+      val feed = changes(Tables.orders(s, d), upsertedOrders(s, d), "o_orderkey",
+        versionstamp = 1L)
       // the registration is REAL statement text; its WHERE becomes the
       // notification condition on the feed
       liveFromText(feed, "LIVE SELECT * FROM orders WHERE o_totalprice > 100000.0")

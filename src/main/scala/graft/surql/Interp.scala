@@ -4650,7 +4650,8 @@ final class Interp {
           }
         case scala.None =>
           var touched = 0
-          t.toSeq.foreach { case (key, doc) =>
+          // an event fired for one record may have deleted a later one
+          t.toSeq.iterator.filter { case (key, _) => t.contains(key) }.foreach { case (key, doc) =>
             val de = env.copy(doc = Some(doc))
             // a WHERE match counts as touched even when the UPDATE
             // permission denies it — a denied row must not flip an UPSERT
@@ -4878,8 +4879,6 @@ final class Interp {
         }
       }
       val t = table(tb)
-      // the mark goes on the stored key that loosely matches the row's id
-      if (s.relation) markEdge(tb, findKeyLoose(t, key).getOrElse(key))
       // duplicate = same record id OR a unique-index collision
       val rid = VRid(tb, key)
       val idxConflict = uniqueIndexes.getOrElse(tb, Vector.empty).view.flatMap {
@@ -4921,7 +4920,9 @@ final class Interp {
                 case _ => VRid(tb, k0)
               }
               val updated = applyFieldPipeline(tb, erid, updated0, Some(doc), isCreate = false, env)
-              putRecord(t, findKeyLoose(t, k0).get, updated)
+              val stored = findKeyLoose(t, k0).get
+              if (s.relation) markEdge(tb, stored)
+              putRecord(t, stored, updated)
               fireEvents(tb, Some(doc), Some(updated), env)
               // the update arm has a real initial document, so RETURN
               // DIFF/BEFORE see it (doc/pluck.rs diffs initial→current)
@@ -4933,6 +4934,7 @@ final class Interp {
           val doc0 = VObj(row.fields.updated("id", rid))
           val doc = applyFieldPipeline(tb, rid, doc0, scala.None, isCreate = true, env)
           checkUniqueIndexes(tb, rid, doc)
+          if (s.relation) markEdge(tb, key)
           putRecord(t, key, doc)
           fireEvents(tb, scala.None, Some(doc), env, Some(doc0))
           Some((scala.None, doc))
@@ -4996,7 +4998,10 @@ final class Interp {
         case _ => edgeKeyFromValue.orElse(dataId).getOrElse(nextId())
       }
       Interp.checkIdKey(edgeTable, key)
-      val rid = VRid(edgeTable, key)
+      // a key loosely equal to a stored one writes over that record under
+      // its stored id, as UPDATE does, so stored keys stay loosely distinct
+      val stored = tables.get(edgeTable).flatMap(findKeyLoose(_, key)).getOrElse(key)
+      val rid = VRid(edgeTable, stored)
       // RELATE may only target relation-capable tables (TYPE ANY or
       // RELATION); the error names the RECORD being written (doc/relate.rs
       // — define/table/type_normal)
@@ -5026,10 +5031,7 @@ final class Interp {
         VObj(d.fields.updated("id", rid: V).updated("in", from: V).updated("out", to: V))
       }
       val doc = applyFieldPipeline(edgeTable, rid, doc0, scala.None, isCreate = true, env)
-      // a key loosely equal to a stored one writes over that record, as
-      // UPDATE does, so stored keys stay loosely distinct
       val t = table(edgeTable)
-      val stored = findKeyLoose(t, key).getOrElse(key)
       putRecord(t, stored, doc)
       markEdge(edgeTable, stored) // RecordType::Edge metadata (doc/alter.rs:93)
       fireEvents(edgeTable, scala.None, Some(doc), env)

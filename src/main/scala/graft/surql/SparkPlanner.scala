@@ -1135,15 +1135,15 @@ object SparkPlanner {
       // between the table's state at BEGIN and now (cf/reader.rs reads the
       // versionstamped log; here the lazy overlay IS the uncommitted log,
       // so the diff recovers exactly the entries it would hold). Flat
-      // (id, action) rows — the engine's analytic change-row shape, same
-      // as the mut_changefeed surface.
+      // (id, action) rows projected from the change rows that events and
+      // LIVE queries read (graft.streaming.Live.changes).
       case s: ShowChangesStmt =>
         val t = s.table.getOrElse(
           throw SqlError("SparkPlanner: SHOW CHANGES needs FOR TABLE"))
         val atBegin = Tables.withOverlay(txn.overlay)(Tables(spark, dir, t))
         val cur = planWith(Tables(spark, dir, t))
-        val log = graft.operators.Mutations
-          .changeLog(atBegin, cur, recordKey(t)).orderBy("id")
+        val log = graft.streaming.Live.changes(atBegin, cur, recordKey(t), 0L)
+          .select(col("id"), lower(col("action")).as("action")).orderBy("id")
         last = Some(s.limit.map(e => Eval.evalConst(e) match {
           case n: VNum => log.limit(n.toDouble.toInt)
           case other => throw SqlError(
@@ -1405,8 +1405,8 @@ object SparkPlanner {
     * (doc/event.rs: per changed document, `$event`/`$before`/`$after` bind
     * and the WHEN condition gates the THEN body). Set-at-a-time here: the
     * change rows come from the change-feed diff of the table's before/after
-    * states ([[graft.streaming.Live.changeFeedFull]] — the same machinery
-    * LIVE SELECT runs on), WHEN is a distributed filter over them, and a
+    * states ([[graft.streaming.Live.changes]] — the same rows SHOW CHANGES
+    * and LIVE SELECT read), WHEN is a distributed filter over them, and a
     * `THEN (CREATE target SET …)` body appends one projected row per fired
     * change to the target table's overlay state. Events do not re-fire on
     * event-generated writes (no cascades), matching one transaction level. */
@@ -1417,7 +1417,7 @@ object SparkPlanner {
     if (applicable.isEmpty) return overlay0
     val key = recordKey.getOrElse(table,
       throw SqlError(s"SparkPlanner: no record key for table $table"))
-    val feed = graft.streaming.Live.changeFeedFull(before, after, key, 0L)
+    val feed = graft.streaming.Live.changes(before, after, key, 0L)
     applicable.foldLeft(overlay0) { (ov, d) =>
       val binds = Map(
         "event"  -> col("action"),
@@ -1467,13 +1467,21 @@ object SparkPlanner {
     case other                              => other.simpleString
   }
 
+  /** A scanned table: its script state or parquet file, or for a built-in
+    * relation table (`supplies`, `next_order`) the stored edge rows that
+    * graph hops read. */
+  private def scanTable(spark: SparkSession, dir: String, name: String): DataFrame =
+    if (!Tables.overridden(name) && graft.operators.GraphOps.edgeDefsBase.contains(name))
+      graft.operators.GraphOps.edgeTable(spark, dir, name)
+    else Tables(spark, dir, name)
+
   /** One FROM source → (DataFrame, source table name if concrete). */
   private def planSource(spark: SparkSession, dir: String, e: Expr,
       params: Map[String, V] = Map.empty): (DataFrame, String) = e match {
     case Idiom(Seq(PField(name))) =>
-      (permFilter(spark, dir, Tables(spark, dir, name), name), name)
+      (permFilter(spark, dir, scanTable(spark, dir, name), name), name)
     case TableRef(name) =>
-      (permFilter(spark, dir, Tables(spark, dir, name), name), name)
+      (permFilter(spark, dir, scanTable(spark, dir, name), name), name)
     // DynamicScan: `FROM $param` resolves the bound value to a concrete
     // source at plan time and dispatches (scan/dynamic.rs:53)
     case Param(name) =>

@@ -10,7 +10,10 @@ import graft.surql._
   * with the reference's error (RecordIdKey has no regex variant) while a
   * regex read probe still matches by pattern, a bulk FOR/CREATE loop
   * compares no key, every write path keeps stored keys loosely distinct,
-  * and a probe that two stored keys share a bucket with finds its match. */
+  * and a probe that two stored keys share a bucket with finds its match.
+  * Three write paths keep to the records actually stored: RELATE over a
+  * loosely equal key keeps the stored id, an ignored INSERT RELATION marks
+  * no edge, and a table UPDATE skips a record an event deleted. */
 class InterpKeySpec extends AnyFunSuite {
 
   private def run(sql: String): Seq[QueryResult] = {
@@ -139,5 +142,29 @@ class InterpKeySpec extends AnyFunSuite {
       "SELECT count() FROM e GROUP ALL;").contains("count: 1"))
     assert(count("RELATE a:1->e:1->b:1; RELATE a:1->e:1->b:1; " +
       "SELECT count() FROM e GROUP ALL;").contains("count: 1"))
+  }
+
+  test("RELATE over a loosely equal stored key keeps the stored id") {
+    val rs = run("LET $d = 1dec; RELATE a:1->e:1->b:1; RELATE a:1->e:$d->b:2 RETURN VALUE id; " +
+      "SELECT VALUE id FROM e;")
+    val stored = QOk(VArr(Vector(VRid("e", VInt(1)))))
+    assert(rs(2) == stored, rs(2))
+    assert(rs(3) == stored, rs(3))
+  }
+
+  test("an ignored INSERT RELATION leaves a plain record unmarked") {
+    val rs = run("CREATE t:1 SET in = a:1, out = b:1; " +
+      "INSERT RELATION IGNORE INTO t {id: 1, in: a:2, out: b:2}; " +
+      "UPDATE t:1 SET in = a:9 RETURN in;")
+    assert(rs(2) == QOk(VArr(Vector(V.obj("in" -> VRid("a", VInt(9)))))), rs(2))
+  }
+
+  test("a table UPDATE does not bring back a record its event deleted") {
+    val rs = run("DEFINE EVENT ev ON n WHEN $event = 'UPDATE' AND $after.id = n:1 THEN { DELETE n:2 }; " +
+      "CREATE n:1 SET v = 0; CREATE n:2 SET v = 0; UPDATE n SET v = 1 RETURN VALUE id; " +
+      "SELECT VALUE id FROM n;")
+    val only1 = QOk(VArr(Vector(VRid("n", VInt(1)))))
+    assert(rs(3) == only1, rs(3))
+    assert(rs(4) == only1, rs(4))
   }
 }

@@ -7,9 +7,10 @@ import scala.util.Random
 import graft.surql._
 
 /** Seeded SurrealQL scripts over a node table `n` and an edge table `e`:
-  * creates, RELATEs, `in`/`out` written on plain records, deletes with edge
-  * cascades and events, `BEGIN … CANCEL`, a failing `FOR`, a `USE` switch
-  * and back, `REMOVE TABLE`. Keys mix ints, a float and a decimal equal to
+  * creates, RELATEs, `in`/`out` written on plain records, `INSERT RELATION
+  * IGNORE`, deletes with edge cascades and events, UPDATEs whose event
+  * deletes a record, `BEGIN … CANCEL`, a failing `FOR`, a `USE` switch and
+  * back, `REMOVE TABLE`. Keys mix ints, a float and a decimal equal to
   * ints, strings, arrays and generated ids, so loose key matches and
   * rollbacks are exercised together.
   *
@@ -43,7 +44,7 @@ object InterpScripts {
     val r = new Random(seed)
     def k(): String = keys(r.nextInt(keys.length))
     def n(): Int = r.nextInt(4)
-    def simple(): String = r.nextInt(16) match {
+    def simple(): String = r.nextInt(17) match {
       case 0  => s"CREATE n:${k()} SET v = ${n()};"
       case 1  => s"CREATE n SET v = ${n()};"
       case 2  => s"RELATE n:${k()}->e->n:${k()} SET w = ${n()};"
@@ -59,9 +60,11 @@ object InterpScripts {
       case 12 => s"INSERT RELATION INTO e {id: ${k()}, in: n:${k()}, out: n:${k()}, w: ${n()}};"
       case 13 => s"UPSERT n:${k()} SET v = ${n()};"
       case 14 => s"UPDATE n SET in = n:${k()}, out = n:${k()} WHERE v = ${n()};"
+      case 15 => s"INSERT RELATION IGNORE INTO ${if (r.nextBoolean()) "e" else "n"} " +
+        s"{id: ${k()}, in: n:${k()}, out: n:${k()}, w: ${n()}};"
       case _  => s"INSERT INTO n {id: ${k()}, v: ${n()}} ON DUPLICATE KEY UPDATE v += 1;"
     }
-    def chunk(): String = r.nextInt(24) match {
+    def chunk(): String = r.nextInt(26) match {
       case 0 => s"DEFINE EVENT ev ON e WHEN $$event = 'DELETE' AND $$before.w = ${n()} THEN { THROW 'boom' };"
       case 1 => s"DEFINE EVENT ev ON e WHEN $$event = 'DELETE' AND $$before.w = ${n()} THEN { DELETE n:${k()} };"
       case 2 => "REMOVE EVENT ev ON e;"
@@ -71,6 +74,8 @@ object InterpScripts {
         s"IF $$i = ${1 + r.nextInt(3)} { THROW 'stop' }; };"
       case 6 => s"USE DB other; ${simple()} ${simple()} USE DB test;"
       case 7 => if (r.nextBoolean()) "REMOVE TABLE e;" else "REMOVE TABLE n;"
+      case 8 => s"DEFINE EVENT up ON n WHEN $$event = 'UPDATE' THEN { DELETE n:${k()} };"
+      case 9 => "REMOVE EVENT up ON n;"
       case _ => simple()
     }
     Vector.fill(12 + r.nextInt(20))(chunk())

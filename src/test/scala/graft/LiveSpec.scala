@@ -52,7 +52,7 @@ class LiveSpec extends AnyFunSuite {
     import spark.implicits._
     val before = Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("id", "v")
     val after  = Seq((1L, "a"), (2L, "B"), (4L, "d")).toDF("id", "v")
-    val feed = Live.changeFeed(before, after, "id", versionstamp = 7L)
+    val feed = Live.changes(before, after, "id", versionstamp = 7L)
       .select("vs", "id", "action").orderBy("id")
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getString(2))).toSeq
     assert(feed == Seq((7L, 2L, "UPDATE"), (7L, 3L, "DELETE"), (7L, 4L, "CREATE")))
@@ -67,7 +67,7 @@ class LiveSpec extends AnyFunSuite {
     // delete 3, create 4
     val before = Seq((1L, "a", 10.0), (2L, "a", 20.0), (3L, "b", 30.0)).toDF("id", "g", "v")
     val after  = Seq((1L, "a", 10.0), (2L, "b", 20.0), (4L, "b", 40.0)).toDF("id", "g", "v")
-    val feed = Live.changeFeedFull(before, after, "id", versionstamp = 1L)
+    val feed = Live.changes(before, after, "id", versionstamp = 1L)
 
     // the SAME delta decomposition streams: base rows as insertions
     // (batch 1), then the change feed's retract/insert deltas (batch 2);

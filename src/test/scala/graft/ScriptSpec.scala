@@ -49,6 +49,27 @@ class ScriptSpec extends AnyFunSuite {
     assert(out.length == 4)
   }
 
+  test("an UPDATE event fires for exactly the update rows SHOW CHANGES reports") {
+    // keys 0, 1, 6 and 7 are already 'F' at sf0.001: the UPDATE leaves them
+    // unchanged, so neither the feed nor the event sees them (doc/event.rs
+    // skips an unchanged document); the CREATE must not fire the event
+    def run(last: String) = SparkPlanner.script(spark, sf,
+      s"""DEFINE EVENT audit ON TABLE orders WHEN $$event = 'UPDATE' THEN (
+            CREATE events SET event_id = $$after.o_orderkey + 300000,
+              user_id = 1, event_type = 'audit', value = 1.0, props = '{}');
+          UPDATE orders SET o_orderstatus = 'F' WHERE o_orderkey < 8;
+          CREATE orders:930002 SET o_custkey = 1, o_orderstatus = 'O',
+            o_totalprice = 5.0, o_orderpriority = '1-URGENT';
+          SHOW CHANGES FOR TABLE orders SINCE 0;
+          $last""").collect()
+    val changes = run("").map(r => (r.getLong(0), r.getString(1))).toSet
+    val fired = run("SELECT event_id FROM events WHERE event_type = 'audit';")
+      .map(_.getLong(0) - 300000L).toSet
+    assert(changes == Set((2L, "update"), (3L, "update"), (4L, "update"),
+      (5L, "update"), (930002L, "create")), s"got $changes")
+    assert(fired == changes.collect { case (k, "update") => k }, s"fired for $fired")
+  }
+
   test("script overlay does not leak outside the script") {
     SparkPlanner.script(spark, sf,
       """UPDATE orders SET o_orderpriority = 'X' WHERE o_orderkey = 1;
