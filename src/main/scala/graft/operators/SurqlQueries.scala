@@ -2118,9 +2118,10 @@ object SurqlQueries {
 
   /** DEFINE EVENT triggers on the Spark path (doc/event.rs): the mutation's
     * change-feed diff binds `$event`/`$before`/`$after` per changed record,
-    * WHEN gates distributively, and the THEN CREATE appends one projected
-    * row per fired change to the target table — set-at-a-time trigger
-    * execution inside the same script transaction. The oracle replays the
+    * WHEN gates distributively, and the THEN CREATE creates one record per
+    * fired change in the target table through the create arm every new
+    * record takes — set-at-a-time trigger execution inside the same script
+    * transaction. The oracle replays the
     * trigger as a projection of the rows the UPDATE actually changed. */
   val defineEvent = Q("define_event",
     """SELECT o_orderkey + 9000000 AS event_id, o_custkey AS user_id,

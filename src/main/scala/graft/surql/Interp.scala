@@ -369,7 +369,9 @@ object Interp {
     text
   }
 
-  private val idRng = new java.util.concurrent.atomic.AtomicLong(0x5eed5eedL)
+  /** The generated-id counter; a differential run resets it per script so
+    * each script's ids do not depend on the scripts before it. */
+  private[graft] val idRng = new java.util.concurrent.atomic.AtomicLong(0x5eed5eedL)
   /** 20-char lowercase-alnum record id, shaped like the reference's random
     * ids (nanoid alphabet subset) but deterministic per session. */
   def randomId(): String = {
@@ -5031,11 +5033,16 @@ final class Interp {
         VObj(d.fields.updated("id", rid: V).updated("in", from: V).updated("out", to: V))
       }
       val doc = applyFieldPipeline(edgeTable, rid, doc0, scala.None, isCreate = true, env)
-      val t = table(edgeTable)
-      putRecord(t, stored, doc)
-      markEdge(edgeTable, stored) // RecordType::Edge metadata (doc/alter.rs:93)
-      fireEvents(edgeTable, scala.None, Some(doc), env)
-      shapeOutput(scala.None, Some(doc), s.output, env).foreach(results += _)
+      // the create permission and the unique indexes hold for an edge as
+      // for any created record (execCreate; doc/allow.rs, idx/index.rs)
+      if (permAllows(edgeTable, "create", doc)) {
+        checkUniqueIndexes(edgeTable, rid, doc)
+        val t = table(edgeTable)
+        putRecord(t, stored, doc)
+        markEdge(edgeTable, stored) // RecordType::Edge metadata (doc/alter.rs:93)
+        fireEvents(edgeTable, scala.None, Some(doc), env)
+        shapeOutput(scala.None, Some(doc), s.output, env).foreach(results += _)
+      }
     }
     if (s.only) results.headOption.getOrElse(VNone) else VArr(results.toVector)
   }

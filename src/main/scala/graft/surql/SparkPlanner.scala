@@ -1,6 +1,6 @@
 package graft.surql
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -613,7 +613,7 @@ object SparkPlanner {
     def applyMut(table: String, before: DataFrame, after: DataFrame,
         ret: DataFrame): Unit = {
       st.overlay += (table -> applyComputed(table, after))
-      st.overlay = fireScriptEvents(spark, dir, table, before, after, st.overlay, st.eventDefs)
+      fireScriptEvents(table, before, after)
       last = Some(ret)
     }
     // the rows a mutation touches: key ∧ WHERE ∧ the table's `action`
@@ -641,23 +641,76 @@ object SparkPlanner {
           after.join(before.select(key), Seq(key), "left_semi"), touchedIdx, key)
       (after, before, graft.operators.Mutations.update(before, lit(true), setsU))
     }
-    // the create arm (CREATE; UPSERT of an absent record): synthesized rows
-    // behind the duplicate-id anti-join, the create permission (a denied
-    // create is silently skipped, doc/allow.rs), the field pipeline, then
-    // the unique check over the created rows. Returns (`onto` ∪ created,
-    // created).
-    def createArm(t: String, base: DataFrame, onto: DataFrame, ctx: Ctx,
-        rows: Seq[(V, Map[String, Column])]): (DataFrame, DataFrame) = {
-      val key = recordKey(t)
-      val fresh = synthRows(spark, t, base.schema, rows)
-        .join(base.select(key), Seq(key), "left_anti")
-      val permitted = actionPermCond(spark, dir, t, "create", base.schema)
-        .map(fresh.filter).getOrElse(fresh)
-      val created = applyFieldDefs(permitted,
-        st.fldDefs.getOrElse(t, Vector.empty), ctx, t, key)
-      val after = onto.unionByName(created)
-      checkUniqueIndexes(t, after, created, st.uniqDefs.getOrElse(t, Vector.empty), key)
+    // the create stage every new record passes (doc/mod.rs lifecycle):
+    // the create permission (a denied create is silently skipped,
+    // doc/allow.rs), then the field pipeline, over rows conformed by
+    // [[conformRows]]
+    def createStage(t: String, ctx: Ctx, rows: DataFrame): DataFrame = {
+      val permitted = actionPermCond(spark, dir, t, "create", rows.schema)
+        .map(rows.filter).getOrElse(rows)
+      applyFieldDefs(permitted, st.fldDefs.getOrElse(t, Vector.empty), ctx, t, recordKey(t))
+    }
+    // the create arm of CREATE, UPSERT, RELATE and an event's THEN CREATE
+    // (INSERT runs the stage inside its own arms): the create stage, the
+    // union onto the rows `onto` keeps of the table — RELATE's drop the
+    // edges it replaces — then the unique check over the created rows.
+    // Returns (table after-state, created).
+    def createArm(t: String, ctx: Ctx, rows: DataFrame)(
+        onto: DataFrame => DataFrame): (DataFrame, DataFrame) = {
+      val created = createStage(t, ctx, rows)
+      val after = onto(created).unionByName(created)
+      checkUniqueIndexes(t, after, created, st.uniqDefs.getOrElse(t, Vector.empty), recordKey(t))
       (after, created)
+    }
+    // the constant row of a CREATE or UPSERT target id `k`
+    def synthRow(schema: StructType, key: String, sets: Map[String, Column])(k: V): DataFrame =
+      conformRows(spark.range(1), schema, sets + (key -> ridKeyLit(k)))
+    // DEFINE EVENT triggers for one committed mutation (doc/event.rs: per
+    // changed document, `$event`/`$before`/`$after` bind and the WHEN
+    // condition gates the THEN body). Set-at-a-time: the change rows are
+    // the change-feed diff of the table's before/after states
+    // (graft.streaming.Live.changes — the rows SHOW CHANGES and LIVE SELECT
+    // read), WHEN is a distributed filter over them, and a `THEN (CREATE
+    // target SET …)` body creates one record per fired change through the
+    // create arm; a SET that gives no id keys it by the changed record's.
+    // Events do not re-fire on event-generated writes (no cascades),
+    // matching one transaction level.
+    def fireScriptEvents(table: String, before: DataFrame, after: DataFrame): Unit = {
+      val applicable = st.eventDefs.filter(_.table == table)
+      if (applicable.nonEmpty) {
+        val feed = graft.streaming.Live.changes(before, after, recordKey(table), 0L)
+        applicable.foreach { d =>
+          val binds = Map(
+            "event"  -> col("action"),
+            "after"  -> col("rec_after"),
+            "before" -> col("rec_before"),
+            "value"  -> col("rec_after"),
+            "this"   -> col("rec_after"))
+          val whenCtx = Ctx(spark, dir, table, before.schema, Map.empty,
+            lambdaParams = binds)
+          val fired = d.whenE.map(w => feed.filter(toCol(w, whenCtx))).getOrElse(feed)
+          d.thenE.foreach {
+            case Subquery(cs: CreateStmt) =>
+              val tb = cs.what match {
+                case Seq(Idiom(Seq(PField(t)))) => t
+                case Seq(TableRef(t))           => t
+                case other => throw SqlError(
+                  s"SparkPlanner: event THEN CREATE needs a plain table target, got $other")
+              }
+              val tgtBase = st.overlay.getOrElse(tb, Tables(spark, dir, tb))
+              val key = recordKey(tb)
+              val ctx = Ctx(spark, dir, tb, tgtBase.schema, Map.empty)
+              val sets = setMap(cs.data, ctx.copy(lambdaParams = binds), requireExisting = true)
+              val given =
+                if (sets.contains(key)) sets
+                else sets + (key -> genKeyCol(tgtBase.schema(key).dataType, col("id")))
+              st.overlay += (tb -> createArm(tb, ctx,
+                conformRows(fired, tgtBase.schema, given))(_ => tgtBase)._1)
+            case other => throw SqlError(
+              s"SparkPlanner: unsupported event THEN body $other (expected (CREATE …))")
+          }
+        }
+      }
     }
     // deleting a record purges the graph edges pointing in or out of it
     // (doc/purge.rs; Interp cascadeEdgeDeletes) — one anti-join per
@@ -686,8 +739,7 @@ object SparkPlanner {
               kept = kept.join(
                 gone.withColumnRenamed(goneKey, "out"), Seq("out"), "left_anti")
             st.overlay += (et -> kept)
-            st.overlay = fireScriptEvents(spark, dir, et, ebase, kept,
-              st.overlay, st.eventDefs)
+            fireScriptEvents(et, ebase, kept)
           }
         case _ => ()
       }
@@ -707,15 +759,6 @@ object SparkPlanner {
       if (depth <= 0) throw SqlError(
         "SparkPlanner: ON DELETE CASCADE chain exceeded depth 32 — " +
           "reference cycle or pathologically deep chain")
-      def asV(x: Any): V = x match {
-        case null => VNull
-        case l: Long => VInt(l)
-        case i: Int => VInt(i.toLong)
-        case d: Double => VFloat(d)
-        case s: String => VStr(s)
-        case d: java.math.BigDecimal => VInt(d.longValue)
-        case other => VStr(other.toString)
-      }
       val goneKey = gone.columns.head
       st.fldDefs.toSeq.foreach { case (tbl, defs) =>
         defs.filter(_.meta.exists(_.referenceRaw.isDefined)).foreach { fd =>
@@ -793,8 +836,7 @@ object SparkPlanner {
                           else rbase.crossJoin(goneSet)
                             .filter(!coalesce(hitC, lit(false))).drop("__gone")
                         st.overlay += (tbl -> kept)
-                        st.overlay = fireScriptEvents(spark, dir, tbl, rbase,
-                          kept, st.overlay, st.eventDefs)
+                        fireScriptEvents(tbl, rbase, kept)
                         purgeEdges(tbl, victims)
                         applyRefActions(tbl, victims, depth - 1)
                       }
@@ -833,8 +875,7 @@ object SparkPlanner {
                             x => !array_contains(col("__gone"), x))))
                         .drop("__gone")
                       st.overlay += (tbl -> updated)
-                      st.overlay = fireScriptEvents(spark, dir, tbl, rbase,
-                        updated, st.overlay, st.eventDefs)
+                      fireScriptEvents(tbl, rbase, updated)
                   }
                 case _ =>
                   val goneAs = gone.select(col(goneKey).as(path)).distinct()
@@ -849,8 +890,7 @@ object SparkPlanner {
                       if (victims.limit(1).collect().nonEmpty) {
                         val kept = rbase.join(goneAs, Seq(path), "left_anti")
                         st.overlay += (tbl -> kept)
-                        st.overlay = fireScriptEvents(spark, dir, tbl, rbase,
-                          kept, st.overlay, st.eventDefs)
+                        fireScriptEvents(tbl, rbase, kept)
                         purgeEdges(tbl, victims)
                         applyRefActions(tbl, victims, depth - 1)
                       }
@@ -862,8 +902,7 @@ object SparkPlanner {
                             rbase.schema(path).dataType)).otherwise(col(path)))
                         .drop("__hit")
                       st.overlay += (tbl -> updated)
-                      st.overlay = fireScriptEvents(spark, dir, tbl, rbase,
-                        updated, st.overlay, st.eventDefs)
+                      fireScriptEvents(tbl, rbase, updated)
                   }
               }
             }
@@ -1243,11 +1282,11 @@ object SparkPlanner {
           }
           // a brand-new relation table starts from zero stored rows
           val base = rb.base.getOrElse(rb.edges.limit(0))
-          // RELATE replaces an existing edge id (Interp: t(key) = doc)
-          val after = base.join(rb.edges.select(rb.key), Seq(rb.key), "left_anti")
-            .unionByName(rb.edges)
           val ctx = Ctx(spark, dir, rb.table, base.schema, Map.empty)
-          (rb.table, base, after, shapeOutput(noneRows(rb.edges), rb.edges, s.output, ctx))
+          // RELATE replaces an existing edge id (Interp: t(key) = doc)
+          val (after, created) = createArm(rb.table, ctx, rb.edges)(
+            c => base.join(c.select(rb.key), Seq(rb.key), "left_anti"))
+          (rb.table, base, after, shapeOutput(noneRows(created), created, s.output, ctx))
         }
         applyMut(table, base, after, ret)
       case s: CreateStmt =>
@@ -1289,24 +1328,12 @@ object SparkPlanner {
           }
           val ctx = Ctx(spark, dir, t, base.schema, Map.empty)
           val sets = setMap(s.data, ctx, requireExisting = true)
-          // reference errors on CREATE of an existing id (err/mod.rs:498
-          // "Database record `…` already exists") — the anti-join guard
-          // alone would silently no-op, so probe the constant target keys
-          val clash = base.select(col(key))
-            .filter(col(key).isin(targets.map(ridKeyLit): _*)).limit(1).collect()
-          if (clash.nonEmpty) {
-            val hit = targets.find(k =>
-              // mirror ridKeyLit's literal forms (Row.get.toString of a
-              // double is Java's "2.0", NOT the `2f` raw rendering)
-              clash.head.get(0).toString == (k match {
-                case VStr(sv)   => sv
-                case VFloat(dv) => java.lang.Double.toString(dv)
-                case other      => other.renderRaw
-              })).getOrElse(targets.head)
-            throw SqlError(
-              s"Database record `${Render.sql(VRid(t, hit))}` already exists")
-          }
-          val (after, created) = createArm(t, base, base, ctx, targets.map((_, sets)))
+          // an existing target id is an error, so no row needs the anti-join
+          dupIdProbe(t, base.select(col(key))
+            .filter(col(key).isin(targets.map(ridKeyLit): _*)),
+            stored => targets.find(V.looseEq(_, stored)).getOrElse(stored))
+          val (after, created) = createArm(t, ctx,
+            targets.map(synthRow(base.schema, key, sets)).reduce(_ unionByName _))(_ => base)
           (t, base, after, shapeOutput(noneRows(created), created, s.output, ctx))
         }
         applyMut(table, base, after, ret)
@@ -1321,16 +1348,12 @@ object SparkPlanner {
           val ctx = Ctx(spark, dir, t, base.schema, Map.empty)
           val key = recordKey(t)
           val (rows, maxMult) = insertRows(spark, dir, s.values, t, base, st.params, s.relation)
-          val pipeline = (firsts: DataFrame) => {
-            // a denied create is silently skipped (doc/allow.rs)
-            val f1 = actionPermCond(spark, dir, t, "create", base.schema)
-              .map(firsts.filter).getOrElse(firsts)
-            val f2 = applyFieldDefs(f1, st.fldDefs.getOrElse(t, Vector.empty), ctx, t, key)
-            // INSERT IGNORE also skips rows whose unique-index tuple
-            // already exists (insert_ignore_no_duplicate_key golden);
-            // NULL-component tuples are exempt like the write check
-            if (!s.ignore) f2
-            else st.uniqDefs.getOrElse(t, Vector.empty).foldLeft(f2) {
+          // INSERT IGNORE also skips rows whose unique-index tuple already
+          // exists (insert_ignore_no_duplicate_key golden); NULL-component
+          // tuples are exempt like the write check
+          def ignoreTaken(fresh: DataFrame): DataFrame =
+            if (!s.ignore) fresh
+            else st.uniqDefs.getOrElse(t, Vector.empty).foldLeft(fresh) {
               case (df, (_, fields)) if fields.forall(df.columns.contains) =>
                 val nonNull = fields.map(col(_).isNotNull).reduce(_ && _)
                 val taken = base.filter(nonNull)
@@ -1339,12 +1362,12 @@ object SparkPlanner {
                   df.filter(nonNull).join(taken, fields.toSeq, "left_anti"))
               case (df, _) => df
             }
-          }
           val dupSetsOf = (dctx: Ctx) => s.onDuplicate.map(sets => enforceSets(
             setMap(Some(SetData(sets)), dctx, requireExisting = true),
             st.fldDefs.getOrElse(t, Vector.empty), dctx, t, key)).getOrElse(Map.empty)
           val (bef, after, changed, diffOpt) =
-            insertArms(spark, s, base, ctx, t, key, rows, maxMult, pipeline, dupSetsOf)
+            insertArms(spark, s, base, ctx, t, key, rows, maxMult,
+              firsts => ignoreTaken(createStage(t, ctx, firsts)), dupSetsOf)
           checkUniqueIndexes(t, after, changed,
             st.uniqDefs.getOrElse(t, Vector.empty), key)
           (t, base, after,
@@ -1358,6 +1381,11 @@ object SparkPlanner {
           val ctx = Ctx(spark, dir, t, base.schema, Map.empty)
           val sets = setMap(s.data, ctx, requireExisting = true)
           val cond = mutCond(t, ctx, keyPred, s.where, "update")
+          // the create arm's one row, unless the table holds its id
+          val key = recordKey(t)
+          def createOne(keyV: V, onto: DataFrame) = createArm(t, ctx,
+            synthRow(base.schema, key, sets)(keyV)
+              .join(base.select(key), Seq(key), "left_anti"))(_ => onto)
           what match {
             case TableRef(_) | Idiom(Seq(PField(_))) =>
               // UPSERT over a whole table: update the WHERE-matching rows;
@@ -1373,10 +1401,9 @@ object SparkPlanner {
                 val (after, before, changed) = updateArm(t, base, ctx, cond, sets)
                 (t, base, after, shapeOutput(before, changed, s.output, ctx))
               } else {
-                val keyV = createDataId(s.data, st.params)
-                  .getOrElse(genKeyV(base.schema(recordKey(t)).dataType))
-                val (after, created) = createArm(t, base, base, ctx, Seq((keyV, sets)))
-                (t, base, after, shapeOutput(noneRows(created), created, s.output, ctx))
+                val (after, rows) = createOne(createDataId(s.data, st.params)
+                  .getOrElse(genKeyV(base.schema(key).dataType)), base)
+                (t, base, after, shapeOutput(noneRows(rows), rows, s.output, ctx))
               }
             case RidLit(_, keyE) =>
               // UPSERT t:id: the update arm if the id exists, the create
@@ -1386,11 +1413,11 @@ object SparkPlanner {
                 case v => v
               }
               val (updated, before, changed) = updateArm(t, base, ctx, cond, sets)
-              val (after, created) = createArm(t, base, updated, ctx, Seq((keyV, sets)))
+              val (after, rows) = createOne(keyV, updated)
               // RETURN BEFORE: the existing doc on the update arm, NONE on
               // the create arm
-              (t, base, after, shapeOutput(before.unionByName(noneRows(created)),
-                changed.unionByName(created), s.output, ctx))
+              (t, base, after, shapeOutput(before.unionByName(noneRows(rows)),
+                changed.unionByName(rows), s.output, ctx))
             case _ => throw SqlError("SparkPlanner: UPSERT needs a record-id target")
           }
         }
@@ -1399,57 +1426,6 @@ object SparkPlanner {
     }
     stmts.foreach(exec)
     last.getOrElse(throw SqlError("SparkPlanner: script produced no result"))
-  }
-
-  /** Fire DEFINE EVENT triggers for one committed mutation
-    * (doc/event.rs: per changed document, `$event`/`$before`/`$after` bind
-    * and the WHEN condition gates the THEN body). Set-at-a-time here: the
-    * change rows come from the change-feed diff of the table's before/after
-    * states ([[graft.streaming.Live.changes]] — the same rows SHOW CHANGES
-    * and LIVE SELECT read), WHEN is a distributed filter over them, and a
-    * `THEN (CREATE target SET …)` body appends one projected row per fired
-    * change to the target table's overlay state. Events do not re-fire on
-    * event-generated writes (no cascades), matching one transaction level. */
-  private def fireScriptEvents(spark: SparkSession, dir: String, table: String,
-      before: DataFrame, after: DataFrame, overlay0: Map[String, DataFrame],
-      defs: Seq[graft.surql.Defs.EventDef]): Map[String, DataFrame] = {
-    val applicable = defs.filter(_.table == table)
-    if (applicable.isEmpty) return overlay0
-    val key = recordKey.getOrElse(table,
-      throw SqlError(s"SparkPlanner: no record key for table $table"))
-    val feed = graft.streaming.Live.changes(before, after, key, 0L)
-    applicable.foldLeft(overlay0) { (ov, d) =>
-      val binds = Map(
-        "event"  -> col("action"),
-        "after"  -> col("rec_after"),
-        "before" -> col("rec_before"),
-        "value"  -> col("rec_after"),
-        "this"   -> col("rec_after"))
-      val whenCtx = Ctx(spark, dir, table, before.schema, Map.empty,
-        lambdaParams = binds)
-      val fired = d.whenE.map(w => feed.filter(toCol(w, whenCtx))).getOrElse(feed)
-      d.thenE.foldLeft(ov) { (o, te) =>
-        te match {
-          case Subquery(cs: CreateStmt) =>
-            val tb = cs.what match {
-              case Seq(Idiom(Seq(PField(t)))) => t
-              case Seq(TableRef(t))           => t
-              case other => throw SqlError(
-                s"SparkPlanner: event THEN CREATE needs a plain table target, got $other")
-            }
-            val tgtBase = o.getOrElse(tb, Tables(spark, dir, tb))
-            val ctx = Ctx(spark, dir, tb, tgtBase.schema, Map.empty,
-              lambdaParams = binds)
-            val sets = setMap(cs.data, ctx, requireExisting = true)
-            val newRows = fired.select(tgtBase.schema.fields.map(sf =>
-              sets.getOrElse(sf.name, lit(null)).cast(sf.dataType).as(sf.name))
-              .toIndexedSeq: _*)
-            o + (tb -> tgtBase.unionByName(newRows))
-          case other => throw SqlError(
-            s"SparkPlanner: unsupported event THEN body $other (expected (CREATE …))")
-        }
-      }
-    }
   }
 
   /** Spark type → declared SurrealQL kind (types/src/kind/mod.rs) for the
@@ -2793,20 +2769,14 @@ object SparkPlanner {
     case Some(other) => throw SqlError(s"SparkPlanner: unsupported RETURN $other")
   }
 
-  /** One synthesized row per record id, conformed to the table schema:
-    * the id key, the SET/CONTENT values, NULL elsewhere. */
-  private def synthRows(spark: SparkSession, table: String, schema: StructType,
-      rids: Seq[(V, Map[String, Column])]): DataFrame = {
-    val key = recordKey.getOrElse(table,
-      throw SqlError(s"SparkPlanner: no record key for table $table"))
-    rids.map { case (keyV, sets) =>
-      val cols = schema.fields.map { sf =>
-        (if (sf.name == key) ridKeyLit(keyV)
-         else sets.getOrElse(sf.name, lit(null))).cast(sf.dataType).as(sf.name)
-      }
-      spark.range(1).select(cols.toIndexedSeq: _*)
-    }.reduce(_ unionByName _)
-  }
+  /** Rows conformed to a table schema, the shape every created record takes
+    * (CREATE, UPSERT, INSERT, RELATE, an event's THEN CREATE): each column
+    * of `schema` from `given` — the key among them — or NULL, cast to its
+    * slot type. */
+  private def conformRows(src: Dataset[_], schema: StructType,
+      given: Map[String, Column]): DataFrame =
+    src.select(schema.fields.map(sf =>
+      given.getOrElse(sf.name, lit(null)).cast(sf.dataType).as(sf.name)).toIndexedSeq: _*)
 
   // ---- DEFINE FIELD / DEFINE INDEX UNIQUE enforcement (script path) ------
   //
@@ -3042,17 +3012,22 @@ object SparkPlanner {
       throw SqlError(s"SparkPlanner: cannot generate a record id of type $other")
   }
 
-  /** Distributed generated key for sub-select INSERT sources whose rows
-    * arrive without one: a salted hash of the batch ordinal — unique within
-    * the batch, salted per statement, and DETERMINISTIC for a fixed plan so
+  /** Distributed generated record key for rows whose data clause sets
+    * none: a salted hash of the columns that tell the caller's rows apart —
+    * the batch ordinal of an `INSERT … SELECT`, RELATE's (in, out) pair, the
+    * changed record's key for an event's THEN CREATE. Unique within the
+    * statement, salted per call, and DETERMINISTIC for a fixed plan, so
     * re-executions of the lazy script overlay observe the SAME ids (a
     * uuid()/rand() here would mint different ids on every action over the
     * composed plan — the stored id would disagree with the returned one). */
-  private def genKeyCol(dt: DataType, salt: Long): Column = dt match {
-    case StringType => lower(hex(xxhash64(lit(salt), col(SeqC))))
-    case _: NumericType => shiftrightunsigned(xxhash64(lit(salt), col(SeqC)), 1)
-    case other =>
-      throw SqlError(s"SparkPlanner: cannot generate a record id of type $other")
+  private def genKeyCol(dt: DataType, cols: Column*): Column = {
+    val h = xxhash64(lit(java.util.concurrent.ThreadLocalRandom.current().nextLong()) +: cols: _*)
+    (dt match {
+      case StringType => lower(hex(h))
+      case _: NumericType => shiftrightunsigned(h, 1)
+      case other =>
+        throw SqlError(s"SparkPlanner: cannot generate a record id of type $other")
+    }).cast(dt)
   }
 
   /** Constant `id` supplied through the data clause of a keyless CREATE
@@ -3087,7 +3062,6 @@ object SparkPlanner {
           throw SqlError(s"SparkPlanner: INSERT columns ${extra.mkString(",")} not in $table")
         val keyName = recordKey(table)
         val keyDt = base.schema(keyName).dataType
-        val salt = java.util.concurrent.ThreadLocalRandom.current().nextLong()
         // The generated-key ordinal is monotonically_increasing_id — a
         // PARTITION-LAYOUT function (ordinal order ≠ SELECT order for
         // unsorted sources), and Spark-nondeterministic across plan
@@ -3098,12 +3072,9 @@ object SparkPlanner {
         // read of the lazy overlay sees the SAME generated ids — an INSERT
         // batch is bounded by the inserted data, which the reference also
         // materializes (it writes the rows).
-        (rows0.select(base.schema.fields.map { sf =>
-          (if (rows0.columns.contains(sf.name)) col(sf.name) else lit(null))
-            .cast(sf.dataType).as(sf.name)
-        }.toIndexedSeq: _*).withColumn(SeqC, monotonically_increasing_id())
-          .withColumn(keyName,
-            coalesce(col(keyName), genKeyCol(keyDt, salt).cast(keyDt)))
+        (conformRows(rows0, base.schema, rows0.columns.map(c => c -> col(c)).toMap)
+          .withColumn(SeqC, monotonically_increasing_id())
+          .withColumn(keyName, coalesce(col(keyName), genKeyCol(keyDt, col(SeqC))))
           .localCheckpoint(true),
           scala.None)
       case v @ (_: ArrLit | _: ObjLit) =>
@@ -3144,21 +3115,17 @@ object SparkPlanner {
           val extra = o.fields.keys.filterNot(base.columns.contains)
           if (extra.nonEmpty)
             throw SqlError(s"SparkPlanner: INSERT columns ${extra.mkString(",")} not in $table")
-          val cols = base.schema.fields.map { sf =>
-            o.fields.get(sf.name)
-              // id: NONE means "no id" (insert.rs extract_table_and_rid_key:
-              // Value::None => None) — fall through to generation
-              .filterNot(v => keyName.contains(sf.name) && v == VNone)
-              .map(vv => toCol(Lit(vv), ctx))
-              // keyless row: generate a record id driver-side (a literal, so
-              // every re-execution of the lazy overlay sees the same id),
-              // like the reference's GenerateRecordId / Interp's nextId()
-              .orElse(if (keyName.contains(sf.name))
-                  Some(toCol(Lit(genKeyV(sf.dataType)), ctx))
-                else scala.None)
-              .getOrElse(lit(null)).cast(sf.dataType).as(sf.name)
-          } :+ lit(i.toLong).as(SeqC)
-          spark.range(1).select(cols.toIndexedSeq: _*)
+          // id: NONE means "no id" (insert.rs extract_table_and_rid_key:
+          // Value::None => None) — a keyless row takes a record id generated
+          // driver-side (a literal, so every re-execution of the lazy
+          // overlay sees the same id), like the reference's
+          // GenerateRecordId / Interp's nextId()
+          val given = o.fields.filterNot { case (n, v) => keyName.contains(n) && v == VNone }
+          val keyed = keyName.filterNot(given.contains).fold(given)(k =>
+            given + (k -> genKeyV(base.schema(k).dataType)))
+          conformRows(spark.range(1), base.schema,
+            keyed.map { case (n, v) => n -> toCol(Lit(v), ctx) }.toMap)
+            .withColumn(SeqC, lit(i.toLong))
         }.reduce(_ unionByName _)
         // literal batches expose their keys to the driver: max multiplicity
         // under the same loose equality Interp matches record keys with
@@ -3180,6 +3147,28 @@ object SparkPlanner {
         s"SparkPlanner: unsupported INSERT values $other")
     }
 
+  /** A record-key cell collected from a Spark row, as the key value. */
+  private def asV(x: Any): V = x match {
+    case null => VNull
+    case l: Long => VInt(l)
+    case i: Int => VInt(i.toLong)
+    case d: Double => VFloat(d)
+    case s: String => VStr(s)
+    case d: java.math.BigDecimal => VInt(d.longValue)
+    case other => VStr(other.toString)
+  }
+
+  /** The duplicate-id probe of CREATE and a bare INSERT: the first key of
+    * `clashes` is already stored, an error as in the reference (err/mod.rs
+    * "Database record `…` already exists"). `written` maps the stored key
+    * back to the key the statement wrote, which the message names. */
+  private def dupIdProbe(t: String, clashes: DataFrame,
+      written: V => V = identity): Unit =
+    clashes.limit(1).collect().headOption.foreach { r =>
+      throw SqlError(
+        s"Database record `${Render.sql(VRid(t, written(asV(r.get(0)))))}` already exists")
+    }
+
   /** RETURN BEFORE sees NONE for creations (doc/pluck.rs initial = NONE)
     * — rendered in the column model as all-NULL rows, count-aligned. */
   private def noneRows(df: DataFrame): DataFrame =
@@ -3197,7 +3186,9 @@ object SparkPlanner {
     * first clashing row (against the base table OR an earlier batch row),
     * IGNORE keeps only each key's first occurrence, and ON DUPLICATE routes
     * every later occurrence through the update arm — its SETs apply once per
-    * extra occurrence, each application observing the previous one.
+    * extra occurrence, each application observing the previous one. Every
+    * new row passes `create`: the script executor's create stage, and for
+    * IGNORE its unique-tuple skip.
     *
     * Returns (before, after, result, diffOverride): the initial documents
     * for RETURN BEFORE (all-NULL rows for creations, the pre-application
@@ -3215,7 +3206,7 @@ object SparkPlanner {
     * aggregate probe for sub-select sources. */
   private def insertArms(spark: SparkSession, s: InsertStmt, base: DataFrame,
       ctx: Ctx, t: String, key: String, rows0: DataFrame, maxMultHint: Option[Int],
-      pipeline: DataFrame => DataFrame,
+      create: DataFrame => DataFrame,
       dupSetsOf: Ctx => Map[String, Column]): (DataFrame, DataFrame, DataFrame, Option[DataFrame]) = {
     import org.apache.spark.sql.expressions.Window
     // sub-select sources arrive ALREADY materialized (insertRows local-
@@ -3231,13 +3222,9 @@ object SparkPlanner {
           .otherwise(row_number().over(
             Window.partitionBy(col(key)).orderBy(col(SeqC)))))
     val bare = !s.ignore && s.onDuplicate.isEmpty
-    if (bare) {
-      val clash = marked.filter(col("__inb") === true || col("__rn") > 1)
-        .orderBy(SeqC).select(key).limit(1).collect()
-      clash.headOption.foreach { r =>
-        throw SqlError(s"Database record `$t:${r.get(0)}` already exists")
-      }
-    }
+    if (bare)
+      dupIdProbe(t, marked.filter(col("__inb") === true || col("__rn") > 1)
+        .orderBy(SeqC).select(key))
     // bare form: the probe just proved key uniqueness, so the final plan
     // keeps the plain anti-join (no window); IGNORE/ON DUPLICATE keep the
     // first occurrence per key
@@ -3245,7 +3232,7 @@ object SparkPlanner {
       if (bare) rows.drop(SeqC).join(base.select(key), Seq(key), "left_anti")
       else marked.filter(col("__rn") === 1 && col("__inb").isNull)
         .drop("__inb", "__rn", SeqC)
-    val fresh = pipeline(firsts)
+    val fresh = create(firsts)
     def linkMap = ctx.schema.fieldNames.toIndexedSeq
       .flatMap(c => links.get((ctx.table, c)).map(x => c -> x._1)).toMap
     s.onDuplicate match {
@@ -3394,13 +3381,13 @@ object SparkPlanner {
   /** RELATE from->edge->to SET … (expr/statements/relate.rs:17-31 +
     * doc/edges.rs): the cartesian pairing of the two id sets (from/to are
     * explicit record sets — small by construction; the reference iterates
-    * the product), with EVERY edge document carrying a record id — explicit
-    * `edge:key` > constant data-clause id > generated (salted per statement,
-    * deterministic per (in, out) pair so lazy-overlay re-executions observe
-    * the same ids). When the edge table already exists (overlay or parquet)
-    * the rows take its schema; a brand-new relation table gets
-    * (id, in, out, props…) with a string id, the reference's generated-id
-    * shape. */
+    * the product), conformed by [[conformRows]] with EVERY edge document
+    * carrying a record id — explicit `edge:key` > constant data-clause id >
+    * [[genKeyCol]] over the (in, out) pair. When the edge table already
+    * exists (overlay or parquet) the rows take its schema; a brand-new
+    * relation table gets (id, in, out, props…) with a string id, the
+    * reference's generated-id shape. The edges are not yet created: the
+    * script executor runs them through its create arm. */
   private def relateEdges(spark: SparkSession, dir: String, s: RelateStmt,
       params: Map[String, V]): RelateBuild = {
     def ids(e: Expr, side: String): (DataFrame, String) = {
@@ -3433,44 +3420,21 @@ object SparkPlanner {
         case Some(_: VInt) => LongType
         case _             => StringType // reference generates string ids
       })
-    // explicit edge id, else a constant data-clause id, else a generated
-    // one — salted per statement, deterministic per (in, out) pair so
-    // overlay re-executions see the same ids
-    val keyCol: Column = constId
-      .map(v => ridKeyLit(v).cast(keyDt))
-      .getOrElse {
-        val salt = java.util.concurrent.ThreadLocalRandom.current().nextLong()
-        (keyDt match {
-          case StringType =>
-            lower(hex(xxhash64(lit(salt), col("__in"), col("__out"))))
-          case _: NumericType =>
-            shiftrightunsigned(xxhash64(lit(salt), col("__in"), col("__out")), 1)
-          case other => throw SqlError(
-            s"SparkPlanner: cannot generate a record id of type $other")
-        }).cast(keyDt)
-      }
-    var edges = baseOpt match {
-      case Some(base) =>
-        val cols = base.schema.fields.map { sf =>
-          (sf.name match {
-            case n if n == key => keyCol
-            case "in"          => col("__in")
-            case "out"         => col("__out")
-            case n             => props.getOrElse(n, lit(null))
-          }).cast(sf.dataType).as(sf.name)
-        }
-        pairs.select(cols.toIndexedSeq: _*)
-      case scala.None =>
-        val propCols = props.toSeq.sortBy(_._1)
-          .filterNot { case (n, _) => n == key || n == "in" || n == "out" }
-          .map { case (n, c) => c.as(n) }
-        pairs.select((keyCol.as(key) +: col("__in").as("in") +:
-          col("__out").as("out") +: propCols).toIndexedSeq: _*)
-    }
+    // explicit edge id, else a constant data-clause id, else one generated
+    // per (in, out) pair; the edge identity fields override the data clause
+    val given = props ++ Map(
+      key -> constId.map(v => ridKeyLit(v).cast(keyDt))
+        .getOrElse(genKeyCol(keyDt, col("__in"), col("__out"))),
+      "in" -> col("__in"), "out" -> col("__out"))
+    // a brand-new relation table is shaped (id, in, out, props…)
+    val schema = baseOpt.map(_.schema).getOrElse(pairs.select(
+      (Seq(key, "in", "out") ++ props.keySet.diff(Set(key, "in", "out")).toSeq.sorted)
+        .map(n => given(n).as(n)): _*).schema)
+    val edges = conformRows(pairs, schema, given)
     // an explicit edge id across several pairs keeps ONE edge (the
     // interpreter's map assignment — last wins; single-pair in use)
-    if (constId.isDefined) edges = edges.dropDuplicates(key)
-    RelateBuild(t, baseOpt, key, edges, fromT, toT)
+    RelateBuild(t, baseOpt, key,
+      if (constId.isDefined) edges.dropDuplicates(key) else edges, fromT, toT)
   }
 
   /** math::top/bottom second argument (fnc/math.rs top/bottom: any

@@ -752,13 +752,18 @@ class FuzzDifferentialSpec extends AnyFunSuite {
                 DELETE item:$k;"""
         }
       case 21 =>
-        // RELATE (explicit and generated edge ids) and the DELETE edge
-        // purge — graph writes inside a transaction
+        // RELATE (explicit and generated edge ids, under DEFINE FIELD) and
+        // the DELETE edge purge — graph writes inside a transaction
         val a = r.nextInt(30) + 1; val b = r.nextInt(30) + 1
-        r.nextInt(3) match {
+        r.nextInt(4) match {
           case 0 =>
             select = "SELECT w FROM likes WHERE w >= 900 ORDER BY w;"
             s"RELATE item:$a->likes:`zf${a}x$b`->item:$b SET w = ${900 + r.nextInt(50)};"
+          case 3 =>
+            // a RELATE edge passes the edge table's field pipeline
+            select = "SELECT w FROM likes WHERE w >= 900 ORDER BY w;"
+            s"""DEFINE FIELD w ON likes VALUE $$value * ${r.nextInt(3) + 2};
+                RELATE item:$a->likes:`zv${a}x$b`->item:$b SET w = ${450 + r.nextInt(50)};"""
           case 1 =>
             select = "SELECT count() AS n FROM likes WHERE id != NONE GROUP ALL;"
             s"RELATE item:$a->likes->item:$b SET w = ${950 + r.nextInt(50)};"
@@ -958,6 +963,95 @@ class FuzzDifferentialSpec extends AnyFunSuite {
     test(s"graph-script[$i]: ${q.linesIterator.next().trim.take(60)}") {
       checkScript(q)
     }
+  }
+
+  /** Runs `script` on a fresh fixture interpreter and on the Spark script
+    * executor; returns the interpreter's last result and the Spark rows, or
+    * the Spark error message. */
+  private def runBoth(script: String): (graft.surql.QueryResult,
+      Either[String, Seq[org.apache.spark.sql.Row]]) = {
+    val in = new Interp
+    in.run(Parser.parse(fixtureScript))
+    in.run(Parser.parse(profScript))
+    in.run(Parser.parse(edgeScript))
+    val ires = in.run(Parser.parse(script)).last
+    val sres = scala.util.Try(Tables.withOverlay(Map(
+      "item" -> df, "prof" -> profDf, "likes" -> likesDf)) {
+      SparkPlanner.script(spark, "/nonexistent", script).collect().toSeq
+    }).toEither.left.map(_.getMessage)
+    (ires, sres)
+  }
+
+  /** Both engines reject `script` with an error that contains `expected`. */
+  private def checkBothError(script: String, expected: String): Unit = {
+    val (ires, sres) = runBoth(script)
+    ires match {
+      case QErr(m) => assert(m.contains(expected), s"interp: $m\n$script")
+      case other => fail(s"interp did not reject: $other\n$script")
+    }
+    sres match {
+      case Left(m) => assert(m.contains(expected), s"spark: $m\n$script")
+      case Right(rows) => fail(s"spark did not reject: $rows\n$script")
+    }
+  }
+
+  // Every new record takes one create path (doc/mod.rs lifecycle): a RELATE
+  // edge and an event's THEN CREATE row pass the field pipeline, the unique
+  // indexes and the key generator like a CREATE, on both engines
+  private val createScripts = Seq(
+    """DEFINE FIELD w ON likes VALUE $value * 2;
+       RELATE item:3->likes:`zq1`->item:9 SET w = 450;
+       SELECT w FROM likes WHERE w >= 450 ORDER BY w;""",
+    """DEFINE FIELD qty ON item VALUE $value * 2;
+       DEFINE EVENT ev ON prof WHEN $event = 'UPDATE' THEN (
+         CREATE item SET grp = 'ev', qty = 5, name = 'ev');
+       UPDATE prof:1 SET score = 7;
+       SELECT name, qty FROM item WHERE grp = 'ev';""")
+
+  createScripts.zipWithIndex.foreach { case (q, i) =>
+    test(s"create-script[$i]: ${q.linesIterator.next().trim.take(60)}") {
+      checkScript(q)
+    }
+  }
+
+  test("create-script: a keyless event THEN CREATE generates the record id on both engines") {
+    val (ires, sres) = runBoth(
+      """DEFINE EVENT ev ON prof WHEN $event = 'UPDATE' THEN (
+           CREATE item SET grp = 'ev', qty = $after.score, name = 'ev');
+         UPDATE prof:1 SET score = 7;
+         UPDATE prof:2 SET score = 8;
+         SELECT id, qty FROM item WHERE grp = 'ev' ORDER BY qty;""")
+    val ids = ires match {
+      case QOk(VArr(docs)) => docs.map { case VObj(m) => m("id") }
+      case other => fail(s"interp: $other")
+    }
+    assert(ids.length == 2 && ids.forall(_.isInstanceOf[graft.surql.VRid]), s"interp ids $ids")
+    val rows = sres.fold(m => fail(s"spark: $m"), identity)
+    assert(rows.map(_.getLong(1)) == Seq(7L, 8L), s"spark rows $rows")
+    assert(rows.forall(!_.isNullAt(0)) && rows.map(_.get(0)).distinct.length == 2,
+      s"spark ids $rows")
+  }
+
+  test("create-script: RELATE runs the ASSERT clause on both engines") {
+    checkBothError(
+      """DEFINE FIELD w ON likes ASSERT $value < 100;
+         RELATE item:3->likes:`zq2`->item:9 SET w = 450;""",
+      "Found 450 for field `w`, with record `likes:zq2`, but field must conform to: $value < 100")
+  }
+
+  test("create-script: RELATE checks the unique indexes on both engines") {
+    checkBothError(
+      """DEFINE INDEX wu ON likes FIELDS w UNIQUE;
+         RELATE item:3->likes:`zq3`->item:9 SET w = 1;""",
+      "Database index `wu` already contains 1, with record `likes:e1x8x1`")
+  }
+
+  test("create-script: a duplicate INSERT RELATION id is named as the interpreter names it") {
+    checkBothError(
+      """INSERT RELATION INTO likes [
+           { id: 'a-b', in: item:1, out: item:2, w: 1000 },
+           { id: 'a-b', in: item:2, out: item:3, w: 1001 }];""",
+      "Database record `likes:`a-b`` already exists")
   }
 
   // `@{n..m}` recursion over `likes`: even items have out-degree 2, item:30

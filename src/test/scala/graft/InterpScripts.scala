@@ -9,8 +9,9 @@ import graft.surql._
 /** Seeded SurrealQL scripts over a node table `n` and an edge table `e`:
   * creates, RELATEs, `in`/`out` written on plain records, `INSERT RELATION
   * IGNORE`, deletes with edge cascades and events, UPDATEs whose event
-  * deletes a record, `BEGIN … CANCEL`, a failing `FOR`, a `USE` switch and
-  * back, `REMOVE TABLE`. Keys mix ints, a float and a decimal equal to
+  * deletes a record, a UNIQUE index on `w` of `e` defined and removed,
+  * `BEGIN … CANCEL`, a failing `FOR`, a `USE` switch and back, `REMOVE
+  * TABLE`. Keys mix ints, a float and a decimal equal to
   * ints, strings, arrays and generated ids, so loose key matches and
   * rollbacks are exercised together.
   *
@@ -22,7 +23,8 @@ import graft.surql._
   * {{{
   * sbt "Test/runMain graft.InterpScripts <scripts> <first seed> <out file>"
   * }}}
-  * It reads only `Interp.run`, `tables`, `globals` and `edgeMarkSet`. */
+  * It reads only `Interp.run`, `tables`, `globals` and `edgeMarkSet`, and
+  * sets `Interp.idRng` per script. */
 object InterpScripts {
 
   /** Parameters the scripts use as keys: a float and a decimal. */
@@ -76,6 +78,8 @@ object InterpScripts {
       case 7 => if (r.nextBoolean()) "REMOVE TABLE e;" else "REMOVE TABLE n;"
       case 8 => s"DEFINE EVENT up ON n WHEN $$event = 'UPDATE' THEN { DELETE n:${k()} };"
       case 9 => "REMOVE EVENT up ON n;"
+      case 10 => "DEFINE INDEX ew ON e FIELDS w UNIQUE;"
+      case 11 => "REMOVE INDEX ew ON e;"
       case _ => simple()
     }
     Vector.fill(12 + r.nextInt(20))(chunk())
@@ -126,6 +130,9 @@ object InterpScripts {
     val w = new BufferedWriter(new FileWriter(out))
     try (0 until count.toInt).foreach { i =>
       val seed = first.toLong + i
+      // a script's generated ids depend on its seed alone, not on how many
+      // ids the scripts before it drew
+      Interp.idRng.set(seed << 20)
       val in = fresh()
       val sb = new StringBuilder(s"== script $seed\n")
       // a chunk that throws out of `run` ends its script
