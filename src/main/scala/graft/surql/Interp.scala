@@ -23,7 +23,11 @@ object Interp {
     * [[Interp!.putRecord]], [[Interp!.removeRecord]] and [[Interp!.undoTo]]
     * write a table, through [[store]], [[drop]] and [[restoreOrder]], so the
     * indexes roll back with the records; USE parking, `REMOVE TABLE` and
-    * [[TablesUndo]] carry them with the table object. */
+    * [[TablesUndo]] carry them with the table object. Statement executors
+    * write records only through [[Interp!.writeDoc]] (every create and
+    * update) and [[Interp!.removeDoc]] (every delete); besides them only the
+    * ON DELETE UNSET action and the view-maintenance rollback in
+    * [[Interp!.fireEvents]] put or remove a record. */
   final class Table extends mutable.LinkedHashMap[V, VObj] {
     private val index = mutable.HashMap[Any, mutable.ArrayBuffer[V]]()
     private val pos = mutable.HashMap[V, Long]()
@@ -4530,6 +4534,35 @@ final class Interp {
       throw SqlError(s"The query was not executed because it exceeded the timeout: ${Render.sql(dur)}")
   }
 
+  /** The id a stored document carries, or `tb:key` if it carries none. */
+  private def recordId(tb: String, key: V, doc: VObj): VRid = doc.fields.get("id") match {
+    case Some(r: VRid) => r
+    case _ => VRid(tb, key)
+  }
+
+  /** One document write, the lifecycle every stored create and update runs
+    * (doc/mod.rs:12-36). `before` is the stored document, `None` for a new
+    * one (the reference's `is_new`); `doc0` is the document the statement
+    * built, which events see as `$input`. Steps: the field pipeline; for a
+    * new document the create permission (a denied create is skipped
+    * silently and fires nothing, doc/allow.rs; reproductions/7208); the
+    * unique indexes; the store under the stored key `key`; the edge mark
+    * when `edge` (RecordType::Edge, doc/alter.rs:93); the events. Returns
+    * the RETURN value, `None` if nothing was written or RETURN NONE. */
+  private def writeDoc(tb: String, key: V, before: Option[VObj], doc0: VObj,
+      output: Option[Output], env: Env, edge: Boolean = false): Option[V] = {
+    val rid = before.fold(VRid(tb, key))(recordId(tb, key, _))
+    val doc = applyFieldPipeline(tb, rid, doc0, before, isCreate = before.isEmpty, env)
+    if (before.isEmpty && !permAllows(tb, "create", doc)) scala.None
+    else {
+      checkUniqueIndexes(tb, rid, doc)
+      putRecord(table(tb), key, doc)
+      if (edge) markEdge(tb, key)
+      fireEvents(tb, before, Some(doc), env, Some(doc0))
+      shapeOutput(before, Some(doc), output, env, tb)
+    }
+  }
+
   def execCreate(s: CreateStmt, env: Env): V = {
     val created = mutationTargets(s.what, env).map { case (tb, keyOpt) =>
       // STRICT databases refuse writes to undefined tables (strict mode) —
@@ -4577,18 +4610,7 @@ final class Interp {
           }.getOrElse("")
           s"Found record: `${Render.sql(rid)}` which is not a relation, but expected a RELATION$spec"
         })
-      val doc0 = VObj(withData.fields.updated("id", rid))
-      val doc = applyFieldPipeline(tb, rid, doc0, scala.None, isCreate = true, env)
-      // record users need the table's CREATE permission truthy for the new
-      // doc — a denied create is silently skipped, and no references or
-      // events fire (doc/allow.rs; reproductions/7208)
-      if (!permAllows(tb, "create", doc)) scala.None
-      else {
-        checkUniqueIndexes(tb, rid, doc)
-        putRecord(t, key, doc)
-        fireEvents(tb, scala.None, Some(doc), env, Some(doc0))
-        shapeOutput(scala.None, Some(doc), s.output, env, tb)
-      }
+      writeDoc(tb, key, scala.None, VObj(withData.fields.updated("id", rid)), s.output, env)
     }
     val vs = created.flatten
     if (s.only) vs.headOption.getOrElse(VNone)
@@ -4614,79 +4636,45 @@ final class Interp {
           catch { case _: SqlError => scala.None }
         else scala.None
       }
+      // the update arm, for a stored record that passed WHERE and the
+      // UPDATE permission
+      def update(key: V, doc: VObj): Unit = {
+        val rid = recordId(tb, key, doc)
+        val applied = applyData(doc, data, mutScope(env, Some(redactDoc(tb, doc))), redactTb = tb)
+        Interp.checkIdUnchanged(applied, rid)
+        val updated0 = if (isEdgeRecord(tb, key))
+          Interp.keepEdgeIdentity(applied, doc, rid) else applied
+        writeDoc(tb, key, Some(doc), updated0, output, env).foreach(results += _)
+      }
+      // UPSERT's create arm
+      def create(key: V): Unit = {
+        val doc0 = applyData(VObj(TreeMap("id" -> (VRid(tb, key): V))), data, mutScope(env, scala.None))
+        writeDoc(tb, key, scala.None, doc0, output, env).foreach(results += _)
+      }
       keyOpt match {
         case Some(key) =>
           Interp.checkIdKey(tb, key)
-          val stored = findKeyLoose(t, key)
-          stored.map(t(_)) match {
-            case Some(doc) =>
-              val de = env.copy(doc = Some(doc))
+          findKeyLoose(t, key) match {
+            case Some(stored) =>
+              val doc = t(stored)
               // record users need the UPDATE clause truthy for the before-
               // doc (doc/allow.rs — same silent skip as create/delete)
-              if (where.forall(c => Eval.eval(c, de).truthy) &&
-                  permAllows(tb, "update", doc)) {
-                val rid = doc.fields.get("id") match {
-                  case Some(r: VRid) => r
-                  case _ => VRid(tb, key)
-                }
-                val applied = applyData(doc, data, mutScope(env, Some(redactDoc(tb, doc))), redactTb = tb)
-                Interp.checkIdUnchanged(applied, rid)
-                val updated0 = if (isEdgeRecord(tb, stored.get))
-                  Interp.keepEdgeIdentity(applied, doc, rid) else applied
-                val updated = applyFieldPipeline(tb, rid, updated0, Some(doc), isCreate = false, env)
-                checkUniqueIndexes(tb, rid, updated)
-                putRecord(t, findKeyLoose(t, key).getOrElse(key), updated)
-                fireEvents(tb, Some(doc), Some(updated), env, Some(updated0))
-                shapeOutput(Some(doc), Some(updated), output, env, tb).foreach(results += _)
-              }
-            case scala.None if upsert =>
-              val rid = VRid(tb, key)
-              val base = VObj(TreeMap("id" -> (rid: V)))
-              val doc0 = applyData(base, data, mutScope(env, scala.None))
-              val doc = applyFieldPipeline(tb, rid, doc0, scala.None, isCreate = true, env)
-              checkUniqueIndexes(tb, rid, doc)
-              putRecord(t, key, doc)
-              fireEvents(tb, scala.None, Some(doc), env, Some(doc0))
-              shapeOutput(scala.None, Some(doc), output, env, tb).foreach(results += _)
-            case scala.None => ()
+              if (where.forall(c => Eval.eval(c, env.copy(doc = Some(doc))).truthy) &&
+                  permAllows(tb, "update", doc)) update(stored, doc)
+            case scala.None => if (upsert) create(key)
           }
         case scala.None =>
           var touched = 0
           // an event fired for one record may have deleted a later one
           t.toSeq.iterator.filter { case (key, _) => t.contains(key) }.foreach { case (key, doc) =>
-            val de = env.copy(doc = Some(doc))
             // a WHERE match counts as touched even when the UPDATE
             // permission denies it — a denied row must not flip an UPSERT
             // into its create arm
-            if (where.forall(c => Eval.eval(c, de).truthy) &&
-                { touched += 1; permAllows(tb, "update", doc) }) {
-              val rid = doc.fields.get("id") match {
-                case Some(r: VRid) => r
-                case _ => VRid(tb, key)
-              }
-              val applied = applyData(doc, data, mutScope(env, Some(redactDoc(tb, doc))), redactTb = tb)
-              Interp.checkIdUnchanged(applied, rid)
-              val updated0 = if (isEdgeRecord(tb, key))
-                Interp.keepEdgeIdentity(applied, doc, rid) else applied
-              val updated = applyFieldPipeline(tb, rid, updated0, Some(doc), isCreate = false, env)
-              checkUniqueIndexes(tb, rid, updated)
-              putRecord(t, key, updated)
-              fireEvents(tb, Some(doc), Some(updated), env, Some(updated0))
-              shapeOutput(Some(doc), Some(updated), output, env, tb).foreach(results += _)
-            }
+            if (where.forall(c => Eval.eval(c, env.copy(doc = Some(doc))).truthy) &&
+                { touched += 1; permAllows(tb, "update", doc) }) update(key, doc)
           }
-          if (upsert && touched == 0) {
-            // UPSERT on a table with no matching rows creates one record
-            val key = nextId()
-            val rid = VRid(tb, key)
-            val base = VObj(TreeMap("id" -> (rid: V)))
-            val doc0 = applyData(base, data, mutScope(env, scala.None))
-            val doc = applyFieldPipeline(tb, rid, doc0, scala.None, isCreate = true, env)
-            checkUniqueIndexes(tb, rid, doc)
-            putRecord(t, key, doc)
-            fireEvents(tb, scala.None, Some(doc), env, Some(doc0))
-            shapeOutput(scala.None, Some(doc), output, env, tb).foreach(results += _)
-          }
+          // UPSERT on a table with no matching rows creates one record
+          if (upsert && touched == 0) create(nextId())
       }
     }
     if (only) results.headOption.getOrElse(VNone) else VArr(results.toVector)
@@ -4711,15 +4699,7 @@ final class Interp {
         val de = env.copy(doc = Some(doc))
         if (s.where.forall(c => Eval.eval(c, de).truthy) &&
             permAllows(tb, "delete", doc)) {
-          val rid = doc.fields.get("id") match {
-            case Some(r: VRid) => r
-            case _ => VRid(tb, key)
-          }
-          applyReferentialActions(rid, env)
-          removeRecord(t, key)
-          unmarkEdge(tb, key)
-          fireEvents(tb, Some(doc), scala.None, env)
-          cascadeEdgeDeletes(rid, env)
+          removeDoc(tb, key, doc, env)
           // RETURN output rides the SELECT permission: a deletable-but-not-
           // readable row deletes silently (doc/allow.rs + doc/pluck.rs)
           if (permAllows(tb, "select", doc))
@@ -4730,6 +4710,19 @@ final class Interp {
     if (s.output.isEmpty) VArr(Vector.empty)
     else if (s.only) results.headOption.getOrElse(VNone)
     else VArr(results.toVector)
+  }
+
+  /** One document removal, the lifecycle every deleted record runs — a
+    * named DELETE, a purged edge and a CASCADE victim alike (doc/purge.rs):
+    * the ON DELETE actions of the records that reference it, the removal
+    * and its edge mark, the events, then the purge of its edges. */
+  private def removeDoc(tb: String, key: V, doc: VObj, env: Env): Unit = {
+    val rid = recordId(tb, key, doc)
+    applyReferentialActions(rid, env)
+    tables.get(tb).foreach(removeRecord(_, key))
+    unmarkEdge(tb, key)
+    fireEvents(tb, Some(doc), scala.None, env)
+    cascadeEdgeDeletes(rid, env)
   }
 
   /** Deleting a record purges the graph edges pointing in or out of it
@@ -4753,13 +4746,8 @@ final class Interp {
           keysComparedCount += 1
           (relation || marked.exists(_.contains(k))) && endpoint(t(k))
         }.sortBy(t.position).map(k => k -> t(k))
-        victims.foreach { case (k, doc) =>
-          if (t.contains(k)) { // a nested cascade may have removed it already
-            removeRecord(t, k)
-            unmarkEdge(etb, k)
-            fireEvents(etb, Some(doc), scala.None, env)
-          }
-        }
+        // a nested cascade may have removed a victim already
+        victims.foreach { case (k, doc) => if (t.contains(k)) removeDoc(etb, k, doc, env) }
       }
     }
   }
@@ -4788,18 +4776,12 @@ final class Interp {
             }
           }
           hits.foreach { case (k, r) =>
-            val refRid = r.fields.get("id") match {
-              case Some(x: VRid) => x
-              case _ => VRid(tbl, k)
-            }
             action match {
               case "REJECT" =>
                 throw SqlError(s"Cannot delete `${Render.sql(target)}` as it is referenced by " +
-                  s"`${Render.sql(refRid)}` with an ON DELETE REJECT clause")
-              case "CASCADE" =>
-                applyReferentialActions(refRid, env)
-                removeRecord(tables(tbl), k)
-                fireEvents(tbl, Some(r), scala.None, env)
+                  s"`${Render.sql(recordId(tbl, k, r))}` with an ON DELETE REJECT clause")
+              // an earlier victim's cascade may have removed it already
+              case "CASCADE" => if (tables.get(tbl).exists(_.contains(k))) removeDoc(tbl, k, r, env)
               case "UNSET" =>
                 val updated = docFieldPath(r, path) match {
                   case VArr(items) =>
@@ -4904,47 +4886,29 @@ final class Interp {
         else if (s.onDuplicate.isDefined)
           idDup.orElse(if (explicitId) scala.None else idxConflict)
         else idDup
-      val produced: Option[(Option[VObj], V)] = existingKey match {
+      val written = existingKey match {
         case Some(k0) =>
           if (s.ignore) scala.None
           else s.onDuplicate match {
             case Some(sets) =>
-              val doc = t(findKeyLoose(t, k0).get)
+              val stored = findKeyLoose(t, k0).get
+              val doc = t(stored)
               // the update arm binds $input to the incoming row
-              // (core/tests/insert.rs insert_statement_duplicate_key_update)
+              // (core/tests/insert.rs insert_statement_duplicate_key_update);
+              // it is a full document write, with a real initial document
+              // for RETURN DIFF/BEFORE (doc/pluck.rs diffs initial→current)
               val updated0 = applyData(doc, Some(SetData(sets)),
                 env.copy(doc = Some(doc))
                   .bind("input", VObj(row.fields.updated("id", rid))))
-              // the update arm is a full document write — the field pipeline
-              // (VALUE/ASSERT/TYPE, doc/field.rs) runs like any UPDATE
-              val erid = doc.fields.get("id") match {
-                case Some(r: VRid) => r
-                case _ => VRid(tb, k0)
-              }
-              val updated = applyFieldPipeline(tb, erid, updated0, Some(doc), isCreate = false, env)
-              val stored = findKeyLoose(t, k0).get
-              if (s.relation) markEdge(tb, stored)
-              putRecord(t, stored, updated)
-              fireEvents(tb, Some(doc), Some(updated), env)
-              // the update arm has a real initial document, so RETURN
-              // DIFF/BEFORE see it (doc/pluck.rs diffs initial→current)
-              Some((Some(doc), updated))
+              writeDoc(tb, stored, Some(doc), updated0, s.output, env, edge = s.relation)
             case scala.None =>
               throw SqlError(s"Database record `${Render.sql(VRid(tb, key))}` already exists")
           }
         case scala.None =>
-          val doc0 = VObj(row.fields.updated("id", rid))
-          val doc = applyFieldPipeline(tb, rid, doc0, scala.None, isCreate = true, env)
-          checkUniqueIndexes(tb, rid, doc)
-          if (s.relation) markEdge(tb, key)
-          putRecord(t, key, doc)
-          fireEvents(tb, scala.None, Some(doc), env, Some(doc0))
-          Some((scala.None, doc))
+          writeDoc(tb, key, scala.None, VObj(row.fields.updated("id", rid)), s.output, env,
+            edge = s.relation)
       }
-      produced.foreach { case (bef, doc) =>
-        shapeOutput(bef, Some(doc.asInstanceOf[VObj]), s.output, env)
-          .foreach(results += _)
-      }
+      written.foreach(results += _)
     }
     VArr(results.toVector)
   }
@@ -5032,17 +4996,8 @@ final class Interp {
         val d = applyData(base, s.data, env)
         VObj(d.fields.updated("id", rid: V).updated("in", from: V).updated("out", to: V))
       }
-      val doc = applyFieldPipeline(edgeTable, rid, doc0, scala.None, isCreate = true, env)
-      // the create permission and the unique indexes hold for an edge as
-      // for any created record (execCreate; doc/allow.rs, idx/index.rs)
-      if (permAllows(edgeTable, "create", doc)) {
-        checkUniqueIndexes(edgeTable, rid, doc)
-        val t = table(edgeTable)
-        putRecord(t, stored, doc)
-        markEdge(edgeTable, stored) // RecordType::Edge metadata (doc/alter.rs:93)
-        fireEvents(edgeTable, scala.None, Some(doc), env)
-        shapeOutput(scala.None, Some(doc), s.output, env).foreach(results += _)
-      }
+      writeDoc(edgeTable, stored, scala.None, doc0, s.output, env, edge = true)
+        .foreach(results += _)
     }
     if (s.only) results.headOption.getOrElse(VNone) else VArr(results.toVector)
   }

@@ -672,7 +672,8 @@ object SparkPlanner {
     // (graft.streaming.Live.changes — the rows SHOW CHANGES and LIVE SELECT
     // read), WHEN is a distributed filter over them, and a `THEN (CREATE
     // target SET …)` body creates one record per fired change through the
-    // create arm; a SET that gives no id keys it by the changed record's.
+    // create arm; a SET that gives no id keys it by the changed record's,
+    // and a SET-given id that is already taken fails the statement.
     // Events do not re-fire on event-generated writes (no cascades),
     // matching one transaction level.
     def fireScriptEvents(table: String, before: DataFrame, after: DataFrame): Unit = {
@@ -704,8 +705,13 @@ object SparkPlanner {
               val given =
                 if (sets.contains(key)) sets
                 else sets + (key -> genKeyCol(tgtBase.schema(key).dataType, col("id")))
-              st.overlay += (tb -> createArm(tb, ctx,
-                conformRows(fired, tgtBase.schema, given))(_ => tgtBase)._1)
+              val rows = conformRows(fired, tgtBase.schema, given)
+              // a SET-given id may be stored already, or given by two fired
+              // changes (as in CREATE); a generated one is never either
+              if (sets.contains(key))
+                dupIdProbe(tb, rows.select(key).unionByName(tgtBase.select(key))
+                  .groupBy(key).count().filter(col("count") > 1).select(key))
+              st.overlay += (tb -> createArm(tb, ctx, rows)(_ => tgtBase)._1)
             case other => throw SqlError(
               s"SparkPlanner: unsupported event THEN body $other (expected (CREATE …))")
           }
@@ -3158,8 +3164,9 @@ object SparkPlanner {
     case other => VStr(other.toString)
   }
 
-  /** The duplicate-id probe of CREATE and a bare INSERT: the first key of
-    * `clashes` is already stored, an error as in the reference (err/mod.rs
+  /** The duplicate-id probe of CREATE, a bare INSERT and an event CREATE
+    * whose SET gives the id: the first key of `clashes` is already stored
+    * or written twice, an error as in the reference (err/mod.rs
     * "Database record `…` already exists"). `written` maps the stored key
     * back to the key the statement wrote, which the message names. */
   private def dupIdProbe(t: String, clashes: DataFrame,

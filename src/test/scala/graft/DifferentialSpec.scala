@@ -417,6 +417,28 @@ class DifferentialSpec extends AnyFunSuite {
       })
   }
 
+  test("differential-permissions: CREATE permission gates UPSERT and INSERT creations on both paths") {
+    val in = new Interp
+    in.run(Parser.parse(fixtureScript))
+    in.run(Parser.parse(
+      "DEFINE TABLE OVERWRITE item PERMISSIONS FOR select FULL FOR update FULL FOR create WHERE qty < 3 FOR delete FULL;"))
+    in.recordAuth = true
+    val script =
+      """UPSERT item:101 SET grp = 'z', name = 'u1', qty = 1;
+         UPSERT item:102 SET grp = 'z', name = 'u2', qty = 5;
+         INSERT INTO item [{ id: 103, grp: 'z', name: 'i1', qty: 2 },
+           { id: 104, grp: 'z', name: 'i2', qty: 8 }];
+         SELECT name, qty FROM item WHERE grp = 'z' ORDER BY name;"""
+    compare(script, in.run(Parser.parse(script)).last,
+      Tables.withOverlay(Map("item" -> df)) {
+        SparkPlanner.withAuth(SparkPlanner.AuthSession(graft.surql.VNull,
+          Map("item" -> "FULL"),
+          actionPerms = Map(("item", "create") -> "WHERE qty < 3"))) {
+          SparkPlanner.script(spark, "/nonexistent", script)
+        }
+      })
+  }
+
   test("differential-permissions: DELETE permission gates removals on both paths") {
     val in = new Interp
     in.run(Parser.parse(fixtureScript))

@@ -1054,6 +1054,46 @@ class FuzzDifferentialSpec extends AnyFunSuite {
       "Database record `likes:`a-b`` already exists")
   }
 
+  test("create-script: an event THEN CREATE over a taken id fails on both engines") {
+    // stored already, and given by two fired changes
+    checkBothError(
+      """DEFINE EVENT ev ON prof WHEN $event = 'UPDATE' THEN (
+           CREATE item SET id = 2, grp = 'ev', qty = 5, name = 'ev');
+         UPDATE prof:1 SET score = 7;""",
+      "Database record `item:2` already exists")
+    checkBothError(
+      """DEFINE EVENT ev ON prof WHEN $event = 'UPDATE' THEN (
+           CREATE item SET id = 99, grp = 'ev', qty = 5, name = 'ev');
+         UPDATE prof SET score = 7 WHERE score <= 10;""",
+      "Database record `item:99` already exists")
+  }
+
+  // Every write runs one lifecycle (doc/mod.rs): an update through INSERT's
+  // ON DUPLICATE arm passes the unique indexes, and a CASCADE victim is
+  // removed like a named DELETE, its graph edges purged
+  test("write-script: INSERT ON DUPLICATE KEY UPDATE checks the unique indexes on both engines") {
+    checkBothError(
+      """DEFINE INDEX nu ON item FIELDS name UNIQUE;
+         INSERT INTO item { id: 1, name: 'n01' } ON DUPLICATE KEY UPDATE name = 'n02';""",
+      // Spark names the smallest key of the clashing pair, here the updated
+      // item:1; Interp names the stored item:2
+      "Database index `nu` already contains 'n02'")
+  }
+
+  test("write-script: a CASCADE victim's likes edges are purged on both engines") {
+    // item:5 references item:6 through `buddy`; item:4 no longer
+    // references item:5, so the cascade stops there. Deleting item:6 purges
+    // its three edges; the victim item:5 sheds `e22x5x22` too.
+    val (ires, sres) = runBoth(
+      """UPDATE item:4 SET buddy = NONE;
+         DEFINE FIELD buddy ON item REFERENCE ON DELETE CASCADE;
+         DELETE item:6;
+         SELECT count() AS n FROM likes GROUP ALL;""")
+    assert(ires == QOk(VArr(Vector(V.obj("n" -> VInt(41))))), s"interp: $ires")
+    val rows = sres.fold(m => fail(s"spark: $m"), identity)
+    assert(rows.map(_.getLong(0)) == Seq(41L), s"spark rows $rows")
+  }
+
   // `@{n..m}` recursion over `likes`: even items have out-degree 2, item:30
   // has a double edge to item:1, and the graph has cycles, so frontiers
   // branch, merge and revisit nodes (the registry rows walk a linear chain)

@@ -8,10 +8,11 @@ import graft.surql._
 
 /** Seeded SurrealQL scripts over a node table `n` and an edge table `e`:
   * creates, RELATEs, `in`/`out` written on plain records, `INSERT RELATION
-  * IGNORE`, deletes with edge cascades and events, UPDATEs whose event
-  * deletes a record, a UNIQUE index on `w` of `e` defined and removed,
-  * `BEGIN … CANCEL`, a failing `FOR`, a `USE` switch and back, `REMOVE
-  * TABLE`. Keys mix ints, a float and a decimal equal to
+  * IGNORE` and `… ON DUPLICATE KEY UPDATE`, deletes with edge cascades and
+  * events, UPDATEs whose event deletes a record, a UNIQUE index on `w` of
+  * `e` defined and removed, a `REFERENCE ON DELETE CASCADE` field `p` on `n`
+  * defined and removed, `BEGIN … CANCEL`, a failing `FOR`, a `USE` switch
+  * and back, `REMOVE TABLE`. Keys mix ints, a float and a decimal equal to
   * ints, strings, arrays and generated ids, so loose key matches and
   * rollbacks are exercised together.
   *
@@ -31,6 +32,11 @@ object InterpScripts {
   val globals: Map[String, V] = Map("f1" -> VFloat(1.0), "d2" -> VDec(BigDecimal(2)))
 
   private val keys = Vector("1", "2", "3", "4", "$f1", "$d2", "x", "[1, 'x']", "[$f1, 'x']")
+  /** The rank of each of [[keys]], equal for loosely equal keys. `p` only
+    * points from a key to one of lower rank, so the references form no
+    * cycle: a cascade deletes the referencing records before the record
+    * they reference, and a cycle would recurse without end. */
+  private val rank = Vector(0, 1, 2, 3, 0, 1, 4, 5, 5)
 
   /** Keys every probe covers besides the stored ones (99 is never written). */
   val probeKeys: Vector[V] = Vector(VInt(1), VInt(2), VFloat(1.0), VDec(BigDecimal(2)),
@@ -46,7 +52,12 @@ object InterpScripts {
     val r = new Random(seed)
     def k(): String = keys(r.nextInt(keys.length))
     def n(): Int = r.nextInt(4)
-    def simple(): String = r.nextInt(17) match {
+    def ref(): String = {
+      val (a, b) = (r.nextInt(keys.length), r.nextInt(keys.length))
+      val (from, to) = if (rank(a) >= rank(b)) (a, b) else (b, a)
+      s"UPDATE n:${keys(from)} SET p = ${if (rank(from) == rank(to)) "NONE" else "n:" + keys(to)};"
+    }
+    def simple(): String = r.nextInt(19) match {
       case 0  => s"CREATE n:${k()} SET v = ${n()};"
       case 1  => s"CREATE n SET v = ${n()};"
       case 2  => s"RELATE n:${k()}->e->n:${k()} SET w = ${n()};"
@@ -64,9 +75,12 @@ object InterpScripts {
       case 14 => s"UPDATE n SET in = n:${k()}, out = n:${k()} WHERE v = ${n()};"
       case 15 => s"INSERT RELATION IGNORE INTO ${if (r.nextBoolean()) "e" else "n"} " +
         s"{id: ${k()}, in: n:${k()}, out: n:${k()}, w: ${n()}};"
+      case 16 => s"INSERT RELATION INTO e {id: ${k()}, in: n:${k()}, out: n:${k()}, w: ${n()}} " +
+        s"ON DUPLICATE KEY UPDATE w = ${n()};"
+      case 17 => ref()
       case _  => s"INSERT INTO n {id: ${k()}, v: ${n()}} ON DUPLICATE KEY UPDATE v += 1;"
     }
-    def chunk(): String = r.nextInt(26) match {
+    def chunk(): String = r.nextInt(28) match {
       case 0 => s"DEFINE EVENT ev ON e WHEN $$event = 'DELETE' AND $$before.w = ${n()} THEN { THROW 'boom' };"
       case 1 => s"DEFINE EVENT ev ON e WHEN $$event = 'DELETE' AND $$before.w = ${n()} THEN { DELETE n:${k()} };"
       case 2 => "REMOVE EVENT ev ON e;"
@@ -80,6 +94,8 @@ object InterpScripts {
       case 9 => "REMOVE EVENT up ON n;"
       case 10 => "DEFINE INDEX ew ON e FIELDS w UNIQUE;"
       case 11 => "REMOVE INDEX ew ON e;"
+      case 12 => "DEFINE FIELD p ON n REFERENCE ON DELETE CASCADE;"
+      case 13 => "REMOVE FIELD p ON n;"
       case _ => simple()
     }
     Vector.fill(12 + r.nextInt(20))(chunk())
