@@ -4712,17 +4712,25 @@ final class Interp {
     else VArr(results.toVector)
   }
 
+  /** The (table, stored key) of every record whose [[removeDoc]] is in
+    * progress: a CASCADE or an edge purge that comes back to one of them
+    * skips it, so a reference cycle ends and no record is removed twice. */
+  private val removing = mutable.Set.empty[(String, V)]
+
   /** One document removal, the lifecycle every deleted record runs — a
     * named DELETE, a purged edge and a CASCADE victim alike (doc/purge.rs):
     * the ON DELETE actions of the records that reference it, the removal
     * and its edge mark, the events, then the purge of its edges. */
   private def removeDoc(tb: String, key: V, doc: VObj, env: Env): Unit = {
     val rid = recordId(tb, key, doc)
-    applyReferentialActions(rid, env)
-    tables.get(tb).foreach(removeRecord(_, key))
-    unmarkEdge(tb, key)
-    fireEvents(tb, Some(doc), scala.None, env)
-    cascadeEdgeDeletes(rid, env)
+    removing += ((tb, key))
+    try {
+      applyReferentialActions(rid, env)
+      tables.get(tb).foreach(removeRecord(_, key))
+      unmarkEdge(tb, key)
+      fireEvents(tb, Some(doc), scala.None, env)
+      cascadeEdgeDeletes(rid, env)
+    } finally removing -= ((tb, key))
   }
 
   /** Deleting a record purges the graph edges pointing in or out of it
@@ -4746,8 +4754,10 @@ final class Interp {
           keysComparedCount += 1
           (relation || marked.exists(_.contains(k))) && endpoint(t(k))
         }.sortBy(t.position).map(k => k -> t(k))
-        // a nested cascade may have removed a victim already
-        victims.foreach { case (k, doc) => if (t.contains(k)) removeDoc(etb, k, doc, env) }
+        // a nested cascade may have removed a victim already, or be
+        // removing it (an edge whose CASCADE victim is its endpoint)
+        victims.foreach { case (k, doc) =>
+          if (t.contains(k) && !removing((etb, k))) removeDoc(etb, k, doc, env) }
       }
     }
   }
@@ -4780,8 +4790,11 @@ final class Interp {
               case "REJECT" =>
                 throw SqlError(s"Cannot delete `${Render.sql(target)}` as it is referenced by " +
                   s"`${Render.sql(recordId(tbl, k, r))}` with an ON DELETE REJECT clause")
-              // an earlier victim's cascade may have removed it already
-              case "CASCADE" => if (tables.get(tbl).exists(_.contains(k))) removeDoc(tbl, k, r, env)
+              // an earlier victim's cascade may have removed it already,
+              // and a record this statement is removing ends a cycle
+              case "CASCADE" =>
+                if (tables.get(tbl).exists(_.contains(k)) && !removing((tbl, k)))
+                  removeDoc(tbl, k, r, env)
               case "UNSET" =>
                 val updated = docFieldPath(r, path) match {
                   case VArr(items) =>
@@ -4896,11 +4909,13 @@ final class Interp {
               // the update arm binds $input to the incoming row
               // (core/tests/insert.rs insert_statement_duplicate_key_update);
               // it is a full document write, with a real initial document
-              // for RETURN DIFF/BEFORE (doc/pluck.rs diffs initial→current)
-              val updated0 = applyData(doc, Some(SetData(sets)),
-                env.copy(doc = Some(doc))
-                  .bind("input", VObj(row.fields.updated("id", rid))))
-              writeDoc(tb, stored, Some(doc), updated0, s.output, env, edge = s.relation)
+              // for RETURN DIFF/BEFORE (doc/pluck.rs diffs initial→current).
+              // A record the UPDATE permission denies is skipped silently,
+              // as in UPDATE (doc/allow.rs)
+              if (!permAllows(tb, "update", doc)) scala.None
+              else writeDoc(tb, stored, Some(doc), applyData(doc, Some(SetData(sets)),
+                env.copy(doc = Some(doc)).bind("input", VObj(row.fields.updated("id", rid)))),
+                s.output, env, edge = s.relation)
             case scala.None =>
               throw SqlError(s"Database record `${Render.sql(VRid(tb, key))}` already exists")
           }

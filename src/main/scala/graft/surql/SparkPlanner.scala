@@ -63,13 +63,6 @@ object SparkPlanner {
     * the built-in testdata catalog) — consulted after [[recordKeyBase]]. */
   val extraRecordKeys = scala.collection.concurrent.TrieMap[String, String]()
 
-  /** Deleted-key-count threshold for referential actions over array-link
-    * fields: at or below it, the key set broadcasts as ONE array row
-    * (shuffle-free arrays_overlap/array_except per referencing row); above
-    * it, the link arrays explode into an equi-join so no driver-sized array
-    * ever materializes. */
-  val ArrayLinkBroadcastMax = 10000
-
   /** Record-id key column per table (`table:key` scans). */
   val recordKeyBase: Map[String, String] = Map(
     "customer" -> "c_custkey", "orders" -> "o_orderkey", "part" -> "p_partkey",
@@ -718,54 +711,43 @@ object SparkPlanner {
         }
       }
     }
-    // deleting a record purges the graph edges pointing in or out of it
-    // (doc/purge.rs; Interp cascadeEdgeDeletes) — one anti-join per
-    // relation table whose endpoints include the deleted table, with the
-    // edge table's own DELETE events firing on the purged rows. Runs for
-    // the top-level DELETE's keys AND for every CASCADE victim level (the
-    // reference purges per deleted record, so cascaded deletions must not
-    // leave dangling edges).
-    def purgeEdges(table: String, gone: DataFrame): Unit = {
-      val goneKey = gone.columns.head
-      graft.operators.GraphOps.edgeDefs.all.foreach {
-        case (et, (fromT, toT)) if (fromT == table || toT == table) &&
-            et != table =>
-          // purge only STORED relation tables (overlay entries or real
-          // parquet); derived built-ins (supplies/next_order) and
-          // registrations leaked from other fixtures have no storage
-          // to purge
-          val ebaseOpt = st.overlay.get(et).orElse(
-            Tables.withOverlay(st.overlay)(storedTable(spark, dir, et)))
-          ebaseOpt.foreach { ebase =>
-            var kept = ebase
-            if (fromT == table && ebase.columns.contains("in"))
-              kept = kept.join(
-                gone.withColumnRenamed(goneKey, "in"), Seq("in"), "left_anti")
-            if (toT == table && ebase.columns.contains("out"))
-              kept = kept.join(
-                gone.withColumnRenamed(goneKey, "out"), Seq("out"), "left_anti")
-            st.overlay += (et -> kept)
-            fireScriptEvents(et, ebase, kept)
-          }
-        case _ => ()
-      }
+    // One removal, the lifecycle every deleted record runs (doc/purge.rs;
+    // Interp removeDoc) — a named DELETE, a CASCADE victim and a purged
+    // edge alike: the referrers' ON DELETE actions for the removed keys
+    // `gone` (None for a table with no record key, which nothing can
+    // reference or link), the overlay write `drop` makes of the table's
+    // state and its events, then the purge of `gone`'s edges. That state is
+    // the caller's `base0` unless the actions wrote the table. `chain`
+    // holds, per table, the keys the enclosing steps remove, so a reference
+    // cycle ends where it comes back to one of them. Each CASCADE level and
+    // purged edge table nests one step deeper; past the cap the statement
+    // fails (a silent stop would leave referencing rows in place).
+    def removeStep(t: String, base0: DataFrame, gone: Option[DataFrame],
+        chain: Map[String, DataFrame], depth: Int)(drop: DataFrame => DataFrame): DataFrame = {
+      if (depth <= 0) throw SqlError(
+        "SparkPlanner: a DELETE's CASCADE and edge-purge chain exceeded depth 32")
+      val chainT = gone.fold(chain)(g => chain + (t -> chain.get(t).fold(g)(_.union(g))))
+      gone.foreach(applyRefActions(t, _, chainT, depth))
+      val base = st.overlay.getOrElse(t, base0)
+      val after = drop(base)
+      st.overlay += (t -> applyComputed(t, after))
+      fireScriptEvents(t, base, after)
+      gone.foreach(purgeEdges(t, _, chainT, depth))
+      base
     }
     // ON DELETE referential actions (expr/reference.rs; Interp
-    // applyReferentialActions): for every DEFINE FIELD ... REFERENCE whose
-    // rows can point at the deleted table's records — REJECT guards with a
-    // join probe, CASCADE deletes the referencing rows (one anti-join,
-    // recursing for chained references, each victim level routed through
-    // the edge purge), UNSET null-outs the link column (left join) or
-    // removes the deleted keys from a link ARRAY (one broadcast key-set +
-    // array_except — no per-row shuffle). Custom THEN actions stay
-    // interpreter-scope. A chain deeper than the cap ERRORS (a silent stop
-    // would leave referencing rows in place); the reference recurses until
-    // the victim set drains, so only a pathological/cyclic catalog hits it.
-    def applyRefActions(t: String, gone: DataFrame, depth: Int): Unit = {
-      if (depth <= 0) throw SqlError(
-        "SparkPlanner: ON DELETE CASCADE chain exceeded depth 32 — " +
-          "reference cycle or pathologically deep chain")
-      val goneKey = gone.columns.head
+    // applyReferentialActions) for every DEFINE FIELD ... REFERENCE whose
+    // rows can point at `t`'s records. A link projects to (referrer key,
+    // linked key) pairs — the column itself, or the elements of a link
+    // array — and REJECT and CASCADE are one equi-join of those pairs with
+    // the deleted keys: REJECT errors on the first hit, CASCADE removes the
+    // hit referrers the chain is not already removing through the remove
+    // step. UNSET null-outs a link column (left join) or rebuilds a link
+    // array from its surviving elements in order. Custom THEN actions stay
+    // interpreter-scope.
+    def applyRefActions(t: String, gone: DataFrame, chain: Map[String, DataFrame],
+        depth: Int): Unit = {
+      lazy val goneE = gone.select(col(gone.columns.head).as("__e")).distinct()
       st.fldDefs.toSeq.foreach { case (tbl, defs) =>
         defs.filter(_.meta.exists(_.referenceRaw.isDefined)).foreach { fd =>
           val raw = fd.meta.flatMap(_.referenceRaw).getOrElse("").toUpperCase
@@ -793,127 +775,91 @@ object SparkPlanner {
             case ts => ts
           }
           if (action != "IGNORE" && (refTargets.isEmpty || refTargets.contains(t))) {
-            val rbaseOpt = st.overlay.get(tbl).orElse(
-              Tables.withOverlay(st.overlay)(storedTable(spark, dir, tbl)))
-            rbaseOpt.filter(_.columns.contains(path)).foreach { rbase =>
+            planWith(storedTable(spark, dir, tbl)).filter(_.columns.contains(path)).foreach { rbase =>
               val rkey = recordKey.getOrElse(tbl, "id")
-              def reject(refK: Any, tgtK: Any): Nothing = throw SqlError(
-                s"Cannot delete `${Render.sql(VRid(t, asV(tgtK)))}` as it is " +
-                  s"referenced by `${Render.sql(VRid(tbl, asV(refK)))}` " +
-                  "with an ON DELETE REJECT clause")
-              rbase.schema(path).dataType match {
-                case adt @ ArrayType(_, _) =>
-                  // Small delete sets broadcast ONE row holding the key set
-                  // — shuffle-free, O(|gone|) work per referencing row.
-                  // Past the threshold that single array would be a
-                  // driver-sized broadcast with a linear scan per row, so
-                  // the link arrays EXPLODE into an equi-join against the
-                  // deleted keys instead (shuffle on the key, no driver
-                  // materialization) — the shape that survives a
-                  // millions-row DELETE at 100 TB.
-                  val big = gone.limit(ArrayLinkBroadcastMax + 1).count() >
-                    ArrayLinkBroadcastMax
-                  lazy val goneE = gone.select(col(goneKey).as("__e")).distinct()
-                  lazy val exploded =
-                    rbase.select(col(rkey), explode(col(path)).as("__e"))
-                  val goneSet = broadcast(
-                    gone.agg(collect_set(col(goneKey)).as("__gone")))
-                  val hitC = arrays_overlap(col(path), col("__gone"))
-                  action match {
-                    case "REJECT" =>
-                      val probe =
-                        if (big) exploded.join(goneE, Seq("__e"), "inner")
-                          .select(col(rkey), col("__e"))
-                        else rbase.crossJoin(goneSet).filter(hitC)
-                          .select(col(rkey), element_at(
-                            array_intersect(col(path), col("__gone")), 1))
-                      probe.limit(1).collect().headOption
-                        .foreach(r => reject(r.get(0), r.get(1)))
-                    case "CASCADE" =>
-                      val victims =
-                        if (big) exploded.join(goneE, Seq("__e"), "left_semi")
-                          .select(col(rkey)).distinct()
-                        else rbase.crossJoin(goneSet).filter(hitC).select(col(rkey))
-                      // one limit(1) probe per chain level: an empty victim
-                      // set ends the recursion without growing the overlay
-                      if (victims.limit(1).collect().nonEmpty) {
-                        val kept =
-                          if (big) rbase.join(victims, Seq(rkey), "left_anti")
-                          else rbase.crossJoin(goneSet)
-                            .filter(!coalesce(hitC, lit(false))).drop("__gone")
-                        st.overlay += (tbl -> kept)
-                        fireScriptEvents(tbl, rbase, kept)
-                        purgeEdges(tbl, victims)
-                        applyRefActions(tbl, victims, depth - 1)
-                      }
-                    case _ => // UNSET: drop the deleted keys from the array
-                      val updated = if (big) {
-                        // rebuild hit rows' arrays from the non-deleted
-                        // elements, original order restored through the
-                        // explode ordinal
-                        val ex = rbase.select(col(rkey).as("__rk"),
-                          posexplode(col(path)).as(Seq("__p", "__e")))
-                        val hit = ex.join(goneE, Seq("__e"), "left_semi")
-                          .select(col("__rk")).distinct()
-                          .withColumn("__hit", lit(true))
-                        val rebuilt = ex.join(goneE, Seq("__e"), "left_anti")
-                          .groupBy(col("__rk"))
-                          .agg(transform(
-                            array_sort(collect_list(struct(col("__p"), col("__e")))),
-                            s => s.getField("__e")).as("__new"))
-                        rbase
-                          .join(hit, col(rkey) === hit("__rk"), "left")
-                          .drop("__rk")
-                          .join(rebuilt, col(rkey) === rebuilt("__rk"), "left")
-                          .drop("__rk")
-                          .withColumn(path,
-                            when(col("__hit").isNull || col(path).isNull, col(path))
-                              .otherwise(coalesce(col("__new"),
-                                array().cast(adt))))
-                          .drop("__hit", "__new")
-                      } else rbase.crossJoin(goneSet)
-                        // filter, not array_except: the reference REMOVES
-                        // the deleted keys but keeps duplicates and order
-                        // of the surviving elements (Interp filterNot;
-                        // array_except would dedup survivors)
-                        .withColumn(path, when(col(path).isNull, col(path))
-                          .otherwise(filter(col(path),
-                            x => !array_contains(col("__gone"), x))))
-                        .drop("__gone")
-                      st.overlay += (tbl -> updated)
-                      fireScriptEvents(tbl, rbase, updated)
-                  }
+              val adt = rbase.schema(path).dataType
+              val isArray = adt.isInstanceOf[ArrayType]
+              val pairs = rbase.select(col(rkey),
+                (if (isArray) explode(col(path)) else col(path)).as("__e"))
+              val goneAs = gone.select(col(gone.columns.head).as(path)).distinct()
+              action match {
+                case "REJECT" =>
+                  pairs.join(goneE, Seq("__e")).select(col(rkey), col("__e")).limit(1)
+                    .collect().headOption.foreach(r => throw SqlError(
+                      s"Cannot delete `${Render.sql(VRid(t, asV(r.get(1))))}` as it is " +
+                        s"referenced by `${Render.sql(VRid(tbl, asV(r.get(0))))}` " +
+                        "with an ON DELETE REJECT clause"))
+                case "CASCADE" =>
+                  val hit = pairs.join(goneE, Seq("__e"), "left_semi").select(col(rkey))
+                  val victims = chain.get(tbl).fold(hit)(c =>
+                    hit.join(c.toDF(rkey), Seq(rkey), "left_anti"))
+                  // one limit(1) probe per chain level: an empty victim
+                  // set ends the recursion without growing the overlay
+                  if (victims.limit(1).collect().nonEmpty)
+                    removeStep(tbl, rbase, Some(victims), chain, depth - 1)(
+                      // a link column drops its referrers by itself, unless
+                      // some of them are the chain's to remove
+                      if (isArray || chain.contains(tbl)) _.join(victims, Seq(rkey), "left_anti")
+                      else _.join(goneAs, Seq(path), "left_anti"))
                 case _ =>
-                  val goneAs = gone.select(col(goneKey).as(path)).distinct()
-                  action match {
-                    case "REJECT" =>
-                      rbase.join(goneAs, Seq(path), "inner")
-                        .select(col(rkey), col(path)).limit(1).collect()
-                        .headOption.foreach(r => reject(r.get(0), r.get(1)))
-                    case "CASCADE" =>
-                      val victims = rbase
-                        .join(goneAs, Seq(path), "left_semi").select(col(rkey))
-                      if (victims.limit(1).collect().nonEmpty) {
-                        val kept = rbase.join(goneAs, Seq(path), "left_anti")
-                        st.overlay += (tbl -> kept)
-                        fireScriptEvents(tbl, rbase, kept)
-                        purgeEdges(tbl, victims)
-                        applyRefActions(tbl, victims, depth - 1)
-                      }
-                    case _ => // UNSET: null-out the link column
-                      val updated = rbase.join(
-                        goneAs.withColumn("__hit", lit(true)), Seq(path), "left")
-                        .withColumn(path,
-                          when(col("__hit") === true, lit(null).cast(
-                            rbase.schema(path).dataType)).otherwise(col(path)))
-                        .drop("__hit")
-                      st.overlay += (tbl -> updated)
-                      fireScriptEvents(tbl, rbase, updated)
-                  }
+                  val updated = if (isArray) {
+                    // the reference REMOVES the deleted keys but keeps the
+                    // duplicates and order of the surviving elements
+                    // (Interp filterNot): hit rows' arrays rebuild from the
+                    // non-deleted elements through the explode ordinal
+                    val ex = rbase.select(col(rkey).as("__rk"),
+                      posexplode(col(path)).as(Seq("__p", "__e")))
+                    val hit = ex.join(goneE, Seq("__e"), "left_semi")
+                      .select(col("__rk")).distinct()
+                      .withColumn("__hit", lit(true))
+                    val rebuilt = ex.join(goneE, Seq("__e"), "left_anti")
+                      .groupBy(col("__rk"))
+                      .agg(transform(
+                        array_sort(collect_list(struct(col("__p"), col("__e")))),
+                        s => s.getField("__e")).as("__new"))
+                    rbase
+                      .join(hit, col(rkey) === hit("__rk"), "left")
+                      .drop("__rk")
+                      .join(rebuilt, col(rkey) === rebuilt("__rk"), "left")
+                      .drop("__rk")
+                      .withColumn(path,
+                        when(col("__hit").isNull || col(path).isNull, col(path))
+                          .otherwise(coalesce(col("__new"), array().cast(adt))))
+                      .drop("__hit", "__new")
+                  } else rbase.join(goneAs.withColumn("__hit", lit(true)), Seq(path), "left")
+                    .withColumn(path,
+                      when(col("__hit") === true, lit(null).cast(adt)).otherwise(col(path)))
+                    .drop("__hit")
+                  st.overlay += (tbl -> updated)
+                  fireScriptEvents(tbl, rbase, updated)
               }
             }
           }
         }
+      }
+    }
+    // deleting records purges the graph edges pointing in or out of them
+    // (doc/purge.rs; Interp cascadeEdgeDeletes): every STORED relation
+    // table with `table` as an endpoint removes those edges through the
+    // remove step, dropping them with one anti-join per endpoint side.
+    // Derived built-ins (supplies/next_order) and registrations leaked from
+    // other fixtures have no storage to purge.
+    def purgeEdges(table: String, gone: DataFrame, chain: Map[String, DataFrame],
+        depth: Int): Unit = {
+      def at(side: String) = gone.withColumnRenamed(gone.columns.head, side)
+      graft.operators.GraphOps.edgeDefs.all.foreach { case (et, (fromT, toT)) =>
+        if (et != table && (fromT == table || toT == table))
+          planWith(storedTable(spark, dir, et)).foreach { ebase =>
+            val sides = Seq("in" -> fromT, "out" -> toT).collect {
+              case (side, end) if end == table && ebase.columns.contains(side) => side
+            }
+            val ekey = recordKey.getOrElse(et, "id")
+            if (sides.nonEmpty)
+              removeStep(et, ebase, Option.when(ebase.columns.contains(ekey))(sides.map(side =>
+                  ebase.join(at(side), Seq(side), "left_semi").select(col(ekey))).reduce(_ union _)),
+                chain, depth - 1)(
+                b => sides.foldLeft(b)((kept, side) => kept.join(at(side), Seq(side), "left_anti")))
+          }
       }
     }
     def exec(st0: Statement): Unit = Subst.stmt(st0, st.params) match {
@@ -1258,21 +1204,15 @@ object SparkPlanner {
           (t, base, mutCond(t, Ctx(spark, dir, t, base.schema, Map.empty),
             keyPred, s.where, "delete"))
         }
-        val gone = recordKey.get(t).map(k => base0.filter(cond).select(col(k)))
-        // referential ON DELETE actions run BEFORE the delete commits
-        // (Interp applyReferentialActions precedes the remove): a REJECT
-        // hit aborts the statement with the table state untouched, and a
-        // same-table CASCADE/UNSET must not be clobbered by the delete's
-        // own overlay write — the delete filter (and the RETURN over the
-        // deleted rows) re-applies to the ref-action-updated state
-        gone.foreach(applyRefActions(t, _, 32))
-        val (base, ret) = planWith {
-          val base = Tables(spark, dir, t)
-          (base, deleteOutput(base.filter(cond), s.output,
-            Ctx(spark, dir, t, base.schema, Map.empty)))
-        }
-        applyMut(t, base, base.filter(!cond), ret)
-        gone.foreach(purgeEdges(t, _))
+        // the delete filter (and the RETURN over the deleted rows) applies
+        // to the state the referrers' actions leave: a REJECT hit aborts
+        // the statement with the table state untouched, and a same-table
+        // CASCADE/UNSET is not clobbered by the delete's own overlay write
+        val base = removeStep(t, base0,
+          recordKey.get(t).map(k => base0.filter(cond).select(col(k))), Map.empty, 32)(
+          _.filter(!cond))
+        last = Some(planWith(deleteOutput(base.filter(cond), s.output,
+          Ctx(spark, dir, t, base.schema, Map.empty))))
       case s: RelateStmt =>
         val (table, base, after, ret) = planWith {
           val rb = relateEdges(spark, dir, s, st.params)
@@ -2974,10 +2914,16 @@ object SparkPlanner {
           } ++ extra: _*)
         val nonNull = aliases.map(col(_).isNotNull).reduce(_ && _)
         val touched = proj(changed, Nil).filter(nonNull).distinct()
+        // the error names a stored member of the clashing group, the one
+        // the written record meets; the smallest key when all are new
+        val fresh = changed.select(col(key).as("__ridk")).distinct()
+          .withColumn("__new", lit(true))
         val dup = proj(after, Seq(col(key).as("__ridk"))).filter(nonNull)
           .join(touched, aliases, "left_semi")
+          .join(fresh, Seq("__ridk"), "left")
           .groupBy(aliases.map(col).toIndexedSeq: _*)
-          .agg(count(lit(1)).as("__n"), min(col("__ridk")).as("__rid"))
+          .agg(count(lit(1)).as("__n"), coalesce(
+            min(when(col("__new").isNull, col("__ridk"))), min(col("__ridk"))).as("__rid"))
           .filter(col("__n") > 1).limit(1).collect()
         dup.headOption.foreach { r =>
           val vals = fields.indices.map(i => r.get(i) match {
@@ -3268,13 +3214,19 @@ object SparkPlanner {
             .getOrElse(1)
         }
         val untouched = base.join(rows.select(key), Seq(key), "left_anti")
+        // a stored record the UPDATE permission denies is skipped silently
+        // and stays as stored, as in UPDATE (doc/allow.rs)
+        val perm = actionPermCond(spark, ctx.dir, t, "update", base.schema)
         if (maxMult == 1) {
           // duplicate-free batch — plain MERGE arms, one application
           val inputF = rows.select(col(key), inputStruct.as("__input"))
           val updTarget = base.join(inputF, Seq(key), "inner")
-          val semi = updTarget.drop("__input")
+          val permitted = perm.fold(updTarget)(updTarget.filter)
+          val semi = permitted.drop("__input")
           val updated = graft.operators.Mutations
-            .update(updTarget, lit(true), dupSets).drop("__input")
+            .update(permitted, lit(true), dupSets).drop("__input")
+          val kept = perm.fold(untouched)(p => untouched.unionByName(
+            updTarget.filter(!coalesce(p, lit(false))).drop("__input")))
           val result = fresh.unionByName(updated)
           val diff =
             if (!s.output.contains(Output.ODiff)) scala.None
@@ -3282,7 +3234,7 @@ object SparkPlanner {
               .unionByName(graft.operators.Mutations.returnDiff(
                 semi, updated, t, key, linkMap)))
           return (noneRows(fresh).unionByName(semi),
-            untouched.unionByName(updated).unionByName(fresh), result, diff)
+            kept.unionByName(updated).unionByName(fresh), result, diff)
         }
         val counts = marked.filter(col(key).isNotNull).groupBy(col(key))
           .agg(count(lit(1)).as("__mult"), max(col("__inb")).as("__kinb"))
@@ -3301,14 +3253,17 @@ object SparkPlanner {
         val occ = marked.filter(col(key).isNotNull)
           .select(col(key), col("__rn"), inputStruct.as("__input"))
           .join(counts.select(col(key), col("__kinb")), Seq(key))
-        val levels = scala.collection.mutable.ArrayBuffer[DataFrame](cur)
-        val outs = scala.collection.mutable.ArrayBuffer[DataFrame]()
+        // each application's (before, after) documents
+        val applied = scala.collection.mutable.ArrayBuffer[(DataFrame, DataFrame)]()
         (1 to maxMult).foreach { i =>
           val inpI = occ.filter(col("__rn") ===
               when(col("__kinb") === true, lit(i)).otherwise(lit(i + 1)))
             .select(col(key), col("__input"))
-          cur = graft.operators.Mutations.update(
-            cur.join(inpI, Seq(key), "left"), col("__apps") >= i, dupSets)
+          // application i reaches the records with an i-th occurrence whose
+          // current state the UPDATE permission allows
+          val pre = cur.join(inpI, Seq(key), "left")
+            .withColumn("__ok", perm.fold(col("__apps") >= i)(col("__apps") >= i && _))
+          cur = graft.operators.Mutations.update(pre, col("__ok"), dupSets)
             .drop("__input")
           // reference semantics is genuinely sequential per occurrence, so
           // the chain depth equals the batch's max key multiplicity. Small
@@ -3319,23 +3274,20 @@ object SparkPlanner {
           // the chain prefix (quadratic otherwise). `cur` is batch-sized
           // (only the batch's keys), so each checkpoint is tiny.
           if (maxMult > 8 && i < maxMult) cur = cur.localCheckpoint(true)
-          levels += cur
-          outs += cur.filter(col("__apps") >= i).drop("__apps")
+          applied += ((pre.filter(col("__ok")).drop("__input", "__apps", "__ok"),
+            cur.filter(col("__ok")).drop("__apps", "__ok")))
+          cur = cur.drop("__ok")
         }
-        val result = (fresh +: outs.toSeq).reduce(_ unionByName _)
+        val result = (fresh +: applied.map(_._2).toSeq).reduce(_ unionByName _)
         val after = untouched.unionByName(freshSolo).unionByName(cur.drop("__apps"))
-        val bef = (noneRows(fresh) +: (1 to maxMult).map(i =>
-          levels(i - 1).filter(col("__apps") >= i).drop("__apps"))).reduce(_ unionByName _)
+        val bef = (noneRows(fresh) +: applied.map(_._1).toSeq).reduce(_ unionByName _)
         val diff =
           if (!s.output.contains(Output.ODiff)) scala.None
           else {
             val lm = linkMap
             val d0 = graft.operators.Mutations.createDiff(fresh, t, key, lm)
-            val ds = (1 to maxMult).map { i =>
-              graft.operators.Mutations.returnDiff(
-                levels(i - 1).filter(col("__apps") >= i).drop("__apps"),
-                levels(i).filter(col("__apps") >= i).drop("__apps"),
-                t, key, lm)
+            val ds = applied.toSeq.map { case (b, a) =>
+              graft.operators.Mutations.returnDiff(b, a, t, key, lm)
             }
             Some((d0 +: ds).reduce(_ unionByName _))
           }

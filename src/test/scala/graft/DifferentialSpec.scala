@@ -417,6 +417,33 @@ class DifferentialSpec extends AnyFunSuite {
       })
   }
 
+  test("differential-permissions: UPDATE permission gates INSERT's ON DUPLICATE arm on both paths") {
+    val in = new Interp
+    in.run(Parser.parse(fixtureScript))
+    in.run(Parser.parse(
+      "DEFINE TABLE OVERWRITE item PERMISSIONS FOR select FULL FOR update WHERE qty < 3 FOR create FULL FOR delete FULL;"))
+    in.recordAuth = true
+    // item:4 (qty 4) is denied; item:2's second occurrence meets qty 102
+    // and is denied; item:1 and item:7 are allowed
+    val script =
+      """INSERT INTO item [{ id: 1, name: 'x' }, { id: 4, name: 'x' }] ON DUPLICATE KEY UPDATE qty = qty + 100;
+         INSERT INTO item [{ id: 2, name: 'x' }, { id: 7, name: 'x' }, { id: 2, name: 'x' }]
+           ON DUPLICATE KEY UPDATE qty = qty + 100;
+         SELECT name, qty FROM item WHERE qty > 90 ORDER BY name;"""
+    val ires = in.run(Parser.parse(script)).last
+    assert(ires == QOk(VArr(Vector(V.obj("name" -> VStr("n01"), "qty" -> VInt(101)),
+      V.obj("name" -> VStr("n02"), "qty" -> VInt(102)),
+      V.obj("name" -> VStr("n07"), "qty" -> VInt(100))))), s"interp: $ires")
+    compare(script, ires,
+      Tables.withOverlay(Map("item" -> df)) {
+        SparkPlanner.withAuth(SparkPlanner.AuthSession(graft.surql.VNull,
+          Map("item" -> "FULL"),
+          actionPerms = Map(("item", "update") -> "WHERE qty < 3"))) {
+          SparkPlanner.script(spark, "/nonexistent", script)
+        }
+      })
+  }
+
   test("differential-permissions: CREATE permission gates UPSERT and INSERT creations on both paths") {
     val in = new Interp
     in.run(Parser.parse(fixtureScript))

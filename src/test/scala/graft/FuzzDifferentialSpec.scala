@@ -731,8 +731,8 @@ class FuzzDifferentialSpec extends AnyFunSuite {
         }
       case 22 =>
         // ON DELETE referential actions over the buddy link; CASCADE
-        // first breaks the fixture's buddy cycle (cyclic CASCADE never
-        // terminates on either engine)
+        // first breaks the fixture's buddy cycle (a cycle ends where it
+        // returns to the deleted record, so it would delete every item)
         val k = r.nextInt(30) + 1
         r.nextInt(3) match {
           case 0 =>
@@ -1075,9 +1075,8 @@ class FuzzDifferentialSpec extends AnyFunSuite {
     checkBothError(
       """DEFINE INDEX nu ON item FIELDS name UNIQUE;
          INSERT INTO item { id: 1, name: 'n01' } ON DUPLICATE KEY UPDATE name = 'n02';""",
-      // Spark names the smallest key of the clashing pair, here the updated
-      // item:1; Interp names the stored item:2
-      "Database index `nu` already contains 'n02'")
+      // the stored item:2 holds the value, not the updated item:1
+      "Database index `nu` already contains 'n02', with record `item:2`")
   }
 
   test("write-script: a CASCADE victim's likes edges are purged on both engines") {
@@ -1092,6 +1091,67 @@ class FuzzDifferentialSpec extends AnyFunSuite {
     assert(ires == QOk(VArr(Vector(V.obj("n" -> VInt(41))))), s"interp: $ires")
     val rows = sres.fold(m => fail(s"spark: $m"), identity)
     assert(rows.map(_.getLong(0)) == Seq(41L), s"spark rows $rows")
+  }
+
+  // Every delete runs one remove step (doc/purge.rs): a CASCADE back into
+  // a record the statement is removing ends the cycle, and a purged edge
+  // runs its referrers' ON DELETE actions like a named DELETE
+  private val cycleScripts = Seq(
+    // item:7 references itself
+    """UPDATE item SET buddy = NONE;
+       UPDATE item:7 SET buddy = item:7;
+       DEFINE FIELD buddy ON item REFERENCE ON DELETE CASCADE;
+       DELETE item:7;
+       SELECT count() AS n FROM item GROUP ALL;""" -> 29L,
+    // item:7 and item:8 reference each other
+    """UPDATE item SET buddy = NONE;
+       UPDATE item:7 SET buddy = item:8;
+       UPDATE item:8 SET buddy = item:7;
+       DEFINE FIELD buddy ON item REFERENCE ON DELETE CASCADE;
+       DELETE item:7;
+       SELECT count() AS n FROM item GROUP ALL;""" -> 28L)
+
+  cycleScripts.zipWithIndex.foreach { case ((q, n), i) =>
+    test(s"remove-script[$i]: a cyclic CASCADE ends on both engines") {
+      val (ires, sres) = runBoth(q)
+      assert(ires == QOk(VArr(Vector(V.obj("n" -> VInt(n))))), s"interp: $ires")
+      val rows = sres.fold(m => fail(s"spark: $m"), identity)
+      assert(rows.map(_.getLong(0)) == Seq(n), s"spark rows $rows")
+    }
+  }
+
+  test("remove-script: a DELETE whose record references itself returns it on both engines") {
+    // item:7 and item:8 both reference item:7: the CASCADE removes item:8
+    // and leaves item:7 to the DELETE itself
+    val (ires, sres) = runBoth(
+      """UPDATE item SET buddy = NONE;
+         UPDATE item:7 SET buddy = item:7;
+         UPDATE item:8 SET buddy = item:7;
+         DEFINE FIELD buddy ON item REFERENCE ON DELETE CASCADE;
+         DELETE item:7 RETURN VALUE $before.name;""")
+    assert(ires == QOk(VArr(Vector(VStr("n07")))), s"interp: $ires")
+    val rows = sres.fold(m => fail(s"spark: $m"), identity)
+    assert(rows.map(_.getString(0)) == Seq("n07"), s"spark rows $rows")
+  }
+
+  test("remove-script: a purged edge runs its referrers' ON DELETE actions on both engines") {
+    // deleting item:1 purges `e1x8x1`: prof:1 references it with CASCADE,
+    // prof:2 with UNSET; prof:3's edge `e2x15x2` is not purged
+    val (ires, sres) = runBoth(
+      """UPDATE prof:1 SET fav = likes:`e1x8x1`;
+         UPDATE prof:2 SET pin = likes:`e1x8x1`;
+         UPDATE prof:3 SET pin = likes:`e2x15x2`;
+         DEFINE FIELD fav ON prof TYPE option<record<likes>> REFERENCE ON DELETE CASCADE;
+         DEFINE FIELD pin ON prof TYPE option<record<likes>> REFERENCE ON DELETE UNSET;
+         DELETE item:1;
+         SELECT id, pin FROM prof WHERE id <= prof:3 ORDER BY id;""")
+    assert(ires == QOk(VArr(Vector(
+      V.obj("id" -> graft.surql.VRid("prof", VInt(2)), "pin" -> graft.surql.VNone),
+      V.obj("id" -> graft.surql.VRid("prof", VInt(3)),
+        "pin" -> graft.surql.VRid("likes", VStr("e2x15x2")))))), s"interp: $ires")
+    val rows = sres.fold(m => fail(s"spark: $m"), identity)
+    assert(rows.map(r => (r.getLong(0), Option(r.getString(1)))) ==
+      Seq((2L, None), (3L, Some("e2x15x2"))), s"spark rows $rows")
   }
 
   // `@{n..m}` recursion over `likes`: even items have out-degree 2, item:30
@@ -1155,7 +1215,8 @@ class FuzzDifferentialSpec extends AnyFunSuite {
 
   // ON DELETE referential actions over the buddy link (expr/reference.rs).
   // The fixture's buddy graph is one big cycle, so CASCADE cases first
-  // break it (a cyclic CASCADE never terminates on either engine).
+  // break it (a cyclic CASCADE ends where it returns to the deleted
+  // record, so on the whole cycle it would delete every item).
   private val refScripts = Seq(
     """DEFINE FIELD buddy ON item REFERENCE ON DELETE UNSET;
        DELETE item:12;

@@ -6,7 +6,8 @@ import graft.surql._
 /** Every stored create and update in [[Interp]] runs one write step
   * (doc/mod.rs:12-36): INSERT and RELATE shape their RETURN like CREATE, with
   * the table's COMPUTED fields, and their events see the statement's
-  * document as `$input`, as CREATE's and UPDATE's do. */
+  * document as `$input`, as CREATE's and UPDATE's do. Every delete runs one
+  * remove step, once per record. */
 class InterpWriteSpec extends AnyFunSuite {
 
   private def run(sql: String): Seq[QueryResult] = new Interp().run(Parser.parse(sql))
@@ -33,5 +34,19 @@ class InterpWriteSpec extends AnyFunSuite {
          RELATE a:1->e:1->b:1 SET w = 3;
          SELECT given, stored FROM log;""")
     assert(rs.last == QOk(VArr(Vector(V.obj("given" -> VInt(3), "stored" -> VInt(6))))), rs.last)
+  }
+
+  test("an edge that its CASCADE victim's purge reaches is removed once") {
+    // n:a is an edge out of n:b, and n:b references n:a: deleting n:a
+    // cascades to n:b, whose edge purge meets n:a while n:a is being removed
+    val rs = run(
+      """DEFINE EVENT ev ON n WHEN $event = 'DELETE' THEN { CREATE log SET k = $before.id };
+         CREATE n:b;
+         INSERT RELATION INTO n {id: 'a', in: n:b, out: n:c};
+         UPDATE n:b SET p = n:a;
+         DEFINE FIELD p ON n REFERENCE ON DELETE CASCADE;
+         DELETE n:a;
+         SELECT VALUE k FROM log ORDER BY k;""")
+    assert(rs.last == QOk(VArr(Vector(VRid("n", VStr("a")), VRid("n", VStr("b"))))), rs.last)
   }
 }
