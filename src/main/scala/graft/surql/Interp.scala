@@ -296,10 +296,13 @@ object Interp {
     * (doc/alter.rs generate_record_id; update/recordid golden). */
   def checkIdUnchanged(applied: VObj, rid: VRid): Unit =
     applied.fields.get("id") match {
-      case Some(r: VRid) if !V.looseEq(r, rid) =>
-        throw SqlError(s"Found ${Render.sql(r)} for the `id` field, but a specific record has been specified")
+      case Some(r: VRid) if !V.looseEq(r, rid) => throw SqlError(idChanged(r))
       case _ => ()
     }
+
+  /** The error of an update that gives a record the id `r`. */
+  def idChanged(r: VRid): String =
+    s"Found ${Render.sql(r)} for the `id` field, but a specific record has been specified"
 
   /** diff-match-patch patch text for a string change (dmp patch_make1 +
     * patch_to_text, val/value/diff.rs:70) — the full canonical pipeline
@@ -4543,22 +4546,30 @@ final class Interp {
   /** One document write, the lifecycle every stored create and update runs
     * (doc/mod.rs:12-36). `before` is the stored document, `None` for a new
     * one (the reference's `is_new`); `doc0` is the document the statement
-    * built, which events see as `$input`. Steps: the field pipeline; for a
-    * new document the create permission (a denied create is skipped
-    * silently and fires nothing, doc/allow.rs; reproductions/7208); the
-    * unique indexes; the store under the stored key `key`; the edge mark
-    * when `edge` (RecordType::Edge, doc/alter.rs:93); the events. Returns
-    * the RETURN value, `None` if nothing was written or RETURN NONE. */
+    * built. Steps: for an update (UPDATE, UPSERT, each ON DUPLICATE
+    * application) the id rule — a record id other than the stored one
+    * fails (doc/alter.rs) — and the edge identity — an edge keeps its
+    * id, `in` and `out` (doc/relate.rs); the field pipeline; for a new
+    * document the create permission (a denied create is skipped silently
+    * and fires nothing, doc/allow.rs; reproductions/7208); the unique
+    * indexes; the store under the stored key `key`; the edge mark when
+    * `edge` (RecordType::Edge, doc/alter.rs:93); the events, which see the
+    * document the first two steps leave as `$input`. Returns the RETURN
+    * value, `None` if nothing was written or RETURN NONE. */
   private def writeDoc(tb: String, key: V, before: Option[VObj], doc0: VObj,
       output: Option[Output], env: Env, edge: Boolean = false): Option[V] = {
     val rid = before.fold(VRid(tb, key))(recordId(tb, key, _))
-    val doc = applyFieldPipeline(tb, rid, doc0, before, isCreate = before.isEmpty, env)
+    val input = before.fold(doc0) { stored =>
+      Interp.checkIdUnchanged(doc0, rid)
+      if (isEdgeRecord(tb, key)) Interp.keepEdgeIdentity(doc0, stored, rid) else doc0
+    }
+    val doc = applyFieldPipeline(tb, rid, input, before, isCreate = before.isEmpty, env)
     if (before.isEmpty && !permAllows(tb, "create", doc)) scala.None
     else {
       checkUniqueIndexes(tb, rid, doc)
       putRecord(table(tb), key, doc)
       if (edge) markEdge(tb, key)
-      fireEvents(tb, before, Some(doc), env, Some(doc0))
+      fireEvents(tb, before, Some(doc), env, Some(input))
       shapeOutput(before, Some(doc), output, env, tb)
     }
   }
@@ -4638,14 +4649,9 @@ final class Interp {
       }
       // the update arm, for a stored record that passed WHERE and the
       // UPDATE permission
-      def update(key: V, doc: VObj): Unit = {
-        val rid = recordId(tb, key, doc)
-        val applied = applyData(doc, data, mutScope(env, Some(redactDoc(tb, doc))), redactTb = tb)
-        Interp.checkIdUnchanged(applied, rid)
-        val updated0 = if (isEdgeRecord(tb, key))
-          Interp.keepEdgeIdentity(applied, doc, rid) else applied
-        writeDoc(tb, key, Some(doc), updated0, output, env).foreach(results += _)
-      }
+      def update(key: V, doc: VObj): Unit =
+        writeDoc(tb, key, Some(doc), applyData(doc, data,
+          mutScope(env, Some(redactDoc(tb, doc))), redactTb = tb), output, env).foreach(results += _)
       // UPSERT's create arm
       def create(key: V): Unit = {
         val doc0 = applyData(VObj(TreeMap("id" -> (VRid(tb, key): V))), data, mutScope(env, scala.None))
@@ -4908,8 +4914,9 @@ final class Interp {
               val doc = t(stored)
               // the update arm binds $input to the incoming row
               // (core/tests/insert.rs insert_statement_duplicate_key_update);
-              // it is a full document write, with a real initial document
-              // for RETURN DIFF/BEFORE (doc/pluck.rs diffs initial→current).
+              // it is a full document update, id rule and edge identity
+              // included, with a real initial document for RETURN
+              // DIFF/BEFORE (doc/pluck.rs diffs initial→current).
               // A record the UPDATE permission denies is skipped silently,
               // as in UPDATE (doc/allow.rs)
               if (!permAllows(tb, "update", doc)) scala.None

@@ -598,16 +598,29 @@ object SparkPlanner {
         val ctx = Ctx(spark, dir, t, d.schema, Map.empty)
         d.withColumn(fe._1, toCol(fe._2, ctx))
       }
-    // a mutation commits its table's after-state to the overlay, then fires
-    // any DEFINE EVENT triggers on that table (doc/event.rs: events run as
-    // part of the same transaction; cascades do not re-fire here);
-    // COMPUTED projections re-apply so reads stay consistent with the
-    // freshly written dependency columns
-    def applyMut(table: String, before: DataFrame, after: DataFrame,
-        ret: DataFrame): Unit = {
-      st.overlay += (table -> applyComputed(table, after))
-      fireScriptEvents(table, before, after)
-      last = Some(ret)
+    // a write commits its table's new `state` to the overlay, then fires the
+    // table's DEFINE EVENT triggers over the change from `before` to `after`
+    // — the whole table, or the rows of it a step reached (doc/event.rs:
+    // events run as part of the same transaction; cascades do not re-fire
+    // here); COMPUTED projections re-apply so reads stay consistent with
+    // the freshly written dependency columns ([[eventsLast]] defers events)
+    var queued: Option[Vector[(String, DataFrame, DataFrame)]] = scala.None
+    def commit(t: String, state: DataFrame, before: DataFrame, after: DataFrame): Unit = {
+      st.overlay += (t -> applyComputed(t, state))
+      queued match {
+        case Some(q) => queued = Some(q :+ ((t, before, after)))
+        case scala.None => fireScriptEvents(t, before, after)
+      }
+    }
+    // A statement that writes its table in several steps (INSERT's create
+    // arm and ON DUPLICATE levels, UPSERT's two arms) builds each step's
+    // state from the frames of the one before, so the events of every step
+    // fire, in order, after its last write: an event's THEN CREATE into the
+    // written table lands on the final state instead of under a later step
+    def eventsLast[T](f: => T): T = {
+      val (out, q) = try { queued = Some(Vector.empty); (f, queued.get) } finally queued = scala.None
+      q.foreach { case (t, b, a) => fireScriptEvents(t, b, a) }
+      out
     }
     // the rows a mutation touches: key ∧ WHERE ∧ the table's `action`
     // permission (doc/allow.rs)
@@ -616,41 +629,56 @@ object SparkPlanner {
       (keyPred.toSeq ++ where.map(toCol(_, ctx)).toSeq ++
         actionPermCond(spark, dir, t, action, ctx.schema).toSeq)
         .reduceOption(_ && _).getOrElse(lit(true))
-    // the update arm (UPDATE; UPSERT on an existing record): the SETs run
-    // through the field pipeline, and the unique indexes whose root column
-    // a SET writes are re-checked over the updated rows. Returns (table
-    // after-state, matched rows before, matched rows after) — the last two
-    // are the RETURN clause's frames.
-    def updateArm(t: String, base: DataFrame, ctx: Ctx, cond: Column,
-        sets: Map[String, Column]): (DataFrame, DataFrame, DataFrame) = {
+    // One update of stored records, the lifecycle UPDATE, both UPSERT
+    // update arms and each level of INSERT's ON DUPLICATE arm run
+    // (doc/mod.rs; Interp writeDoc with a stored document): the id rule and
+    // the edge identity ([[keepIdentity]]), the field pipeline over the
+    // SETs of `data`, the write of the `base` rows `cond` selects (key ∧
+    // WHERE ∧ UPDATE permission, or a level's occurrences), the re-check of
+    // the unique indexes whose root column a SET writes, then the overlay
+    // write of the table — the updated `base` and the rows `rest` holds
+    // outside it — and the events of the change ([[commit]]). `allowNew`
+    // lets a SET add a missing column (UPDATE); `input`, a (key, `__input`)
+    // frame left-joined onto `base`, binds `$input` per row. Returns (`base`
+    // updated, written rows before, written rows after), the last two the
+    // RETURN clause's frames.
+    def updateStep(t: String, base: DataFrame, cond: Column, data: Option[Data],
+        allowNew: Boolean = false, input: Option[DataFrame] = scala.None,
+        rest: Option[DataFrame] = scala.None): (DataFrame, DataFrame, DataFrame) = {
       val key = recordKey(t)
-      val setsU = enforceSets(sets, st.fldDefs.getOrElse(t, Vector.empty), ctx, t, key)
-      val after = graft.operators.Mutations.update(base, cond, setsU)
-      val before = base.filter(cond)
+      val ctx0 = Ctx(spark, dir, t, base.schema, Map.empty)
+      val ctx = if (input.isEmpty) ctx0 else ctx0.copy(lambdaParams = Map("input" -> col("__input")))
+      val sets = enforceSets(
+        keepIdentity(t, key, data, setMap(data, ctx, requireExisting = true, allowNew = allowNew)),
+        st.fldDefs.getOrElse(t, Vector.empty), ctx, t, key)
+      def rows(df: DataFrame): DataFrame = if (input.isEmpty) df else df.drop("__input")
+      def write(df: DataFrame, c: Column): DataFrame =
+        rows(graft.operators.Mutations.update(df, c, sets))
+      val src = input.fold(base)(base.join(_, Seq(key), "left"))
+      val written = src.filter(cond)
+      val after = write(src, cond)
+      val before = rows(written)
+      val changed = write(written, lit(true))
+      val state = rest.fold(after)(after.unionByName(_))
       val touchedIdx = st.uniqDefs.getOrElse(t, Vector.empty)
-        .filter(_._2.exists(f => setsU.keySet.contains(fieldRoot(f))))
-      if (touchedIdx.nonEmpty)
-        checkUniqueIndexes(t, after,
-          after.join(before.select(key), Seq(key), "left_semi"), touchedIdx, key)
-      (after, before, graft.operators.Mutations.update(before, lit(true), setsU))
+        .filter(_._2.exists(f => sets.keySet.contains(fieldRoot(f))))
+      if (touchedIdx.nonEmpty) checkUniqueIndexes(t, state, changed, touchedIdx, key)
+      commit(t, state, base, after)
+      (after, before, changed)
     }
-    // the create stage every new record passes (doc/mod.rs lifecycle):
-    // the create permission (a denied create is silently skipped,
-    // doc/allow.rs), then the field pipeline, over rows conformed by
-    // [[conformRows]]
-    def createStage(t: String, ctx: Ctx, rows: DataFrame): DataFrame = {
-      val permitted = actionPermCond(spark, dir, t, "create", rows.schema)
-        .map(rows.filter).getOrElse(rows)
-      applyFieldDefs(permitted, st.fldDefs.getOrElse(t, Vector.empty), ctx, t, recordKey(t))
-    }
-    // the create arm of CREATE, UPSERT, RELATE and an event's THEN CREATE
-    // (INSERT runs the stage inside its own arms): the create stage, the
-    // union onto the rows `onto` keeps of the table — RELATE's drop the
-    // edges it replaces — then the unique check over the created rows.
-    // Returns (table after-state, created).
+    // the create arm every new record passes (doc/mod.rs lifecycle) — a
+    // CREATE, UPSERT's create arm, INSERT's new rows, a RELATE edge and an
+    // event's THEN CREATE row: over rows conformed by [[conformRows]], the
+    // create permission (a denied create is silently skipped,
+    // doc/allow.rs), the field pipeline, the union onto the rows `onto`
+    // keeps of the table — RELATE's drop the edges it replaces — then the
+    // unique check over the created rows. Returns (table after-state,
+    // created).
     def createArm(t: String, ctx: Ctx, rows: DataFrame)(
         onto: DataFrame => DataFrame): (DataFrame, DataFrame) = {
-      val created = createStage(t, ctx, rows)
+      val created = applyFieldDefs(
+        actionPermCond(spark, dir, t, "create", rows.schema).map(rows.filter).getOrElse(rows),
+        st.fldDefs.getOrElse(t, Vector.empty), ctx, t, recordKey(t))
       val after = onto(created).unionByName(created)
       checkUniqueIndexes(t, after, created, st.uniqDefs.getOrElse(t, Vector.empty), recordKey(t))
       (after, created)
@@ -730,8 +758,7 @@ object SparkPlanner {
       gone.foreach(applyRefActions(t, _, chainT, depth))
       val base = st.overlay.getOrElse(t, base0)
       val after = drop(base)
-      st.overlay += (t -> applyComputed(t, after))
-      fireScriptEvents(t, base, after)
+      commit(t, after, base, after)
       gone.foreach(purgeEdges(t, _, chainT, depth))
       base
     }
@@ -861,6 +888,118 @@ object SparkPlanner {
                 b => sides.foldLeft(b)((kept, side) => kept.join(at(side), Seq(side), "left_anti")))
           }
       }
+    }
+    // INSERT's arms with the reference's sequential row semantics
+    // (expr/statements/insert.rs processes rows in order, mirrored by Interp
+    // execInsert). Before the arms split, a unique index's stored holder of
+    // a row's value tuple is looked up once: IGNORE skips such a row, and ON
+    // DUPLICATE sends a row whose key [[insertRows]] generated to the
+    // holder's key (so it looks holders up only when some key may be
+    // generated, `anyGen`). A record id repeated WITHIN the batch is already a
+    // duplicate when its second row lands, so the bare form errors on the
+    // first clashing row (against the table OR an earlier batch row), and
+    // IGNORE keeps only each key's first occurrence. Each key's first new
+    // row takes the create arm and is written; ON DUPLICATE then runs one
+    // update step per occurrence level: level i applies every key's i-th
+    // update occurrence, observing level i-1, with `$input` bound to that
+    // batch row. Each write's events fire after the last ([[eventsLast]]),
+    // one per created record and per application. A duplicate-free batch is
+    // the one-level case. Returns the RETURN frame, shaped per level: the
+    // created documents (BEFORE is NONE) and each level's (before, after)
+    // documents, one per occurrence as in the reference's output.
+    //
+    // Scale shape: one left join against the stored keys, a key-partitioned
+    // window ONLY when the batch can contain duplicates, and `maxMult`
+    // levels — driver-known for literal batches, one tiny aggregate probe
+    // for sub-select sources. A one-level batch updates the stored table
+    // through one left join; a deeper one first splits off the records a
+    // later occurrence reaches.
+    def insertArms(s: InsertStmt, t: String, base: DataFrame, batch: DataFrame,
+        maxMultHint0: Option[Int], anyGen: Boolean): DataFrame = {
+      import org.apache.spark.sql.expressions.Window
+      val ctx = Ctx(spark, dir, t, base.schema, Map.empty)
+      val key = recordKey(t)
+      val uniq = st.uniqDefs.getOrElse(t, Vector.empty).map(_._2)
+        .filter(fields => (s.ignore || (s.onDuplicate.isDefined && anyGen)) &&
+          fields.forall(batch.columns.contains))
+      // NULL-component tuples are exempt, as in the write check
+      val held = uniq.zipWithIndex.foldLeft(batch) { case (df, (fields, i)) =>
+        val nonNull = fields.map(col(_).isNotNull).reduce(_ && _)
+        df.join(base.filter(nonNull).select(fields.map(col) :+ col(key).as(s"__h$i"): _*),
+          fields, "left")
+      }
+      def holder = coalesce(uniq.indices.map(i => col(s"__h$i")): _*)
+      val rows = (
+        if (uniq.isEmpty) held
+        else if (s.ignore) held.filter(holder.isNull)
+        else held.withColumn(key, when(col(GenC) && holder.isNotNull, holder).otherwise(col(key)))
+      ).drop(GenC +: uniq.indices.map(i => s"__h$i"): _*)
+      // a row sent to its holder may repeat a key the batch names
+      val maxMultHint = if (uniq.nonEmpty && s.onDuplicate.isDefined) scala.None else maxMultHint0
+      val marked0 = rows.join(
+        base.select(col(key), lit(true).as("__inb")), Seq(key), "left")
+      val marked =
+        if (maxMultHint.contains(1)) marked0.withColumn("__rn", lit(1))
+        else marked0.withColumn("__rn",
+          when(col(key).isNull, lit(1)) // defensive: insertRows generates ids for keyless rows
+            .otherwise(row_number().over(
+              Window.partitionBy(col(key)).orderBy(col(SeqC)))))
+      val bare = !s.ignore && s.onDuplicate.isEmpty
+      if (bare)
+        dupIdProbe(t, marked.filter(col("__inb") === true || col("__rn") > 1)
+          .orderBy(SeqC).select(key))
+      // bare form: the probe just proved key uniqueness, so the final plan
+      // keeps the plain anti-join (no window); IGNORE/ON DUPLICATE keep the
+      // first occurrence per key
+      val firsts =
+        if (bare) rows.drop(SeqC).join(base.select(key), Seq(key), "left_anti")
+        else marked.filter(col("__rn") === 1 && col("__inb").isNull)
+          .drop("__inb", "__rn", SeqC)
+      val (created, fresh) = createArm(t, ctx, firsts)(_ => base)
+      commit(t, created, base, created)
+      val levels = s.onDuplicate.fold(Seq.empty[(DataFrame, DataFrame)]) { sets =>
+        val maxMult = maxMultHint.getOrElse {
+          // key multiplicity WITHIN the batch, counted on the materialized
+          // batch alone (joining `marked` would re-scan the stored table)
+          rows.filter(col(key).isNotNull).groupBy(col(key))
+            .agg(count(lit(1)).as("__m")).agg(max(col("__m")).as("__mm"))
+            .collect().headOption
+            .collect { case r if !r.isNullAt(0) => r.getLong(0).toInt }
+            .getOrElse(1)
+        }
+        // each batch row's update occurrence number: a stored key's i-th row
+        // is its i-th application, a created key's first row was its create.
+        // The records a level can reach: the stored table, and for a deeper
+        // batch the created records a later occurrence updates
+        val (occ, reach0, rest) =
+          if (maxMult == 1) (rows.withColumn("__app", lit(1)), base, fresh)
+          else {
+            val again = marked.filter(col("__rn") ===
+              when(col("__inb") === true, lit(1)).otherwise(lit(2))).select(key)
+            (marked.withColumn("__app",
+                when(col("__inb") === true, col("__rn")).otherwise(col("__rn") - 1)),
+              created.join(again, Seq(key), "left_semi"), created.join(again, Seq(key), "left_anti"))
+          }
+        // a stored record the UPDATE permission denies is skipped silently
+        // and stays as stored, as in UPDATE (doc/allow.rs)
+        val perm = actionPermCond(spark, dir, t, "update", base.schema)
+        val inputStruct = struct(base.columns.map(col).toIndexedSeq: _*)
+        var reach = reach0
+        (1 to maxMult).map { i =>
+          val (after, before, changed) = updateStep(t, reach,
+            perm.fold(col("__input").isNotNull)(col("__input").isNotNull && _),
+            Some(SetData(sets)),
+            input = Some(occ.filter(col("__app") === i).select(col(key), inputStruct.as("__input"))),
+            rest = Some(rest))
+          // past 8 levels each one is checkpointed: the analyzer never sees
+          // a deep plan, and the per-level RETURN branches read blocks
+          // instead of re-running the chain prefix (quadratic otherwise)
+          reach = if (maxMult > 8 && i < maxMult) after.localCheckpoint(true) else after
+          (before, changed)
+        }
+      }
+      ((noneRows(fresh), fresh) +: levels).map { case (b, a) => shapeOutput(b, a, s.output, ctx) }
+        .reduce(_ unionByName _)
     }
     def exec(st0: Statement): Unit = Subst.stmt(st0, st.params) match {
       case BeginStmt  =>
@@ -1187,16 +1326,14 @@ object SparkPlanner {
       case s: SelectStmt =>
         last = Some(planWith(planSelect(spark, dir, s, st.params)))
       case s: UpdateStmt =>
-        val (table, base, after, ret) = planWith {
+        last = Some(planWith {
           val Seq(what) = s.what
           val (t, base, keyPred) = mutTarget(spark, dir, what)
           val ctx = Ctx(spark, dir, t, base.schema, Map.empty)
-          val (after, before, changed) = updateArm(t, base, ctx,
-            mutCond(t, ctx, keyPred, s.where, "update"),
-            setMap(s.data, ctx, requireExisting = true, allowNew = true))
-          (t, base, after, shapeOutput(before, changed, s.output, ctx))
-        }
-        applyMut(table, base, after, ret)
+          val (_, before, changed) = updateStep(t, base,
+            mutCond(t, ctx, keyPred, s.where, "update"), s.data, allowNew = true)
+          shapeOutput(before, changed, s.output, ctx)
+        })
       case s: DeleteStmt =>
         val (t, base0, cond) = planWith {
           val Seq(what) = s.what
@@ -1214,7 +1351,7 @@ object SparkPlanner {
         last = Some(planWith(deleteOutput(base.filter(cond), s.output,
           Ctx(spark, dir, t, base.schema, Map.empty))))
       case s: RelateStmt =>
-        val (table, base, after, ret) = planWith {
+        last = Some(planWith {
           val rb = relateEdges(spark, dir, s, st.params)
           // register the relation so traversal and DELETE purges see it —
           // tracked per transaction so CANCEL unregisters
@@ -1232,11 +1369,11 @@ object SparkPlanner {
           // RELATE replaces an existing edge id (Interp: t(key) = doc)
           val (after, created) = createArm(rb.table, ctx, rb.edges)(
             c => base.join(c.select(rb.key), Seq(rb.key), "left_anti"))
-          (rb.table, base, after, shapeOutput(noneRows(created), created, s.output, ctx))
-        }
-        applyMut(table, base, after, ret)
+          commit(rb.table, after, base, after)
+          shapeOutput(noneRows(created), created, s.output, ctx)
+        })
       case s: CreateStmt =>
-        val (table, base, after, ret) = planWith {
+        last = Some(planWith {
           val rawTargets: Seq[(String, Option[V])] = s.what.map {
             case RidLit(t, keyE) => (t, Some(Eval.evalConst(keyE)))
             // bare-table target: the reference generates a record id
@@ -1280,58 +1417,36 @@ object SparkPlanner {
             stored => targets.find(V.looseEq(_, stored)).getOrElse(stored))
           val (after, created) = createArm(t, ctx,
             targets.map(synthRow(base.schema, key, sets)).reduce(_ unionByName _))(_ => base)
-          (t, base, after, shapeOutput(noneRows(created), created, s.output, ctx))
-        }
-        applyMut(table, base, after, ret)
+          commit(t, after, base, after)
+          shapeOutput(noneRows(created), created, s.output, ctx)
+        })
       case s: InsertStmt =>
-        val (table, base, after, ret) = planWith {
+        last = Some(planWith {
           val t = s.into match {
             case Some(TableRef(name)) => name
             case Some(Idiom(Seq(PField(name)))) => name
             case other => throw SqlError(s"SparkPlanner: unsupported INSERT target $other")
           }
           val base = Tables(spark, dir, t)
-          val ctx = Ctx(spark, dir, t, base.schema, Map.empty)
-          val key = recordKey(t)
-          val (rows, maxMult) = insertRows(spark, dir, s.values, t, base, st.params, s.relation)
-          // INSERT IGNORE also skips rows whose unique-index tuple already
-          // exists (insert_ignore_no_duplicate_key golden); NULL-component
-          // tuples are exempt like the write check
-          def ignoreTaken(fresh: DataFrame): DataFrame =
-            if (!s.ignore) fresh
-            else st.uniqDefs.getOrElse(t, Vector.empty).foldLeft(fresh) {
-              case (df, (_, fields)) if fields.forall(df.columns.contains) =>
-                val nonNull = fields.map(col(_).isNotNull).reduce(_ && _)
-                val taken = base.filter(nonNull)
-                  .select(fields.map(col).toIndexedSeq: _*).distinct()
-                df.filter(!nonNull).unionByName(
-                  df.filter(nonNull).join(taken, fields.toSeq, "left_anti"))
-              case (df, _) => df
-            }
-          val dupSetsOf = (dctx: Ctx) => s.onDuplicate.map(sets => enforceSets(
-            setMap(Some(SetData(sets)), dctx, requireExisting = true),
-            st.fldDefs.getOrElse(t, Vector.empty), dctx, t, key)).getOrElse(Map.empty)
-          val (bef, after, changed, diffOpt) =
-            insertArms(spark, s, base, ctx, t, key, rows, maxMult,
-              firsts => ignoreTaken(createStage(t, ctx, firsts)), dupSetsOf)
-          checkUniqueIndexes(t, after, changed,
-            st.uniqDefs.getOrElse(t, Vector.empty), key)
-          (t, base, after,
-            diffOpt.getOrElse(shapeOutput(bef, changed, s.output, ctx)))
-        }
-        applyMut(table, base, after, ret)
+          val (rows, maxMult, anyGen) = insertRows(spark, dir, s.values, t, base, st.params, s.relation)
+          eventsLast(insertArms(s, t, base, rows, maxMult, anyGen))
+        })
       case s: UpsertStmt =>
-        val (table, base, after, ret) = planWith {
+        last = Some(planWith(eventsLast {
           val Seq(what) = s.what
           val (t, base, keyPred) = mutTarget(spark, dir, what)
           val ctx = Ctx(spark, dir, t, base.schema, Map.empty)
-          val sets = setMap(s.data, ctx, requireExisting = true)
           val cond = mutCond(t, ctx, keyPred, s.where, "update")
-          // the create arm's one row, unless the table holds its id
+          // the create arm's one row, unless the table holds its id, written
+          // onto the table state `onto`
           val key = recordKey(t)
-          def createOne(keyV: V, onto: DataFrame) = createArm(t, ctx,
-            synthRow(base.schema, key, sets)(keyV)
-              .join(base.select(key), Seq(key), "left_anti"))(_ => onto)
+          def createOne(keyV: V, onto: DataFrame): DataFrame = {
+            val (after, rows) = createArm(t, ctx,
+              synthRow(base.schema, key, setMap(s.data, ctx, requireExisting = true))(keyV)
+                .join(base.select(key), Seq(key), "left_anti"))(_ => onto)
+            commit(t, after, onto, after)
+            rows
+          }
           what match {
             case TableRef(_) | Idiom(Seq(PField(_))) =>
               // UPSERT over a whole table: update the WHERE-matching rows;
@@ -1344,30 +1459,29 @@ object SparkPlanner {
               // the statement into its create arm).
               val whereOnly = s.where.map(toCol(_, ctx)).getOrElse(lit(true))
               if (base.filter(whereOnly).limit(1).collect().nonEmpty) {
-                val (after, before, changed) = updateArm(t, base, ctx, cond, sets)
-                (t, base, after, shapeOutput(before, changed, s.output, ctx))
+                val (_, before, changed) = updateStep(t, base, cond, s.data)
+                shapeOutput(before, changed, s.output, ctx)
               } else {
-                val (after, rows) = createOne(createDataId(s.data, st.params)
+                val rows = createOne(createDataId(s.data, st.params)
                   .getOrElse(genKeyV(base.schema(key).dataType)), base)
-                (t, base, after, shapeOutput(noneRows(rows), rows, s.output, ctx))
+                shapeOutput(noneRows(rows), rows, s.output, ctx)
               }
             case RidLit(_, keyE) =>
-              // UPSERT t:id: the update arm if the id exists, the create
+              // UPSERT t:id: the update step if the id exists, the create
               // arm otherwise — both lazy, at most one non-empty
               val keyV = Eval.evalConst(keyE) match {
                 case _: VRng => throw SqlError("SparkPlanner: UPSERT needs a point record id")
                 case v => v
               }
-              val (updated, before, changed) = updateArm(t, base, ctx, cond, sets)
-              val (after, rows) = createOne(keyV, updated)
+              val (updated, before, changed) = updateStep(t, base, cond, s.data)
+              val rows = createOne(keyV, updated)
               // RETURN BEFORE: the existing doc on the update arm, NONE on
               // the create arm
-              (t, base, after, shapeOutput(before.unionByName(noneRows(rows)),
-                changed.unionByName(rows), s.output, ctx))
+              shapeOutput(before.unionByName(noneRows(rows)),
+                changed.unionByName(rows), s.output, ctx)
             case _ => throw SqlError("SparkPlanner: UPSERT needs a record-id target")
           }
-        }
-        applyMut(table, base, after, ret)
+        }))
       case other => throw SqlError(s"SparkPlanner: unsupported script statement $other")
     }
     stmts.foreach(exec)
@@ -2871,6 +2985,38 @@ object SparkPlanner {
     }
   }
 
+  /** The update step's id rule and edge identity over its SETs (Interp
+    * writeDoc and applyData). A SET or a PATCH of `/id` that gives the
+    * record a constant record id keeps the key when it names the record
+    * itself and otherwise fails, as ASSERT does, through `raise_error` on
+    * the rows the update writes (doc/alter.rs; a plain value is no record
+    * id and is written as the key, see docs/USAGE.md). CONTENT, REPLACE and
+    * MERGE keep the stored id whatever theirs says. On a relation table
+    * `in` and `out` keep their stored values (doc/relate.rs). */
+  private def keepIdentity(t: String, key: String, data: Option[Data],
+      sets: Map[String, Column]): Map[String, Column] = {
+    def const(e: Expr) = scala.util.Try(Eval.evalConst(e)).toOption
+    val given = data match {
+      case Some(SetData(as)) =>
+        as.collectFirst { case (Idiom(Seq(PField("id"))), "=", e) => e }.flatMap(const)
+      case Some(PatchData(ops)) => const(ops).toSeq.flatMap {
+        case VArr(xs) => xs.collect { case o: VObj if o.fields.get("path").contains(VStr("/id")) =>
+          o.fields.get("value") }.flatten
+        case _ => Nil
+      }.lastOption
+      case _ => scala.None
+    }
+    val keyed = data match {
+      case Some(ContentData(_) | ReplaceData(_) | MergeData(_)) => sets - "id"
+      case _ => given.collect { case r: VRid => r }.fold(sets) { r =>
+        val err = raise_error(lit(Interp.idChanged(r)))
+        sets - "id" + (key ->
+          (if (r.table == t) when(col(key) <=> ridKeyLit(r.key), col(key)).otherwise(err) else err))
+      }
+    }
+    if (graft.operators.GraphOps.edgeDefs.contains(t)) keyed -- Seq("in", "out") else keyed
+  }
+
   /** Fold the field pipeline into an UPDATE's SET map: each assigned value
     * is wrapped, and VALUE-clause fields recompute even when not SET (the
     * reference recomputes them on every write). */
@@ -2944,10 +3090,12 @@ object SparkPlanner {
     *
     * Rows carry a [[SeqC]] ordinal (the batch row order — the reference
     * processes INSERT rows sequentially, so duplicate handling is
-    * order-sensitive). Returns the max record-key multiplicity within the
+    * order-sensitive) and a [[GenC]] flag on a row whose key was
+    * generated. Returns the max record-key multiplicity within the
     * batch when it is driver-known (literal rows; matched with the same
     * loose key equality Interp uses) — `Some(1)` lets the planner skip all
-    * duplicate machinery; `None` (sub-select source) means unknown. */
+    * duplicate machinery; `None` (sub-select source) means unknown — and
+    * whether any row's key may be generated (always, for a sub-select). */
   /** Driver-side generated record key for a keyless CREATE/INSERT row — the
     * reference generates a random record id when none is supplied
     * (dbs/iterator.rs:34-64 GenerateRecordId; types/src/value/record_id),
@@ -3005,7 +3153,7 @@ object SparkPlanner {
 
   private def insertRows(spark: SparkSession, dir: String, values: Expr,
       table: String, base: DataFrame, params: Map[String, V],
-      relation: Boolean = false): (DataFrame, Option[Int]) =
+      relation: Boolean = false): (DataFrame, Option[Int], Boolean) =
     values match {
       case Subquery(sel: SelectStmt) =>
         val rows0 = planSelect(spark, dir, sel, params)
@@ -3026,9 +3174,10 @@ object SparkPlanner {
         // materializes (it writes the rows).
         (conformRows(rows0, base.schema, rows0.columns.map(c => c -> col(c)).toMap)
           .withColumn(SeqC, monotonically_increasing_id())
+          .withColumn(GenC, col(keyName).isNull)
           .withColumn(keyName, coalesce(col(keyName), genKeyCol(keyDt, col(SeqC))))
           .localCheckpoint(true),
-          scala.None)
+          scala.None, true)
       case v @ (_: ArrLit | _: ObjLit) =>
         val objs = Eval.evalConst(Subst.expr(v, params)) match {
           case VArr(items) => items.collect { case o: VObj => o }
@@ -3078,6 +3227,7 @@ object SparkPlanner {
           conformRows(spark.range(1), base.schema,
             keyed.map { case (n, v) => n -> toCol(Lit(v), ctx) }.toMap)
             .withColumn(SeqC, lit(i.toLong))
+            .withColumn(GenC, lit(keyName.exists(!given.contains(_))))
         }.reduce(_ unionByName _)
         // literal batches expose their keys to the driver: max multiplicity
         // under the same loose equality Interp matches record keys with
@@ -3094,7 +3244,8 @@ object SparkPlanner {
             case i  => classes(i) = (classes(i)._1, classes(i)._2 + 1)
           }
         }
-        (rows, Some(classes.map(_._2).maxOption.getOrElse(1)))
+        (rows, Some(classes.map(_._2).maxOption.getOrElse(1)),
+          keyName.exists(k => objs.exists(o => o.fields.getOrElse(k, VNone) == VNone)))
       case other => throw SqlError(
         s"SparkPlanner: unsupported INSERT values $other")
     }
@@ -3132,168 +3283,8 @@ object SparkPlanner {
     * arms — carries the reference's sequential row order. */
   private val SeqC = "__seq"
 
-  /** The MERGE arms of an INSERT batch with the reference's sequential row
-    * semantics (expr/statements/insert.rs processes rows in order, mirrored
-    * by Interp execInsert): a record id repeated WITHIN one batch is already
-    * a duplicate when its second row lands, so the bare form errors on the
-    * first clashing row (against the base table OR an earlier batch row),
-    * IGNORE keeps only each key's first occurrence, and ON DUPLICATE routes
-    * every later occurrence through the update arm — its SETs apply once per
-    * extra occurrence, each application observing the previous one. Every
-    * new row passes `create`: the script executor's create stage, and for
-    * IGNORE its unique-tuple skip.
-    *
-    * Returns (before, after, result, diffOverride): the initial documents
-    * for RETURN BEFORE (all-NULL rows for creations, the pre-application
-    * state per update occurrence), the post-mutation table state, the
-    * per-input-row produced documents (one per occurrence, matching the
-    * reference's output multiset), and — when RETURN DIFF meets ON
-    * DUPLICATE — the per-occurrence JSON-patch frame (create arm: root
-    * replace; update arm: patch between consecutive applied states,
-    * doc/pluck.rs Output::Diff initial→current).
-    *
-    * Scale shape: one left join against the base keys (the same join the
-    * plain anti-join guard costs), a key-partitioned window ONLY when the
-    * batch can actually contain duplicates, and `maxMult` chained
-    * conditional-update selects — driver-known for literal batches, one tiny
-    * aggregate probe for sub-select sources. */
-  private def insertArms(spark: SparkSession, s: InsertStmt, base: DataFrame,
-      ctx: Ctx, t: String, key: String, rows0: DataFrame, maxMultHint: Option[Int],
-      create: DataFrame => DataFrame,
-      dupSetsOf: Ctx => Map[String, Column]): (DataFrame, DataFrame, DataFrame, Option[DataFrame]) = {
-    import org.apache.spark.sql.expressions.Window
-    // sub-select sources arrive ALREADY materialized (insertRows local-
-    // checkpoints the keyed batch so generated ids are stable across
-    // overlay re-executions); literal batches are driver-side constants
-    val rows = rows0
-    val marked0 = rows.join(
-      base.select(col(key), lit(true).as("__inb")), Seq(key), "left")
-    val marked =
-      if (maxMultHint.contains(1)) marked0.withColumn("__rn", lit(1))
-      else marked0.withColumn("__rn",
-        when(col(key).isNull, lit(1)) // defensive: insertRows generates ids for keyless rows
-          .otherwise(row_number().over(
-            Window.partitionBy(col(key)).orderBy(col(SeqC)))))
-    val bare = !s.ignore && s.onDuplicate.isEmpty
-    if (bare)
-      dupIdProbe(t, marked.filter(col("__inb") === true || col("__rn") > 1)
-        .orderBy(SeqC).select(key))
-    // bare form: the probe just proved key uniqueness, so the final plan
-    // keeps the plain anti-join (no window); IGNORE/ON DUPLICATE keep the
-    // first occurrence per key
-    val firsts =
-      if (bare) rows.drop(SeqC).join(base.select(key), Seq(key), "left_anti")
-      else marked.filter(col("__rn") === 1 && col("__inb").isNull)
-        .drop("__inb", "__rn", SeqC)
-    val fresh = create(firsts)
-    def linkMap = ctx.schema.fieldNames.toIndexedSeq
-      .flatMap(c => links.get((ctx.table, c)).map(x => c -> x._1)).toMap
-    s.onDuplicate match {
-      case scala.None =>
-        // clashing base rows stay untouched (bare form errored above;
-        // IGNORE skips), so the new state is simply base ∪ fresh
-        (noneRows(fresh), base.unionByName(fresh), fresh, scala.None)
-      case Some(_) =>
-        // the update arm binds $input to the incoming row — the SETs
-        // evaluate against the EXISTING document joined with a struct of
-        // the incoming values (core/tests/insert.rs
-        // insert_statement_duplicate_key_update)
-        val dupSets = dupSetsOf(ctx.copy(lambdaParams =
-          ctx.lambdaParams + ("input" -> col("__input"))))
-        val inputStruct = struct(base.columns.map(col).toIndexedSeq: _*)
-        val maxMult = maxMultHint.getOrElse {
-          // key multiplicity WITHIN the batch — counted on the (already
-          // materialized) batch alone; joining `marked` here re-scanned the
-          // whole base table per execution for a number the join can't
-          // change (r19 mut_upsert audit: this probe was ~40% of the row's
-          // eager plan time at sf0.1)
-          rows.filter(col(key).isNotNull).groupBy(col(key))
-            .agg(count(lit(1)).as("__m")).agg(max(col("__m")).as("__mm"))
-            .collect().headOption
-            .collect { case r if !r.isNullAt(0) => r.getLong(0).toInt }
-            .getOrElse(1)
-        }
-        val untouched = base.join(rows.select(key), Seq(key), "left_anti")
-        // a stored record the UPDATE permission denies is skipped silently
-        // and stays as stored, as in UPDATE (doc/allow.rs)
-        val perm = actionPermCond(spark, ctx.dir, t, "update", base.schema)
-        if (maxMult == 1) {
-          // duplicate-free batch — plain MERGE arms, one application
-          val inputF = rows.select(col(key), inputStruct.as("__input"))
-          val updTarget = base.join(inputF, Seq(key), "inner")
-          val permitted = perm.fold(updTarget)(updTarget.filter)
-          val semi = permitted.drop("__input")
-          val updated = graft.operators.Mutations
-            .update(permitted, lit(true), dupSets).drop("__input")
-          val kept = perm.fold(untouched)(p => untouched.unionByName(
-            updTarget.filter(!coalesce(p, lit(false))).drop("__input")))
-          val result = fresh.unionByName(updated)
-          val diff =
-            if (!s.output.contains(Output.ODiff)) scala.None
-            else Some(graft.operators.Mutations.createDiff(fresh, t, key, linkMap)
-              .unionByName(graft.operators.Mutations.returnDiff(
-                semi, updated, t, key, linkMap)))
-          return (noneRows(fresh).unionByName(semi),
-            kept.unionByName(updated).unionByName(fresh), result, diff)
-        }
-        val counts = marked.filter(col(key).isNotNull).groupBy(col(key))
-          .agg(count(lit(1)).as("__mult"), max(col("__inb")).as("__kinb"))
-        // existing keys take all `mult` occurrences through the update arm;
-        // fresh duplicated keys insert once then update `mult - 1` times
-        val updBase = base.join(
-          counts.filter(col("__kinb") === true)
-            .select(col(key), col("__mult").as("__apps")), Seq(key), "inner")
-        val freshDup = counts.filter(col("__kinb").isNull && col("__mult") > 1)
-          .select(col(key), (col("__mult") - 1).as("__apps"))
-        val freshSolo = fresh.join(freshDup.select(key), Seq(key), "left_anti")
-        var cur = updBase.unionByName(fresh.join(freshDup, Seq(key), "inner"))
-        // occurrence table for per-application $input: application i of an
-        // existing key consumes its i-th batch row; a fresh duplicated key
-        // inserted its 1st row, so application i consumes row i+1
-        val occ = marked.filter(col(key).isNotNull)
-          .select(col(key), col("__rn"), inputStruct.as("__input"))
-          .join(counts.select(col(key), col("__kinb")), Seq(key))
-        // each application's (before, after) documents
-        val applied = scala.collection.mutable.ArrayBuffer[(DataFrame, DataFrame)]()
-        (1 to maxMult).foreach { i =>
-          val inpI = occ.filter(col("__rn") ===
-              when(col("__kinb") === true, lit(i)).otherwise(lit(i + 1)))
-            .select(col(key), col("__input"))
-          // application i reaches the records with an i-th occurrence whose
-          // current state the UPDATE permission allows
-          val pre = cur.join(inpI, Seq(key), "left")
-            .withColumn("__ok", perm.fold(col("__apps") >= i)(col("__apps") >= i && _))
-          cur = graft.operators.Mutations.update(pre, col("__ok"), dupSets)
-            .drop("__input")
-          // reference semantics is genuinely sequential per occurrence, so
-          // the chain depth equals the batch's max key multiplicity. Small
-          // multiplicities (the literal-batch norm) stay fully lazy; past
-          // the threshold every level materializes through an eager local
-          // checkpoint — the analyzer never sees a deep plan, and the
-          // per-level output branches read blocks instead of re-executing
-          // the chain prefix (quadratic otherwise). `cur` is batch-sized
-          // (only the batch's keys), so each checkpoint is tiny.
-          if (maxMult > 8 && i < maxMult) cur = cur.localCheckpoint(true)
-          applied += ((pre.filter(col("__ok")).drop("__input", "__apps", "__ok"),
-            cur.filter(col("__ok")).drop("__apps", "__ok")))
-          cur = cur.drop("__ok")
-        }
-        val result = (fresh +: applied.map(_._2).toSeq).reduce(_ unionByName _)
-        val after = untouched.unionByName(freshSolo).unionByName(cur.drop("__apps"))
-        val bef = (noneRows(fresh) +: applied.map(_._1).toSeq).reduce(_ unionByName _)
-        val diff =
-          if (!s.output.contains(Output.ODiff)) scala.None
-          else {
-            val lm = linkMap
-            val d0 = graft.operators.Mutations.createDiff(fresh, t, key, lm)
-            val ds = applied.toSeq.map { case (b, a) =>
-              graft.operators.Mutations.returnDiff(b, a, t, key, lm)
-            }
-            Some((d0 +: ds).reduce(_ unionByName _))
-          }
-        (bef, after, result, diff)
-    }
-  }
+  /** Column [[insertRows]] sets on a row whose record key it generated. */
+  private val GenC = "__gen"
 
   /** DELETE's RETURN over the rows it deleted: no clause means BEFORE
     * (the deleted documents), and a deletion's `$after` is NONE. */

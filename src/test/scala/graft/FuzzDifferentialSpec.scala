@@ -82,6 +82,7 @@ class FuzzDifferentialSpec extends AnyFunSuite {
 
   SparkPlanner.extraRecordKeys.put("item", "id")
   SparkPlanner.extraRecordKeys.put("prof", "id")
+  SparkPlanner.extraRecordKeys.put("likes", "id")
   SparkPlanner.extraLinks.put(("item", "buddy"), ("item", "id"))
   graft.operators.GraphOps.extraEdgeDefs.put("likes", ("item", "item"))
 
@@ -649,11 +650,14 @@ class FuzzDifferentialSpec extends AnyFunSuite {
     }
   }
 
-  private def genScript(r: scala.util.Random): String = {
-    def freshCreate(k: Int, extra: String = "") =
+  /** One generated mutation, as the scripts that check it: the mutation
+    * followed by its select, and by a second select when one is drawn. */
+  private def genScript(r: scala.util.Random): Seq[String] = {
+    def freshCreate(k: Int, set: String = "") =
       s"CREATE item:$k SET grp = 'z', qty = ${r.nextInt(7)}, price = ${r.nextInt(50)}.5, " +
-        s"num = $k, name = 'n$k', ts = d'2024-01-01T00:00:00Z', tags = ['t9']$extra;"
+        s"num = $k, name = 'n$k', ts = d'2024-01-01T00:00:00Z', tags = ['t9']$set;"
     var select = "SELECT name, grp, qty, price FROM item ORDER BY name;"
+    var extra = Option.empty[String]
     val mut = r.nextInt(26) match {
       case 25 =>
         // r16: DEFINE/ALTER/REMOVE FUNCTION — expression bodies inline at
@@ -852,12 +856,19 @@ class FuzzDifferentialSpec extends AnyFunSuite {
           s"""INSERT IGNORE INTO item [
                 { id: $k, grp: 'x', qty: ${r.nextInt(9)}, price: 1.5, name: 'zA$k' },
                 { id: $k, grp: 'y', qty: 99, price: 2.5, name: 'zB$k' }];"""
-        else
+        else {
+          // each application fires its own UPDATE events, counted by a
+          // second check of the same script
+          val events = r.nextBoolean()
+          if (events) extra = Some("SELECT score FROM prof WHERE score = 998;")
+          (if (events) "DEFINE EVENT ev ON item WHEN $event = 'UPDATE' THEN " +
+            "(CREATE prof SET score = 998);\n" else "") +
           s"""INSERT INTO item [
                 { id: $k, grp: 'x', qty: ${r.nextInt(5)}, price: 1.5, name: 'zA$k' },
                 { id: $k, grp: 'y', qty: ${r.nextInt(5)}, price: 2.5, name: 'zB$k' },
                 { id: ${r.nextInt(40) + 91}, grp: 'z', qty: 1, price: 3.5, name: 'zC$k' }]
               ON DUPLICATE KEY UPDATE qty += ${r.nextInt(3) + 1};"""
+        }
       case 13 =>
         // nested struct writes on the prof table
         select = "SELECT id, meta, score FROM prof ORDER BY id;"
@@ -931,8 +942,8 @@ class FuzzDifferentialSpec extends AnyFunSuite {
         val k = r.nextInt(40) + 31
         freshCreate(k)
     }
-    s"""$mut
-        $select"""
+    (select +: extra.toSeq).map(sel => s"""$mut
+        $sel""")
   }
 
   private val NS = sys.env.getOrElse("FUZZ_NS", "60").toInt
@@ -1077,6 +1088,82 @@ class FuzzDifferentialSpec extends AnyFunSuite {
          INSERT INTO item { id: 1, name: 'n01' } ON DUPLICATE KEY UPDATE name = 'n02';""",
       // the stored item:2 holds the value, not the updated item:1
       "Database index `nu` already contains 'n02', with record `item:2`")
+  }
+
+  // Every update of a stored record runs one update step (doc/mod.rs):
+  // UPDATE, UPSERT and each ON DUPLICATE application keep the record id and
+  // an edge's endpoints, and fire their own events
+  private val idMoved = "Found item:77 for the `id` field, but a specific record has been specified"
+
+  /** `script` leaves the edge likes:e1x8x1 (item:1 -> item:8, w = 1) with
+    * its endpoints and `w` as given, on both engines. */
+  private def checkEdge(script: String, w: Long): Unit = {
+    val (ires, sres) = runBoth(script + "\nSELECT in, out, w FROM likes:e1x8x1;")
+    assert(ires == QOk(VArr(Vector(V.obj("in" -> graft.surql.VRid("item", VInt(1)),
+      "out" -> graft.surql.VRid("item", VInt(8)), "w" -> VInt(w))))), s"interp: $ires")
+    val rows = sres.fold(m => fail(s"spark: $m"), identity)
+    assert(rows.map(r => (r.getLong(0), r.getLong(1), r.getLong(2))) == Seq((1L, 8L, w)),
+      s"spark rows $rows")
+  }
+
+  test("update-script: UPDATE and UPSERT keep the record id on both engines") {
+    checkBothError("UPDATE item:3 SET id = item:77;", idMoved)
+    checkBothError("UPSERT item:3 SET id = item:77;", idMoved)
+    checkBothError(
+      "UPDATE item:3 PATCH [{ op: 'replace', path: '/id', value: item:77 }];", idMoved)
+    // CONTENT, REPLACE and MERGE keep the stored id
+    checkScript("""UPDATE item:3 CONTENT { id: item:77, qty: 1, name: 'c3' };
+                   UPDATE item:4 REPLACE { id: item:77, qty: 2, name: 'r4' };
+                   UPDATE item:5 MERGE { id: item:77, qty: 3 };
+                   SELECT id, name, qty FROM item WHERE qty <= 3 ORDER BY id;""")
+  }
+
+  test("update-script: UPDATE and UPSERT keep an edge's endpoints on both engines") {
+    checkEdge("""UPDATE likes:e1x8x1 SET in = item:5, w = 2;
+                 UPSERT likes:e1x8x1 SET out = item:6, w = 3;""", 3)
+  }
+
+  test("update-script: ON DUPLICATE keeps the record id and an edge's endpoints on both engines") {
+    checkBothError(
+      "INSERT INTO item { id: 3, qty: 1 } ON DUPLICATE KEY UPDATE id = item:77;", idMoved)
+    checkEdge("""INSERT RELATION INTO likes { id: 'e1x8x1', in: item:1, out: item:8, w: 9 }
+                   ON DUPLICATE KEY UPDATE in = item:7, w = w * 10;""", 10)
+  }
+
+  test("update-script: ON DUPLICATE fires its events once per application on both engines") {
+    val (ires, sres) = runBoth(
+      """DEFINE EVENT ev ON item WHEN $event = 'UPDATE' THEN (CREATE prof SET score = 998);
+         INSERT INTO item [{ id: 3, qty: 1 }, { id: 3, qty: 2 }, { id: 95, qty: 1 },
+           { id: 95, qty: 4 }] ON DUPLICATE KEY UPDATE qty += 7;
+         SELECT score FROM prof WHERE score = 998;""")
+    ires match {
+      case QOk(VArr(docs)) => assert(docs.length == 3, s"interp: $ires")
+      case other => fail(s"interp: $other")
+    }
+    assert(sres.fold(m => fail(s"spark: $m"), identity).length == 3, s"spark: $sres")
+  }
+
+  test("update-script: an UPDATE event's THEN CREATE into the written table is kept on both engines") {
+    val event = "DEFINE EVENT ev ON item WHEN $event = 'UPDATE' THEN " +
+      "(CREATE item SET name = 'ev', qty = 0);\n"
+    val count = "\nSELECT count() AS n FROM item WHERE name = 'ev' GROUP ALL;"
+    val state = "\nSELECT name, qty FROM item WHERE name != 'ev' ORDER BY name;"
+    // two applications to a stored key, one to a created key; and UPSERT's
+    // update arm, whose create arm writes the table after it
+    Seq(
+      """INSERT INTO item [{ id: 3, qty: 1 }, { id: 3, qty: 2 }, { id: 95, qty: 1, name: 'n95' },
+           { id: 95, qty: 4 }] ON DUPLICATE KEY UPDATE qty += 7;""",
+      "UPSERT item:3 SET qty = 50;").foreach { w =>
+      checkScript(event + w + count)
+      checkScript(event + w + state)
+    }
+  }
+
+  test("update-script: a generated-id ON DUPLICATE updates the unique index's holder on both engines") {
+    checkScript(
+      """DEFINE INDEX nu ON item FIELDS name UNIQUE;
+         INSERT INTO item { name: 'n02', qty: 1 } ON DUPLICATE KEY UPDATE qty = 500;
+         SELECT id, name, qty FROM item WHERE qty >= 500 OR name = 'n02';""")
   }
 
   test("write-script: a CASCADE victim's likes edges are purged on both engines") {
@@ -1261,9 +1348,10 @@ class FuzzDifferentialSpec extends AnyFunSuite {
     val r = new scala.util.Random(seed + 1)
     var failures = List.empty[String]
     (0 until NS).foreach { i =>
-      val q = genScript(r)
-      try checkScript(q)
-      catch { case e: Throwable => failures ::= s"[$i] ${e.getMessage}" }
+      genScript(r).foreach { q =>
+        try checkScript(q)
+        catch { case e: Throwable => failures ::= s"[$i] ${e.getMessage}" }
+      }
     }
     assert(failures.isEmpty,
       s"${failures.length}/$NS script fuzz cases diverged:\n${failures.reverse.take(8).mkString("\n---\n")}")

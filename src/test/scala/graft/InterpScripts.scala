@@ -7,8 +7,9 @@ import scala.util.Random
 import graft.surql._
 
 /** Seeded SurrealQL scripts over a node table `n` and an edge table `e`:
-  * creates, RELATEs, `in`/`out` written on plain records, `INSERT RELATION
-  * IGNORE` and `… ON DUPLICATE KEY UPDATE`, deletes with edge cascades and
+  * creates, RELATEs, `in`/`out` written on plain records and on edges (by
+  * UPDATE and by ON DUPLICATE), `INSERT RELATION IGNORE` and `… ON
+  * DUPLICATE KEY UPDATE`, deletes with edge cascades and
   * events, UPDATEs whose event deletes a record, a UNIQUE index on `w` of
   * `e` defined and removed, a `REFERENCE ON DELETE CASCADE` field `p` on `n`
   * defined and removed (its references may form cycles, self-references
@@ -50,7 +51,7 @@ object InterpScripts {
     def n(): Int = r.nextInt(4)
     def ref(): String =
       s"UPDATE n:${k()} SET p = ${if (r.nextInt(5) == 0) "NONE" else "n:" + k()};"
-    def simple(): String = r.nextInt(19) match {
+    def simple(): String = r.nextInt(21) match {
       case 0  => s"CREATE n:${k()} SET v = ${n()};"
       case 1  => s"CREATE n SET v = ${n()};"
       case 2  => s"RELATE n:${k()}->e->n:${k()} SET w = ${n()};"
@@ -71,6 +72,9 @@ object InterpScripts {
       case 16 => s"INSERT RELATION INTO e {id: ${k()}, in: n:${k()}, out: n:${k()}, w: ${n()}} " +
         s"ON DUPLICATE KEY UPDATE w = ${n()};"
       case 17 => ref()
+      case 18 => s"INSERT RELATION INTO e {id: ${k()}, in: n:${k()}, out: n:${k()}, w: ${n()}} " +
+        s"ON DUPLICATE KEY UPDATE in = n:${k()};"
+      case 19 => s"UPDATE e:${k()} SET in = n:${k()};"
       case _  => s"INSERT INTO n {id: ${k()}, v: ${n()}} ON DUPLICATE KEY UPDATE v += 1;"
     }
     def chunk(): String = r.nextInt(28) match {
